@@ -52,16 +52,17 @@ from cascading_solr_spark.analyzer import analyze_query
 from cascading_solr_spark.codec import bm25_idf, bm25_tf_norm, decode_doc_ids, decode_varint
 from cascading_solr_spark.indexing.build import KW_SEP, Index
 from cascading_solr_spark.query.search import (
-    _RESULT_SCHEMA,
     _fetch_stored,
+    _merge_topk,
     _scan_terms,
     term_dfs,
 )
 from cascading_solr_spark.query.wand import (
     denied_ids,
+    finish_topk,
     row_cache_key,
+    shard_kernel,
     strip_denied,
-    topk_ties,
 )
 
 
@@ -273,9 +274,6 @@ def boolean_kernel(
     scoring = _positive_leaves(node)
 
     def score_rows(rows: list) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
         rows = sorted(rows, key=row_cache_key)
         denied = denied_ids(rows, block_size)
         by_term: dict[str, list] = {}
@@ -327,7 +325,7 @@ def boolean_kernel(
         if denied is not None and len(universe):
             universe = universe[strip_denied(universe, denied)]
         if not len(universe):
-            return empty
+            return finish_topk()
 
         def member(lf: Leaf) -> np.ndarray:
             ids = leaf_ids[lf]
@@ -377,20 +375,9 @@ def boolean_kernel(
             return s, sc
 
         keep, score_all = eval_node(node)
-        if not keep.any():
-            return empty
-        docs = universe[keep]
-        score = score_all[keep]
-        if k is not None:
-            docs, score = topk_ties(docs, score, k)
-        order = np.lexsort((docs, -score))
-        return pd.DataFrame({"doc_id": docs[order], "score": score[order]})
+        return finish_topk(universe[keep], score_all[keep], k)
 
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        return score_rows(list(pdf.itertuples(index=False)))
-
-    score.rows = score_rows
-    return score
+    return shard_kernel(score_rows)
 
 
 def search_boolean(
@@ -419,10 +406,7 @@ def search_boolean(
         )
         .filter(F.col("term").isin(_scan_terms(index, all_terms)))
     )
-    local = matched.groupBy("shard").applyInPandas(kernel, _RESULT_SCHEMA)
-    top = local.orderBy(F.desc("score"), F.asc("doc_id"))
-    if k is not None:
-        top = top.limit(k)
+    top = _merge_topk(matched, kernel, k)
     if not with_stored:
         return top
     return _fetch_stored(spark, index, top, bounded=k is not None)

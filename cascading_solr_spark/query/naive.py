@@ -1,8 +1,11 @@
-"""Pure-DataFrame BM25 scoring — the declarative twin of the compressed path.
+"""DataFrame BM25 scoring — the declarative twin of the compressed path.
 
-Everything is built-in Catalyst ops (analyze_col expression tree, explode,
-partial+final hash aggregation, broadcast joins): no Python crosses the hot
-path.  Used three ways:
+Documents are tokenized once by the memoized Arrow tokenizer
+(:func:`tokens_long`, one ``mapInPandas`` pass — the SPIMI build's own
+analyzer); everything after it is built-in Catalyst ops (filter, partial +
+final hash aggregation, broadcast joins), with no postings, codec or
+scoring kernel involved.  (:func:`corpus_stats` alone still measures doc
+lengths with the Catalyst ``analyze_col`` twin.)  Used three ways:
 
 1. the "minimum slice" end-to-end query path (SURVEY.md §7.4);
 2. the oracle twin for the driver's DuckDB correctness gate — the same
@@ -33,7 +36,11 @@ def tokens_long(
     exact function), and the expression tree's interpreted HOF segments
     made the honest per-call cost ~5x the kernel's (r6b).  The per-doc
     Counter emits distinct (doc, term) rows directly — no explode +
-    re-aggregation shuffle of the raw token stream."""
+    re-aggregation shuffle of the raw token stream.
+
+    Ids must be integer-valued: a null id, or one that does not convert to
+    a long (``"a17"``), raises ValueError from the kernel — the check rides
+    the tokenize pass, so it costs no Spark job."""
     from collections import Counter
 
     import numpy as np
@@ -45,6 +52,11 @@ def tokens_long(
     def kernel(batches):
         tokenize_fast = make_cached_tokenizer()
         for pdf in batches:
+            if pdf["doc_id"].isna().any():
+                raise ValueError(
+                    f"tokens_long: column {id_col!r} holds a null or "
+                    "non-integer doc id; ids must convert to long"
+                )
             ids: list[int] = []
             dls: list[int] = []
             terms: list[str] = []
@@ -71,7 +83,7 @@ def tokens_long(
     # spread a low-partition source before the tokenize map work
     # (r6, guide §2.5; no-op on well-partitioned input)
     return spread_partitions(docs).select(
-        F.col(id_col).cast("long").alias("doc_id"),
+        F.col(id_col).try_cast("long").alias("doc_id"),
         F.col(content_col).alias("_content"),
     ).mapInPandas(kernel, "doc_id long, dl int, term string, tf long")
 
@@ -113,16 +125,19 @@ def bm25_topk_df(
     """
     terms = analyze_query(query)
     # ONE tokenize pass (r6): the tf table is persisted and MATERIALIZED by
-    # the stats aggregate below — its three consumers (df-lookup, scoring,
+    # the Σtf aggregate below — its three consumers (df-lookup, scoring,
     # stats) would otherwise each re-run the analyzer over the corpus, and
     # a lazy persist would still race its own population when AQE
     # materializes the broadcast stages concurrently.  The corpus stats
-    # derive from the tf table instead of a second analyze_col pass:
-    # n is the plain row count and avgdl = Σtf / n — numerically IDENTICAL
-    # to avg(dl) because every intermediate is an integer below 2^53 (exact
-    # in double), and zero-token/null docs contribute 0 to Σtf and 1 to n
+    # come from that same action: n is an Observation counting the doc rows
+    # on their way into the tokenizer (zero-token docs emit no tf row but
+    # still count), and avgdl = Σtf / n — numerically IDENTICAL to avg(dl)
+    # because every intermediate is an integer below 2^53 (exact in
+    # double), and zero-token/null docs contribute 0 to Σtf and 1 to n
     # exactly as they contributed dl=0 to the avg (analyze_col coalesces
     # null to "").
+    from pyspark.sql import Observation
+
     from cascading_solr_spark.operators.dedup import _swap_persisted
 
     # release the PREVIOUS call's tf cache BEFORE persisting the new one
@@ -131,9 +146,12 @@ def bm25_topk_df(
     # now would ALIAS the old cache entry, and evicting after the fact
     # would strip this call's own cache.
     _swap_persisted("bm25_topk_df", docs.sparkSession, [])
-    tf = tokens_long(docs, content_col, id_col).persist()
-    n_docs = docs.count()
+    seen = Observation()
+    tf = tokens_long(
+        docs.observe(seen, F.count(F.lit(1)).alias("n")), content_col, id_col
+    ).persist()
     tt = tf.agg(F.sum("tf")).collect()[0][0]
+    n_docs = seen.get["n"]
     _swap_persisted("bm25_topk_df", docs.sparkSession, [tf])
     # n>0 with an empty tf table means every doc tokenized to [] — avg(dl)
     # over those zeros was 0.0, not null; n=0 keeps the avg-of-empty null

@@ -23,11 +23,23 @@ AbstractSolrSchemeTest.java:148-176):
 * query-time synonym expansion (SynonymFilter expand=true analogue,
   schema.xml:432-437): each expansion is scored as an additional OR term.
 
-Execution mirrors Solr's distributed query fan-out over document shards:
-each shard partition scores its local postings in one Arrow-vectorized kernel
-(term-at-a-time exact, or block-max MaxScore with decode-skipping pruning —
-query/wand.py), emits a local top-k, and a global order-merge takes the final
-k.  Ties broken (score desc, doc_id asc) for deterministic rank-identity.
+One path serves every ranked and matching entry point:
+
+1. :func:`plan_query` parses the query string into a :class:`QueryPlan`
+   (ranges, prohibited clauses, boosts, ``field:value`` filters, AND/``+``,
+   wildcard/fuzzy tokens, analyzed + synonym terms) — pure, no Spark job;
+2. :func:`_resolve` expands the plan's dictionary-dependent clauses (range
+   filter groups, excluded terms, constant-score wildcard groups), and
+   :func:`term_dfs` fetches global document frequencies;
+3. each shard partition scores its local postings in one Arrow-vectorized
+   kernel: block-max MaxScore with decode-skipping pruning (query/wand.py)
+   for a plain OR top-k, else the exact clause scorer
+   (:func:`_clause_kernel`: per clause ``max + tie·(sum − max)``, clauses
+   summed, AND/mm clause-count floor — TAAT is one clause per term,
+   DisMax one clause per query term over its qf fields); every kernel
+   ends in wand.finish_topk (cursor, local top-k, rank order);
+4. a global order-merge takes the final k.  Ties broken (score desc,
+   doc_id asc) for deterministic rank-identity.
 
 Scale notes: the postings scan is filtered term IN (...) — row-group pruning
 works because postings files are sorted by term; all shards scan in parallel;
@@ -37,6 +49,8 @@ only ``shards × salts × terms`` tiny top-k rows reach the global merge.
 from __future__ import annotations
 
 import re
+from collections import Counter
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -65,10 +79,11 @@ from cascading_solr_spark.query.wand import (
     blockwise_filter_ids,
     decode_filter_ids,
     denied_ids,
+    finish_topk,
     maxscore_kernel,
     row_cache_key,
+    shard_kernel,
     strip_denied,
-    topk_ties,
 )
 
 
@@ -629,6 +644,248 @@ def excluded_terms_of(
     return ex
 
 
+class QueryPlan(NamedTuple):
+    """One query string parsed into its clauses (:func:`plan_query`).
+
+    The first seven fields are what a scoring kernel reads (batch_kernel
+    takes a plan as is).  ``excluded`` and ``groups`` stay empty until
+    :func:`_resolve` expands the raw clause syntax in the last five fields
+    against the index dictionary.  A phrase plan (``slop`` set) carries the
+    phrase's position terms in ``terms``."""
+
+    terms: list[str]
+    #: fq clauses: ``filters=`` plus q-string ``field:value`` terms, and
+    #: once resolved, one frozenset group per keyword range
+    filters: set = frozenset()
+    conjunctive: bool = False
+    #: per-analyzed-term boost multipliers (``term^2``)
+    weights: dict = {}
+    #: prohibited index terms (resolved)
+    excluded: set = frozenset()
+    #: constant-score clauses ``(member_terms, weight)`` (resolved)
+    groups: list = ()
+    slop: int | None = None
+    #: query text left after range, prohibited and boost syntax
+    text: str = ""
+    prohibited: list = ()
+    ranges: list = ()
+    neg_ranges: list = ()
+    #: wildcard / fuzzy tokens with their clause weight
+    multiterm: list = ()
+
+    @property
+    def match_all(self) -> bool:
+        """MatchAllDocsQuery: ``*:*``, or a pure-negative query (Solr's
+        top-level rewrite to ``*:* AND NOT ...``)."""
+        return self.text == "*:*" or (
+            not self.text and bool(self.prohibited or self.neg_ranges)
+        )
+
+    @property
+    def n_required(self) -> int:
+        """Clause count an AND query must match: distinct terms plus
+        constant-score groups (an empty expansion still counts)."""
+        return len(set(self.terms)) + len(self.groups)
+
+
+def plan_query(
+    query: str,
+    keyword_fields: tuple[str, ...],
+    filters: dict[str, str] | None = None,
+    synonyms: dict[str, list[str]] | None = None,
+    op: str = "OR",
+) -> QueryPlan:
+    """Parse a query string into a :class:`QueryPlan` — pure, no Spark job.
+
+    The Lucene-parser steps run in the one order every ranked and matching
+    path needs: keyword ranges, prohibited clauses and boosts come out
+    before anything is analyzed (the tokenizer would drop their syntax and
+    match the bare token positively), then q-string ``field:value``
+    filters, the ``AND``/``+term`` operator, and multi-term tokens; the
+    rest is analyzed and synonym-expanded.  Dictionary expansions are left
+    to :func:`_resolve` and :func:`_const_groups`."""
+    text, ranges, neg_ranges = parse_ranges(query.strip(), keyword_fields)
+    text, prohibited = parse_prohibited(text)
+    text, boosts = parse_boosts(text)
+    qtext, fterms = parse_query(text, keyword_fields)
+    qtext, op = query_op(qtext, default=op)
+    qtext, multiterm = split_wildcards(qtext)
+    return QueryPlan(
+        terms=expand_terms(qtext, synonyms),
+        filters=filter_terms_of(filters) | fterms,
+        conjunctive=op.upper() == "AND",
+        weights=boost_weights_of(
+            {t: w for t, w in boosts.items() if not is_multiterm(t)}
+        ),
+        text=text,
+        prohibited=prohibited,
+        ranges=ranges,
+        neg_ranges=neg_ranges,
+        multiterm=[(tok, float(boosts.get(tok, 1.0))) for tok in multiterm],
+    )
+
+
+def _const_groups(
+    spark: SparkSession, index: Index, plan: QueryPlan
+) -> list[tuple[frozenset, float]]:
+    """Dictionary expansion of the plan's wildcard / fuzzy tokens into
+    constant-score clauses (Solr's rewrite for multi-term queries), in
+    query order; a boost on the token is the clause weight."""
+    return [
+        (frozenset(expand_multiterm(spark, index, tok)), w)
+        for tok, w in plan.multiterm
+    ]
+
+
+def _resolve(spark: SparkSession, index: Index, plan: QueryPlan) -> QueryPlan:
+    """The plan with its dictionary-dependent clauses expanded: prohibited
+    tokens and ranges to excluded index terms, keyword ranges to filter
+    groups, multi-term tokens to constant-score groups.  Each expansion is
+    a Spark job unless the handle's dict cache serves it."""
+    excluded = resolve_excluded(spark, index, plan.prohibited)
+    ranges = {expand_keyword_range(spark, index, r) for r in plan.ranges}
+    for r in plan.neg_ranges:  # a prohibited range excludes its expansion
+        excluded |= expand_keyword_range(spark, index, r)
+    return plan._replace(
+        filters=plan.filters | ranges,
+        excluded=excluded,
+        groups=_const_groups(spark, index, plan),
+    )
+
+
+def _clause_kernel(
+    terms: dict[str, tuple[float, float, object]],
+    tie: float,
+    k1: float,
+    b: float,
+    k: int | None,
+    block_size: int,
+    filter_terms: set[str] | None = None,
+    require_n: int | None = None,
+    cursor: tuple[float, int] | None = None,
+    decode_cache: dict | None = None,
+    excluded_terms: set[str] | None = None,
+    const_groups: list[tuple[frozenset, float]] | None = None,
+):
+    """Exact clause scorer for one shard — TAAT, AND, mm, constant-score
+    groups, cursor paging and DisMax all run here.
+
+    ``terms`` maps each posting term to ``(weight, avgdl, clause)``: its
+    contribution to a doc is ``weight · tf_norm(tf, dl, avgdl)`` (weight =
+    idf times boosts), and ``clause`` keys the query clause it scores for.
+    Per clause and doc the score is DisMax's ``max + tie · (sum − max)``
+    over the clause's terms (Lucene DisjunctionMaxQuery); a one-term clause
+    passes its contribution through unchanged — each (term, doc) posting
+    exists once, so max = sum = the contribution.  TAAT is the case of one
+    clause per term.
+
+    ``const_groups`` are CONSTANT-SCORE clauses — the multi-term
+    (wildcard/fuzzy) rewrite, Lucene's CONSTANT_SCORE_REWRITE: each
+    ``(member_terms, weight)`` adds ``weight`` exactly once per doc posting
+    ANY member term.
+
+    A doc's score is the sum of its clause scores.  With ``require_n`` only
+    docs matching at least that many clauses survive (AND = all clauses, mm
+    = the eDisMax floor): a doc appears once per matched clause, so the
+    per-doc count IS the matched-clause count, and sharding by doc keeps the
+    conjunction an index-side intersection.  ``excluded_terms`` are
+    prohibited clauses (Lucene ``-term``): docs posting any of them are
+    stripped with the tombstones (wand.denied_ids) before cursor and top-k
+    selection (wand.finish_topk).  ``decode_cache``
+    memoizes full (ids, tfs, dls) row decodes by row content
+    (wand.row_cache_key), shared across the queries of one batch_kernel
+    call.
+
+    The summation order is part of the contract: a doc's clause scores add
+    in ascending clause-key order (TAAT keys clauses by term, DisMax by
+    query position), constant-score groups last in query order, and a
+    clause's terms combine in canonical row order (row_cache_key sort).  A
+    doc's float64 score is therefore bit-identical across separate jobs
+    whatever the shuffle row arrival order — cursorMark equality and
+    explain_score's scalar sum rely on it, not on luck."""
+    filter_terms = filter_terms or set()
+    width = Counter(c for _, _, c in terms.values())
+
+    def score_rows(rows: list) -> pd.DataFrame:
+        rows = sorted(rows, key=row_cache_key)
+        allowed = allowed_ids(rows, filter_terms, block_size)
+        if allowed is not None and not len(allowed):
+            return finish_topk()
+        denied = denied_ids(rows, block_size, excluded_terms)
+        clause_ids: dict[object, list[np.ndarray]] = {}
+        clause_contrib: dict[object, list[np.ndarray]] = {}
+        for row in rows:
+            if row.term not in terms:
+                continue
+            weight, avgdl, clause = terms[row.term]
+            n = int(row.n_docs)
+            ck = row_cache_key(row) if decode_cache is not None else None
+            cached = decode_cache.get(ck) if decode_cache is not None else None
+            if cached is None:
+                ids = decode_doc_ids(row.doc_ids, n, block_size)
+                tfs = decode_varint(row.tfs, n)
+                dls = decode_varint(row.dls, n)
+                if decode_cache is not None:
+                    decode_cache[ck] = (ids, tfs, dls)
+            else:
+                ids, tfs, dls = cached
+            contrib = weight * bm25_tf_norm(tfs, dls, avgdl, k1, b)
+            if allowed is not None:
+                keep = _member(ids, allowed)
+                ids, contrib = ids[keep], contrib[keep]
+            clause_ids.setdefault(clause, []).append(ids)
+            clause_contrib.setdefault(clause, []).append(contrib)
+        all_ids: list[np.ndarray] = []
+        all_scores: list[np.ndarray] = []
+        for clause in sorted(clause_ids):
+            ids, contrib = clause_ids[clause], clause_contrib[clause]
+            if width[clause] > 1:
+                uniq, inv = np.unique(np.concatenate(ids), return_inverse=True)
+                c = np.concatenate(contrib)
+                mx = np.zeros(len(uniq), dtype=np.float64)
+                np.maximum.at(mx, inv, c)  # contribs > 0 (idf, boost > 0)
+                if tie:
+                    sm = np.zeros(len(uniq), dtype=np.float64)
+                    np.add.at(sm, inv, c)
+                    mx = mx + tie * (sm - mx)
+                ids, contrib = [uniq], [mx]
+            all_ids += ids
+            all_scores += contrib
+        for gterms, w in const_groups or ():
+            parts = [
+                decode_doc_ids(row.doc_ids, int(row.n_docs), block_size)
+                for row in rows
+                if row.term in gterms
+            ]
+            if not parts:
+                continue
+            gids = np.unique(np.concatenate(parts))
+            if allowed is not None:
+                gids = gids[_member(gids, allowed)]
+            if len(gids):
+                all_ids.append(gids)
+                all_scores.append(np.full(len(gids), float(w)))
+        if not all_ids:
+            return finish_topk()
+        uniq, inv = np.unique(np.concatenate(all_ids), return_inverse=True)
+        acc = np.zeros(len(uniq), dtype=np.float64)
+        np.add.at(acc, inv, np.concatenate(all_scores))
+        if require_n is not None:
+            cnt = np.zeros(len(uniq), dtype=np.int64)
+            np.add.at(cnt, inv, 1)
+            keep = cnt >= require_n
+            uniq, acc = uniq[keep], acc[keep]
+        if denied is not None:
+            # denied docs leave the exhaustive accumulator BEFORE cursor and
+            # top-k selection (Lucene liveDocs: stats stay global, a deleted
+            # doc never occupies a result slot)
+            keep = strip_denied(uniq, denied)
+            uniq, acc = uniq[keep], acc[keep]
+        return finish_topk(uniq, acc, k, cursor)
+
+    return shard_kernel(score_rows)
+
+
 def _taat_kernel(
     idf: dict[str, float],
     avgdl: float,
@@ -643,123 +900,118 @@ def _taat_kernel(
     excluded_terms: set[str] | None = None,
     const_groups: list[tuple[frozenset, float]] | None = None,
 ):
-    """Exact term-at-a-time scorer for one shard (numpy accumulate).
+    """Exact term-at-a-time scorer for one shard: :func:`_clause_kernel`
+    with one clause per term, so a doc's term contributions add in term
+    order and its constant-score groups after them, in query order."""
+    return _clause_kernel(
+        {t: (w, avgdl, t) for t, w in idf.items()}, 0.0, k1, b, k,
+        block_size, filter_terms, require_n_terms, cursor, decode_cache,
+        excluded_terms, const_groups,
+    )
 
-    ``excluded_terms`` are prohibited clauses (Lucene ``-term``): docs
-    posting any of them are stripped with the tombstones, before the
-    conjunctive count / cursor / top-k — see wand.denied_ids.
 
-    ``const_groups`` are CONSTANT-SCORE clauses — the multi-term
-    (wildcard/fuzzy) rewrite, Lucene's CONSTANT_SCORE_REWRITE / Solr's
-    default for these query types: each ``(member_terms, weight)`` adds
-    ``weight`` exactly once per doc posting ANY member term.  A group
-    contributes ONE per-doc id row to the accumulator, so with
-    ``require_n_terms`` it counts as one matched clause — the AND / mm
-    semantics fall out of the same per-doc count.
+def _rank_kernel(
+    plan: QueryPlan,
+    idf: dict[str, float],
+    avgdl: float,
+    k1: float,
+    b: float,
+    k: int | None,
+    block_size: int,
+    mm: int | None = None,
+    cursor: tuple[float, int] | None = None,
+    exhaustive: bool = False,
+    decode_cache: dict | None = None,
+    counters: dict | None = None,
+):
+    """Per-shard scorer of a resolved plan (``idf`` with boosts applied).
 
-    ``decode_cache`` memoizes full (ids, tfs, dls) row decodes keyed by
-    row content (wand.row_cache_key) — shared across the queries of one
-    batch_kernel invocation, same contract as maxscore_kernel's cache.
+    Block-max MaxScore serves a plain OR top-k.  Every other shape runs the
+    exact clause scorer: MaxScore's θ pruning is unsound under a
+    match-count floor (AND, ``mm``: θ from docs that may fail the floor
+    over-prunes) and under a cursor (θ comes from already-returned docs),
+    its per-term bounds do not model a once-per-doc constant-score clause,
+    and k=None leaves nothing to prune against.  ``exhaustive`` forces the
+    clause scorer (``mode="taat"``, cursor paging)."""
+    live = [g for g in plan.groups if g[0]]
+    if plan.conjunctive or mm is not None or live or exhaustive or k is None:
+        return _taat_kernel(
+            idf, avgdl, k1, b, k, block_size, plan.filters,
+            require_n_terms=plan.n_required if plan.conjunctive else mm,
+            cursor=cursor, decode_cache=decode_cache,
+            excluded_terms=plan.excluded, const_groups=live,
+        )
+    return maxscore_kernel(
+        idf, avgdl, k1, b, k, block_size, plan.filters, counters=counters,
+        decode_cache=decode_cache, excluded_terms=plan.excluded,
+    )
 
-    With ``require_n_terms`` the kernel is CONJUNCTIVE: only docs matched by
-    at least that many distinct scoring terms survive (each (term, doc)
-    posting exists exactly once, so the per-doc posting count IS the matched
-    distinct-term count).  Sharding is by doc, so the conjunction is local —
-    an index-side postings intersection, never a docs-table scan.
 
-    ``cursor`` = (score, doc_id) keeps only docs STRICTLY AFTER that point
-    in the global (score desc, doc_id asc) order — the cursorMark deep-
-    paging path (:func:`search_after`).  The filter runs over the full
-    exact accumulator BEFORE local top-k selection, so the shard still
-    emits its true best k eligible docs.  Rows are processed in a CANONICAL
-    content order (row_cache_key sort) so the float accumulation order —
-    and therefore every last-ULP score — is identical across separate jobs
-    even if shuffle-fetch row order differs; cursor equality comparisons
-    are exact because of this, not by luck."""
-    filter_terms = filter_terms or set()
+def _zero_hit(plan: QueryPlan, dfs: dict, mm: int | None = None) -> bool:
+    """Q7 short-circuit of a resolved plan: no clause has postings anywhere,
+    or AND / ``mm`` needs more clauses than have postings (a df=0 term or
+    an empty wildcard expansion empties the conjunction)."""
+    reachable = len(dfs) + sum(1 for g, _ in plan.groups if g)
+    need = plan.n_required if plan.conjunctive else mm
+    return not reachable or (need is not None and reachable < need)
 
-    def score_rows(rows: list) -> pd.DataFrame:
-        rows = sorted(rows, key=row_cache_key)
-        allowed = allowed_ids(rows, filter_terms, block_size)
-        if allowed is not None and not len(allowed):
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
+
+def _plan_scan(
+    spark: SparkSession, index: Index, plan: QueryPlan, dfs: dict
+) -> DataFrame:
+    """The resolved plan's pruned postings scan: scoring terms with
+    postings, filter and prohibited terms, wildcard expansions (and the
+    tombstones, :func:`_scan_terms`)."""
+    expansion = [t for g, _ in plan.groups for t in g]
+    return _score_rows(index, spark).filter(
+        F.col("term").isin(
+            _scan_terms(
+                index,
+                list(dfs) + list(plan.filters) + list(plan.excluded)
+                + expansion,
             )
-        denied = denied_ids(rows, block_size, excluded_terms)
-        all_ids: list[np.ndarray] = []
-        all_contrib: list[np.ndarray] = []
-        for row in rows:
-            if row.term not in idf:
-                continue
-            n = int(row.n_docs)
-            ck = row_cache_key(row) if decode_cache is not None else None
-            cached = decode_cache.get(ck) if decode_cache is not None else None
-            if cached is None:
-                ids = decode_doc_ids(row.doc_ids, n, block_size)
-                tfs = decode_varint(row.tfs, n)
-                dls = decode_varint(row.dls, n)
-                if decode_cache is not None:
-                    decode_cache[ck] = (ids, tfs, dls)
-            else:
-                ids, tfs, dls = cached
-            contrib = idf[row.term] * bm25_tf_norm(tfs, dls, avgdl, k1, b)
-            if allowed is not None:
-                pos = np.minimum(np.searchsorted(allowed, ids), len(allowed) - 1)
-                keep = allowed[pos] == ids
-                ids, contrib = ids[keep], contrib[keep]
-            all_ids.append(ids)
-            all_contrib.append(contrib)
-        for gterms, w in const_groups or ():
-            parts = [
-                decode_doc_ids(row.doc_ids, int(row.n_docs), block_size)
-                for row in rows
-                if row.term in gterms
-            ]
-            if not parts:
-                continue
-            gids = np.unique(np.concatenate(parts))
-            if allowed is not None:
-                pos = np.minimum(
-                    np.searchsorted(allowed, gids), len(allowed) - 1
-                )
-                gids = gids[allowed[pos] == gids]
-            if len(gids):
-                all_ids.append(gids)
-                all_contrib.append(np.full(len(gids), float(w)))
-        if not all_ids:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-        ids = np.concatenate(all_ids)
-        contrib = np.concatenate(all_contrib)
-        uniq, inv = np.unique(ids, return_inverse=True)
-        acc = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(acc, inv, contrib)
-        if require_n_terms is not None:
-            cnt = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(cnt, inv, 1)
-            keep = cnt >= require_n_terms
-            uniq, acc = uniq[keep], acc[keep]
-        if denied is not None:
-            # tombstoned docs leave the exhaustive accumulator BEFORE local
-            # top-k / cursor selection (Lucene liveDocs: stats stay global,
-            # deleted docs never occupy a result slot)
-            keep = strip_denied(uniq, denied)
-            uniq, acc = uniq[keep], acc[keep]
-        if cursor is not None:
-            cs, cd = cursor
-            elig = (acc < cs) | ((acc == cs) & (uniq > cd))
-            uniq, acc = uniq[elig], acc[elig]
-        if k is not None:
-            uniq, acc = topk_ties(uniq, acc, k)
-        order = np.lexsort((uniq, -acc))
-        return pd.DataFrame({"doc_id": uniq[order], "score": acc[order]})
+        )
+    )
 
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        return score_rows(list(pdf.itertuples(index=False)))
 
-    score.rows = score_rows  # batch path contract (same as maxscore_kernel)
-    return score
+def _merge_topk(matched: DataFrame, kernel, k: int | None) -> DataFrame:
+    """Score each shard's rows with ``kernel`` and order-merge the local
+    top-k: the first ``k`` rows in (score desc, doc_id asc) order, every
+    row for k=None."""
+    top = (
+        matched.groupBy("shard")
+        .applyInPandas(kernel, _RESULT_SCHEMA)
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+    )
+    return top if k is None else top.limit(k)
+
+
+def _ranked_top(
+    spark: SparkSession,
+    index: Index,
+    plan: QueryPlan,
+    dfs: dict,
+    k: int | None,
+    mm: int | None = None,
+    cursor: tuple[float, int] | None = None,
+    exhaustive: bool = False,
+) -> DataFrame:
+    """Ranked (doc_id, score) frame of a resolved plan whose terms have
+    global document frequencies ``dfs`` — the shard fan-out shared by
+    :func:`search` and :func:`search_after`.  A per-term boost multiplies
+    the term's idf, exactly Lucene's boost placement: every bound,
+    MaxScore block maxima included, scales with it and pruning stays
+    exact."""
+    spec = index.spec
+    idf = {
+        t: bm25_idf(df, index.n_docs) * plan.weights.get(t, 1.0)
+        for t, df in dfs.items()
+    }
+    kernel = _rank_kernel(
+        plan, idf, index.avgdl, spec.k1, spec.b, k, spec.block_size, mm=mm,
+        cursor=cursor, exhaustive=exhaustive,
+    )
+    return _merge_topk(_plan_scan(spark, index, plan, dfs), kernel, k)
 
 
 def term_dfs(
@@ -1036,20 +1288,17 @@ def match_ids(
         return phrase_match_ids(
             spark, index, pq[0], filters=filters, slop=pq[1]
         )
-    qs, ranges, neg_ranges = parse_ranges(qs, index.spec.keyword_fields)
-    qs, neg = parse_prohibited(qs)
-    qs, _ = parse_boosts(qs)  # boosts never change the MATCH set
-    eterms = resolve_excluded(spark, index, neg)
-    rgroups = {expand_keyword_range(spark, index, r) for r in ranges}
-    for r in neg_ranges:  # a prohibited range excludes its whole expansion
-        eterms |= expand_keyword_range(spark, index, r)
-    if qs == "*:*" or (not qs and (neg or neg_ranges)):
+    plan = _resolve(
+        spark, index,
+        plan_query(qs, index.spec.keyword_fields, filters, synonyms, op),
+    )
+    fterms, eterms = plan.filters, plan.excluded
+    if plan.match_all:
         # MatchAllDocsQuery (the /browse handler's q.alt=*:* landing page,
         # solrconfig.xml:879), incl. Solr's pure-negative top-level rewrite:
         # every doc, optionally fq-restricted, minus the excluded set.  The
         # unfiltered case reads ONE int column of the docs table (columnar
         # pruned scan, no postings touched); filtered goes index-side.
-        fterms = filter_terms_of(filters) | rgroups
         if fterms:
             return keyword_filter(spark, index, fterms, excluded=eterms)
         live = index.docs(spark).select("doc_id")
@@ -1062,30 +1311,19 @@ def match_ids(
                 _ids_of_terms(spark, index, eterms), "doc_id", "left_anti"
             )
         return live
-    qtext, parsed_fterms = parse_query(qs, index.spec.keyword_fields)
-    qtext, op = query_op(qtext, default=op)
-    qtext, wild_tokens = split_wildcards(qtext)
-    terms = expand_terms(qtext, synonyms)
-    fterms = filter_terms_of(filters) | parsed_fterms | rgroups
     # wildcard clauses: each is ONE clause matched by any dict expansion
-    groups = [
-        frozenset(expand_multiterm(spark, index, tok)) for tok in wild_tokens
-    ]
-    live_groups = [g for g in groups if g]
+    live_groups = [g for g, _ in plan.groups if g]
     empty = _empty_ids(spark)
-    if not terms and not groups:
+    if not plan.terms and not plan.groups:
         return (
             keyword_filter(spark, index, fterms, excluded=eterms)
             if fterms
             else empty
         )
-    dfs = term_dfs(spark, index, terms) if terms else {}
-    conjunctive = op.upper() == "AND"
-    n_required = len(set(terms)) + len(groups)
-    if (not dfs and not live_groups) or (
-        conjunctive and len(dfs) + len(live_groups) < n_required
-    ):
+    dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
+    if _zero_hit(plan, dfs):
         return empty
+    conjunctive, n_required = plan.conjunctive, plan.n_required
     sterms = set(dfs)
     block_size = index.spec.block_size
 
@@ -1238,23 +1476,19 @@ def search(
             spark, index, pq[0], k=k, with_stored=with_stored,
             filters=filters, start=start, slop=pq[1],
         )
-    q, ranges, neg_ranges = parse_ranges(q, index.spec.keyword_fields)
-    q, neg = parse_prohibited(q)
-    q, raw_boosts = parse_boosts(q)
-    eterms = resolve_excluded(spark, index, neg)
-    rgroups = {expand_keyword_range(spark, index, r) for r in ranges}
-    for r in neg_ranges:
-        eterms |= expand_keyword_range(spark, index, r)
-    if q == "*:*" or (not q and (neg or neg_ranges)):
+    plan = _resolve(
+        spark, index,
+        plan_query(q, index.spec.keyword_fields, filters, synonyms, op),
+    )
+    fetch_k = None if k is None else k + start
+    if plan.match_all:
         # MatchAllDocsQuery (q.alt=*:*, solrconfig.xml:879): constant score
         # 1.0 (Lucene's match-all), doc_id order, normal paging/fq/stored.
         # A pure-negative query follows Solr's top-level rewrite to
         # ``*:* AND NOT ...`` (match_ids serves the exclusion).
-        fetch_k = None if k is None else k + start
         top = (
             match_ids(
-                spark, index, query.strip(), filters=filters,
-                doc_filter=doc_filter,
+                spark, index, q, filters=filters, doc_filter=doc_filter,
             )
             .select("doc_id", F.lit(1.0).alias("score"))
             .orderBy("doc_id")
@@ -1268,47 +1502,22 @@ def search(
         out = _fetch_stored(spark, index, top, bounded=k is not None, fl=fl)
         return out.drop("score") if fl is not None and "score" not in fl \
             else out
-    qtext, parsed_fterms = parse_query(q, index.spec.keyword_fields)
-    qtext, op = query_op(qtext, default=op)
-    qtext, wild_tokens = split_wildcards(qtext)
-    terms = expand_terms(qtext, synonyms)
-    fterms = filter_terms_of(filters) | parsed_fterms | rgroups
-    # wildcard clauses: dict-expanded, constant-score (Solr's rewrite for
-    # multi-term queries); a boost on the wildcard token is the clause
-    # weight.  Scoring with const groups runs the exact TAAT kernel —
-    # MaxScore's per-term bounds don't model a once-per-doc clause.
-    const_groups = [
-        (
-            frozenset(expand_multiterm(spark, index, tok)),
-            float(raw_boosts.get(tok, 1.0)),
-        )
-        for tok in wild_tokens
-    ]
-    live_groups = [g for g in const_groups if g[0]]
-    postings = _score_rows(index, spark)
-    dfs = term_dfs(spark, index, terms) if terms else {}
-    conjunctive = op.upper() == "AND"
-    n_required = len(set(terms)) + len(const_groups)
+    fterms, eterms = plan.filters, plan.excluded
+    dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
     mm = (
-        _min_match_count(min_match, n_required)
+        _min_match_count(min_match, plan.n_required)
         if (
             min_match is not None
-            and not conjunctive
-            and (terms or const_groups)
+            and not plan.conjunctive
+            and (plan.terms or plan.groups)
         )
         else None
     )
-    fetch_k = None if k is None else k + start
-    reachable = len(dfs) + len(live_groups)
-    if (
-        (not dfs and not live_groups)
-        or (conjunctive and reachable < n_required)
-        or (mm is not None and reachable < mm)
-    ):
+    if _zero_hit(plan, dfs, mm):
         # Q7 zero-hit short-circuit (schema stays stable below); under AND a
         # term with global df=0 (or an empty wildcard expansion) empties
         # the result outright
-        if fterms and not terms and not const_groups:
+        if fterms and not plan.terms and not plan.groups:
             # pure filter query: matching docs ranked by doc_id, score 0
             if doc_filter is None:
                 top = keyword_filter(
@@ -1335,60 +1544,15 @@ def search(
         else:
             top = spark.createDataFrame([], _RESULT_SCHEMA)
     else:
-        idf = {t: bm25_idf(df, index.n_docs) for t, df in dfs.items()}
-        # per-term boosts (term^2.5): multiply the clause weight — exactly
-        # Lucene's boost placement (idf is the per-term weight factor, so
-        # every downstream bound, incl. MaxScore block maxima, scales with
-        # it and pruning stays exact)
-        plain_boosts = {
-            t: bw for t, bw in raw_boosts.items() if not is_multiterm(t)
-        }
-        for t, w in boost_weights_of(plain_boosts).items():
-            if t in idf:
-                idf[t] *= w
-        spec = index.spec
-
-        def _mk_kernel(kk: int | None):
-            if conjunctive or mm is not None or live_groups:
-                return _taat_kernel(
-                    idf, index.avgdl, spec.k1, spec.b, kk, spec.block_size,
-                    fterms,
-                    require_n_terms=(n_required if conjunctive else mm),
-                    excluded_terms=eterms, const_groups=live_groups,
-                )
-            if mode == "taat" or kk is None:
-                # kk=None returns every match — exhaustive TAAT (top-k
-                # pruning has nothing to prune against)
-                return _taat_kernel(
-                    idf, index.avgdl, spec.k1, spec.b, kk, spec.block_size,
-                    fterms, excluded_terms=eterms,
-                )
-            return maxscore_kernel(
-                idf, index.avgdl, spec.k1, spec.b, kk, spec.block_size,
-                fterms, excluded_terms=eterms,
-            )
-
-        expansion_terms = [t for g, _ in live_groups for t in g]
-        matched = postings.filter(
-            F.col("term").isin(
-                _scan_terms(
-                    index,
-                    list(dfs) + list(fterms) + list(eterms)
-                    + expansion_terms,
-                )
-            )
-        )
 
         def _ranked(kk: int | None) -> DataFrame:
-            local = matched.groupBy("shard").applyInPandas(
-                _mk_kernel(kk), _RESULT_SCHEMA
+            return _ranked_top(
+                spark, index, plan, dfs, kk, mm=mm,
+                exhaustive=mode == "taat",
             )
-            return local.orderBy(F.desc("score"), F.asc("doc_id"))
 
         if doc_filter is None:
-            top = _ranked(fetch_k)
-            if k is not None:  # k=None returns ALL matches (no huge .limit)
-                top = top.limit(fetch_k)
+            top = _ranked(fetch_k)  # k=None returns ALL matches
         elif k is None:
             # exhaustive + doc filter: one distributed semi-join, no collect
             top = _ranked(None).join(
@@ -1414,7 +1578,7 @@ def search(
             top = None
             survivors: list = []
             while True:
-                cand = _ranked(fetch).limit(fetch).collect()
+                cand = _ranked(fetch).collect()
                 ok = _doc_filter_probe(
                     spark, index, doc_filter,
                     [int(r["doc_id"]) for r in cand],
@@ -1447,110 +1611,6 @@ def search(
         return top
     out = _fetch_stored(spark, index, top, bounded=k is not None, fl=fl)
     return out.drop("score") if fl is not None and "score" not in fl else out
-
-
-def _dismax_kernel(
-    idf: dict[str, float],
-    group: dict[str, int],
-    boost: dict[str, float],
-    avgdl_of: dict[str, float],
-    tie: float,
-    k1: float,
-    b: float,
-    k: int | None,
-    block_size: int,
-    filter_terms: set[str] | None = None,
-    require_n_groups: int | None = None,
-    excluded_terms: set[str] | None = None,
-):
-    """Exact DisMax scorer for one shard (the eDisMax combination rule,
-    Lucene DisjunctionMaxQuery: per query clause, the MAX over per-field
-    scores plus ``tie`` times the rest; clauses then sum).
-
-    Each physical posting term (bare content token or ``field:token``)
-    carries its own idf, field boost, and FIELD avgdl; ``group`` maps it to
-    its query clause.  Per clause the kernel takes a per-doc max and sum of
-    the field contributions (each (term, doc) posting exists once, so a doc
-    appears at most once per field within a clause), then accumulates
-    ``max + tie * (sum - max)`` across clauses.  ``require_n_groups`` is the
-    clause-count floor (AND = all clauses, mm = the eDisMax floor) — per-doc
-    distinct-clause counting, an index-side intersection."""
-    filter_terms = filter_terms or set()
-    n_groups = 1 + max(group.values()) if group else 0
-
-    def score_rows(rows: list) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
-        rows = sorted(rows, key=row_cache_key)
-        allowed = allowed_ids(rows, filter_terms, block_size)
-        if allowed is not None and not len(allowed):
-            return empty
-        denied = denied_ids(rows, block_size, excluded_terms)
-        g_ids: list[list[np.ndarray]] = [[] for _ in range(n_groups)]
-        g_contrib: list[list[np.ndarray]] = [[] for _ in range(n_groups)]
-        for row in rows:
-            t = row.term
-            if t not in idf:
-                continue
-            n = int(row.n_docs)
-            ids = decode_doc_ids(row.doc_ids, n, block_size)
-            tfs = decode_varint(row.tfs, n)
-            dls = decode_varint(row.dls, n)
-            contrib = (
-                boost[t]
-                * idf[t]
-                * bm25_tf_norm(tfs, dls, avgdl_of[t], k1, b)
-            )
-            if allowed is not None:
-                keep = _member(ids, allowed)
-                ids, contrib = ids[keep], contrib[keep]
-            g_ids[group[t]].append(ids)
-            g_contrib[group[t]].append(contrib)
-        doc_parts: list[np.ndarray] = []
-        score_parts: list[np.ndarray] = []
-        for gi in range(n_groups):
-            if not g_ids[gi]:
-                continue
-            ids = np.concatenate(g_ids[gi])
-            contrib = np.concatenate(g_contrib[gi])
-            uniq, inv = np.unique(ids, return_inverse=True)
-            mx = np.zeros(len(uniq), dtype=np.float64)
-            np.maximum.at(mx, inv, contrib)  # contribs > 0 (idf, boost > 0)
-            if tie:
-                sm = np.zeros(len(uniq), dtype=np.float64)
-                np.add.at(sm, inv, contrib)
-                gscore = mx + tie * (sm - mx)
-            else:
-                gscore = mx
-            doc_parts.append(uniq)
-            score_parts.append(gscore)
-        if not doc_parts:
-            return empty
-        ids = np.concatenate(doc_parts)
-        gscores = np.concatenate(score_parts)
-        uniq, inv = np.unique(ids, return_inverse=True)
-        acc = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(acc, inv, gscores)
-        if require_n_groups is not None:
-            # a doc appears once per MATCHED clause in the concatenation
-            cnt = np.zeros(len(uniq), dtype=np.int64)
-            np.add.at(cnt, inv, 1)
-            keep = cnt >= require_n_groups
-            uniq, acc = uniq[keep], acc[keep]
-        if denied is not None:
-            keep = strip_denied(uniq, denied)
-            uniq, acc = uniq[keep], acc[keep]
-        if k is not None:
-            uniq, acc = topk_ties(uniq, acc, k)
-        order = np.lexsort((uniq, -acc))
-        return pd.DataFrame({"doc_id": uniq[order], "score": acc[order]})
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        return score_rows(list(pdf.itertuples(index=False)))
-
-    score.rows = score_rows
-    return score
 
 
 def search_dismax(
@@ -1620,39 +1680,27 @@ def search_dismax(
                 f"qf field {f!r} is not content_field or a spec.text_fields "
                 f"entry ({sorted(text_set)})"
             )
-    qs, ranges, neg_ranges = parse_ranges(query.strip(), spec.keyword_fields)
-    qs, negtoks = parse_prohibited(qs)
-    qs, raw_boosts = parse_boosts(qs)
-    if any(is_multiterm(t) for t in qs.split() + negtoks):
+    plan = plan_query(query, spec.keyword_fields, filters, synonyms, op)
+    if any(is_multiterm(t) for t in plan.text.split() + plan.prohibited):
         raise ValueError(
             "wildcard clauses are not supported in dismax (qf) queries — "
             "use search() for wildcard retrieval"
         )
-    rgroups = {expand_keyword_range(spark, index, r) for r in ranges}
-    clause_w = boost_weights_of(raw_boosts)
-    raw_eterms = excluded_terms_of(negtoks, spec.keyword_fields)
+    plan = _resolve(spark, index, plan)
     # a prohibited CLAUSE excludes a doc matching it in ANY qf field
     # (Lucene: the MUST_NOT sub-query is itself a dismax over qf); keyword
-    # exclusions stay exact terms.  Analyzed tokens never contain ':'
-    # (alphanumeric runs), so the KW_SEP test is unambiguous.
+    # exclusions (incl. prohibited ranges) stay exact terms.  Analyzed
+    # tokens never contain ':' (alphanumeric runs), so the KW_SEP test is
+    # unambiguous.
     kwf = set(spec.keyword_fields)
     eterms: set[str] = set()
-    for t in raw_eterms:
+    for t in plan.excluded:
         if KW_SEP in t and t.split(KW_SEP, 1)[0] in kwf:
             eterms.add(t)
         else:
             for f in qf:
                 eterms.add(t if f == spec.content_field else f"{f}{KW_SEP}{t}")
-    for r in neg_ranges:
-        eterms |= expand_keyword_range(spark, index, r)
-    qtext, parsed_fterms = parse_query(qs, spec.keyword_fields)
-    qtext, op = query_op(qtext, default=op)
-    tokens = expand_terms(qtext, synonyms)
-    fterms = filter_terms_of(filters) | parsed_fterms | rgroups
-    # physical candidate terms: one per (clause, qf field)
-    group: dict[str, int] = {}
-    boost: dict[str, float] = {}
-    avgdl_of: dict[str, float] = {}
+    plan = plan._replace(excluded=eterms)
     avgdl_f = {
         f: (
             index.avgdl
@@ -1662,62 +1710,51 @@ def search_dismax(
         )
         for f in qf
     }
-    seen: dict[str, None] = {}
-    for t in tokens:
-        seen.setdefault(t, None)
-    clauses = list(seen)  # deduped, order-preserving (clause = distinct term)
-    for gi, t in enumerate(clauses):
+    # physical candidate terms, one per (clause, qf field): clause boost,
+    # the FIELD's avgdl, clause position (clause = distinct analyzed term)
+    clauses = list(dict.fromkeys(plan.terms))
+    phys: dict[str, tuple[float, float, int]] = {}
+    for ci, t in enumerate(clauses):
         for f, bst in qf.items():
-            phys = t if f == spec.content_field else f"{f}{KW_SEP}{t}"
-            group[phys] = gi
             # a per-term boost (term^2) multiplies the whole clause's
             # weight, i.e. every qf field's contribution for that clause
-            boost[phys] = float(bst) * clause_w.get(t, 1.0)
-            avgdl_of[phys] = avgdl_f[f]
-    dfs = term_dfs(spark, index, list(group)) if group else {}
-    present_groups = {group[t] for t in dfs}
-    conjunctive = op.upper() == "AND"
+            phys[t if f == spec.content_field else f"{f}{KW_SEP}{t}"] = (
+                float(bst) * plan.weights.get(t, 1.0), avgdl_f[f], ci,
+            )
+    dfs = term_dfs(spark, index, list(phys)) if phys else {}
+    present = {phys[t][2] for t in dfs}
     n_clauses = len(clauses)
     mm = (
         _min_match_count(min_match, n_clauses)
-        if (min_match is not None and not conjunctive and clauses)
+        if (min_match is not None and not plan.conjunctive and clauses)
         else None
     )
     fetch_k = None if k is None else k + start
     if (
         not dfs
-        or (conjunctive and len(present_groups) < n_clauses)
-        or (mm is not None and len(present_groups) < mm)
+        or (plan.conjunctive and len(present) < n_clauses)
+        or (mm is not None and len(present) < mm)
     ):
-        if fterms and not clauses:
+        if plan.filters and not clauses:
             top = keyword_filter(
-                spark, index, fterms, k=fetch_k, excluded=eterms
+                spark, index, plan.filters, k=fetch_k, excluded=eterms
             ).withColumn("score", F.lit(0.0))
             if start:
                 top = top.offset(start)
         else:
             top = spark.createDataFrame([], _RESULT_SCHEMA)
     else:
-        idf = {t: bm25_idf(df, index.n_docs) for t, df in dfs.items()}
-        kernel = _dismax_kernel(
-            idf, group, boost, avgdl_of, tie, spec.k1, spec.b, fetch_k,
-            spec.block_size, fterms,
-            require_n_groups=(
-                n_clauses if conjunctive else mm
-            ),
+        terms = {}
+        for t, df in dfs.items():
+            bst, avgdl, ci = phys[t]
+            terms[t] = (bst * bm25_idf(df, index.n_docs), avgdl, ci)
+        kernel = _clause_kernel(
+            terms, tie, spec.k1, spec.b, fetch_k, spec.block_size,
+            plan.filters,
+            require_n=n_clauses if plan.conjunctive else mm,
             excluded_terms=eterms,
         )
-        matched = _score_rows(index, spark).filter(
-            F.col("term").isin(
-                _scan_terms(index, list(dfs) + list(fterms) + list(eterms))
-            )
-        )
-        local_topk = matched.groupBy("shard").applyInPandas(
-            kernel, _RESULT_SCHEMA
-        )
-        top = local_topk.orderBy(F.desc("score"), F.asc("doc_id"))
-        if k is not None:
-            top = top.limit(fetch_k)
+        top = _merge_topk(_plan_scan(spark, index, plan, dfs), kernel, fetch_k)
         if start:
             top = top.offset(start)
     if not with_stored:
@@ -1772,71 +1809,24 @@ def search_after(
                 bounded=True,
             )
         )
-    qs, ranges, neg_ranges = parse_ranges(
-        query.strip(), index.spec.keyword_fields
+    plan = _resolve(
+        spark, index,
+        plan_query(query, index.spec.keyword_fields, filters, synonyms, op),
     )
-    qs, neg = parse_prohibited(qs)
-    qs, raw_boosts = parse_boosts(qs)
-    eterms = resolve_excluded(spark, index, neg)
-    rgroups = {expand_keyword_range(spark, index, r) for r in ranges}
-    for r in neg_ranges:
-        eterms |= expand_keyword_range(spark, index, r)
-    qtext, parsed_fterms = parse_query(qs, index.spec.keyword_fields)
-    qtext, op = query_op(qtext, default=op)
-    qtext, wild_tokens = split_wildcards(qtext)
-    terms = expand_terms(qtext, synonyms)
-    fterms = filter_terms_of(filters) | parsed_fterms | rgroups
-    const_groups = [
-        (
-            frozenset(expand_multiterm(spark, index, tok)),
-            float(raw_boosts.get(tok, 1.0)),
+    dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
+    if not _zero_hit(plan, dfs):
+        top = _ranked_top(
+            spark, index, plan, dfs, k, cursor=cursor, exhaustive=True
         )
-        for tok in wild_tokens
-    ]
-    live_groups = [g for g in const_groups if g[0]]
-    dfs = term_dfs(spark, index, terms) if terms else {}
-    conjunctive = op.upper() == "AND"
-    n_required = len(set(terms)) + len(const_groups)
-    if (not dfs and not live_groups) or (
-        conjunctive and len(dfs) + len(live_groups) < n_required
-    ):
-        if fterms and not terms and not const_groups:
-            # pure filter query: (doc_id asc, score 0) order — the cursor
-            # degenerates to a doc_id floor
-            out = keyword_filter(spark, index, fterms, excluded=eterms)
-            if cursor is not None:
-                out = out.filter(F.col("doc_id") > int(cursor[1]))
-            top = (
-                out.orderBy("doc_id").limit(k).withColumn("score", F.lit(0.0))
-            )
-        else:
-            top = spark.createDataFrame([], _RESULT_SCHEMA)
+    elif plan.filters and not plan.terms and not plan.groups:
+        # pure filter query: (doc_id asc, score 0) order — the cursor
+        # degenerates to a doc_id floor
+        out = keyword_filter(spark, index, plan.filters, excluded=plan.excluded)
+        if cursor is not None:
+            out = out.filter(F.col("doc_id") > int(cursor[1]))
+        top = out.orderBy("doc_id").limit(k).withColumn("score", F.lit(0.0))
     else:
-        spec = index.spec
-        idf = {t: bm25_idf(df, index.n_docs) for t, df in dfs.items()}
-        plain_boosts = {
-            t: bw for t, bw in raw_boosts.items() if not is_multiterm(t)
-        }
-        for t, w in boost_weights_of(plain_boosts).items():
-            if t in idf:
-                idf[t] *= w
-        kernel = _taat_kernel(
-            idf, index.avgdl, spec.k1, spec.b, k, spec.block_size, fterms,
-            require_n_terms=n_required if conjunctive else None,
-            cursor=cursor, excluded_terms=eterms, const_groups=live_groups,
-        )
-        expansion_terms = [t for g, _ in live_groups for t in g]
-        matched = _score_rows(index, spark).filter(
-            F.col("term").isin(
-                _scan_terms(
-                    index,
-                    list(dfs) + list(fterms) + list(eterms)
-                    + expansion_terms,
-                )
-            )
-        )
-        local = matched.groupBy("shard").applyInPandas(kernel, _RESULT_SCHEMA)
-        top = local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        top = spark.createDataFrame([], _RESULT_SCHEMA)
     if not with_stored:
         return top
     return _fetch_stored(spark, index, top, bounded=True)
@@ -1908,9 +1898,7 @@ def _phrase_kernel(
     def empty() -> pd.DataFrame:
         if match_only:
             return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-        return pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
+        return finish_topk()
 
     def gather(rows: list, inter: np.ndarray, want_dl: bool):
         """(docs, flat positions, per-posting counts[, dls]) for the
@@ -2070,16 +2058,9 @@ def _phrase_kernel(
         scores = idf_sum * bm25_tf_norm(
             pf.astype(np.float64), dls, avgdl, k1, b
         )
-        if k is not None:
-            docs, scores = topk_ties(docs, scores, k)
-        o = np.lexsort((docs, -scores))
-        return pd.DataFrame({"doc_id": docs[o], "score": scores[o]})
+        return finish_topk(docs, scores, k)
 
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        return score_rows(list(pdf.itertuples(index=False)))
-
-    score.rows = score_rows  # batch path contract (same as the other kernels)
-    return score
+    return shard_kernel(score_rows)
 
 
 def phrase_match_ids(
@@ -2183,12 +2164,7 @@ def search_phrase(
                 "tfs", "boffs_tfs", "dls", "boffs_dls",
                 "pos", "boffs_pos",
             )
-            local = matched.groupBy("shard").applyInPandas(
-                kernel, _RESULT_SCHEMA
-            )
-            top = local.orderBy(F.desc("score"), F.asc("doc_id"))
-            if k is not None:
-                top = top.limit(fetch_k)
+            top = _merge_topk(matched, kernel, fetch_k)
     if start:
         top = top.offset(start)
     if not with_stored:
@@ -2291,27 +2267,15 @@ def explain_score(
     float64 arithmetic; asserted in tests).  Stats come from the INDEX
     (dict df + postings tf/dl), not from re-analyzing stored text, so the
     explanation is the ground truth of what scored."""
-    qs, _, _ = parse_ranges(query.strip(), index.spec.keyword_fields)
-    qs, _ = parse_prohibited(qs)       # ranked docs never match a
-    qs, raw_boosts = parse_boosts(qs)  # prohibited term
-    weights = boost_weights_of(
-        {t: b for t, b in raw_boosts.items() if not is_multiterm(t)}
-    )
-    qtext, _ = parse_query(qs, index.spec.keyword_fields)
-    qtext, _ = query_op(qtext)
-    qtext, wild_tokens = split_wildcards(qtext)
-    terms = expand_terms(qtext, synonyms)
-    groups = [
-        (tok, frozenset(expand_multiterm(spark, index, tok)),
-         float(raw_boosts.get(tok, 1.0)))
-        for tok in wild_tokens
-    ]
-    dfs = term_dfs(spark, index, terms) if terms else {}
+    # ranked docs never match a prohibited term; filters never score
+    plan = plan_query(query, index.spec.keyword_fields, synonyms=synonyms)
+    groups = _const_groups(spark, index, plan)
+    dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
     schema = (
         "term string, df long, tf long, dl long, idf double, "
         "tf_norm double, contribution double"
     )
-    exp_terms = sorted({t for _, g, _ in groups for t in g})
+    exp_terms = sorted({t for g, _ in groups for t in g})
     if not dfs and not exp_terms:
         return spark.createDataFrame([], schema)
     exp_dfs = term_dfs(spark, index, exp_terms) if exp_terms else {}
@@ -2324,7 +2288,7 @@ def explain_score(
         tf, dl = stats[t]
         # the ranked kernels premultiply boosts into idf — same placement
         # here keeps sum(contribution) bit-equal to the ranked score
-        idf = bm25_idf(dfs[t], index.n_docs) * weights.get(t, 1.0)
+        idf = bm25_idf(dfs[t], index.n_docs) * plan.weights.get(t, 1.0)
         tf_norm = float(
             bm25_tf_norm(
                 np.array([tf]), np.array([dl]), index.avgdl, spec.k1, spec.b
@@ -2333,7 +2297,7 @@ def explain_score(
         data.append(
             (t, int(dfs[t]), tf, dl, float(idf), tf_norm, float(idf * tf_norm))
         )
-    for tok, g, w in groups:
+    for (tok, _), (g, w) in zip(plan.multiterm, groups):
         # constant-score clause: weight once per matched doc (tf/dl carry
         # no meaning — reported 0; df = the expansion's summed df)
         if any(t in stats for t in g):
@@ -2447,26 +2411,13 @@ def search_elevated(
     )
     if not pinned:
         return tail
-    qs, _, _ = parse_ranges(query.strip(), index.spec.keyword_fields)
-    qs, _ = parse_prohibited(qs)
-    qs, raw_boosts = parse_boosts(qs)
-    qtext, _ = parse_query(qs, index.spec.keyword_fields)
-    qtext, _ = query_op(qtext, default=op)
-    qtext, wild_tokens = split_wildcards(qtext)
-    terms = expand_terms(qtext)
-    groups = [
-        (frozenset(expand_multiterm(spark, index, tok)),
-         float(raw_boosts.get(tok, 1.0)))
-        for tok in wild_tokens
-    ]
-    dfs = term_dfs(spark, index, terms) if terms else {}
-    idf = {t: bm25_idf(d, index.n_docs) for t, d in dfs.items()}
-    plain_boosts = {
-        t: b for t, b in raw_boosts.items() if not is_multiterm(t)
+    plan = plan_query(query, index.spec.keyword_fields, op=op)
+    groups = _const_groups(spark, index, plan)
+    dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
+    idf = {
+        t: bm25_idf(d, index.n_docs) * plan.weights.get(t, 1.0)
+        for t, d in dfs.items()
     }
-    for t, w in boost_weights_of(plain_boosts).items():
-        if t in idf:
-            idf[t] *= w
     exp_terms = sorted({t for g, _ in groups for t in g} - set(dfs))
     stats = _doc_scores_for_ids(
         spark, index, list(dfs) + exp_terms, pinned
@@ -2842,6 +2793,23 @@ def stats_field(
     )
 
 
+def _highlight_terms(
+    spark: SparkSession,
+    index: Index,
+    query: str,
+    synonyms: dict[str, list[str]] | None,
+    op: str,
+) -> list[str]:
+    """Sorted analyzed terms a highlighter wraps: the query's scoring terms
+    plus every matched wildcard / fuzzy expansion — never a prohibited
+    term or a filter (search handles matching)."""
+    plan = plan_query(query, index.spec.keyword_fields, synonyms=synonyms, op=op)
+    return sorted(
+        set(plan.terms)
+        | {t for g, _ in _const_groups(spark, index, plan) for t in g}
+    )
+
+
 def highlight(
     spark: SparkSession,
     index: Index,
@@ -2891,20 +2859,7 @@ def highlight(
             f"highlighting requires content field {spec.content_field!r} in "
             f"stored_fields {spec.stored_fields!r} (Solr stored=\"true\")"
         )
-    qs, _, _ = parse_ranges(query.strip(), spec.keyword_fields)
-    qs, _ = parse_prohibited(qs)  # never highlight a prohibited term or a
-    qs, _ = parse_boosts(qs)      # range filter (search handles matching)
-    qtext, _ = parse_query(qs, spec.keyword_fields)
-    qtext, _ = query_op(qtext, default=op)
-    qtext, wild_tokens = split_wildcards(qtext)
-    terms = sorted(
-        set(expand_terms(qtext, synonyms))
-        | {  # wildcard matches highlight their matched expansion
-            t
-            for tok in wild_tokens
-            for t in expand_multiterm(spark, index, tok)
-        }
-    )
+    terms = _highlight_terms(spark, index, query, synonyms, op)
     top = search(
         spark, index, query, k=k, with_stored=True, filters=filters,
         synonyms=synonyms, op=op,
@@ -3015,20 +2970,7 @@ def highlight_fields(
             f"highlight fields must be stored (Solr stored=\"true\"): "
             f"{missing} not in {sorted(stored)}"
         )
-    qs, _, _ = parse_ranges(query.strip(), spec.keyword_fields)
-    qs, _ = parse_prohibited(qs)
-    qs, _ = parse_boosts(qs)
-    qtext, _ = parse_query(qs, spec.keyword_fields)
-    qtext, _ = query_op(qtext, default=op)
-    qtext, wild_tokens = split_wildcards(qtext)
-    terms = sorted(
-        set(expand_terms(qtext, synonyms))
-        | {
-            t
-            for tok in wild_tokens
-            for t in expand_multiterm(spark, index, tok)
-        }
-    )
+    terms = _highlight_terms(spark, index, query, synonyms, op)
     if top is None:
         top = search(
             spark, index, query, k=k, with_stored=True, filters=filters,
@@ -4184,7 +4126,7 @@ def more_like_this_docs(
 
 
 def batch_kernel(
-    plans: dict[str, list[str] | tuple],
+    plans: dict[str, QueryPlan | list[str]],
     idf: dict[str, float],
     avgdl: float,
     k1: float,
@@ -4193,62 +4135,42 @@ def batch_kernel(
     block_size: int,
     counters: dict | None = None,
 ):
-    """Per-shard scorer for MANY queries: each query runs the SAME
-    block-max MaxScore pruning as the single-query path (a batch containing
-    one hot term no longer decodes that term's full posting list — the
-    exhaustive-TAAT shape this replaces did), while full decodes of rows a
-    term shares across queries are memoized in one per-partition cache.
+    """Per-shard scorer for MANY queries.
 
-    A plan is a bare term list (OR query, no filters — the original
-    contract), a ``(terms, filter_terms, conjunctive[, excluded_terms[,
-    weights[, const_groups]]])`` tuple (``weights``: per-analyzed-term
-    boost multipliers; ``const_groups``: pre-expanded constant-score
-    wildcard clauses, each ``(member_terms, weight)``), or a
-    ``("PHRASE", position_terms, filter_terms[, slop])`` tuple
-    — full parity with
-    the single-query surface: keyword filters restrict the candidate set
-    per query (fq semantics, same block-granular intersection), a
-    conjunctive query runs the exact TAAT intersection kernel, excluded
-    (prohibited-clause) terms strip their docs before top-k, and a
-    phrase plan runs the positional phrase kernel (rarest-first candidate
-    generation + blockwise position decode; PhraseWeight scoring — the
-    same kernel :func:`search_phrase` uses, per-query rank-identical).
+    Each plan is a resolved :class:`QueryPlan` (:func:`search_many` builds
+    them: filters with their expanded range groups, prohibited terms,
+    constant-score groups), a phrase plan (``slop`` set), or a bare term
+    list (an OR query with no filters — the original contract).  Every
+    query is scored on its own rows exactly like its single-query twin, so
+    a batch entry is per-query rank-identical to :func:`search` /
+    :func:`search_phrase`:
 
-    Exposed at module level so tests/bench can drive it in-process with
-    ``counters`` and assert the skip counters fire."""
-    norm_plans: dict[str, tuple] = {}
-    for qid, p in plans.items():
-        if isinstance(p, tuple) and p and p[0] == "PHRASE":
-            norm_plans[qid] = (
-                "PHRASE", list(p[1]), set(p[2]),
-                int(p[3]) if len(p) > 3 else 0,
-            )
-        elif isinstance(p, tuple):
-            norm_plans[qid] = (
-                list(p[0]), set(p[1]), bool(p[2]),
-                set(p[3]) if len(p) > 3 else set(),
-                dict(p[4]) if len(p) > 4 else {},
-                [(frozenset(g), float(w)) for g, w in p[5]]
-                if len(p) > 5 else [],
-            )
-        else:
-            norm_plans[qid] = (list(p), set(), False, set(), {}, [])
+    * a ranked plan picks its kernel like :func:`search` (_rank_kernel):
+      block-max MaxScore for a plain OR query (a batch containing one hot
+      term does not decode that term's full posting list), the exact
+      clause scorer for AND and constant-score groups.  Keyword filters
+      restrict the candidate set (fq semantics, block-granular
+      intersection) and prohibited terms strip their docs before top-k;
+    * a pure keyword-filter plan returns its first k doc ids, score 0;
+    * a phrase plan runs the positional phrase kernel (rarest-first
+      candidate generation + blockwise position decode, PhraseWeight
+      scoring).
 
-    def _plan_terms(p: tuple) -> tuple[list[str], set[str]]:
-        return (p[1], p[2]) if p[0] == "PHRASE" else (p[0], p[1])
-
-    want = set()
-    for p in norm_plans.values():
-        terms, fterms = _plan_terms(p)
-        want |= set(terms) | _flat_terms(fterms)
-        if p[0] != "PHRASE":
-            want |= p[3]
-            for g, _ in p[5]:
-                want |= g
+    Full decodes of rows that several queries share are memoized in one
+    per-partition cache.  Exposed at module level so tests/bench can drive
+    it in-process with ``counters`` and assert the skip counters fire."""
+    plans = {
+        qid: p if isinstance(p, QueryPlan) else QueryPlan(list(p))
+        for qid, p in plans.items()
+    }
     # tombstone rows (present in the scan only when the index has deletes)
     # are appended to every query's row group so each sub-kernel excludes
     # them exactly like the single-query path
-    want.add(DELETED_TERM)
+    want = {DELETED_TERM}
+    for p in plans.values():
+        want |= set(p.terms) | _flat_terms(p.filters) | set(p.excluded)
+        for g, _ in p.groups:
+            want |= g
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         by_term: dict[str, list] = {}
@@ -4257,108 +4179,69 @@ def batch_kernel(
                 by_term.setdefault(r.term, []).append(r)
         del_rows = by_term.get(DELETED_TERM, [])
         cache: dict = {}
-        out_q: list[str] = []
-        out_ids: list[np.ndarray] = []
-        out_scores: list[np.ndarray] = []
-        for qid in sorted(norm_plans):
-            plan = norm_plans[qid]
-            if plan[0] == "PHRASE":
-                pterms, pfterms = plan[1], plan[2]
-                uniq = list(dict.fromkeys(pterms))
+
+        def rows_of(terms) -> list:
+            return [r for t in terms for r in by_term.get(t, [])]
+
+        def score(plan: QueryPlan) -> pd.DataFrame | None:
+            frows = rows_of(sorted(_flat_terms(plan.filters)))
+            if plan.slop is not None:
+                uniq = list(dict.fromkeys(plan.terms))
                 if not uniq or any(t not in idf for t in uniq):
-                    continue  # a df=0 phrase term empties the conjunction
-                qrows = [r for t in uniq for r in by_term.get(t, [])]
-                qrows += [
-                    r for t in sorted(pfterms) for r in by_term.get(t, [])
-                ]
+                    return None  # a df=0 phrase term empties the conjunction
+                qrows = rows_of(uniq) + frows
                 if not qrows:
-                    continue
-                qrows += del_rows
-                idf_sum = sum(idf[t] for t in pterms)
+                    return None
                 scorer = _phrase_kernel(
-                    pterms, idf_sum, avgdl, k1, b, k, block_size, pfterms,
-                    slop=plan[3],
+                    plan.terms, sum(idf[t] for t in plan.terms), avgdl, k1,
+                    b, k, block_size, plan.filters, slop=plan.slop,
                 )
-                res = scorer.rows(qrows)
-                if not len(res):
-                    continue
-                out_q.extend([qid] * len(res))
-                out_ids.append(res["doc_id"].to_numpy())
-                out_scores.append(res["score"].to_numpy())
-                continue
-            terms, fterms, conjunctive, eterms, weights, cgroups = plan
-            uniq_terms = list(dict.fromkeys(terms))
+                return scorer.rows(qrows + del_rows)
+            uniq = list(dict.fromkeys(plan.terms))
             idf_q = {
-                t: idf[t] * weights.get(t, 1.0)
-                for t in uniq_terms
-                if t in idf
+                t: idf[t] * plan.weights.get(t, 1.0) for t in uniq if t in idf
             }
-            # live = non-empty expansion (a GLOBAL dict fact from plan
-            # construction — per-shard row presence must not change the
-            # clause count or shards would disagree on conjunctive floors)
-            live_groups = [(g, w) for g, w in cgroups if g]
-            erows = [r for t in sorted(eterms) for r in by_term.get(t, [])]
-            if not uniq_terms and not cgroups and fterms:
+            erows = rows_of(sorted(plan.excluded))
+            if not uniq and not plan.groups and plan.filters:
                 # pure keyword-filter query: doc_ids (score 0.0), the same
                 # result shape the single-query path serves via
                 # keyword_filter — first k by doc_id per shard, the global
                 # (score desc, doc_id asc) window then equals doc_id order
-                frows = [
-                    r
-                    for t in sorted(_flat_terms(fterms))
-                    for r in by_term.get(t, [])
-                ]
-                allowed = allowed_ids(frows, fterms, block_size)
+                allowed = allowed_ids(frows, plan.filters, block_size)
                 if allowed is None or not len(allowed):
-                    continue
-                denied = denied_ids(del_rows + erows, block_size, eterms)
+                    return None
+                denied = denied_ids(del_rows + erows, block_size, plan.excluded)
                 if denied is not None:
                     allowed = allowed[strip_denied(allowed, denied)]
                 hits = allowed[:k]
-                out_q.extend([qid] * len(hits))
-                out_ids.append(hits)
-                out_scores.append(np.zeros(len(hits), dtype=np.float64))
-                continue
-            n_req = len(set(uniq_terms)) + len(cgroups)
-            if (not idf_q and not live_groups) or (
-                conjunctive and len(idf_q) + len(live_groups) < n_req
-            ):
-                continue  # zero-hit (or AND with a df=0 term) short-circuit
-            qrows = [r for t in idf_q for r in by_term.get(t, [])]
-            qrows += [
-                r
-                for t in sorted(_flat_terms(fterms))
-                for r in by_term.get(t, [])
-            ]
-            qrows += [
-                r
-                for g, _ in live_groups
-                for t in sorted(g)
-                for r in by_term.get(t, [])
+                return pd.DataFrame(
+                    {"doc_id": hits, "score": np.zeros(len(hits))}
+                )
+            if _zero_hit(plan, idf_q):
+                return None
+            qrows = rows_of(idf_q) + frows + [
+                r for g, _ in plan.groups if g for r in rows_of(sorted(g))
             ]
             if not qrows:
-                continue
-            qrows += del_rows + erows
+                return None
             # a term can be BOTH a scoring term and a wildcard-group member
             # (q='sort s*') — its rows would be appended twice and score
             # twice; row_cache_key is unique per row within a partition
-            qrows = list({row_cache_key(r): r for r in qrows}.values())
-            if conjunctive or live_groups:
-                scorer = _taat_kernel(
-                    idf_q, avgdl, k1, b, k, block_size, fterms,
-                    require_n_terms=n_req if conjunctive else None,
-                    decode_cache=cache, excluded_terms=eterms,
-                    const_groups=live_groups,
-                )
-            else:
-                scorer = maxscore_kernel(
-                    idf_q, avgdl, k1, b, k, block_size,
-                    filter_terms=fterms,
-                    counters=counters, decode_cache=cache,
-                    excluded_terms=eterms,
-                )
-            res = scorer.rows(qrows)
-            if not len(res):
+            qrows = list(
+                {row_cache_key(r): r for r in qrows + del_rows + erows}.values()
+            )
+            scorer = _rank_kernel(
+                plan, idf_q, avgdl, k1, b, k, block_size,
+                decode_cache=cache, counters=counters,
+            )
+            return scorer.rows(qrows)
+
+        out_q: list[str] = []
+        out_ids: list[np.ndarray] = []
+        out_scores: list[np.ndarray] = []
+        for qid in sorted(plans):
+            res = score(plans[qid])
+            if res is None or not len(res):
                 continue
             out_q.extend([qid] * len(res))
             out_ids.append(res["doc_id"].to_numpy())
@@ -4451,88 +4334,40 @@ def search_many(
     """
     from pyspark.sql import Window
 
-    plans: dict[str, tuple] = {}
+    plans: dict[str, QueryPlan] = {}
     for qid, req in queries.items():
         if isinstance(req, str):
             req = {"q": req}
         raw_q = req["q"].strip()
         pq = parse_quoted(raw_q)
-        if pq is not None:
-            if not index.spec.positions:
-                raise ValueError(
-                    "phrase queries need a positional index "
-                    "(IndexSpec.positions=True)"
-                )
-            plans[qid] = (
-                "PHRASE",
-                _phrase_terms(pq[0]),
-                filter_terms_of(req.get("filters")),
-                pq[1],
+        if pq is None:
+            plans[qid] = _resolve(
+                spark, index,
+                plan_query(
+                    raw_q, index.spec.keyword_fields, req.get("filters"),
+                    req.get("synonyms"), req.get("op", "OR"),
+                ),
             )
-            continue
-        qs, ranges, neg_ranges = parse_ranges(
-            raw_q, index.spec.keyword_fields
-        )
-        qs, neg = parse_prohibited(qs)
-        qs, raw_boosts = parse_boosts(qs)
-        eterms = resolve_excluded(spark, index, neg)
-        for r in neg_ranges:
-            eterms |= expand_keyword_range(spark, index, r)
-        rgroups = {expand_keyword_range(spark, index, r) for r in ranges}
-        qtext, parsed_fterms = parse_query(qs, index.spec.keyword_fields)
-        qtext, op = query_op(qtext, default=req.get("op", "OR"))
-        qtext, wild_tokens = split_wildcards(qtext)
-        terms = expand_terms(qtext, req.get("synonyms"))
-        fterms = filter_terms_of(req.get("filters")) | parsed_fterms | rgroups
-        cgroups = [
-            (
-                frozenset(expand_multiterm(spark, index, tok)),
-                float(raw_boosts.get(tok, 1.0)),
+        elif not index.spec.positions:
+            raise ValueError(
+                "phrase queries need a positional index "
+                "(IndexSpec.positions=True)"
             )
-            for tok in wild_tokens
-        ]
-        plain_boosts = {
-            t: b for t, b in raw_boosts.items() if not is_multiterm(t)
-        }
-        plans[qid] = (
-            terms, fterms, op.upper() == "AND", eterms,
-            boost_weights_of(plain_boosts), cgroups,
-        )
-    have_phrase = any(p[0] == "PHRASE" for p in plans.values())
-    all_terms = sorted(
-        {
-            t
-            for p in plans.values()
-            for t in (p[1] if p[0] == "PHRASE" else p[0])
-        }
-    )
+        else:
+            plans[qid] = QueryPlan(
+                _phrase_terms(pq[0]), filter_terms_of(req.get("filters")),
+                slop=pq[1],
+            )
+    have_phrase = any(p.slop is not None for p in plans.values())
+    all_terms = sorted({t for p in plans.values() for t in p.terms})
     all_fterms = sorted(
-        _flat_terms(
-            {
-                t
-                for p in plans.values()
-                for t in (p[2] if p[0] == "PHRASE" else p[1])
-            }
-        )
+        _flat_terms({t for p in plans.values() for t in p.filters})
     )
     all_eterms = sorted(
-        {
-            t
-            for p in plans.values()
-            if p[0] != "PHRASE"
-            for t in p[3]
-        }
-        | {
-            t
-            for p in plans.values()
-            if p[0] != "PHRASE"
-            for g, _ in p[5]
-            for t in g
-        }
+        {t for p in plans.values() for t in p.excluded}
+        | {t for p in plans.values() for g, _ in p.groups for t in g}
     )
-    have_groups = any(
-        p[0] != "PHRASE" and any(g for g, _ in p[5]) for p in plans.values()
-    )
+    have_groups = any(g for p in plans.values() for g, _ in p.groups)
     empty = spark.createDataFrame([], "query_id string, doc_id long, score double")
     if not all_terms and not all_fterms and not have_groups:
         return empty

@@ -97,6 +97,47 @@ def topk_ties(
     return keep_ids, keep_scores
 
 
+def finish_topk(
+    ids: np.ndarray | None = None,
+    scores: np.ndarray | None = None,
+    k: int | None = None,
+    cursor: tuple[float, int] | None = None,
+) -> pd.DataFrame:
+    """Every scoring kernel's shard result: the (doc_id long, score double)
+    frame of the local top-k in (score desc, doc_id asc) order.
+
+    ``cursor`` = (score, doc_id) keeps only docs STRICTLY AFTER that point
+    in the global order (cursorMark paging) and runs BEFORE top-k
+    selection, so the shard still emits its best k eligible docs.
+    ``k=None`` keeps every doc.  No ids (or none surviving) gives the typed
+    empty frame, so a zero-hit shard keeps the result schema."""
+    if ids is None or not len(ids):
+        return _EMPTY.copy()
+    if cursor is not None:
+        cs, cd = cursor
+        elig = (scores < cs) | ((scores == cs) & (ids > cd))
+        ids, scores = ids[elig], scores[elig]
+    if k is not None:
+        ids, scores = topk_ties(ids, scores, k)
+    order = np.lexsort((ids, -scores))
+    return pd.DataFrame({"doc_id": ids[order], "score": scores[order]})
+
+
+def shard_kernel(score_rows):
+    """Adapt a ``score_rows(rows) -> frame`` scorer to ``applyInPandas``.
+
+    The returned callable takes one shard's pandas frame; its ``.rows``
+    attribute is ``score_rows`` itself, taking a pre-extracted
+    ``itertuples`` list (the batch path groups rows per query without
+    re-slicing frames)."""
+
+    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+        return score_rows(list(pdf.itertuples(index=False)))
+
+    score.rows = score_rows
+    return score
+
+
 def decode_filter_ids(rows: list, block_size: int) -> np.ndarray:
     """Full doc-id decode of one filter term's posting rows -> sorted array."""
     parts = [
@@ -302,9 +343,7 @@ def maxscore_kernel(
     could silently alias a recycled CPython object).  Pruned partial
     decodes are never cached (they are the cheap path already).
 
-    The returned callable takes the per-shard pandas frame; its ``.rows``
-    attribute takes a pre-extracted ``itertuples`` list instead (the batch
-    path groups rows per query without re-slicing frames)."""
+    Returns a :func:`shard_kernel`."""
     filter_terms = filter_terms or set()
 
     def bump(key: str, n: int = 1) -> None:
@@ -316,7 +355,7 @@ def maxscore_kernel(
     def score_rows(rows: list) -> pd.DataFrame:
         allowed = allowed_ids(rows, filter_terms, block_size, counters)
         if allowed is not None and not len(allowed):
-            return _EMPTY.copy()
+            return finish_topk()
         # tombstones (only present in the scan when the index has deletes)
         # and prohibited-term postings: stripped in the ESSENTIAL branch,
         # i.e. before any doc enters the accumulator — θ then only ever
@@ -333,7 +372,7 @@ def maxscore_kernel(
             if row.term in idf:
                 segs.setdefault(row.term, []).append(row)
         if not segs:
-            return _EMPTY.copy()
+            return finish_topk()
         for trows in segs.values():
             trows.sort(key=row_cache_key)
 
@@ -486,14 +525,6 @@ def maxscore_kernel(
             np.add.at(out, inv, weights)
             acc_ids, acc = uniq, out
 
-        if not len(acc_ids):
-            return _EMPTY.copy()
-        acc_ids, acc = topk_ties(acc_ids, acc, k)
-        order = np.lexsort((acc_ids, -acc))
-        return pd.DataFrame({"doc_id": acc_ids[order], "score": acc[order]})
+        return finish_topk(acc_ids, acc, k)
 
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        return score_rows(list(pdf.itertuples(index=False)))
-
-    score.rows = score_rows
-    return score
+    return shard_kernel(score_rows)

@@ -136,6 +136,39 @@ def test_naive_dataframe_path_matches_oracle(spark, corpus, query):
         assert r["score"] == pytest.approx(s, rel=1e-9)
 
 
+def test_naive_counts_zero_token_docs(spark):
+    # empty and null content tokenize to nothing, yet count in N and avgdl
+    docs = spark.createDataFrame(
+        [(1, "parse buffer"), (2, ""), (3, None), (4, "parse")],
+        "doc_id long, text string",
+    )
+    got = bm25_topk_df(docs, "parse", k=None, round_to=None).collect()
+    n, avgdl, df = 4, 3 / 4, 2
+    idf = math.log1p((n - df + 0.5) / (df + 0.5))
+
+    def bm25(dl):
+        return idf * 2.2 / (1 + 1.2 * (0.25 + 0.75 * dl / avgdl))
+
+    assert [r["doc_id"] for r in got] == [4, 1]
+    assert [r["score"] for r in got] == pytest.approx([bm25(1), bm25(2)])
+
+
+def test_tokens_long_rejects_null_and_non_integer_ids(spark):
+    from pyspark.errors import PythonException
+
+    from cascading_solr_spark.query.naive import tokens_long
+
+    ok = spark.createDataFrame([("7", "parse")], "doc_id string, text string")
+    assert [r["doc_id"] for r in tokens_long(ok).collect()] == [7]
+    for rows, schema in [
+        ([(1, "parse buffer"), (None, "retry")], "doc_id long, text string"),
+        ([("7", "parse"), ("a17", "retry")], "doc_id string, text string"),
+    ]:
+        docs = spark.createDataFrame(rows, schema)
+        with pytest.raises(PythonException, match="ValueError: tokens_long"):
+            tokens_long(docs).collect()
+
+
 def keyed_rows_from(docs):
     rows = docs.select("doc_id", "content").collect()
     return [(r["doc_id"], r["content"]) for r in rows]

@@ -20,6 +20,7 @@
 
 import random
 import string
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -434,20 +435,81 @@ def test_pivot_outer_counts_independent_of_inner(spark, tmp_path):
 def test_explain_score_matches_ranked_score(spark, r5_index):
     from cascading_solr_spark.query.search import explain_score
 
-    top = search(
-        spark, r5_index, "parse buffer", k=1, mode="taat", with_stored=False
-    ).collect()[0]
-    rows = explain_score(
-        spark, r5_index, "parse buffer", top["doc_id"]
-    ).collect()
-    assert {r["term"] for r in rows} <= {"parse", "buffer"}
-    # the TAAT kernel accumulates rows in canonical (term-sorted) order and
-    # explain sums sorted by term: the float64 paths are identical
-    total = 0.0
-    for r in sorted(rows, key=lambda r: r["term"]):
-        assert r["contribution"] == r["idf"] * r["tf_norm"]
-        total += r["contribution"]
-    assert total == top["score"]
+    # OR (2 and 3 terms), a boost, AND, and a constant-score wildcard group
+    for q, terms in [
+        ("parse buffer", {"parse", "buffer"}),
+        ("parse buffer retry", {"parse", "buffer", "retry"}),
+        ("parse buffer^2", {"parse", "buffer"}),
+        ("parse AND buffer", {"parse", "buffer"}),
+        ("parse buf*", {"parse", "buf*"}),
+    ]:
+        top = search(
+            spark, r5_index, q, k=1, mode="taat", with_stored=False
+        ).collect()[0]
+        rows = explain_score(spark, r5_index, q, top["doc_id"]).collect()
+        assert rows and {r["term"] for r in rows} <= terms, q
+        # the clause scorer adds a doc's term contributions in term order,
+        # then its constant-score groups (tf=0 rows) in query order — the
+        # same float64 path as this scalar sum
+        ordered = sorted(
+            (r for r in rows if r["tf"]), key=lambda r: r["term"]
+        ) + [r for r in rows if not r["tf"]]
+        total = 0.0
+        for r in ordered:
+            assert r["contribution"] == r["idf"] * r["tf_norm"]
+            total += r["contribution"]
+        assert total == top["score"], q
+
+
+def _spark_jobs(spark, fn) -> int:
+    """Spark jobs one call of ``fn`` runs (its own job group)."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_spark_jobs_per_call(spark, r5_index):
+    from cascading_solr_spark.indexing.build import Index
+    from cascading_solr_spark.query.search import (
+        explain_score,
+        match_ids,
+        search_dismax,
+    )
+
+    # no driver dict cache: every df lookup and dictionary expansion is a
+    # Spark job, so an extra eager term_dfs / expand_multiterm shows here
+    ix = Index.load(r5_index.path)
+    object.__setattr__(ix, "_dict_cache", None)
+    q = "parse buf* -retry lang:[go TO python]"
+    calls = {
+        "search": lambda: search(spark, ix, q, k=5, with_stored=False),
+        "search_after": lambda: search_after(spark, ix, q, k=5),
+        "match_ids": lambda: match_ids(spark, ix, q),
+        "search_dismax": lambda: search_dismax(
+            spark, ix, "parse buffer -retry lang:[go TO python]",
+            {"content": 1.0}, k=5, with_stored=False,
+        ),
+        "search_many": lambda: search_many(
+            spark, ix, {"a": q, "b": "retry AND parse"}, k=5
+        ),
+        "explain_score": lambda: explain_score(spark, ix, q, 3),
+        "highlight": lambda: highlight(spark, ix, q, k=3),
+    }
+    want = {
+        "search": 8, "search_after": 8, "match_ids": 8, "search_dismax": 6,
+        "search_many": 9, "explain_score": 9, "highlight": 14,
+    }
+    for name, call in calls.items():
+        call().collect()  # warm the handle's lazily built frames
+        got = _spark_jobs(spark, lambda: call().collect())
+        assert got == want[name], (name, got)
 
 
 def test_realtime_get_sees_appends_immediately(spark, tmp_path):
