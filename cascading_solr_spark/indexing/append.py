@@ -6,9 +6,12 @@ per-epoch standalone indexes, appends here produce ONE coherent index:
 * new doc_ids are assigned ABOVE the current max (``meta.next_doc_id``), so
   ids never collide across batches and posting rows stay mergeable
   (strictly-increasing doc ids per (term, salt));
-* batch postings are built with the same SPIMI + salted-shuffle pipeline and
-  appended into the live shard dirs — the query kernels already merge
-  multiple rows per (term, salt), so new docs are searchable immediately;
+* batch rows go through the build's writer functions (indexing/build.py):
+  the same tf legs, docs projection, lineage rows and token stats, and the
+  one segment writer ``_write_postings`` at sort width ``num_shards`` — a
+  single exchange keyed by shard, one file per shard per batch — appended
+  into the live shard dirs.  The query kernels already merge multiple rows
+  per (term, salt), so new docs are searchable immediately;
 * global statistics refresh atomically: the batch's (term, df) rows append
   into the dict table as a NEW SEGMENT (``Index.term_dict`` folds segments
   with a sum-per-term view; ``compact_index`` physically merges them), and
@@ -44,7 +47,6 @@ so a completed-then-replayed batch is always detected.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import threading
@@ -57,18 +59,18 @@ from pyspark.storagelevel import StorageLevel
 from cascading_solr_spark.spec import IndexSpecError
 
 from cascading_solr_spark.indexing.build import (
-    KW_SEP,
-    _balanced_shard_key,
     MAX_DOC_ID,
     Index,
-    _assembler,
-    _keyword_tf_rows,
-    _text_field_tf_rows,
+    _docs_rows,
     _rank_ids,
-    _shard_salt_exprs,
-    _spimi_tf_kernel,
-    postings_schema,
-    tf_schema,
+    _set_token_stats,
+    _tf_rows,
+    _write_docs,
+    _write_lineage,
+    _write_postings,
+    _write_sorted,
+    read_meta,
+    term_ngram_rows,
     validate_schema,
     write_meta,
 )
@@ -159,8 +161,7 @@ def append_documents(
     index = Index.load(index_dir)
     spec = index.spec
     validate_schema(batch.schema, spec)
-    with open(os.path.join(index_dir, "meta.json")) as fh:
-        meta = json.load(fh)
+    meta = read_meta(index_dir)
     if batch_id is not None and batch_id in meta.get("applied_batches", ()):
         return index
     offset = int(meta.get("next_doc_id", meta["n_docs"]))
@@ -295,106 +296,27 @@ def append_documents(
         # ---- docs rows append (same layout/sort as the build), submitted to
         # a driver thread: the JVM-side sha256+parquet work overlaps the
         # python-worker tokenize stage of the postings pipeline ----
-        def write_docs() -> None:
-            docs = based.select(
-                "doc_id",
-                *[c for c in spec.stored_fields],
-                F.sha2(F.col(spec.content_field), 256).alias("sha256"),
-                F.pmod(F.col("doc_id"), F.lit(spec.num_shards))
-                .cast("int")
-                .alias("shard"),
-            )
-            (
-                docs.repartition(spec.num_shards, "shard")
-                .sortWithinPartitions("shard", "doc_id")
-                .write.mode("append")
-                .partitionBy("shard")
-                .parquet(stg_docs)
-            )
-
-        docs_future = pool.submit(write_docs)
-
-        # ---- batch postings (SPIMI + keyword rows + stored hot set) ----
-        tf_long = based.select("doc_id", spec.content_field).mapInPandas(
-            _spimi_tf_kernel(spec.content_field, spec.positions), tf_schema(spec)
+        docs_future = pool.submit(
+            _write_docs, _docs_rows(based, spec), spec, stg_docs, "append"
         )
-        kw_rows = _keyword_tf_rows(based, spec)
-        if kw_rows is not None:
-            tf_long = tf_long.unionByName(kw_rows)
-        tfield_rows = _text_field_tf_rows(based, spec, spec.positions)
-        if tfield_rows is not None:
-            tf_long = tf_long.unionByName(tfield_rows)
-        hot = list(index.hot_terms)
-        shard_e, salt_e = _shard_salt_exprs(hot, spec)
-        salt_keys = [salt_e] if salt_e is not None else []
-        # SINGLE-exchange pipeline (unlike the build, which repartitions the
-        # big tf intermediate wide and merges with a second exchange of
-        # compressed rows): a micro-batch is small enough that one exchange
-        # keyed by shard alone gives the assembler its required clustering —
-        # each output partition is one shard, so the partitionBy write below
-        # fans out one file per shard per batch with NO further shuffle.
-        arranged = tf_long.repartition(
-            spec.num_shards, _balanced_shard_key(shard_e, spec.num_shards)
-        ).sortWithinPartitions(
-            shard_e, F.xxhash64("term"), *salt_keys, F.col("packed")
-        )
-        # the compressed batch rows are persisted ONCE and feed three
+
+        # ---- batch postings (SPIMI + keyword rows + stored hot set) through
+        # the build's segment writer at sort width num_shards: a micro-batch
+        # needs ONE exchange keyed by shard, one file per shard per batch.
+        # The compressed batch rows are persisted ONCE and feed three
         # consumers: the postings append, the lineage delta, and the dict
-        # segment — no pass ever re-reads the existing index.
-        postings = arranged.mapInPandas(
-            _assembler(spec, hot), postings_schema(spec)
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # token stats ride the write job as an Observation (accumulator-side
-        # aggregate over the written rows) — no separate stats job at all
-        from pyspark.sql import Observation
-
-        obs = Observation(seg_tag)
-        observed = postings.observe(
-            obs,
-            F.sum(
-                F.when(~F.col("term").contains(KW_SEP), F.col("sum_tf"))
-            ).alias("content_tokens"),
-            # per-extra-text-field token deltas ride the same write (field
-            # names are disjoint from keyword fields by spec validation, so
-            # the prefix match is unambiguous)
-            *[
-                F.sum(
-                    F.when(
-                        F.col("term").startswith(f + KW_SEP), F.col("sum_tf")
-                    )
-                ).alias(f"ftok_{i}")
-                for i, f in enumerate(spec.text_fields)
-            ],
+        # segment — no pass ever re-reads the existing index.  Token stats
+        # ride the write job as an Observation — no separate stats job. ----
+        postings, obs = _write_postings(
+            _tf_rows(based, spec, spec.positions), spec, list(index.hot_terms),
+            stg_postings, spec.num_shards, persist=True, observe=seg_tag,
         )
-        # local re-sort only: term-hash order -> alphabetic term order for
-        # row-group pruning; the leading "shard" satisfies FileFormatWriter's
-        # required partition-column ordering
-        (
-            observed.sortWithinPartitions("shard", "term", "salt")
-            .write.mode("append")
-            .partitionBy("shard")
-            .parquet(stg_postings)
-        )
-        batch_tokens = int(obs.get["content_tokens"] or 0)
+        metrics = obs.get
         prof.mark("a_postings")
 
         # ---- lineage DELTA + dict SEGMENT, both from the batch's own cached
         # rows (O(batch), never a re-aggregation of the whole postings
         # table), in concurrent driver threads ----
-        def write_lineage() -> None:
-            lineage = postings.groupBy("shard").agg(
-                F.count("*").alias("terms"),
-                F.sum("n_docs").alias("postings"),
-                F.sum("n_bytes").alias("bytes"),
-                (F.max("n_docs") / F.avg("n_docs")).alias("skew_ratio"),
-                F.lit("committed").alias("status"),
-                # per-SEGMENT rows (stats cover this batch only, not the
-                # shard): tagged so per-shard consumers aggregate explicitly
-                # instead of reading any single row as per-shard truth.
-                F.lit(seg_tag).alias("segment"),
-            )
-            lineage.write.mode("append").parquet(stg_lineage)
-
         # The dict table is segmented: one (term, df) rowset per build/
         # append; Index.term_dict serves the folded sum-per-term view and
         # compact_index physically merges segments.  The groupBy exchange
@@ -414,11 +336,7 @@ def append_documents(
                 .coalesce(max(1, spec.num_shards // 4))
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
-            (
-                seg.sortWithinPartitions("term")
-                .write.mode("append")
-                .parquet(stg_dict)  # published into the generation dir
-            )
+            _write_sorted(seg, "term", stg_dict, mode="append")
             # bootstrap_ngrams: a 0-doc index has no ngram dir yet but no
             # prior vocabulary either, so creating it here is complete; a
             # PRE-ngram index (built before the feature) must NOT get a
@@ -427,16 +345,15 @@ def append_documents(
             # until the next compact_index, which bootstraps the ngram table
             # from the complete folded vocabulary (indexing/compact.py).
             if os.path.exists(index.ngrams_path) or bootstrap_ngrams:
-                from cascading_solr_spark.indexing.build import term_ngram_rows
-
-                (
-                    term_ngram_rows(seg.select("term"))
-                    .write.mode("append")
-                    .parquet(stg_ngrams)
+                _write_sorted(
+                    term_ngram_rows(seg.select("term")), "gram", stg_ngrams,
+                    mode="append",
                 )
             seg.unpersist()
 
-        lineage_future = pool.submit(write_lineage)
+        lineage_future = pool.submit(
+            _write_lineage, postings, stg_lineage, seg_tag
+        )
         dict_future = pool.submit(write_dict)
         dict_future.result()
         lineage_future.result()
@@ -452,16 +369,7 @@ def append_documents(
         prof.mark("a_dict+stats")
 
         meta["n_docs"] = int(meta["n_docs"]) + int(n_new)
-        meta["total_tokens"] = int(meta.get("total_tokens", 0)) + batch_tokens
-        meta["avgdl"] = (
-            meta["total_tokens"] / meta["n_docs"] if meta["n_docs"] else 0.0
-        )
-        if spec.text_fields:
-            ftok = dict(meta.get("field_tokens", {}))
-            metrics = obs.get
-            for i, f in enumerate(spec.text_fields):
-                ftok[f] = int(ftok.get(f, 0)) + int(metrics[f"ftok_{i}"] or 0)
-            meta["field_tokens"] = ftok
+        _set_token_stats(meta, spec, metrics, add=True)
         if not spec.doc_id_field:
             meta["next_doc_id"] = offset + int(n_new)
         if batch_id is not None:

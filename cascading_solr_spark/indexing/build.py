@@ -37,6 +37,12 @@ core/SolrWriter.java:59-128).  Our lifecycle:
    per-shard lineage table (terms, postings, bytes, skew_ratio, status) that
    doubles as the resume checkpoint.
 
+Every index mutator writes through the functions here: the tf legs
+(``_tf_rows``), the one segment writer (``_write_postings``), the docs,
+lineage, dict and ngram writes, the token stats, the generation names and
+``read_meta``/``write_meta`` — append, delete and compact only choose what
+to write and in which order.
+
 Independent jobs overlap via driver threads (docs write ∥ the tokenize pass;
 dict write ∥ the postings shuffle): the python-worker-heavy stages and the
 JVM-heavy stages use complementary resources, and barrier serialization is
@@ -238,21 +244,26 @@ def _spimi_field_kernel(field: str, positions: bool = False):
     return kernel
 
 
-def _text_field_tf_rows(
-    based: "DataFrame", spec: IndexSpec, positions: bool
-) -> "DataFrame | None":
-    """Union of the namespaced tf streams of every extra text field — each a
-    column-pruned scan + its own Arrow kernel, so fields tokenize in
-    parallel and the shuffle still moves one row per (field:term, doc)."""
-    if not spec.text_fields:
-        return None
+def _tf_rows(based: DataFrame, spec: IndexSpec, positions: bool) -> DataFrame:
+    """The (packed, term, tf) rows of every indexed field of ``based``
+    (doc_id-carrying rows): the SPIMI content leg, the keyword-field rows
+    and one namespaced leg per extra text field — each a column-pruned scan
+    + its own kernel, so fields tokenize in parallel and the shuffle moves
+    one row per (term, doc).  ``positions`` adds the ``pos`` blob column;
+    the hot-term sample passes False (df estimation needs no positions)."""
     schema = TF_SCHEMA_POS if positions else TF_SCHEMA
-    out = None
+    out = based.select("doc_id", spec.content_field).mapInPandas(
+        _spimi_tf_kernel(spec.content_field, positions), schema
+    )
+    kw_rows = _keyword_tf_rows(based, spec, positions)
+    if kw_rows is not None:
+        out = out.unionByName(kw_rows)
     for f in spec.text_fields:
-        part = based.select("doc_id", f).mapInPandas(
-            _spimi_field_kernel(f, positions), schema
+        out = out.unionByName(
+            based.select("doc_id", f).mapInPandas(
+                _spimi_field_kernel(f, positions), schema
+            )
         )
-        out = part if out is None else out.unionByName(part)
     return out
 
 
@@ -441,10 +452,8 @@ class Index:
 
     @classmethod
     def load(cls, path: str) -> "Index":
-        meta_path = os.path.join(path, "meta.json")
-        with open(meta_path) as fh:
-            meta = json.load(fh)
-        st = os.stat(meta_path)
+        meta = read_meta(path)
+        st = os.stat(os.path.join(path, "meta.json"))
         spec = IndexSpec(**meta["spec"])
         ix = cls._load_from(path, meta, spec)
         # generation stamp for the per-handle DataFrame caches: if meta.json
@@ -554,10 +563,7 @@ class Index:
     def docs(self, spark: SparkSession) -> DataFrame:
         p = self.docs_path
         if not os.path.exists(p):
-            from pyspark.sql import types as T
-
-            with open(os.path.join(self.path, "meta.json")) as fh:
-                meta = json.load(fh)
+            meta = read_meta(self.path)
             schema = T.StructType.fromJson(json.loads(meta["docs_schema"]))
             return spark.createDataFrame([], schema)
         return self._cached_df(spark, "docs", lambda: spark.read.parquet(p))
@@ -858,7 +864,9 @@ def keyword_term(field: str, value: F.Column | str) -> F.Column:
     return F.concat(F.lit(field + KW_SEP), v)
 
 
-def _keyword_tf_rows(based: DataFrame, spec: IndexSpec) -> DataFrame | None:
+def _keyword_tf_rows(
+    based: DataFrame, spec: IndexSpec, positions: bool
+) -> DataFrame | None:
     """(packed(doc_id, dl=1), term='field:value', tf=1) rows for every
     keyword field value.  Multi-valued fields explode (SolrWriter.java:67-71
     tuple-explode analogue); nulls are skipped (SolrWriter.java:65-66
@@ -877,9 +885,7 @@ def _keyword_tf_rows(based: DataFrame, spec: IndexSpec) -> DataFrame | None:
         # keyword terms are positionless (StrField — no token stream); in a
         # positional index they ride with an empty blob, which phrase paths
         # never decode (phrases are content-term only).
-        pos_cols = (
-            [F.lit(b"").cast("binary").alias("pos")] if spec.positions else []
-        )
+        pos_cols = [F.lit(b"").cast("binary").alias("pos")] if positions else []
         parts.append(
             part.select(
                 (
@@ -986,32 +992,169 @@ def _dict_write_parts(spark: SparkSession, spec: IndexSpec) -> int:
     return max(1, spec.num_shards // 4, floor)
 
 
-def _write_postings(
-    postings: DataFrame,
-    postings_path: str,
-    spec: IndexSpec,
-    mode: str = "append",
-) -> None:
-    """"Segment merge": re-shuffle the already-COMPRESSED posting rows so each
-    shard lands in one term-sorted file — the analogue of the reference's
-    optimize(maxSegments) at close (core/SolrWriter.java:112,
-    hadoop/SolrOutputFormat.java:35).  Cheap: rows are compact binaries, so
-    the exchange moves little data; on the append path it buys one segment
-    file per shard per batch (measured faster than the 32-task × 32-dir
-    dynamic-partition fan-out it avoids).  Term-sorted files maximize parquet
-    row-group min/max pruning for the query-side term IN (...) filter.  The
-    leading "shard" sort key satisfies FileFormatWriter's required ordering
-    (else it inserts its own non-stable sort by the partition column,
-    destroying the term ordering)."""
-    postings = postings.repartition(
-        spec.num_shards, _balanced_shard_key(F.col("shard"), spec.num_shards)
+def _sort_width(spark: SparkSession, spec: IndexSpec) -> int:
+    """Sort width of a full-corpus postings pass (build, compact): the
+    session's shuffle width, and at least one partition per shard."""
+    shuffle_parts = int(
+        spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
     )
+    return max(spec.num_shards, shuffle_parts)
+
+
+def _write_postings(
+    tf_long: DataFrame,
+    spec: IndexSpec,
+    hot_terms: list[str],
+    path: str,
+    width: int,
+    persist: bool = False,
+    observe: str | None = None,
+):
+    """The one segment writer: (packed, term, tf[, pos]) rows -> compressed
+    posting rows, appended as one term-sorted file per shard under
+    ``path/shard=N``.  Build, append, delete (tombstone rows) and compact
+    (into a fresh generation dir) all write here.
+
+    The assembler needs term CLUSTERING + ascending doc_id, not alphabetic
+    order — sorting by the term's 64-bit hash replaces string comparisons
+    with long comparisons (a hash collision merely splits a posting list
+    into two rows; the query kernels merge multi-row terms anyway).  Shard
+    and salt ride the plan as expressions over (packed, term), so the
+    shuffled rows stay narrow.  The final local (shard, term, salt) sort
+    restores alphabetic file order for row-group pruning of the query-side
+    term IN (...) filter; its leading "shard" satisfies FileFormatWriter's
+    required partition-column ordering (else it inserts its own non-stable
+    sort, destroying the term ordering).
+
+    ``width`` is the sort width.  At ``width <= num_shards`` ONE exchange
+    keyed by shard alone (balanced) gives every partition exactly one shard
+    with full (term, salt) clustering, so the assembled rows are written
+    straight through, one file per shard (append/delete micro-batches pass
+    num_shards; a build at num_shards >= the shuffle width lands here too).
+    Otherwise the tf rows sort wide on (shard, term, salt) for parallelism
+    and a second, cheap exchange of the COMPRESSED rows places each shard on
+    its own partition — the segment merge, the analogue of the reference's
+    optimize(maxSegments) at close (core/SolrWriter.java:112).
+
+    ``persist`` caches the assembled rows (append derives its lineage delta
+    and dict segment from them); ``observe`` names an Observation of the
+    written rows' token stats (:func:`_observe_tokens`).  Returns the
+    assembled rows and that Observation (None without ``observe``)."""
+    shard_e, salt_e = _shard_salt_exprs(hot_terms, spec)
+    salt_keys = [salt_e] if salt_e is not None else []
+    single = width <= spec.num_shards
+    if single:
+        arranged = tf_long.repartition(
+            spec.num_shards, _balanced_shard_key(shard_e, spec.num_shards)
+        )
+    else:
+        arranged = tf_long.repartition(width, shard_e, F.col("term"), *salt_keys)
+    rows = arranged.sortWithinPartitions(
+        shard_e, F.xxhash64("term"), *salt_keys, F.col("packed")
+    ).mapInPandas(_assembler(spec, hot_terms), postings_schema(spec))
+    if not single:
+        rows = rows.repartition(
+            spec.num_shards,
+            _balanced_shard_key(F.col("shard"), spec.num_shards),
+        )
+    if persist:
+        rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
+    written, obs = rows, None
+    if observe is not None:
+        written, obs = _observe_tokens(rows, spec, observe, "sum_tf")
+    try:
+        (
+            written.sortWithinPartitions("shard", "term", "salt")
+            .write.mode("append")
+            .partitionBy("shard")
+            .parquet(path)
+        )
+    except BaseException:
+        if persist:
+            rows.unpersist()
+        raise
+    return rows, obs
+
+
+def _observe_tokens(df: DataFrame, spec: IndexSpec, name: str, col: str):
+    """Corpus token stats as an Observation over ``df``'s (term, ``col``)
+    rows: ``content_tokens`` (analyzed terms; keyword and text-field terms
+    are namespaced with ':') and ``ftok_<i>`` per extra text field (field
+    names are disjoint from keyword fields by spec validation, so the prefix
+    match is unambiguous).  The metrics ride the action that consumes the
+    returned frame — zero extra jobs.  Returns (observed frame, Observation);
+    :func:`_set_token_stats` folds ``obs.get`` into meta."""
+    from pyspark.sql import Observation
+
+    obs = Observation(name)
+    observed = df.observe(
+        obs,
+        F.sum(F.when(~F.col("term").contains(KW_SEP), F.col(col))).alias(
+            "content_tokens"
+        ),
+        *[
+            F.sum(F.when(F.col("term").startswith(f + KW_SEP), F.col(col))).alias(
+                f"ftok_{i}"
+            )
+            for i, f in enumerate(spec.text_fields)
+        ],
+    )
+    return observed, obs
+
+
+def _set_token_stats(
+    meta: dict, spec: IndexSpec, metrics: dict, add: bool = False
+) -> None:
+    """Write ``total_tokens``, ``avgdl`` and ``field_tokens`` into ``meta``
+    from :func:`_observe_tokens` metrics — replacing them (build, compact)
+    or, with ``add``, adding a segment's deltas (append).  avgdl divides by
+    ``meta["n_docs"]``, so callers set N first.  Per-field avgdl = total /
+    n_docs: absent fields count as length 0, exact for dense fields — a
+    documented deviation from Lucene's docCount(field) denominator for
+    sparse ones."""
+    total = int(meta.get("total_tokens", 0)) if add else 0
+    meta["total_tokens"] = total + int(metrics["content_tokens"] or 0)
+    meta["avgdl"] = (
+        meta["total_tokens"] / meta["n_docs"] if meta["n_docs"] else 0.0
+    )
+    ftok = dict(meta.get("field_tokens", {})) if add else {}
+    for i, f in enumerate(spec.text_fields):
+        ftok[f] = int(ftok.get(f, 0)) + int(metrics[f"ftok_{i}"] or 0)
+    meta["field_tokens"] = ftok
+
+
+def _docs_rows(based: DataFrame, spec: IndexSpec) -> DataFrame:
+    """The stored-docs projection: doc_id, stored fields, the content's
+    sha256 (round-trip check) and the shard."""
+    return based.select(
+        "doc_id",
+        *spec.stored_fields,
+        F.sha2(F.col(spec.content_field), 256).alias("sha256"),
+        F.pmod(F.col("doc_id"), F.lit(spec.num_shards)).cast("int").alias("shard"),
+    )
+
+
+def _write_docs(docs: DataFrame, spec: IndexSpec, path: str, mode: str) -> None:
+    """Docs rows -> one doc_id-sorted file per shard under ``path/shard=N``."""
     (
-        postings.sortWithinPartitions("shard", "term", "salt")
+        docs.repartition(spec.num_shards, "shard")
+        .sortWithinPartitions("shard", "doc_id")
         .write.mode(mode)
         .partitionBy("shard")
-        .parquet(postings_path)
+        .parquet(path)
     )
+
+
+def _write_sorted(
+    df: DataFrame, key: str, path: str, parts: int | None = None,
+    mode: str = "overwrite",
+) -> None:
+    """A dict (key "term") or ngram (key "gram") segment: key-sorted files
+    so the query-side key IN (...) filter row-group-prunes; ``parts``
+    repartitions by the key first (None keeps the input partitioning)."""
+    if parts is not None:
+        df = df.repartition(parts, key)
+    df.sortWithinPartitions(key).write.mode(mode).parquet(path)
 
 
 def term_ngram_rows(terms: DataFrame) -> DataFrame:
@@ -1040,23 +1183,29 @@ def term_ngram_rows(terms: DataFrame) -> DataFrame:
     )
 
 
-def _write_lineage(
-    spark: SparkSession, postings_path: str, lineage_path: str, shards: list[int]
-) -> None:
-    built = spark.read.parquet(postings_path).filter(F.col("shard").isin(shards))
-    lineage = built.groupBy("shard").agg(
+def _write_lineage(postings: DataFrame, lineage_path: str, segment: str) -> None:
+    """Append one lineage row per shard of the ``postings`` rows (terms,
+    postings, bytes, skew_ratio, status) — the resume checkpoint.  The
+    ``segment`` tag ("build", "append@N", "compacted"): after appends a
+    shard has MULTIPLE lineage rows whose stats (skew_ratio especially) are
+    per-segment, not per-shard — consumers aggregate explicitly by
+    filtering/grouping on this tag instead of misreading mixed build+append
+    rows as per-shard truth."""
+    lineage = postings.groupBy("shard").agg(
         F.count("*").alias("terms"),
         F.sum("n_docs").alias("postings"),
         F.sum("n_bytes").alias("bytes"),
         (F.max("n_docs") / F.avg("n_docs")).alias("skew_ratio"),
         F.lit("committed").alias("status"),
-        # segment tag: after appends a shard has MULTIPLE lineage rows whose
-        # stats (skew_ratio especially) are per-segment, not per-shard —
-        # consumers aggregate explicitly by filtering/grouping on this tag
-        # instead of misreading mixed build+append rows as per-shard truth
-        F.lit("build").alias("segment"),
+        F.lit(segment).alias("segment"),
     )
     lineage.write.mode("append").parquet(lineage_path)
+
+
+def read_meta(index_dir: str) -> dict:
+    """The index's meta.json (N, corpus stats, hot set, generation dirs)."""
+    with open(os.path.join(index_dir, "meta.json")) as fh:
+        return json.load(fh)
 
 
 def write_meta(out_dir: str, meta: dict) -> None:
@@ -1065,6 +1214,17 @@ def write_meta(out_dir: str, meta: dict) -> None:
     with open(tmp, "w") as fh:
         json.dump(meta, fh)
     os.replace(tmp, os.path.join(out_dir, "meta.json"))
+
+
+def _next_generation(index_dir: str, dirname: str) -> tuple[str, str]:
+    """(name, empty path) of the generation after ``dirname``: ``<base>`` or
+    ``<base>.genN`` -> ``<base>.gen{N+1}``.  A leftover of a crashed earlier
+    attempt at that name is removed."""
+    base, _, gen = dirname.partition(".gen")
+    name = f"{base}.gen{int(gen or 0) + 1}"
+    path = os.path.join(index_dir, name)
+    shutil.rmtree(path, ignore_errors=True)
+    return name, path
 
 
 def _spec_meta(spec: IndexSpec) -> dict:
@@ -1148,16 +1308,9 @@ def build_index(
 
     meta: dict = {}
     hot_terms: list[str] = []
-    avgdl = 0.0
-    total_tokens = 0
-    field_tokens: dict = {f: 0 for f in spec.text_fields}
     if have_meta:
-        with open(meta_path) as fh:
-            meta = json.load(fh)
+        meta = read_meta(out_dir)
         n_docs = meta["n_docs"]
-        avgdl = meta["avgdl"]
-        total_tokens = meta.get("total_tokens", 0)
-        field_tokens = dict(meta.get("field_tokens", field_tokens))
         hot_terms = list(meta.get("hot_terms", ()))
     elif n_docs is None:
         # doc_id_field path: parquet sources answer count() from footers
@@ -1169,14 +1322,6 @@ def build_index(
         # the first append; Index serves schema-correct empty frames until
         # then, so every query/facet/spellcheck path works on the empty
         # index unchanged (tests/test_round4.py).
-        docs_schema = based.select(
-            "doc_id",
-            *[c for c in spec.stored_fields],
-            F.sha2(F.col(spec.content_field), 256).alias("sha256"),
-            F.pmod(F.col("doc_id"), F.lit(spec.num_shards))
-            .cast("int")
-            .alias("shard"),
-        ).schema
         write_meta(
             out_dir,
             {
@@ -1190,7 +1335,9 @@ def build_index(
                 "postings_dirname": "postings",
                 "dict_dirname": "dict",
                 "ngrams_dirname": "dict_ngrams",
-                "docs_schema": json.dumps(docs_schema.jsonValue()),
+                "docs_schema": json.dumps(
+                    _docs_rows(based, spec).schema.jsonValue()
+                ),
             },
         )
         if ids_handle is not None:
@@ -1202,30 +1349,11 @@ def build_index(
     try:
         # ---- docs table write (concurrent: JVM-side sha256+parquet overlaps
         # the python-worker sample/tokenize stages) ----
-        def write_docs() -> None:
-            docs = based.select(
-                "doc_id",
-                *[c for c in spec.stored_fields],
-                F.sha2(F.col(spec.content_field), 256).alias("sha256"),
-                F.pmod(F.col("doc_id"), F.lit(spec.num_shards))
-                .cast("int")
-                .alias("shard"),
-            )
-            (
-                docs.repartition(spec.num_shards, "shard")
-                .sortWithinPartitions("shard", "doc_id")
-                .write.mode("overwrite")
-                .partitionBy("shard")
-                .parquet(docs_path)
-            )
-
-        serial_docs = os.environ.get("CSS_BUILD_SERIAL_DOCS") == "1"
         docs_future = None
         if not have_docs:
-            if serial_docs:
-                write_docs()
-            else:
-                docs_future = pool.submit(write_docs)
+            docs_future = pool.submit(
+                _write_docs, _docs_rows(based, spec), spec, docs_path, "overwrite"
+            )
 
         # ---- hot-term detection on a HEAD SAMPLE (exact when the corpus
         # fits in hot_sample_docs — every test corpus does).  The hot SET
@@ -1310,17 +1438,7 @@ def build_index(
             )
             # df-estimation only — positions add nothing here, so the sample
             # pass always runs the cheaper positionless kernel
-            sample_tf = sampled.select("doc_id", spec.content_field).mapInPandas(
-                _spimi_tf_kernel(spec.content_field), TF_SCHEMA
-            )
-            kw_sample = _keyword_tf_rows(sampled, spec)
-            if kw_sample is not None:
-                sample_tf = sample_tf.unionByName(
-                    kw_sample.select("packed", "term", "tf")
-                )
-            tf_sample = _text_field_tf_rows(sampled, spec, positions=False)
-            if tf_sample is not None:
-                sample_tf = sample_tf.unionByName(tf_sample)
+            sample_tf = _tf_rows(sampled, spec, positions=False)
             hot_threshold = max(2.0, spec.hot_term_df_ratio * n_sample)
             hot_terms = sorted(
                 r["term"]
@@ -1339,8 +1457,8 @@ def build_index(
             meta = {
                 "spec": _spec_meta(spec),
                 "n_docs": n_docs,
-                "avgdl": avgdl,
-                "total_tokens": total_tokens,
+                "avgdl": 0.0,
+                "total_tokens": 0,
                 "next_doc_id": n_docs,
                 "hot_terms": hot_terms,
                 "postings_dirname": "postings",
@@ -1359,67 +1477,10 @@ def build_index(
                 src = based.filter(
                     F.pmod(F.col("doc_id"), F.lit(spec.num_shards)).isin(missing)
                 )
-            tf_long = src.select("doc_id", spec.content_field).mapInPandas(
-                _spimi_tf_kernel(spec.content_field, spec.positions),
-                tf_schema(spec),
+            _write_postings(
+                _tf_rows(src, spec, spec.positions), spec, hot_terms,
+                postings_path, _sort_width(spark, spec),
             )
-            kw_rows = _keyword_tf_rows(src, spec)
-            if kw_rows is not None:
-                tf_long = tf_long.unionByName(kw_rows)
-            tfield_rows = _text_field_tf_rows(src, spec, spec.positions)
-            if tfield_rows is not None:
-                tf_long = tf_long.unionByName(tfield_rows)
-            shuffle_parts = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "32") or "32"
-            )
-            n_parts = max(spec.num_shards, shuffle_parts)
-            # the assembler needs term CLUSTERING + ascending doc_id, not
-            # alphabetic order — sorting by the term's 64-bit hash replaces
-            # tens of millions of string comparisons with long comparisons.
-            # (A hash collision merely splits a posting list into two rows;
-            # the query kernels merge multi-row terms anyway.)  Alphabetic
-            # file order is restored by the segment-merge write.  Shard and
-            # salt ride the plan as EXPRESSIONS over (packed, term): the
-            # shuffled rows stay three narrow fields.
-            shard_e, salt_e = _shard_salt_exprs(hot_terms, spec)
-            salt_keys = [salt_e] if salt_e is not None else []
-            if spec.num_shards >= n_parts:
-                # shard count >= sort width: keying the ONE exchange by shard
-                # alone already gives every output partition exactly one
-                # shard with full (term, salt) clustering, so the segment-
-                # merge re-shuffle of the compressed rows is provably
-                # redundant — write straight through (the append path's
-                # single-exchange shape; guide §2.4).  Salting still spreads
-                # hot terms WITHIN the sort, and at scale num_shards >>
-                # cores keeps this the common case.
-                arranged = tf_long.repartition(
-                    spec.num_shards, _balanced_shard_key(shard_e, spec.num_shards)
-                ).sortWithinPartitions(
-                    shard_e, F.xxhash64("term"), *salt_keys, F.col("packed")
-                )
-                postings = arranged.mapInPandas(
-                    _assembler(spec, hot_terms), schema=postings_schema(spec)
-                )
-                (
-                    postings.sortWithinPartitions("shard", "term", "salt")
-                    .write.mode("append")
-                    .partitionBy("shard")
-                    .parquet(postings_path)
-                )
-            else:
-                # fewer shards than the session's sort width: sort wide on
-                # (shard, term, salt) for parallelism, then let the segment
-                # merge gather each shard's compressed rows into one
-                # term-sorted file (the round-2 scaling shape)
-                arranged = tf_long.repartition(
-                    n_parts, shard_e, F.col("term"), *salt_keys
-                ).sortWithinPartitions(
-                    shard_e, F.xxhash64("term"), *salt_keys, F.col("packed")
-                )
-                postings = arranged.mapInPandas(
-                    _assembler(spec, hot_terms), schema=postings_schema(spec)
-                )
-                _write_postings(postings, postings_path, spec, mode="append")
             prof.mark("postings_write")
 
             # ---- read-back over the COMPRESSED rows (tiny, column-pruned):
@@ -1427,7 +1488,13 @@ def build_index(
             # The dict read covers ALL shards, so resumed/partial builds get
             # the same global table as fresh ones. ----
             lineage_future = pool.submit(
-                _write_lineage, spark, postings_path, lineage_path, missing
+                lambda: _write_lineage(
+                    spark.read.parquet(postings_path).filter(
+                        F.col("shard").isin(missing)
+                    ),
+                    lineage_path,
+                    "build",
+                )
             )
             term_stats = (
                 spark.read.parquet(postings_path)
@@ -1436,63 +1503,25 @@ def build_index(
                 .persist(StorageLevel.MEMORY_AND_DISK)
             )
             # corpus token stats ride the dict write as an Observation
-            # (accumulator-side aggregate over the written rows — the
-            # append path's shape): no separate total_tokens / field_tokens
-            # jobs over the cached stats (r6b)
-            from pyspark.sql import Observation
-
-            obs = Observation("build_tokens")
-            observed = term_stats.observe(
-                obs,
-                F.sum(
-                    F.when(~F.col("term").contains(KW_SEP), F.col("ttf"))
-                ).alias("content_tokens"),
-                *[
-                    F.sum(
-                        F.when(
-                            F.col("term").startswith(f + KW_SEP), F.col("ttf")
-                        )
-                    ).alias(f"ftok_{i}")
-                    for i, f in enumerate(spec.text_fields)
-                ],
-            )
-            (
-                observed.select("term", "df")
-                .repartition(_dict_write_parts(spark, spec), "term")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .parquet(os.path.join(out_dir, "dict"))
+            # (r6b: no separate total_tokens / field_tokens jobs)
+            observed, obs = _observe_tokens(term_stats, spec, "build_tokens", "ttf")
+            parts = _dict_write_parts(spark, spec)
+            _write_sorted(
+                observed.select("term", "df"), "term",
+                os.path.join(out_dir, "dict"), parts,
             )
             # spellcheck candidate index, derived from the SAME cached vocab
-            # (vocab-sized, never corpus-sized); gram-sorted files so the
-            # query-side gram IN (...) filter row-group-prunes
+            # (vocab-sized, never corpus-sized)
             ngram_future = pool.submit(
-                lambda: term_ngram_rows(term_stats.select("term"))
-                .repartition(_dict_write_parts(spark, spec), "gram")
-                .sortWithinPartitions("gram")
-                .write.mode("overwrite")
-                .parquet(os.path.join(out_dir, "dict_ngrams"))
+                _write_sorted,
+                term_ngram_rows(term_stats.select("term")), "gram",
+                os.path.join(out_dir, "dict_ngrams"), parts,
             )
-            # total CONTENT tokens (keyword rows are namespaced with ':') and
-            # per-extra-text-field token totals (per-field avgdl = total /
-            # n_docs: absent fields count as length 0, exact for dense
-            # fields — documented deviation from Lucene's docCount(field)
-            # denominator for sparse ones) — both read from the dict write's
-            # Observation, zero extra jobs
-            metrics = obs.get
-            total_tokens = int(metrics["content_tokens"] or 0)
-            avgdl = total_tokens / n_docs if n_docs else 0.0
-            field_tokens = {
-                f: int(metrics[f"ftok_{i}"] or 0)
-                for i, f in enumerate(spec.text_fields)
-            }
+            _set_token_stats(meta, spec, obs.get)
             lineage_future.result()
             ngram_future.result()
             # meta v2: final corpus stats (also self-heals a resumed build
             # whose v1 meta carried zeros)
-            meta["total_tokens"] = total_tokens
-            meta["avgdl"] = avgdl
-            meta["field_tokens"] = field_tokens
             write_meta(out_dir, meta)
             prof.mark("lineage+dict")
 
@@ -1505,12 +1534,4 @@ def build_index(
             if cached is not None:
                 cached.unpersist()
 
-    return Index(
-        path=out_dir,
-        spec=spec,
-        n_docs=n_docs,
-        avgdl=avgdl,
-        total_tokens=total_tokens,
-        hot_terms=tuple(hot_terms),
-        field_tokens=field_tokens,
-    )
+    return Index._load_from(out_dir, meta, spec)

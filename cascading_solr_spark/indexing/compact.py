@@ -1,19 +1,20 @@
-"""Index compaction — the explicit ``optimize(maxSegments)`` analogue
+"""Index compaction — the explicit ``optimize(maxSegments=1)`` analogue
 (reference: core/SolrWriter.java:112, hadoop/SolrOutputFormat.java:35,
 local/SolrScheme.java:27: hard commit then merge segments at close;
-maxSegments is 10 on hadoop / 1 on local).
+maxSegments is 10 on hadoop / 1 on local — here always 1).
 
 After resume waves or streaming appends a shard dir can hold many files and
 a (shard, term, salt) key can be split across posting rows.  Compaction
-rebuilds the postings FROM THE COMPRESSED ROWS (decode -> merge -> re-encode
-via the same assembler), never re-tokenizing the corpus: ``max_segments``
-files per shard (default 1), one row per (shard, term, salt), and a rebuilt
-lineage table (per-shard terms/postings/bytes go stale once split rows
-merge).  The dict table is unchanged — global df per term is
-segment-layout-independent.
-
-The dict table's accumulated append segments (indexing/append.py) are folded
-back to one row per term in the same pass.
+rebuilds the postings FROM THE COMPRESSED ROWS, never re-tokenizing the
+corpus: a decode kernel turns them back into (packed, term, tf) rows, and
+the build's one segment writer (``build._write_postings``, at the build's
+sort width) re-encodes them — one file per shard, one row per (shard, term,
+salt).  The lineage rows, dict and ngram writes, docs fold, generation
+naming and token-stat update are the build's helpers too, so compacted
+rows have exactly the layout of a fresh build's.  The dict table's accumulated
+append segments (indexing/append.py) fold back to one row per term, and
+the lineage table is rebuilt (per-shard terms/postings/bytes go stale once
+split rows merge).
 
 Crash safety: the new postings generation is written to a fresh
 ``postings.genN`` directory, then meta.json is atomically replaced
@@ -27,7 +28,6 @@ builder/appender/compactor at a time), readers are unrestricted."""
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -46,12 +46,17 @@ from cascading_solr_spark.codec import (
 )
 from cascading_solr_spark.indexing.build import (
     DL_BITS,
-    KW_SEP,
     Index,
-    _assembler,
-    _shard_salt_exprs,
+    _next_generation,
+    _set_token_stats,
+    _sort_width,
+    _write_docs,
+    _write_lineage,
+    _write_postings,
+    _write_sorted,
     pack_id_dl,
-    postings_schema,
+    read_meta,
+    term_ngram_rows,
     tf_schema,
     write_meta,
 )
@@ -102,23 +107,15 @@ def _decode_kernel(block_size: int, positions: bool = False):
     return decode
 
 
-def compact_index(
-    spark: SparkSession, index: Index, max_segments: int = 1
-) -> Index:
-    """Merge-rewrite the postings of ``index`` into a new generation dir;
-    returns a refreshed handle."""
+def compact_index(spark: SparkSession, index: Index) -> Index:
+    """Merge-rewrite the postings of ``index`` into a new generation dir
+    (one file per shard); returns a refreshed handle."""
     spec = index.spec
     if not os.path.exists(index.postings_path):
         # 0-doc index (no postings dir yet): nothing to merge
         return index
     old_dirname = index.postings_dirname
-    old_path = index.postings_path
-    gen = 0
-    if old_dirname.startswith("postings.gen"):
-        gen = int(old_dirname.rsplit("gen", 1)[1])
-    new_dirname = f"postings.gen{gen + 1}"
-    new_path = os.path.join(index.path, new_dirname)
-    shutil.rmtree(new_path, ignore_errors=True)
+    new_dirname, new_path = _next_generation(index.path, old_dirname)
 
     tf_long = index.postings(spark).mapInPandas(
         _decode_kernel(spec.block_size, spec.positions), tf_schema(spec)
@@ -144,48 +141,13 @@ def compact_index(
             .drop("_did")
         )
     # the hot set persisted at build time keeps salting identical across
-    # generations (meta.json is the source of truth)
-    hot = list(index.hot_terms)
-    shard_e, salt_e = _shard_salt_exprs(hot, spec)
-    salt_keys = [salt_e] if salt_e is not None else []
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32") or "32")
-    arranged = tf_long.repartition(
-        max(spec.num_shards, shuffle_parts), shard_e, F.col("term"), *salt_keys
-    ).sortWithinPartitions(
-        shard_e, F.xxhash64("term"), *salt_keys, F.col("packed")
+    # generations (meta.json is the source of truth); post-fold corpus
+    # stats ride the postings write as an Observation
+    _, obs = _write_postings(
+        tf_long, spec, list(index.hot_terms), new_path,
+        _sort_width(spark, spec),
+        observe="compact_fold_stats" if has_deletes else None,
     )
-    compacted = arranged.mapInPandas(_assembler(spec, hot), postings_schema(spec))
-    if max_segments <= 1:
-        placed = compacted.repartition(spec.num_shards, "shard")
-    else:
-        # term-hash bucket caps files-per-shard at ~max_segments (an upper
-        # bound, like Lucene's maxSegments) while keeping files term-sorted
-        placed = compacted.withColumn(
-            "_seg", F.pmod(F.xxhash64("term"), F.lit(max_segments))
-        ).repartition(spec.num_shards * max_segments, "shard", "_seg")
-    final = placed.sortWithinPartitions("shard", "term", "salt").drop("_seg")
-    obs = None
-    if has_deletes:
-        # post-fold corpus stats ride the postings write as an Observation
-        # (the same no-extra-job trick the append path uses)
-        from pyspark.sql import Observation
-
-        obs = Observation("compact_fold_stats")
-        final = final.observe(
-            obs,
-            F.sum(
-                F.when(~F.col("term").contains(KW_SEP), F.col("sum_tf"))
-            ).alias("content_tokens"),
-            *[
-                F.sum(
-                    F.when(
-                        F.col("term").startswith(f + KW_SEP), F.col("sum_tf")
-                    )
-                ).alias(f"ftok_{i}")
-                for i, f in enumerate(spec.text_fields)
-            ],
-        )
-    final.write.mode("overwrite").partitionBy("shard").parquet(new_path)
 
     # fold dict append segments -> one (term, df) row per term, published as
     # a NEW meta-pointed generation dir (exactly like postings): the old dict
@@ -196,13 +158,11 @@ def compact_index(
     old_dict_dirname = index.dict_dirname
     have_dict = os.path.exists(index.dict_path)
     new_dict_dirname = old_dict_dirname
+    parts = max(1, spec.num_shards // 4)
     if have_dict:
-        dgen = 0
-        if old_dict_dirname.startswith("dict.gen"):
-            dgen = int(old_dict_dirname.rsplit("gen", 1)[1])
-        new_dict_dirname = f"dict.gen{dgen + 1}"
-        new_dict_path = os.path.join(index.path, new_dict_dirname)
-        shutil.rmtree(new_dict_path, ignore_errors=True)
+        new_dict_dirname, new_dict_path = _next_generation(
+            index.path, old_dict_dirname
+        )
         if has_deletes:
             # df shrinks where deleted docs left the postings: re-derive the
             # dictionary from the new generation's row metadata (term,
@@ -218,11 +178,7 @@ def compact_index(
                 .groupBy("term")
                 .agg(F.sum("df").alias("df"))
             )
-        (
-            folded.repartition(max(1, spec.num_shards // 4), "term")
-            .sortWithinPartitions("term")
-            .write.parquet(new_dict_path)
-        )
+        _write_sorted(folded, "term", new_dict_path, parts)
 
     # spellcheck ngram index: append segments accumulate duplicate
     # (gram, term) pairs (harmless for countDistinct lookups, but they grow)
@@ -232,39 +188,22 @@ def compact_index(
     # table here — gated on have_dict alone, not on a pre-existing ngram dir
     # (append.py can only bootstrap at n_docs=0; compact has the full vocab).
     old_ngrams_dirname = index.ngrams_dirname
-    have_ngrams = have_dict
     new_ngrams_dirname = old_ngrams_dirname
-    if have_ngrams:
-        from cascading_solr_spark.indexing.build import term_ngram_rows
-
-        ngen = 0
-        if old_ngrams_dirname.startswith("dict_ngrams.gen"):
-            ngen = int(old_ngrams_dirname.rsplit("gen", 1)[1])
-        new_ngrams_dirname = f"dict_ngrams.gen{ngen + 1}"
-        new_ngrams_path = os.path.join(index.path, new_ngrams_dirname)
-        shutil.rmtree(new_ngrams_path, ignore_errors=True)
-        (
-            term_ngram_rows(spark.read.parquet(new_dict_path).select("term"))
-            .repartition(max(1, spec.num_shards // 4), "gram")
-            .sortWithinPartitions("gram")
-            .write.parquet(new_ngrams_path)
+    if have_dict:
+        new_ngrams_dirname, new_ngrams_path = _next_generation(
+            index.path, old_ngrams_dirname
+        )
+        _write_sorted(
+            term_ngram_rows(spark.read.parquet(new_dict_path).select("term")),
+            "gram", new_ngrams_path, parts,
         )
 
     # rebuilt lineage: per-shard stats change once split rows merge (rows are
     # per-shard truth again — tagged "compacted")
     lineage_path = os.path.join(index.path, "lineage")
-    built = spark.read.parquet(new_path)
-    lineage = built.groupBy("shard").agg(
-        F.count("*").alias("terms"),
-        F.sum("n_docs").alias("postings"),
-        F.sum("n_bytes").alias("bytes"),
-        (F.max("n_docs") / F.avg("n_docs")).alias("skew_ratio"),
-        F.lit("committed").alias("status"),
-        F.lit("compacted").alias("segment"),
-    )
     lineage_tmp = lineage_path + ".tmp"
     shutil.rmtree(lineage_tmp, ignore_errors=True)
-    lineage.write.parquet(lineage_tmp)
+    _write_lineage(spark.read.parquet(new_path), lineage_tmp, "compacted")
 
     # fold deletes out of the stored docs: a NEW meta-pointed generation
     # (docs.genN), same crash-safety rule as postings/dict
@@ -272,41 +211,25 @@ def compact_index(
     new_docs_dirname = old_docs_dirname
     n_live = None
     if has_deletes and os.path.exists(index.docs_path):
-        docgen = 0
-        if old_docs_dirname.startswith("docs.gen"):
-            docgen = int(old_docs_dirname.rsplit("gen", 1)[1])
-        new_docs_dirname = f"docs.gen{docgen + 1}"
-        new_docs_path = os.path.join(index.path, new_docs_dirname)
-        shutil.rmtree(new_docs_path, ignore_errors=True)
-        (
-            index.docs(spark)
-            .join(F.broadcast(del_ids), "doc_id", "left_anti")
-            .repartition(spec.num_shards, "shard")
-            .sortWithinPartitions("shard", "doc_id")
-            .write.partitionBy("shard")
-            .parquet(new_docs_path)
+        new_docs_dirname, new_docs_path = _next_generation(
+            index.path, old_docs_dirname
+        )
+        _write_docs(
+            index.docs(spark).join(F.broadcast(del_ids), "doc_id", "left_anti"),
+            spec, new_docs_path, "overwrite",
         )
         n_live = spark.read.parquet(new_docs_path).count()  # footer-served
 
     # atomic publish: ONE meta replace flips every generation pointer
-    with open(os.path.join(index.path, "meta.json")) as fh:
-        meta = json.load(fh)
+    meta = read_meta(index.path)
     meta["postings_dirname"] = new_dirname
     meta["dict_dirname"] = new_dict_dirname
     meta["ngrams_dirname"] = new_ngrams_dirname
     if has_deletes:
         meta["docs_dirname"] = new_docs_dirname
-        content_tokens = int(obs.get["content_tokens"] or 0)
         if n_live is not None:
             meta["n_docs"] = int(n_live)
-        meta["total_tokens"] = content_tokens
-        meta["avgdl"] = (
-            content_tokens / meta["n_docs"] if meta["n_docs"] else 0.0
-        )
-        meta["field_tokens"] = {
-            f: int(obs.get[f"ftok_{i}"] or 0)
-            for i, f in enumerate(spec.text_fields)
-        }
+        _set_token_stats(meta, spec, obs.get)
         # ids are never reused: next_doc_id stays monotonic across the fold
         meta["n_deleted"] = 0
     write_meta(index.path, meta)

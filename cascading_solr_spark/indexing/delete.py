@@ -17,7 +17,8 @@ side of that same update contract, with Lucene's exact visibility model:
 
 Representation: tombstones are ordinary posting rows under the reserved
 ``codec.DELETED_TERM`` (never a legal analyzed or keyword term), written
-through the SAME salt/shard/assembler pipeline as real postings.  That buys:
+by the SAME segment writer as real postings (``build._write_postings``:
+salt/shard exchange, assembler, one file per shard).  That buys:
 one extra term in each query's pruned IN-list scan (only when deletes
 exist — a zero-delete index plans byte-identically), in-shard exclusion
 inside every kernel with no extra job or broadcast, replication snapshots
@@ -27,8 +28,6 @@ of index size.
 
 from __future__ import annotations
 
-import json
-import os
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,12 +36,10 @@ from pyspark.sql import functions as F
 from cascading_solr_spark.codec import DELETED_TERM
 from cascading_solr_spark.indexing.build import (
     DL_BITS,
-    _balanced_shard_key,
     MAX_DOC_ID,
     Index,
-    _assembler,
-    _shard_salt_exprs,
-    postings_schema,
+    _write_postings,
+    read_meta,
     write_meta,
 )
 from cascading_solr_spark.spec import IndexSpecError
@@ -95,31 +92,16 @@ def delete_documents(
         F.lit(1).cast("int").alias("tf"),
         *pos_cols,
     )
-    hot = list(index.hot_terms)
-    shard_e, salt_e = _shard_salt_exprs(hot, spec)
-    salt_keys = [salt_e] if salt_e is not None else []
-    arranged = tf_long.repartition(
-        spec.num_shards, _balanced_shard_key(shard_e, spec.num_shards)
-    ).sortWithinPartitions(
-        shard_e, F.xxhash64("term"), *salt_keys, F.col("packed")
-    )
-    postings = arranged.mapInPandas(_assembler(spec, hot), postings_schema(spec))
-    # single-exchange write (the append path's shape, r6b): the tombstone
-    # rows are already partitioned by the shard expression, so the segment
-    # merge's second exchange would only re-move this tiny batch — a local
-    # term sort satisfies the writer's required ordering and the partitionBy
-    # still lands each shard's rows in its own dir, one file per batch.
-    (
-        postings.sortWithinPartitions("shard", "term", "salt")
-        .write.mode("append")
-        .partitionBy("shard")
-        .parquet(index.postings_path)
+    # single-exchange write at sort width num_shards (the append path's
+    # shape, r6b): one file per shard per delete batch
+    _write_postings(
+        tf_long, spec, list(index.hot_terms), index.postings_path,
+        spec.num_shards,
     )
 
     # no dict segment (DELETED_TERM must never surface in spellcheck /
     # terms / luke), no doc rows, no token stats: stats stay stale by design
-    with open(os.path.join(index_dir, "meta.json")) as fh:
-        meta = json.load(fh)
+    meta = read_meta(index_dir)
     meta["n_deleted"] = int(meta.get("n_deleted", 0)) + n_del
     write_meta(index_dir, meta)
     return Index.load(index_dir)

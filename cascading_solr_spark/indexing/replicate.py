@@ -24,11 +24,10 @@ copy.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
-from cascading_solr_spark.indexing.build import Index
+from cascading_solr_spark.indexing.build import Index, read_meta
 
 
 def snapshot_index(index_dir: str, dest_dir: str) -> str:
@@ -36,8 +35,7 @@ def snapshot_index(index_dir: str, dest_dir: str) -> str:
     (created; must not already contain a meta.json).  Returns ``dest_dir``,
     which is itself a loadable index directory."""
     meta_path = os.path.join(index_dir, "meta.json")
-    with open(meta_path) as fh:
-        meta = json.load(fh)
+    meta = read_meta(index_dir)
     if os.path.exists(os.path.join(dest_dir, "meta.json")):
         raise ValueError(f"snapshot target {dest_dir!r} already holds an index")
     os.makedirs(dest_dir, exist_ok=True)

@@ -172,14 +172,27 @@ def lsh_signature_batched(n_planes: int = 8, plane_offset: int = 0):
     form (parity-pinned in tests).  The HOF form is CodegenFallback: every
     array element pays an interpreted lambda dispatch, which made the
     signature stage the dominant cost of the ANN index builds.  Expects
-    fixed-dimension, non-null vectors (the embedding-table contract)."""
+    fixed-dimension, non-null vectors (the embedding-table contract); a
+    batch holding a null or ragged vector raises a named ValueError from
+    the kernel (no extra Spark job)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
     def sig(vecs: pd.Series) -> pd.Series:
         if not len(vecs):
             return pd.Series([], dtype="int64")
-        mat = np.stack(vecs.to_numpy()).astype(np.float64, copy=False)
+        vals = vecs.to_numpy()
+        try:
+            mat = np.stack(vals).astype(np.float64, copy=False)
+        except (TypeError, ValueError):
+            mat = None
+        if mat is None or mat.ndim != 2:
+            nulls = sum(v is None for v in vals)
+            dims = sorted({len(v) for v in vals if v is not None})
+            raise ValueError(
+                "lsh_signature_batched needs non-null vectors of one "
+                f"dimension; got {nulls} null vector(s), dimensions {dims}"
+            )
         m, d = mat.shape
         out = np.zeros(m, dtype=np.int64)
         for i in range(n_planes):

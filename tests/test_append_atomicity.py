@@ -33,8 +33,10 @@ def test_failed_append_leaves_index_untouched(spark, tmp_path, monkeypatch):
     before = _snapshot(out)
 
     # inject a fault into the postings tokenize kernel — the docs write
-    # (threaded, concurrent) would previously still commit its rows
-    import cascading_solr_spark.indexing.append as ap
+    # (threaded, concurrent) would previously still commit its rows.  The
+    # append's tf rows come from the build's shared writer, which reads
+    # the kernel from indexing.build.
+    import cascading_solr_spark.indexing.build as ap
 
     real = ap._spimi_tf_kernel
 

@@ -95,6 +95,25 @@ def test_batched_signature_matches_hof(spark, emb):
             assert rows and all(r["b"] == r["h"] for r in rows)
 
 
+def test_batched_signature_rejects_null_and_ragged_vectors(spark):
+    from pyspark.errors import PythonException
+
+    from cascading_solr_spark.operators.similarity import lsh_signature_batched
+
+    for rows in (
+        [(1, [1.0, 0.5, -2.0]), (2, None), (3, [0.0, 1.0, 1.0])],
+        [(1, [1.0, 0.5, -2.0]), (2, [1.0, 0.5]), (3, [0.0, 1.0, 1.0])],
+    ):
+        emb = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>"
+        ).coalesce(1)
+        sig = lsh_signature_batched(8)(F.col("embedding"))
+        with pytest.raises(
+            PythonException, match="ValueError: lsh_signature_batched"
+        ):
+            emb.select(sig).collect()
+
+
 def test_cosine_topk_to_row_missing_id_empty(spark, emb):
     from cascading_solr_spark.operators.similarity import cosine_topk_to_row
 
