@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cascading_solr_spark.analyzer import tokenize_with_positions
-from cascading_solr_spark.indexing.build import KW_SEP, Index
+from cascading_solr_spark.indexing.build import KW_SEP, Index, local_frame
 from cascading_solr_spark.spec import IndexSpec
 
 _ANALYSIS_SCHEMA = "field string, position int, term string"
@@ -49,7 +49,7 @@ def analysis_field(
     rows = [
         (field, int(pos), term) for term, pos in tokenize_with_positions(text)
     ]
-    return spark.createDataFrame(rows, _ANALYSIS_SCHEMA)
+    return local_frame(spark, rows, _ANALYSIS_SCHEMA)
 
 
 def analysis_document(
@@ -71,7 +71,7 @@ def analysis_document(
         for x in values:
             if x is not None:
                 rows.append((f, 0, str(x)))
-    return spark.createDataFrame(rows, _ANALYSIS_SCHEMA)
+    return local_frame(spark, rows, _ANALYSIS_SCHEMA)
 
 
 def _dict_with_field(index: Index, spark: SparkSession) -> DataFrame | None:
@@ -155,13 +155,11 @@ def ping(spark: SparkSession, index_dir: str) -> DataFrame:
         ix = Index.load(index_dir)
         n = ix.docs(spark).select("doc_id").limit(1).count()
         status = "OK" if (ix.n_docs == 0 or n == 1) else "FAIL"
-        return spark.createDataFrame(
-            [(status, int(ix.n_docs))], "status string, n_docs long"
+        return local_frame(
+            spark, [(status, int(ix.n_docs))], "status string, n_docs long"
         )
     except Exception:
-        return spark.createDataFrame(
-            [("FAIL", 0)], "status string, n_docs long"
-        )
+        return local_frame(spark, [("FAIL", 0)], "status string, n_docs long")
 
 
 def browse(

@@ -57,6 +57,7 @@ idempotent task output dirs (hadoop/SolrOutputFormat.java:57).
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -66,9 +67,11 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.storagelevel import StorageLevel
 
 from cascading_solr_spark.analyzer import (
@@ -349,36 +352,44 @@ def _rank_ids(
     aggs = [F.count("*").alias("cnt")]
     if check_unique:
         aggs.append(F.count_distinct(*keys_l).alias("dcnt"))
-    rows = sorted_df.groupBy("_pid").agg(*aggs).collect()
-    counts = {r["_pid"]: r["cnt"] for r in rows}
-    if check_unique:
-        dups = sum(r["cnt"] - r["dcnt"] for r in rows)
-        if dups:
-            sorted_df.unpersist()
-            raise IndexSpecError(
-                f"{dups} duplicate rows for key {tuple(keys_l)!r}; the key "
-                "must uniquely identify documents (uniqueKey analogue)"
+    # the sorted projection is released on every exit, failures included
+    try:
+        rows = sorted_df.groupBy("_pid").agg(*aggs).collect()
+        counts = {r["_pid"]: r["cnt"] for r in rows}
+        if check_unique:
+            dups = sum(r["cnt"] - r["dcnt"] for r in rows)
+            if dups:
+                raise IndexSpecError(
+                    f"{dups} duplicate rows for key {tuple(keys_l)!r}; the "
+                    "key must uniquely identify documents (uniqueKey "
+                    "analogue)"
+                )
+        offsets, acc = {}, 0
+        for pid in sorted(counts):
+            offsets[pid] = acc
+            acc += counts[pid]
+        off_df = F.broadcast(
+            local_frame(
+                df.sparkSession,
+                [(pid, off) for pid, off in offsets.items()],
+                "_pid int, _offset long",
             )
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    spark = df.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()], "_pid int, _offset long"
         )
-    )
-    w = Window.partitionBy("_pid").orderBy(*keys_l)
-    ids = (
-        sorted_df.join(off_df, "_pid")
-        .withColumn("doc_id", F.row_number().over(w) - 1 + F.col("_offset"))
-        .drop("_pid", "_offset")
-    )
-    if persist:
-        ids = ids.persist(StorageLevel.MEMORY_AND_DISK)
-        ids.count()  # materialize so the sorted projection can be released
-    sorted_df.unpersist()
+        w = Window.partitionBy("_pid").orderBy(*keys_l)
+        ids = (
+            sorted_df.join(off_df, "_pid")
+            .withColumn("doc_id", F.row_number().over(w) - 1 + F.col("_offset"))
+            .drop("_pid", "_offset")
+        )
+        if persist:
+            ids = ids.persist(StorageLevel.MEMORY_AND_DISK)
+            try:
+                ids.count()  # materialize: the sorted projection can go
+            except BaseException:
+                ids.unpersist()
+                raise
+    finally:
+        sorted_df.unpersist()
     return ids, acc
 
 
@@ -423,6 +434,36 @@ def assign_doc_ids(
     that would re-sort content)."""
     ids, _ = _rank_ids(df, keys, persist=persist, check_unique=check_unique)
     return df.join(ids.hint("shuffle_hash"), list(keys))
+
+
+@functools.lru_cache(maxsize=None)
+def _ddl_json(ddl: str) -> dict:
+    # one JVM parse per distinct DDL string, not one per frame; callers get
+    # a fresh StructType each (a frame's schema object is mutable)
+    return T.StructType.fromDDL(ddl).jsonValue()
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: T.StructType | str
+) -> DataFrame:
+    """A small driver-rows frame (top-k hits, id lists, facet spines) built
+    through Arrow: the plan is a ``LocalRelation``, so collecting or
+    broadcasting it runs no Spark job.  ``createDataFrame`` over a Python
+    list instead plans a pickled-Python RDD whose every use starts a Python
+    worker job.  ``rows`` are tuples in ``schema`` order (bounded: they
+    cross py4j in one piece); the frame's schema is ``schema`` exactly,
+    nullability included."""
+    st = (
+        T.StructType.fromJson(_ddl_json(schema))
+        if isinstance(schema, str)
+        else schema
+    )
+    arrow = to_arrow_schema(st)
+    cols = list(zip(*rows)) or [()] * len(st.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, st)
 
 
 _UNSET = object()  # dict_cache sentinel: "not computed yet" vs "too big"
@@ -548,7 +589,7 @@ class Index:
         # — the first append creates it; until then serve a schema-correct
         # empty frame so every query path works unchanged
         if not os.path.exists(self.postings_path):
-            return spark.createDataFrame([], postings_schema(self.spec))
+            return local_frame(spark, [], postings_schema(self.spec))
         return self._cached_df(
             spark, "postings",
             lambda: spark.read.parquet(self.postings_path),
@@ -565,7 +606,7 @@ class Index:
         if not os.path.exists(p):
             meta = read_meta(self.path)
             schema = T.StructType.fromJson(json.loads(meta["docs_schema"]))
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         return self._cached_df(spark, "docs", lambda: spark.read.parquet(p))
 
     def deleted_ids(self, spark: SparkSession) -> DataFrame:
@@ -576,7 +617,7 @@ class Index:
         this; postings kernels instead decode the same rows in-shard via
         ``denied_ids`` (no extra job)."""
         if not self.has_deletes:
-            return spark.createDataFrame([], "doc_id long")
+            return local_frame(spark, [], "doc_id long")
         block_size = self.spec.block_size
 
         def kernel(it):
@@ -598,7 +639,8 @@ class Index:
     def lineage(self, spark: SparkSession) -> DataFrame:
         p = os.path.join(self.path, "lineage")
         if not os.path.exists(p):
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 [],
                 "shard int, terms long, postings long, bytes long, "
                 "skew_ratio double, status string, segment string",

@@ -39,6 +39,7 @@ from cascading_solr_spark.indexing.build import (
     MAX_DOC_ID,
     Index,
     _write_postings,
+    local_frame,
     read_meta,
     write_meta,
 )
@@ -67,20 +68,22 @@ def delete_documents(
         # cut lineage: deleteByQuery's ids READ the postings dir this write
         # APPENDS to — materialize executor-side before planning the write
         ids_df = ids_df.localCheckpoint(eager=True)
+        bounds = ids_df.agg(
+            F.count("*").alias("n"), F.min("doc_id").alias("lo"),
+            F.max("doc_id").alias("hi"),
+        ).collect()[0]
+        n_del, lo, hi = int(bounds["n"]), bounds["lo"], bounds["hi"]
     else:
+        # an id list is already on the driver: bounds without a job
         vals = sorted({int(i) for i in ids})
-        ids_df = spark.createDataFrame([(v,) for v in vals], "doc_id long")
-    bounds = ids_df.agg(
-        F.count("*").alias("n"), F.min("doc_id").alias("lo"),
-        F.max("doc_id").alias("hi"),
-    ).collect()[0]
-    n_del = int(bounds["n"])
+        ids_df = local_frame(spark, [(v,) for v in vals], "doc_id long")
+        n_del = len(vals)
+        lo, hi = (vals[0], vals[-1]) if vals else (None, None)
     if not n_del:
         return index
-    if bounds["lo"] < 0 or bounds["hi"] > MAX_DOC_ID:
+    if lo < 0 or hi > MAX_DOC_ID:
         raise IndexSpecError(
-            f"doc ids must be in [0, {MAX_DOC_ID}] "
-            f"(got min={bounds['lo']}, max={bounds['hi']})"
+            f"doc ids must be in [0, {MAX_DOC_ID}] (got min={lo}, max={hi})"
         )
 
     pos_cols = (

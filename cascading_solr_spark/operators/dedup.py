@@ -21,6 +21,9 @@ shingle-id vocabulary uses the distributed sort-rank, not a global window.
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -28,33 +31,60 @@ from cascading_solr_spark.operators.textstats import simple_tokens
 
 MINHASH_PRIME = 2_147_483_647  # 2^31 - 1, Mersenne
 
-#: frames persisted by the previous invocation of each operator, per
-#: session.  A persisted DataFrame lives in the SQL CacheManager until
-#: unpersisted — repeated operator calls (every bench/pipeline loop)
-#: otherwise pile up cached plans whose storage blocks churn the unified
-#: memory pool (r6b: the dedup keys ran ~2x their isolated minima inside
-#: the full suite).  Swapping releases the PRIOR call's cache when a new
-#: call begins; an old result DataFrame a caller kept simply recomputes.
+#: frames persisted by the latest invocation of each operator, per
+#: session: (tag, weakref(session)) -> the frames' JVM handles.  A persisted
+#: DataFrame lives in the SQL CacheManager until unpersisted — repeated
+#: operator calls (every bench/pipeline loop) otherwise pile up cached
+#: plans whose storage blocks churn the unified memory pool (r6b: the dedup
+#: keys ran ~2x their isolated minima inside the full suite).  Each call
+#: first releases the PRIOR call's frames (:func:`_swap_persisted`), then
+#: registers every frame the moment it is persisted (:func:`_persist`), so
+#: a call that fails while materializing still leaves its caches to the
+#: next call's release.  An old result DataFrame a caller kept simply
+#: recomputes.  Neither key nor value holds the Python session, so the
+#: registry never keeps a session alive.
 _PERSIST_REGISTRY: dict = {}
+_PERSIST_LOCK = threading.Lock()
 
 
-def _swap_persisted(tag: str, spark, frames: list) -> None:
-    for key, (sess, old) in list(_PERSIST_REGISTRY.items()):
+def _session_gone(ref) -> bool:
+    sess = ref()
+    try:
+        return sess is None or sess.sparkContext._jsc is None
+    except Exception:  # noqa: BLE001 — any probe failure means unusable
+        return True
+
+
+def _swap_persisted(tag: str, spark) -> None:
+    """Release the frames ``tag``'s previous call persisted in ``spark``
+    and start this call's (empty) registration; entries of stopped or
+    collected sessions are dropped on the way."""
+    key = (tag, weakref.ref(spark))
+    with _PERSIST_LOCK:
+        for k in [k for k in _PERSIST_REGISTRY if _session_gone(k[1])]:
+            del _PERSIST_REGISTRY[k]
+        old = _PERSIST_REGISTRY.pop(key, [])
+        _PERSIST_REGISTRY[key] = []
+    for jdf in old:
         try:
-            stopped = sess.sparkContext._jsc is None
-        except Exception:  # noqa: BLE001 — any probe failure means unusable
-            stopped = True
-        if stopped:
-            _PERSIST_REGISTRY.pop(key, None)
-    key = (tag, id(spark))
-    ent = _PERSIST_REGISTRY.get(key)
-    if ent is not None and ent[0] is spark:
-        for f in ent[1]:
-            try:
-                f.unpersist()
-            except Exception:  # noqa: BLE001 — cache release is best-effort
-                pass
-    _PERSIST_REGISTRY[key] = (spark, frames)
+            jdf.unpersist(False)
+        except Exception:  # noqa: BLE001 — cache release is best-effort
+            pass
+
+
+def _persist(tag: str, spark, df: DataFrame) -> DataFrame:
+    """``df.persist()``, registered under ``tag`` before anything can
+    materialize it."""
+    return _register(tag, spark, df.persist())
+
+
+def _register(tag: str, spark, df: DataFrame) -> DataFrame:
+    """Add an already persisted ``df`` to ``tag``'s current registration."""
+    with _PERSIST_LOCK:
+        _PERSIST_REGISTRY.setdefault((tag, weakref.ref(spark)), []).append(
+            df._jdf
+        )
+    return df
 
 
 def exact_duplicates(
@@ -185,8 +215,12 @@ def shingle_ids(shingled: DataFrame, id_mode: str = "dense") -> DataFrame:
     # the vocabulary is already a distinct keys-only frame, so the sort-rank
     # ids ARE the result — assign_doc_ids' join-back of ids onto the input
     # would be a redundant full shuffle of the vocabulary (r6: dropped)
+    # the rank frame comes back persisted; the next call releases it
+    spark = shingled.sparkSession
+    _swap_persisted("shingle_ids", spark)
     vocab = shingled.select("shingle").distinct()
     ids, _ = _rank_ids(vocab, ("shingle",), check_unique=False)
+    _register("shingle_ids", spark, ids)
     return ids.select("shingle", (F.col("doc_id") + 1).alias("shingle_id"))
 
 
@@ -263,8 +297,9 @@ def minhash_lsh_pairs(
     # the shingle cache serially — lazy persists race their own population
     # when AQE materializes the join's broadcast stages concurrently (r6).
     spark = docs.sparkSession
-    _swap_persisted("minhash_lsh_pairs", spark, [])
-    shingled = _shingled(docs, text_col, n).persist()
+    tag = "minhash_lsh_pairs"
+    _swap_persisted(tag, spark)
+    shingled = _persist(tag, spark, _shingled(docs, text_col, n))
     ids = shingled.join(shingle_ids(shingled, id_mode), "shingle").select(
         "doc_id", "shingle_id"
     )
@@ -273,13 +308,9 @@ def minhash_lsh_pairs(
         # Jaccard verification below can run entirely on the long ids —
         # identical intersection counts, and the candidate-pair shingle
         # joins shuffle 8-byte keys instead of shingle strings (r6)
-        ids = ids.persist()
-    mins = _minhash_min_cols_from_ids(ids, num_hashes).persist()
+        ids = _persist(tag, spark, ids)
+    mins = _persist(tag, spark, _minhash_min_cols_from_ids(ids, num_hashes))
     mins.count()
-    _swap_persisted(
-        "minhash_lsh_pairs", spark,
-        [shingled, mins] + ([ids] if id_mode == "dense" else []),
-    )
     # band bucket keys straight off the per-doc min columns: band j's key is
     # "h=min:h=min:..." over its hashes in ascending h — exactly the string
     # the old sort_array(collect_list(...)) aggregation produced, without a
@@ -486,12 +517,14 @@ def simhash_near_pairs(
     # tokenize+signature chain (measured 4x the operator's real cost).  The
     # frame is one row per distinct signature — KBs to low MBs.
     spark = docs.sparkSession
-    _swap_persisted("simhash_near_pairs", spark, [])
-    groups = s.groupBy("simhash").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("_ids")
-    ).persist()
+    _swap_persisted("simhash_near_pairs", spark)
+    groups = _persist(
+        "simhash_near_pairs", spark,
+        s.groupBy("simhash").agg(
+            F.sort_array(F.collect_list("doc_id")).alias("_ids")
+        ),
+    )
     groups.count()
-    _swap_persisted("simhash_near_pairs", spark, [groups])
     bands = F.explode(
         F.array(*[
             F.struct(

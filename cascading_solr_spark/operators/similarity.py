@@ -504,7 +504,7 @@ def _read_indexed(spark, path: str) -> DataFrame:
     The cache key carries the ``_SUCCESS`` mtime, so a rebuild into the same
     dir (overwrite rewrites the marker) invalidates; the value pins the
     owning session (identity compare), and entries of stopped sessions are
-    evicted like search._EMPTY_IDS_CACHE."""
+    evicted on every miss."""
     import os
 
     try:

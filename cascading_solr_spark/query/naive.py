@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cascading_solr_spark.analyzer import analyze_col, analyze_query
+from cascading_solr_spark.indexing.build import local_frame
 
 
 def tokens_long(
@@ -138,26 +139,29 @@ def bm25_topk_df(
     # null to "").
     from pyspark.sql import Observation
 
-    from cascading_solr_spark.operators.dedup import _swap_persisted
+    from cascading_solr_spark.operators.dedup import _persist, _swap_persisted
 
     # release the PREVIOUS call's tf cache BEFORE persisting the new one
     # (never unpersisted otherwise — repeated calls pile cached plans into
     # the CacheManager, r6b).  Order matters: an identical plan persisted
     # now would ALIAS the old cache entry, and evicting after the fact
     # would strip this call's own cache.
-    _swap_persisted("bm25_topk_df", docs.sparkSession, [])
+    _swap_persisted("bm25_topk_df", docs.sparkSession)
     seen = Observation()
-    tf = tokens_long(
-        docs.observe(seen, F.count(F.lit(1)).alias("n")), content_col, id_col
-    ).persist()
+    tf = _persist(
+        "bm25_topk_df", docs.sparkSession,
+        tokens_long(
+            docs.observe(seen, F.count(F.lit(1)).alias("n")),
+            content_col, id_col,
+        ),
+    )
     tt = tf.agg(F.sum("tf")).collect()[0][0]
     n_docs = seen.get["n"]
-    _swap_persisted("bm25_topk_df", docs.sparkSession, [tf])
     # n>0 with an empty tf table means every doc tokenized to [] — avg(dl)
     # over those zeros was 0.0, not null; n=0 keeps the avg-of-empty null
     avgdl = None if n_docs == 0 else float(tt or 0) / float(n_docs)
-    stats = docs.sparkSession.createDataFrame(
-        [(n_docs, avgdl)], "n long, avgdl double"
+    stats = local_frame(
+        docs.sparkSession, [(n_docs, avgdl)], "n long, avgdl double"
     )
     matched = tf.filter(F.col("term").isin(terms)) if terms else tf.limit(0)
     dfreq = matched.groupBy("term").agg(F.count("*").alias("df"))

@@ -69,7 +69,12 @@ from cascading_solr_spark.codec import (
     decode_varint,
     restart_cumsum,
 )
-from cascading_solr_spark.indexing.build import KW_SEP, POSTINGS_SCHEMA, Index
+from cascading_solr_spark.indexing.build import (
+    KW_SEP,
+    POSTINGS_SCHEMA,
+    Index,
+    local_frame,
+)
 from cascading_solr_spark.query.wand import (
     RESULT_SCHEMA as _RESULT_SCHEMA,
 )
@@ -119,31 +124,11 @@ def _scan_terms(index: Index, terms) -> list[str]:
     return out
 
 
-_EMPTY_IDS_CACHE: dict[int, tuple] = {}
-
-
 def _empty_ids(spark: SparkSession) -> DataFrame:
-    """Session-cached empty (doc_id long) frame.  createDataFrame costs a
-    ~35 ms py4j round trip, and the hot query paths built one eagerly per
-    call even when unused; the cache value pins the owning session (identity
-    compare, strong ref — no id-reuse hazard)."""
-    ent = _EMPTY_IDS_CACHE.get(id(spark))
-    if ent is not None and ent[0] is spark:
-        return ent[1]
-    # evict dead sessions (r6, ADVICE item): a long-lived multi-session
-    # process would otherwise retain stopped SparkSessions (and DataFrames
-    # bound to dead contexts) forever, and a reused id() could serve a frame
-    # from a stopped context
-    for key, (sess, _) in list(_EMPTY_IDS_CACHE.items()):
-        try:
-            stopped = sess.sparkContext._jsc is None
-        except Exception:  # noqa: BLE001 — any probe failure means unusable
-            stopped = True
-        if stopped:
-            _EMPTY_IDS_CACHE.pop(key, None)
-    df = spark.createDataFrame([], "doc_id long")
-    _EMPTY_IDS_CACHE[id(spark)] = (spark, df)
-    return df
+    """Empty (doc_id long) match set.  A ``local_frame``: collecting it, or
+    joining against it, runs no Spark job, so a zero-hit match path costs
+    one small driver-side frame build and nothing on the cluster."""
+    return local_frame(spark, [], "doc_id long")
 
 
 _QUOTED_RE = re.compile(r'^"([^"]*)"(?:~(\d+))?$')
@@ -1070,7 +1055,11 @@ def _fetch_stored(
     the caller is about to collect it anyway), shard = doc_id % num_shards
     is derived driver-side, and the docs read is pruned to exactly the
     touched shard partitions + doc_id row groups — at 100 TB this is a k-row
-    fetch, not a table scan.
+    fetch, not a table scan.  The ≤ k rows come back as a ``local_frame``
+    (a LocalRelation: broadcasting it runs no job), and the ≤ k joined rows
+    are ordered inside ONE partition (coalesce(1) + sortWithinPartitions)
+    rather than by a global sort's range exchange — the whole fetch is the
+    pruned scan's stage.
 
     ``bounded=False`` (k=None: an UNBOUNDED match set) must never collect or
     broadcast the matches — driver memory and plan size would grow with the
@@ -1106,15 +1095,17 @@ def _fetch_stored(
     if docs_cols is not None:
         docs = docs.select("doc_id", "shard", *docs_cols)
     if not rows:
+        # the zero-hit frame keeps ``top``'s schema (nullability included)
         return (
             docs.drop("shard")
-            .join(F.broadcast(top), "doc_id")
+            .join(F.broadcast(local_frame(spark, [], top.schema)), "doc_id")
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
     ids = [int(r["doc_id"]) for r in rows]
     shards = sorted({i % index.spec.num_shards for i in ids})
     small = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(r["doc_id"]), float(r["score"])) for r in rows],
             _RESULT_SCHEMA,
         )
@@ -1123,7 +1114,8 @@ def _fetch_stored(
     return (
         pruned.drop("shard")
         .join(small, "doc_id")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .coalesce(1)
+        .sortWithinPartitions(F.desc("score"), F.asc("doc_id"))
     )
 
 
@@ -1313,16 +1305,15 @@ def match_ids(
         return live
     # wildcard clauses: each is ONE clause matched by any dict expansion
     live_groups = [g for g, _ in plan.groups if g]
-    empty = _empty_ids(spark)
     if not plan.terms and not plan.groups:
         return (
             keyword_filter(spark, index, fterms, excluded=eterms)
             if fterms
-            else empty
+            else _empty_ids(spark)
         )
     dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
     if _zero_hit(plan, dfs):
-        return empty
+        return _empty_ids(spark)
     conjunctive, n_required = plan.conjunctive, plan.n_required
     sterms = set(dfs)
     block_size = index.spec.block_size
@@ -1542,7 +1533,7 @@ def search(
             if start:
                 top = top.offset(start)
         else:
-            top = spark.createDataFrame([], _RESULT_SCHEMA)
+            top = local_frame(spark, [], _RESULT_SCHEMA)
     else:
 
         def _ranked(kk: int | None) -> DataFrame:
@@ -1601,10 +1592,13 @@ def search(
                     )
                     break
             if top is None:
-                top = spark.createDataFrame(
+                # the survivors keep the candidates' rank order, and a
+                # LocalRelation keeps its row order: no global sort needed
+                top = local_frame(
+                    spark,
                     [(int(r["doc_id"]), float(r["score"])) for r in survivors],
                     _RESULT_SCHEMA,
-                ).orderBy(F.desc("score"), F.asc("doc_id"))
+                )
         if start:  # paging applies to k=None too (ordered exhaustive result)
             top = top.offset(start)
     if not with_stored:
@@ -1742,7 +1736,7 @@ def search_dismax(
             if start:
                 top = top.offset(start)
         else:
-            top = spark.createDataFrame([], _RESULT_SCHEMA)
+            top = local_frame(spark, [], _RESULT_SCHEMA)
     else:
         terms = {}
         for t, df in dfs.items():
@@ -1802,10 +1796,10 @@ def search_after(
     cursor therefore compares exactly."""
     if cursor == CURSOR_END:
         return (
-            spark.createDataFrame([], _RESULT_SCHEMA)
+            local_frame(spark, [], _RESULT_SCHEMA)
             if not with_stored
             else _fetch_stored(
-                spark, index, spark.createDataFrame([], _RESULT_SCHEMA),
+                spark, index, local_frame(spark, [], _RESULT_SCHEMA),
                 bounded=True,
             )
         )
@@ -1826,7 +1820,7 @@ def search_after(
             out = out.filter(F.col("doc_id") > int(cursor[1]))
         top = out.orderBy("doc_id").limit(k).withColumn("score", F.lit(0.0))
     else:
-        top = spark.createDataFrame([], _RESULT_SCHEMA)
+        top = local_frame(spark, [], _RESULT_SCHEMA)
     if not with_stored:
         return top
     return _fetch_stored(spark, index, top, bounded=True)
@@ -2082,12 +2076,14 @@ def phrase_match_ids(
         )
     terms = _phrase_terms(phrase)
     fterms = filter_terms_of(filters)
-    empty = _empty_ids(spark)
     if not terms:
-        return keyword_filter(spark, index, fterms) if fterms else empty
+        return (
+            keyword_filter(spark, index, fterms) if fterms
+            else _empty_ids(spark)
+        )
     dfs = term_dfs(spark, index, list(dict.fromkeys(terms)))
     if len(dfs) < len(set(terms)):
-        return empty
+        return _empty_ids(spark)
     spec = index.spec
     kernel = _phrase_kernel(
         terms, 0.0, max(index.avgdl, 1.0), spec.k1, spec.b, None,
@@ -2138,13 +2134,13 @@ def search_phrase(
     terms = _phrase_terms(phrase)
     fterms = filter_terms_of(filters)
     fetch_k = None if k is None else k + start
-    empty = spark.createDataFrame([], _RESULT_SCHEMA)
     if not terms:
-        top = empty
+        top = local_frame(spark, [], _RESULT_SCHEMA)
     else:
         dfs = term_dfs(spark, index, list(dict.fromkeys(terms)))
         if len(dfs) < len(set(terms)):
-            top = empty  # a phrase term with df=0 empties the conjunction
+            # a phrase term with df=0 empties the conjunction
+            top = local_frame(spark, [], _RESULT_SCHEMA)
         else:
             spec = index.spec
             idf_sum = sum(
@@ -2277,7 +2273,7 @@ def explain_score(
     )
     exp_terms = sorted({t for g, _ in groups for t in g})
     if not dfs and not exp_terms:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     exp_dfs = term_dfs(spark, index, exp_terms) if exp_terms else {}
     stats = _doc_scores_for_ids(
         spark, index, sorted(set(dfs) | set(exp_dfs)), [int(doc_id)]
@@ -2305,7 +2301,7 @@ def explain_score(
                 (tok, int(sum(exp_dfs.get(t, 0) for t in g)), 0, 0,
                  float(w), 1.0, float(w))
             )
-    return spark.createDataFrame(data, schema)
+    return local_frame(spark, data, schema)
 
 
 def realtime_get(
@@ -2439,8 +2435,8 @@ def search_elevated(
             if any(t in stats.get(i, {}) for t in g):
                 score += w
         rows.append((i, float(score), True))
-    head = spark.createDataFrame(
-        rows, "doc_id long, score double, elevated boolean"
+    head = local_frame(
+        spark, rows, "doc_id long, score double, elevated boolean"
     )
     return head.unionByName(tail)
 
@@ -3392,7 +3388,7 @@ def terms_component(
     prefix does."""
     d = index.term_dict(spark)
     if d is None:
-        return spark.createDataFrame([], "term string, df long")
+        return local_frame(spark, [], "term string, df long")
     out = d.filter(~F.col("term").contains(KW_SEP))
     if prefix:
         out = out.filter(F.col("term").startswith(prefix))
@@ -3437,7 +3433,7 @@ def facet_query_counts(
     spine (Solr reports 0-count facet.query entries).  Never a docs-table
     scan.  Returns (facet, n) rows, one per entry."""
     if not facet_queries:
-        return spark.createDataFrame([], "facet string, n long")
+        return local_frame(spark, [], "facet string, n long")
     base = match_ids(spark, index, query, filters=filters, op=op)
     tagged: DataFrame | None = None
     for name in sorted(facet_queries):
@@ -3450,8 +3446,8 @@ def facet_query_counts(
         .groupBy("facet")
         .agg(F.count("*").alias("n"))
     )
-    spine = spark.createDataFrame(
-        [(n,) for n in sorted(facet_queries)], "facet string"
+    spine = local_frame(
+        spark, [(n,) for n in sorted(facet_queries)], "facet string"
     )
     return (
         spine.join(counts, "facet", "left")
@@ -3559,7 +3555,7 @@ def _assemble_range_other(
     rows.append(("before", got.get(-1, 0)))
     rows.append(("after", got.get(n_buckets, 0)))
     rows.append(("between", sum(got.get(i, 0) for i in range(n_buckets))))
-    return spark.createDataFrame(rows, "bucket string, n long")
+    return local_frame(spark, rows, "bucket string, n long")
 
 
 def facet_range_counts_date(
@@ -3743,9 +3739,7 @@ def suggest_terms(
     q = (analyze_query(term) or [term.lower()])[0]
     d = index.term_dict(spark)
     if d is None:
-        return spark.createDataFrame(
-            [], "term string, df long, distance int"
-        )
+        return local_frame(spark, [], "term string, df long, distance int")
     if mode not in ("auto", "ngram", "scan"):
         raise ValueError(f"unknown spellcheck mode {mode!r}")
     if mode in ("auto", "ngram"):
@@ -3791,12 +3785,11 @@ def suggest_many(
     distance), top ``k`` per query term."""
     from pyspark.sql import Window
 
-    empty = spark.createDataFrame(
-        [], "query_term string, term string, df long, distance int"
-    )
     d = index.term_dict(spark)
     if d is None or not terms:
-        return empty
+        return local_frame(
+            spark, [], "query_term string, term string, df long, distance int"
+        )
     tagged: DataFrame | None = None
     for qt in sorted(set(terms)):
         cand = ngram_candidates(spark, index, qt, max_distance)
@@ -3871,8 +3864,8 @@ def spellcheck_collate(
         if collation
         else 0
     )
-    return spark.createDataFrame(
-        [(collation, int(hits))], "collation string, hits long"
+    return local_frame(
+        spark, [(collation, int(hits))], "collation string, hits long"
     )
 
 
@@ -3930,8 +3923,8 @@ def spellcheck_collations(
             if collation
             else 0
         )
-        return spark.createDataFrame(
-            [(collation, int(hits))], "collation string, hits long"
+        return local_frame(
+            spark, [(collation, int(hits))], "collation string, hits long"
         )
     k_sugg = max(2, alternative_term_count) if alternative_term_count else 2
     sugg = suggest_many(
@@ -3980,7 +3973,7 @@ def spellcheck_collations(
     )[:max_collations]
     if not rows:  # every try failed: Solr reports the best try with 0 hits
         rows = [(collations[0], 0)]
-    return spark.createDataFrame(rows, "collation string, hits long")
+    return local_frame(spark, rows, "collation string, hits long")
 
 
 def more_like_this(
@@ -4029,7 +4022,7 @@ def more_like_this(
     )
     terms = [t for _, t in ranked[:max_terms]]
     if not terms:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
+        return local_frame(spark, [], _RESULT_SCHEMA)
     fetch = k + 1 if exclude_doc_id is not None else k
     if qf:
         # mlt.qf (the /browse config boosts MLT across its whole qf list,
@@ -4108,8 +4101,8 @@ def more_like_this_docs(
         if terms:
             queries[str(src)] = " ".join(terms)
     if not queries:
-        return spark.createDataFrame(
-            [], "src long, doc_id long, score double, rank int"
+        return local_frame(
+            spark, [], "src long, doc_id long, score double, rank int"
         )
     res = search_many(spark, index, queries, k=count + 1)
     src_col = F.col("query_id").cast("long").alias("src")
@@ -4296,14 +4289,14 @@ def term_vectors(
         .collect()
     )
     if not rows:
-        return spark.createDataFrame([], "term string, tf long, df long")
+        return local_frame(spark, [], "term string, tf long, df long")
     counts = Counter(tokenize(rows[0][0]))
     dfs = term_dfs(spark, index, list(counts))
     data = sorted(
         ((t, int(tf), int(dfs.get(t, 0))) for t, tf in counts.items()),
         key=lambda x: (-x[1], x[0]),
     )
-    return spark.createDataFrame(data, "term string, tf long, df long")
+    return local_frame(spark, data, "term string, tf long, df long")
 
 
 def search_many(
@@ -4368,12 +4361,12 @@ def search_many(
         | {t for p in plans.values() for g, _ in p.groups for t in g}
     )
     have_groups = any(g for p in plans.values() for g, _ in p.groups)
-    empty = spark.createDataFrame([], "query_id string, doc_id long, score double")
+    schema = "query_id string, doc_id long, score double"
     if not all_terms and not all_fterms and not have_groups:
-        return empty
+        return local_frame(spark, [], schema)
     dfs = term_dfs(spark, index, all_terms) if all_terms else {}
     if not dfs and not all_fterms and not have_groups:
-        return empty
+        return local_frame(spark, [], schema)
     spec = index.spec
     idf = {t: bm25_idf(df, index.n_docs) for t, df in dfs.items()}
     kernel = batch_kernel(
@@ -4385,9 +4378,7 @@ def search_many(
             _scan_terms(index, list(idf) + all_fterms + all_eterms)
         )
     )
-    local = matched.groupBy("shard").applyInPandas(
-        kernel, "query_id string, doc_id long, score double"
-    )
+    local = matched.groupBy("shard").applyInPandas(kernel, schema)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         local.withColumn("_rn", F.row_number().over(w))

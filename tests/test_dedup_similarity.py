@@ -208,3 +208,78 @@ def test_drop_near_duplicates_keeps_one_per_cluster(spark, docs):
         comp, "doc_id").select("doc_id").collect()}
     canon = {r.component for r in comp.select("component").distinct().collect()}
     assert survivors == canon
+
+
+def test_failed_materialization_leaks_no_persisted_frames(
+    spark, docs, monkeypatch
+):
+    # every frame an operator persists is registered before its eager
+    # count, so a call that fails while materializing leaves its caches to
+    # the next call's release instead of to the CacheManager forever
+    frame_cls = type(docs)  # the session's concrete DataFrame class
+
+    def call():
+        dedup.minhash_lsh_pairs(docs, "text").collect()
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    call()
+    clean = persistent().size()
+    real_count, raised = frame_cls.count, []
+
+    def count_then_raise(self):
+        n = real_count(self)
+        if not raised:
+            raised.append(n)
+            raise RuntimeError("injected failure after materialization")
+        return n
+
+    monkeypatch.setattr(frame_cls, "count", count_then_raise)
+    with pytest.raises(RuntimeError, match="injected"):
+        call()
+    monkeypatch.undo()
+    call()
+    assert persistent().size() == clean
+
+
+def test_persist_registry_is_thread_safe(spark):
+    # registrations from more threads than cores all land, and one swap
+    # releases every one of them exactly once
+    import sys
+    import threading
+
+    released = []
+
+    class Handle:
+        def unpersist(self, blocking):
+            released.append(self)
+
+    class Frame:
+        def __init__(self):
+            self._jdf = Handle()
+
+    tag = "registry_stress"
+    dedup._swap_persisted(tag, spark)
+    n_threads, per_thread = 16, 200
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        workers = [
+            threading.Thread(
+                target=lambda: [
+                    dedup._register(tag, spark, Frame())
+                    for _ in range(per_thread)
+                ]
+            )
+            for _ in range(n_threads)
+        ]
+        for w in workers:
+            w.start()
+        for w in workers:
+            w.join(timeout=60)
+            assert not w.is_alive()
+    finally:
+        sys.setswitchinterval(interval)
+    dedup._swap_persisted(tag, spark)
+    assert len(released) == len(set(map(id, released))) == n_threads * per_thread
+    dedup._swap_persisted(tag, spark)
+    assert len(released) == n_threads * per_thread

@@ -5,16 +5,22 @@ AbstractSolrSchemeTest.java:109-176), the sha256 stored-field invariant
 (:160-161,179-184), resume-from-checkpoint, and TAAT == block-max MaxScore.
 """
 
+import json
 import math
 import shutil
 from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cascading_solr_spark.analyzer import analyze_query, tokenize
 from cascading_solr_spark.corpus import synth_corpus
-from cascading_solr_spark.indexing.build import assign_doc_ids, build_index
+from cascading_solr_spark.indexing.build import (
+    assign_doc_ids,
+    build_index,
+    local_frame,
+)
 from cascading_solr_spark.query.naive import bm25_topk_df
 from cascading_solr_spark.query.search import search
 from cascading_solr_spark.spec import IndexSpec
@@ -248,3 +254,116 @@ def test_resume_rebuilds_only_missing_shards(spark, corpus, spec, tmp_path_facto
     assert got == want
     lineage = resumed.lineage(spark).collect()
     assert {r["shard"] for r in lineage} == {0, 1, 2, 3}
+
+
+# ---------------------------------------------------- driver-side frames
+
+
+LOCAL_DDL = "id long, name string, payload binary, tags array<string>, flag boolean"
+LOCAL_STRUCT = T.StructType([
+    T.StructField("id", T.LongType(), False),
+    T.StructField("name", T.StringType(), True),
+    T.StructField("payload", T.BinaryType(), True),
+    T.StructField("tags", T.ArrayType(T.StringType(), False), True),
+    T.StructField("flag", T.BooleanType(), False),
+])
+LOCAL_ROWS = [
+    (1, None, b"\x00\xff", ["a", "b"], True),
+    (2, "x", None, [], False),
+    (3, "y", b"", None, True),
+]
+
+
+@pytest.mark.parametrize("arrow", ["true", "false"])
+def test_local_frame_contract(spark, arrow):
+    from test_round5 import _spark_jobs
+
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, arrow)
+    try:
+        cases = [
+            (LOCAL_DDL, T.StructType.fromDDL(LOCAL_DDL), LOCAL_ROWS),
+            (LOCAL_DDL, T.StructType.fromDDL(LOCAL_DDL), []),
+            (LOCAL_STRUCT, LOCAL_STRUCT, LOCAL_ROWS),
+            (LOCAL_STRUCT, LOCAL_STRUCT, []),
+        ]
+        for schema, requested, rows in cases:
+            df = local_frame(spark, rows, schema)
+            assert df.schema == requested
+            assert df.schema == T.StructType.fromJson(
+                json.loads(df._jdf.schema().json())
+            )
+            assert [tuple(r) for r in df.collect()] == rows
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            assert plan.startswith("LocalRelation"), plan
+            assert _spark_jobs(spark, df.collect) == 0
+    finally:
+        spark.conf.set(conf, prior)
+
+
+RANKED_SPEC = IndexSpec(
+    num_shards=2, salt_buckets=2, block_size=16, positions=True,
+    keyword_fields=("lang",),
+)
+_STORED = [
+    ("doc_id", "bigint"), ("repo", "string"), ("path", "string"),
+    ("commit", "string"), ("lang", "string"), ("sha256", "string"),
+]
+
+
+@pytest.fixture(scope="module")
+def ranked_index(spark, corpus, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("ranked") / "ix")
+    return build_index(spark, corpus, RANKED_SPEC, out)
+
+
+def test_ranked_request_jobs_and_result_schema(spark, ranked_index):
+    # a warm handle (dict cache filled): a k-bounded ranked request with the
+    # stored fetch is the top-k scan's jobs plus one pruned docs stage, and
+    # a zero-hit request runs no job; every result keeps the schema below
+    # (all columns nullable), hits or not
+    from cascading_solr_spark.query.boolean import search_boolean
+    from cascading_solr_spark.query.search import (
+        search_after,
+        search_dismax,
+        search_phrase,
+    )
+    from test_round5 import _spark_jobs
+
+    ix = ranked_index
+    assert ix.dict_cache(spark) is not None
+    full = T.StructType.fromDDL(
+        ", ".join(f"{c} {t}" for c, t in _STORED + [("score", "double")])
+    )
+    calls = {
+        "search": (lambda q: search(spark, ix, q, k=5), full),
+        "search_fl": (
+            lambda q: search(spark, ix, q, k=5, fl=["path", "score"]),
+            T.StructType.fromDDL("doc_id bigint, path string, score double"),
+        ),
+        "search_fl_no_score": (
+            lambda q: search(spark, ix, q, k=5, fl=["lang"]),
+            T.StructType.fromDDL("doc_id bigint, lang string"),
+        ),
+        "search_dismax": (
+            lambda q: search_dismax(spark, ix, q, {"content": 1.0}, k=5), full,
+        ),
+        "search_phrase": (lambda q: search_phrase(spark, ix, q, k=5), full),
+        "search_after": (
+            lambda q: search_after(spark, ix, q, k=5, with_stored=True), full,
+        ),
+        "search_boolean": (
+            lambda q: search_boolean(spark, ix, q, k=5, with_stored=True),
+            full,
+        ),
+    }
+    for name, (call, schema) in calls.items():
+        # search_boolean has no zero-hit short-circuit: it scans regardless
+        zero_jobs = 2 if name == "search_boolean" else 0
+        for q, hits, jobs in (("parse buffer", 5, 4), ("zzqx", 0, zero_jobs)):
+            df = call(q)
+            assert df.schema == schema, (name, q)
+            assert len(df.collect()) == hits, (name, q)
+            got = _spark_jobs(spark, lambda: call(q).collect())
+            assert got == jobs, (name, q, got)

@@ -78,4 +78,4 @@ def test_spark_jobs_per_mutator_call(spark, tmp_path):
     ix = Index.load(out)
     assert ix.n_docs == 160 - len(deleted) and not ix.has_deletes
     assert os.path.basename(ix.postings_path) == "postings.gen1"
-    assert got == {"build": 29, "append": 3, "delete": 4, "compact": 26}, got
+    assert got == {"build": 29, "append": 3, "delete": 2, "compact": 26}, got

@@ -504,7 +504,7 @@ def test_spark_jobs_per_call(spark, r5_index):
     }
     want = {
         "search": 8, "search_after": 8, "match_ids": 8, "search_dismax": 6,
-        "search_many": 9, "explain_score": 9, "highlight": 14,
+        "search_many": 9, "explain_score": 8, "highlight": 12,
     }
     for name, call in calls.items():
         call().collect()  # warm the handle's lazily built frames
