@@ -61,7 +61,9 @@ from cascading_solr_spark.spec import IndexSpecError
 from cascading_solr_spark.indexing.build import (
     MAX_DOC_ID,
     Index,
+    _check_null_keys,
     _docs_rows,
+    _null_key_count,
     _rank_ids,
     _set_token_stats,
     _tf_rows,
@@ -256,11 +258,14 @@ def append_documents(
         else:
             keys = list(spec.key_fields)
             batch_handle = batch.persist(StorageLevel.MEMORY_AND_DISK)
-            # ONE blocking job: count + duplicate check, populating the cache
+            # ONE blocking job: count + null-key and duplicate checks,
+            # populating the cache
             row = batch_handle.agg(
-                F.count("*").alias("n"), F.count_distinct(*keys).alias("dn")
+                F.count("*").alias("n"), F.count_distinct(*keys).alias("dn"),
+                _null_key_count(keys).alias("nulls"),
             ).collect()[0]
             n_new = int(row["n"])
+            _check_null_keys(int(row["nulls"]), keys)
             if n_new != int(row["dn"]):
 
                 raise IndexSpecError(

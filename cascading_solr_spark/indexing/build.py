@@ -10,7 +10,8 @@ core/SolrWriter.java:59-128).  Our lifecycle:
 2. deterministic dense ``doc_id`` assignment — distributed global-sort rank,
    never a single-partition window; duplicate keys fail fast (the analogue of
    Solr's uniqueKey constraint, schema.xml:224);
-3. ONE Python tokenize pass over the corpus: SPIMI inversion in Arrow-batched
+3. ONE Python tokenize pass over the corpus (the content and every extra
+   text field): SPIMI inversion in Arrow-batched
    workers (_spimi_tf_kernel) produces the distinct (term, doc_id, tf) rows
    that feed EVERYTHING downstream — per-term stats (exact df -> hot-term
    set + the dict table), corpus stats (total tokens -> avgdl), and the
@@ -68,6 +69,7 @@ from dataclasses import dataclass, field
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -115,133 +117,100 @@ def pack_id_dl(doc_ids: np.ndarray, dls: np.ndarray) -> np.ndarray:
 
 
 def _spimi_tf_kernel(content_field: str, positions: bool = False):
-    """SPIMI in-memory inversion, Arrow-batched: tokenize (memoized per-word
-    cache — code identifiers repeat heavily) + per-doc Counter -> distinct
-    (doc, term, tf) rows with (doc_id, dl) packed.  This runs in separate
-    Python worker processes, so it scales with cores without sharing one JVM
-    heap (the Catalyst expression analyzer measurably anti-scaled under
-    allocation pressure at local[32]).  The per-doc dict IS the SPIMI
-    dictionary; only distinct (term, doc) pairs ever reach the shuffle.
+    """SPIMI in-memory inversion, Arrow-batched, of EVERY analyzed text
+    field in one Python pass: tokenize (memoized per-word cache — code
+    identifiers repeat heavily) + per-doc Counter -> distinct (doc, term, tf)
+    rows with (doc_id, dl) packed.  This runs in separate Python worker
+    processes, so it scales with cores without sharing one JVM heap (the
+    Catalyst expression analyzer measurably anti-scaled under allocation
+    pressure at local[32]).  The per-doc dict IS the SPIMI dictionary; only
+    distinct (term, doc) pairs ever reach the shuffle.
 
-    With ``positions`` each row additionally carries its delta-varint
-    position-list blob (``pos`` binary, Lucene .pos analogue) — encoded
-    MAP-SIDE so the shuffle still moves one row per distinct (term, doc)
-    pair, just a few bytes wider; the whole batch is encoded in ONE
-    vectorized pass and sliced per row (encode_position_payload)."""
+    The batches carry ``doc_id``, ``content_field`` and then the extra
+    analyzed text fields (spec.text_fields).  An extra field's terms are
+    namespaced ``field:token`` (the keyword ``field:value`` namespace — spec
+    validation keeps field names disjoint, so no collision) and pack the
+    FIELD's token count as dl, so BM25 length normalization is per-field
+    (the Lucene per-field norms analogue the reference's eDisMax qf relies
+    on, solrconfig.xml:872-877).  Null/empty texts emit nothing
+    (SolrWriter.java:65-66 null-skip).
+
+    With ``positions`` each content row additionally carries its
+    delta-varint position-list blob (``pos`` binary, Lucene .pos analogue) —
+    encoded MAP-SIDE so the shuffle still moves one row per distinct
+    (term, doc) pair, just a few bytes wider; the whole batch is encoded in
+    ONE vectorized pass and sliced per row (encode_position_payload).
+    Extra-field rows carry an empty blob exactly like keyword rows (phrase
+    queries are content-field only and never decode them)."""
     from collections import Counter
+
+    def invert(tokenize, ids, texts, prefix, acc) -> None:
+        doc_ids, dls, terms, tfs = acc
+        for doc_id, text in zip(ids, texts):
+            toks = tokenize(text)
+            if not toks:
+                continue
+            counts = Counter(toks)
+            k = len(counts)
+            doc_ids.extend([doc_id] * k)
+            dls.extend([len(toks)] * k)
+            terms.extend([prefix + t for t in counts] if prefix else counts)
+            tfs.extend(counts.values())
+
+    def invert_pos(tokenize_pos, ids, texts, acc, pos_chunks) -> None:
+        doc_ids, dls, terms, tfs = acc
+        for doc_id, text in zip(ids, texts):
+            tp = tokenize_pos(text)
+            per_term: dict[str, list[int]] = {}
+            for t, p in tp:
+                per_term.setdefault(t, []).append(p)
+            k = len(per_term)
+            doc_ids.extend([doc_id] * k)
+            dls.extend([len(tp)] * k)
+            terms.extend(per_term.keys())
+            tfs.extend(len(v) for v in per_term.values())
+            pos_chunks.extend(per_term.values())
+
+    def encode_pos(pos_chunks, tfs) -> list[bytes]:
+        tf_arr = np.asarray(tfs, dtype=np.int64)
+        flat = (
+            np.concatenate([np.asarray(c, dtype=np.int64) for c in pos_chunks])
+            if pos_chunks
+            else np.empty(0, dtype=np.int64)
+        )
+        buf, seg_nb = encode_position_payload(flat, tf_arr)
+        offs = np.zeros(len(seg_nb) + 1, dtype=np.int64)
+        np.cumsum(seg_nb, out=offs[1:])
+        mv = memoryview(buf)
+        return [bytes(mv[offs[i]: offs[i + 1]]) for i in range(len(seg_nb))]
 
     def kernel(batches):
         tokenize_fast = make_cached_tokenizer()
+        tokenize_pos = make_cached_position_tokenizer() if positions else None
         for pdf in batches:
-            doc_ids: list[int] = []
-            dls: list[int] = []
-            terms: list[str] = []
-            tfs: list[int] = []
-            for doc_id, content in zip(
-                pdf["doc_id"].to_numpy(), pdf[content_field]
-            ):
-                toks = tokenize_fast(content)
-                counts = Counter(toks)
-                k = len(counts)
-                doc_ids.extend([doc_id] * k)
-                dls.extend([len(toks)] * k)
-                terms.extend(counts.keys())
-                tfs.extend(counts.values())
-            ids = np.asarray(doc_ids, dtype=np.int64)
-            yield pd.DataFrame(
-                {
-                    "packed": pack_id_dl(ids, np.asarray(dls, dtype=np.int64)),
-                    "term": terms,
-                    "tf": np.asarray(tfs, dtype=np.int32),
-                }
-            )
-
-    def kernel_pos(batches):
-        tokenize_pos = make_cached_position_tokenizer()
-        for pdf in batches:
-            doc_ids: list[int] = []
-            dls: list[int] = []
-            terms: list[str] = []
-            tfs: list[int] = []
-            pos_chunks: list[list[int]] = []
-            for doc_id, content in zip(
-                pdf["doc_id"].to_numpy(), pdf[content_field]
-            ):
-                tp = tokenize_pos(content)
-                per_term: dict[str, list[int]] = {}
-                for t, p in tp:
-                    per_term.setdefault(t, []).append(p)
-                k = len(per_term)
-                doc_ids.extend([doc_id] * k)
-                dls.extend([len(tp)] * k)
-                terms.extend(per_term.keys())
-                tfs.extend(len(v) for v in per_term.values())
-                pos_chunks.extend(per_term.values())
-            ids = np.asarray(doc_ids, dtype=np.int64)
-            tf_arr = np.asarray(tfs, dtype=np.int64)
-            flat = (
-                np.concatenate([np.asarray(c, dtype=np.int64) for c in pos_chunks])
-                if pos_chunks
-                else np.empty(0, dtype=np.int64)
-            )
-            buf, seg_nb = encode_position_payload(flat, tf_arr)
-            offs = np.zeros(len(seg_nb) + 1, dtype=np.int64)
-            np.cumsum(seg_nb, out=offs[1:])
-            mv = memoryview(buf)
-            yield pd.DataFrame(
-                {
-                    "packed": pack_id_dl(ids, np.asarray(dls, dtype=np.int64)),
-                    "term": terms,
-                    "tf": tf_arr.astype(np.int32),
-                    "pos": [
-                        bytes(mv[offs[i]: offs[i + 1]]) for i in range(len(seg_nb))
-                    ],
-                }
-            )
-
-    return kernel_pos if positions else kernel
-
-
-def _spimi_field_kernel(field: str, positions: bool = False):
-    """SPIMI inversion for one EXTRA analyzed text field (spec.text_fields):
-    the same code-aware tokenizer, terms namespaced ``field:token`` (the
-    keyword ``field:value`` namespace — spec validation keeps field names
-    disjoint, so no collision), and the FIELD's token count packed as dl so
-    BM25 length normalization is per-field (the Lucene per-field norms
-    analogue the reference's eDisMax qf relies on, solrconfig.xml:872-877).
-    Nulls/empty fields emit nothing (SolrWriter.java:65-66 null-skip).
-    Positions are never recorded for extra fields (phrase queries are
-    content-field only); under a positional spec the rows carry an empty
-    blob exactly like keyword rows, which phrase paths never decode."""
-    from collections import Counter
-
-    prefix = field + KW_SEP
-
-    def kernel(batches):
-        tokenize_fast = make_cached_tokenizer()
-        for pdf in batches:
-            doc_ids: list[int] = []
-            dls: list[int] = []
-            terms: list[str] = []
-            tfs: list[int] = []
-            for doc_id, content in zip(pdf["doc_id"].to_numpy(), pdf[field]):
-                toks = tokenize_fast(content) if content is not None else []
-                if not toks:
-                    continue
-                counts = Counter(toks)
-                k = len(counts)
-                doc_ids.extend([doc_id] * k)
-                dls.extend([len(toks)] * k)
-                terms.extend(prefix + t for t in counts.keys())
-                tfs.extend(counts.values())
-            ids = np.asarray(doc_ids, dtype=np.int64)
+            ids = pdf["doc_id"].to_numpy()
+            acc: tuple[list, list, list, list] = ([], [], [], [])
+            blobs: list[bytes] = []
+            if positions:
+                pos_chunks: list[list[int]] = []
+                invert_pos(tokenize_pos, ids, pdf[content_field], acc, pos_chunks)
+                blobs = encode_pos(pos_chunks, acc[3])
+            else:
+                invert(tokenize_fast, ids, pdf[content_field], "", acc)
+            for f in pdf.columns:
+                if f not in ("doc_id", content_field):
+                    invert(tokenize_fast, ids, pdf[f], f + KW_SEP, acc)
+            doc_ids, dls, terms, tfs = acc
             out = {
-                "packed": pack_id_dl(ids, np.asarray(dls, dtype=np.int64)),
+                "packed": pack_id_dl(
+                    np.asarray(doc_ids, dtype=np.int64),
+                    np.asarray(dls, dtype=np.int64),
+                ),
                 "term": terms,
                 "tf": np.asarray(tfs, dtype=np.int32),
             }
             if positions:
-                out["pos"] = [b""] * len(terms)
+                out["pos"] = blobs + [b""] * (len(terms) - len(blobs))
             yield pd.DataFrame(out)
 
     return kernel
@@ -249,25 +218,19 @@ def _spimi_field_kernel(field: str, positions: bool = False):
 
 def _tf_rows(based: DataFrame, spec: IndexSpec, positions: bool) -> DataFrame:
     """The (packed, term, tf) rows of every indexed field of ``based``
-    (doc_id-carrying rows): the SPIMI content leg, the keyword-field rows
-    and one namespaced leg per extra text field — each a column-pruned scan
-    + its own kernel, so fields tokenize in parallel and the shuffle moves
-    one row per (term, doc).  ``positions`` adds the ``pos`` blob column;
-    the hot-term sample passes False (df estimation needs no positions)."""
-    schema = TF_SCHEMA_POS if positions else TF_SCHEMA
-    out = based.select("doc_id", spec.content_field).mapInPandas(
-        _spimi_tf_kernel(spec.content_field, positions), schema
+    (doc_id-carrying rows): ONE column-pruned Python pass tokenizes the
+    content and every extra text field (one Python task per input
+    partition — each task pays the worker's fixed start-up cost), unioned
+    with the pure-Catalyst keyword-field rows; the shuffle moves one row per
+    (term, doc).  ``positions`` adds the ``pos`` blob column; the hot-term
+    sample passes False (df estimation needs no positions)."""
+    fields = based.select("doc_id", spec.content_field, *spec.text_fields)
+    out = fields.mapInPandas(
+        _spimi_tf_kernel(spec.content_field, positions),
+        TF_SCHEMA_POS if positions else TF_SCHEMA,
     )
     kw_rows = _keyword_tf_rows(based, spec, positions)
-    if kw_rows is not None:
-        out = out.unionByName(kw_rows)
-    for f in spec.text_fields:
-        out = out.unionByName(
-            based.select("doc_id", f).mapInPandas(
-                _spimi_field_kernel(f, positions), schema
-            )
-        )
-    return out
+    return out if kw_rows is None else out.unionByName(kw_rows)
 
 
 POSTINGS_SCHEMA = (
@@ -318,6 +281,24 @@ class _Prof:
         self.t0 = t1
 
 
+def _null_key_count(keys: list[str]) -> F.Column:
+    """Aggregate: rows with a NULL in any of ``keys``."""
+    any_null = F.lit(False)
+    for k in keys:
+        any_null = any_null | F.col(k).isNull()
+    return F.count(F.when(any_null, 1))
+
+
+def _check_null_keys(n_null: int, keys: list[str]) -> None:
+    """Reject rows whose key has a NULL field: a NULL key identifies no
+    document (uniqueKey analogue)."""
+    if n_null:
+        raise IndexSpecError(
+            f"{n_null} rows have a NULL key field (key fields "
+            f"{tuple(keys)!r}); every key field must be non-null"
+        )
+
+
 def _rank_ids(
     df: DataFrame,
     keys: tuple[str, ...],
@@ -351,13 +332,19 @@ def _rank_ids(
     sorted_df = sorted_df.persist(StorageLevel.MEMORY_AND_DISK)
     aggs = [F.count("*").alias("cnt")]
     if check_unique:
-        aggs.append(F.count_distinct(*keys_l).alias("dcnt"))
+        aggs += [
+            F.count_distinct(*keys_l).alias("dcnt"),
+            _null_key_count(keys_l).alias("nulls"),
+        ]
     # the sorted projection is released on every exit, failures included
     try:
         rows = sorted_df.groupBy("_pid").agg(*aggs).collect()
         counts = {r["_pid"]: r["cnt"] for r in rows}
         if check_unique:
-            dups = sum(r["cnt"] - r["dcnt"] for r in rows)
+            # count_distinct skips tuples holding a NULL, so null-key rows
+            # would otherwise be reported as duplicates
+            _check_null_keys(sum(r["nulls"] for r in rows), keys_l)
+            dups = sum(r["cnt"] - r["dcnt"] - r["nulls"] for r in rows)
             if dups:
                 raise IndexSpecError(
                     f"{dups} duplicate rows for key {tuple(keys_l)!r}; the "
@@ -465,6 +452,17 @@ def local_frame(
     )
     return spark.createDataFrame(table, st)
 
+
+def _scan_schema(ddl: str, partition: str | None = None) -> T.StructType:
+    """The schema ``spark.read.parquet`` infers for files written as ``ddl``
+    (partitioned by ``partition``): every field nullable, the partition
+    column last.  Reading with it skips the footer-inference job."""
+    fields = [
+        T.StructField(f.name, f.dataType, True)
+        for f in T.StructType.fromJson(_ddl_json(ddl)).fields
+    ]
+    fields.sort(key=lambda f: f.name == partition)  # stable: partition last
+    return T.StructType(fields)
 
 _UNSET = object()  # dict_cache sentinel: "not computed yet" vs "too big"
 
@@ -592,7 +590,9 @@ class Index:
             return local_frame(spark, [], postings_schema(self.spec))
         return self._cached_df(
             spark, "postings",
-            lambda: spark.read.parquet(self.postings_path),
+            lambda: spark.read.schema(
+                _scan_schema(postings_schema(self.spec), "shard")
+            ).parquet(self.postings_path),
         )
 
     @property
@@ -647,15 +647,23 @@ class Index:
             )
         return spark.read.parquet(p)
 
-    #: largest RAW dict row count (pre-fold, parquet-footer-served) that
-    #: term_dfs will cache driver-side: ~10^6 (term, df) entries is tens of
-    #: MB of driver heap; a 10^9-term vocabulary stays distributed.
+    #: largest RAW dict row count (pre-fold, summed from the parquet
+    #: footers) that term_dfs will cache driver-side: ~10^6 (term, df)
+    #: entries is tens of MB of driver heap; a 10^9-term vocabulary stays
+    #: distributed.
     DICT_CACHE_MAX_ROWS = 1_000_000
 
     def dict_cache(self, spark: SparkSession) -> dict[str, int] | None:
-        """Driver-side {term: df} of the folded dictionary, or None when the
-        vocabulary exceeds DICT_CACHE_MAX_ROWS (raw segment rows, counted
-        from parquet footers — no data scan).
+        """Driver-side {term: df} of the folded dictionary, or None for a
+        pre-dict index or when the raw segment rows exceed
+        DICT_CACHE_MAX_ROWS (term_dfs then takes the distributed
+        ``term_dict`` path).
+
+        Runs no Spark job: the dict segment files are listed (skipping
+        ``_``/``.``-prefixed names, as Spark's file index does), their row
+        counts come from the parquet footers, and pyarrow folds
+        ``group_by("term").sum("df")`` on the driver — the same sum-per-term
+        view as :meth:`term_dict`.
 
         The cache lives on THIS handle and is consistent with the handle's
         snapshot semantics: appends return a fresh Index (append_documents'
@@ -665,12 +673,32 @@ class Index:
         cached = getattr(self, "_dict_cache", _UNSET)
         if cached is not _UNSET:
             return cached
-        d = self.term_dict(spark)
         result: dict[str, int] | None = None
-        if d is not None:
-            n_raw = spark.read.parquet(self.dict_path).count()  # footer-served
+        p = self.dict_path
+        if os.path.exists(p):
+            files = [
+                pq.ParquetFile(os.path.join(p, name))
+                for name in sorted(os.listdir(p))
+                if not name.startswith(("_", "."))
+                and os.path.isfile(os.path.join(p, name))
+            ]
+            n_raw = sum(f.metadata.num_rows for f in files)
             if n_raw <= self.DICT_CACHE_MAX_ROWS:
-                result = {r["term"]: int(r["df"]) for r in d.collect()}
+                result = {}
+                if files:
+                    folded = (
+                        pa.concat_tables(
+                            f.read(columns=["term", "df"]) for f in files
+                        )
+                        .group_by("term")
+                        .aggregate([("df", "sum")])
+                    )
+                    result = dict(
+                        zip(
+                            folded["term"].to_pylist(),
+                            folded["df_sum"].to_pylist(),
+                        )
+                    )
         object.__setattr__(self, "_dict_cache", result)
         return result
 
@@ -690,7 +718,8 @@ class Index:
         return self._cached_df(
             spark, "term_dict",
             lambda: (
-                spark.read.parquet(p)
+                spark.read.schema(_scan_schema("term string, df long"))
+                .parquet(p)
                 .groupBy("term")
                 .agg(F.sum("df").alias("df"))
             ),
@@ -944,6 +973,20 @@ def _keyword_tf_rows(
     return out
 
 
+def _term_in(terms: list[str]) -> F.Column:
+    """``term IN (terms)`` as ONE parsed expression: ``Column.isin`` costs
+    about two py4j calls per value (hundreds of ms for a few hundred hot
+    terms, on every segment write).  Each value is a hex UTF-8 literal,
+    ``decode(X'..', 'UTF-8')``, so quotes, backslashes and non-ASCII text
+    need no escaping and the meaning does not depend on
+    ``spark.sql.parser.escapedStringLiterals``; the literals constant-fold,
+    so a long list still becomes Catalyst's INSET."""
+    values = ", ".join(
+        f"decode(X'{t.encode('utf-8').hex()}', 'UTF-8')" for t in terms
+    )
+    return F.expr(f"term IN ({values})")
+
+
 def _shard_salt_exprs(
     hot_terms: list[str], spec: IndexSpec
 ) -> tuple[F.Column, F.Column | None]:
@@ -959,7 +1002,7 @@ def _shard_salt_exprs(
     if not hot_terms:
         return shard, None
     salt = F.when(
-        F.col("term").isin(hot_terms),
+        _term_in(hot_terms),
         F.pmod(
             (doc_id / spec.num_shards).cast("long"),
             F.lit(spec.salt_buckets),

@@ -289,21 +289,45 @@ def test_term_vectors(spark, stored_index):
 # ---------------------------------------------------------------- dict cache
 
 
-def test_dict_cache_matches_distributed_lookup(spark, stored_index):
+def test_dict_cache_matches_distributed_lookup(spark, stored_index, tmp_path):
+    from cascading_solr_spark.indexing import append_documents
+    from cascading_solr_spark.indexing.build import Index
+    from cascading_solr_spark.indexing.compact import compact_index
+    from cascading_solr_spark.indexing.replicate import snapshot_index
     from cascading_solr_spark.query.search import term_dfs
 
-    cache = stored_index.dict_cache(spark)
-    assert cache is not None and "buffer" in cache
-    terms = ["parse", "buffer", "zzqxv", "import"]
-    via_cache = term_dfs(spark, stored_index, terms)
-    # force the distributed scan path (simulate a too-big vocabulary)
-    object.__setattr__(stored_index, "_dict_cache", None)
-    try:
-        via_scan = term_dfs(spark, stored_index, terms)
-    finally:
-        object.__setattr__(stored_index, "_dict_cache", cache)
-    assert via_cache == via_scan
-    assert "zzqxv" not in via_cache
+    # the built index, a copy with an appended dict segment, and that copy
+    # compacted back to one segment
+    copy = snapshot_index(stored_index.path, str(tmp_path / "ix"))
+    batch = synth_corpus(spark, 60, partitions=2).withColumn(
+        "repo", F.concat(F.lit("new/"), "repo")
+    ).withColumn("contentlen", F.length("content"))
+    appended = append_documents(spark, copy, batch)
+    assert len(os.listdir(appended.dict_path)) > len(
+        os.listdir(stored_index.dict_path)
+    )
+    compacted = compact_index(
+        spark, Index.load(snapshot_index(copy, str(tmp_path / "cx")))
+    )
+    handles = {
+        "built": stored_index, "appended": appended, "compacted": compacted,
+    }
+    terms = ["parse", "buffer", "zzqxv", "import", "lang:go"]
+    for name, ix in handles.items():
+        cache = ix.dict_cache(spark)
+        assert cache is not None and "buffer" in cache, name
+        via_cache = term_dfs(spark, ix, terms)
+        # force the distributed scan path (simulate a too-big vocabulary)
+        object.__setattr__(ix, "_dict_cache", None)
+        try:
+            via_scan = term_dfs(spark, ix, terms)
+        finally:
+            object.__setattr__(ix, "_dict_cache", cache)
+        assert via_cache == via_scan, name
+        assert "zzqxv" not in via_cache, name
+    assert handles["appended"].dict_cache(spark) == handles[
+        "compacted"
+    ].dict_cache(spark)
 
 
 # ------------------------------------------------- pivot / stats / collate
