@@ -1,7 +1,8 @@
 """Headline benchmark: index-build throughput + query latency.
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS].  Prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on) with a
+$BENCH_DRIVER_MEM driver heap (default: a share of MemTotal).  Prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 plus informative extras (build throughput in files/sec, query p95).
 
@@ -42,6 +43,33 @@ QUERY_SET = [
 ]
 
 
+#: share of MemTotal given to the driver heap (local mode runs every
+#: executor inside it) when BENCH_DRIVER_MEM is unset, clamped so a small
+#: host still starts and a large one is not claimed wholesale
+DRIVER_MEM_SHARE = 0.25
+DRIVER_MEM_MIN_MB = 1024
+DRIVER_MEM_MAX_MB = 32768
+
+
+def host_cpus() -> str:
+    """$SPARK_GRAFT_CPUS, else the CPUs this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """$BENCH_DRIVER_MEM, else DRIVER_MEM_SHARE of the host's MemTotal."""
+    if os.environ.get("BENCH_DRIVER_MEM"):
+        return os.environ["BENCH_DRIVER_MEM"]
+    mem_kb = 0
+    with open("/proc/meminfo") as fh:
+        for line in fh:
+            if line.startswith("MemTotal:"):
+                mem_kb = int(line.split()[1])
+                break
+    mem_mb = int(mem_kb / 1024 * DRIVER_MEM_SHARE)
+    return f"{max(DRIVER_MEM_MIN_MB, min(DRIVER_MEM_MAX_MB, mem_mb))}m"
+
+
 def make_spark(cpus: str) -> SparkSession:
     return (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -49,7 +77,7 @@ def make_spark(cpus: str) -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("BENCH_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
@@ -745,7 +773,7 @@ def run_bench(spark: SparkSession, sf_dir: str, n_code_files: int) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
     n_files = int(os.environ.get("BENCH_CORPUS_ROWS", "20000"))
     spark = make_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")

@@ -27,6 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from cascading_solr_spark.operators import dedup, similarity, textstats
 from cascading_solr_spark.query.naive import bm25_topk_df
+from bench import driver_memory, host_cpus
 
 
 def make_spark(cpus: str) -> SparkSession:
@@ -36,7 +37,7 @@ def make_spark(cpus: str) -> SparkSession:
         .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("BENCH_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", os.environ.get("BENCH_UI", "false"))
@@ -50,7 +51,7 @@ def noop(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = host_cpus()
     repeat = int(os.environ.get("BENCH_REPEAT", "3"))
     plan_tag = os.environ.get("PLAN_TAG", "")
     spark = make_spark(cpus)

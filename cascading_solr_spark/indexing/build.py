@@ -464,6 +464,32 @@ def _scan_schema(ddl: str, partition: str | None = None) -> T.StructType:
     fields.sort(key=lambda f: f.name == partition)  # stable: partition last
     return T.StructType(fields)
 
+
+def posting_pairs(postings: DataFrame, block_size: int) -> DataFrame:
+    """(term string, doc_id long) rows — one per posting — decoded from the
+    ``term, n_docs, doc_ids`` projection of ``postings`` by one
+    ``mapInPandas``.  Callers filter the term column first (an equality or
+    ``StartsWith`` that reaches the parquet scan), so only the wanted
+    terms' row groups are read; tf/dl and positions are never read."""
+
+    def decode(batches):
+        for pdf in batches:
+            terms: list[np.ndarray] = []
+            ids: list[np.ndarray] = []
+            for r in pdf.itertuples(index=False):
+                n = int(r.n_docs)
+                ids.append(decode_doc_ids(r.doc_ids, n, block_size))
+                terms.append(np.repeat(r.term, n))
+            if ids:
+                yield pd.DataFrame(
+                    {"term": np.concatenate(terms), "doc_id": np.concatenate(ids)}
+                )
+
+    return postings.select("term", "n_docs", "doc_ids").mapInPandas(
+        decode, "term string, doc_id long"
+    )
+
+
 _UNSET = object()  # dict_cache sentinel: "not computed yet" vs "too big"
 
 
@@ -615,24 +641,14 @@ class Index:
         groups are read).  Empty frame when the index has no deletes.
         Docs-table-shaped consumers (match-all, realtime get) anti-join
         this; postings kernels instead decode the same rows in-shard via
-        ``denied_ids`` (no extra job)."""
+        ``denied_ids`` (no extra job).  The decode is the shared
+        :func:`posting_pairs` decoder."""
         if not self.has_deletes:
             return local_frame(spark, [], "doc_id long")
-        block_size = self.spec.block_size
-
-        def kernel(it):
-            for pdf in it:
-                for r in pdf.itertuples(index=False):
-                    ids = decode_doc_ids(
-                        r.doc_ids, int(r.n_docs), block_size
-                    )
-                    yield pd.DataFrame({"doc_id": ids.astype("int64")})
-
+        tomb = self.postings(spark).filter(F.col("term") == DELETED_TERM)
         return (
-            self.postings(spark)
-            .filter(F.col("term") == DELETED_TERM)
-            .select("doc_ids", "n_docs")
-            .mapInPandas(kernel, "doc_id long")
+            posting_pairs(tomb, self.spec.block_size)
+            .select("doc_id")
             .distinct()
         )
 

@@ -10,6 +10,8 @@ analyzer; on already-lowercase prose (the `documents` table) the two coincide.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -27,6 +29,11 @@ EN_STOPWORDS = LANG_MARKERS["en"] + ("a", "an", "on", "at", "by", "it", "as")
 FINGERPRINT_MOD = 1_000_003
 
 
+# a physical-plan node that ends a stage: a shuffle or broadcast exchange,
+# or a subquery (run when the plan's RDD is built)
+_STAGE_NODE = re.compile(r"^[\s:|+*()0-9-]*(\w*Exchange|Subquery)\b", re.M)
+
+
 def spread_partitions(df: DataFrame) -> DataFrame:
     """Raise a low-parallelism source to the session's default parallelism
     (r6, guide §2.5 input skew): a small parquet file scans as 1-2
@@ -35,9 +42,19 @@ def spread_partitions(df: DataFrame) -> DataFrame:
     stage on a 32-core session.  The round-robin shuffle moves only the raw
     doc rows (tiny next to the tokenized explosion above it) and is a no-op
     whenever the source already has enough partitions, so a properly
-    partitioned 100 TB table never pays it."""
+    partitioned 100 TB table never pays it.
+
+    Decided from the plan, never by running it: a frame whose physical plan
+    already has an exchange (or a subquery) is returned as is — its
+    partition count was set by that exchange, and reading it would make
+    adaptive execution run every stage below.  Any other frame (a file
+    scan and the narrow operators over it) reports its partition count
+    without a Spark job."""
     sc = df.sparkSession.sparkContext
     try:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        if _STAGE_NODE.search(plan):
+            return df
         n = df.rdd.getNumPartitions()
     except Exception:  # noqa: BLE001 — planning-only probe; never fatal
         return df

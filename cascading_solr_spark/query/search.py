@@ -74,6 +74,7 @@ from cascading_solr_spark.indexing.build import (
     POSTINGS_SCHEMA,
     Index,
     local_frame,
+    posting_pairs,
 )
 from cascading_solr_spark.query.wand import (
     RESULT_SCHEMA as _RESULT_SCHEMA,
@@ -85,6 +86,7 @@ from cascading_solr_spark.query.wand import (
     decode_filter_ids,
     denied_ids,
     finish_topk,
+    match_set,
     maxscore_kernel,
     row_cache_key,
     shard_kernel,
@@ -122,6 +124,47 @@ def _scan_terms(index: Index, terms) -> list[str]:
     if index.has_deletes:
         out.append(DELETED_TERM)
     return out
+
+
+# Match-only projection: the id-side columns.  tfs/dls, their block
+# offsets and the block-max stats never leave the parquet footer.
+_ID_COLS = [
+    "shard", "term", "n_docs", "n_blocks", "doc_ids", "boffs_ids",
+    "block_last_id",
+]
+
+
+def _match_frame(
+    spark: SparkSession,
+    index: Index,
+    clauses: list[frozenset],
+    filters: set = frozenset(),
+    excluded: set[str] = frozenset(),
+    require_n: int = 1,
+) -> DataFrame:
+    """(doc_id long) match set of :func:`wand.match_set` — one id-only
+    postings scan pruned to the clause, filter and excluded terms (plus the
+    tombstone term when the index has deletes), then one kernel call per
+    shard.  Sharding is by doc id, so every clause, filter and exclusion is
+    shard-local.  Rows are distinct but unordered."""
+    block_size = index.spec.block_size
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        rows = list(pdf.itertuples(index=False))
+        return pd.DataFrame({
+            "doc_id": match_set(
+                rows, clauses, block_size, filters, excluded, require_n
+            )
+        })
+
+    terms = set(filters) | set(excluded) | {t for c in clauses for t in c}
+    return (
+        index.postings(spark)
+        .filter(F.col("term").isin(_scan_terms(index, terms)))
+        .select(*_ID_COLS)
+        .groupBy("shard")
+        .applyInPandas(kernel, "doc_id long")
+    )
 
 
 def _empty_ids(spark: SparkSession) -> DataFrame:
@@ -1132,29 +1175,15 @@ def keyword_filter(
     ``filters`` is a field->value dict or a pre-built ``field:value`` term set.
     ``excluded`` (index terms — analyzed or ``field:value``) strips docs
     posting any of them, in-kernel (prohibited clauses over a filter query).
+
+    The shared match-set kernel (:func:`wand.match_set` with no clauses)
+    over the id-only postings scan of :func:`_match_frame`; rows come back
+    in doc_id order, the first ``k`` of them when ``k`` is given.
     """
     fterms = filters if isinstance(filters, set) else filter_terms_of(filters)
-    eterms = excluded or set()
-    spec = index.spec
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = list(pdf.itertuples(index=False))
-        allowed = allowed_ids(rows, fterms, spec.block_size)
-        if allowed is None or not len(allowed):
-            return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-        denied = denied_ids(rows, spec.block_size, eterms)
-        if denied is not None:
-            allowed = allowed[strip_denied(allowed, denied)]
-        return pd.DataFrame({"doc_id": allowed})
-
-    matched = _score_rows(index, spark).filter(
-        F.col("term").isin(_scan_terms(index, fterms | eterms))
-    )
-    out = (
-        matched.groupBy("shard")
-        .applyInPandas(kernel, "doc_id long")
-        .orderBy("doc_id")
-    )
+    out = _match_frame(
+        spark, index, [], filters=fterms, excluded=excluded or set()
+    ).orderBy("doc_id")
     return out if k is None else out.limit(k)
 
 
@@ -1205,38 +1234,6 @@ def resolve_excluded(
     return ex
 
 
-def _ids_of_terms(
-    spark: SparkSession, index: Index, terms: set[str]
-) -> DataFrame:
-    """Distinct doc_ids posting ANY of ``terms`` (pre-resolved index terms —
-    no analysis, no synonym expansion, no tombstone strip: callers compose).
-    The OR-union leg of the pure-negative rewrite; id-columns-only decode,
-    same pruned scan shape as the match-only kernel."""
-    sterms = set(terms)
-    block_size = index.spec.block_size
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = list(pdf.itertuples(index=False))
-        parts = [
-            decode_doc_ids(r.doc_ids, int(r.n_docs), block_size)
-            for r in rows
-            if r.term in sterms
-        ]
-        if not parts:
-            return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-        return pd.DataFrame({"doc_id": np.unique(np.concatenate(parts))})
-
-    matched = (
-        index.postings(spark)
-        .filter(F.col("term").isin(list(sterms)))
-        .select(
-            "shard", "term", "n_docs", "n_blocks",
-            "doc_ids", "boffs_ids", "block_last_id",
-        )
-    )
-    return matched.groupBy("shard").applyInPandas(kernel, "doc_id long")
-
-
 def match_ids(
     spark: SparkSession,
     index: Index,
@@ -1250,10 +1247,12 @@ def match_ids(
     ranking" path; what facet counting, filter caches, and delete-by-query
     consume).  Matching semantics are identical to :func:`search` (analyzed
     terms under OR/AND, query-string ``field:value`` parsing, keyword
-    filters, synonym expansion), but the kernel decodes ONLY the doc-id
-    buffers: no tf/dl decode, no idf/tf-norm arithmetic, no top-k merge —
-    and the postings scan projects away the tf/dl binary columns entirely,
-    so parquet never reads them.  Returns distinct ``doc_id`` rows.
+    filters, synonym expansion), but it runs the shared match-set kernel
+    (:func:`wand.match_set`: each term a one-term clause, each wildcard
+    expansion one multi-term clause, AND/mm as a matched-clause floor) over
+    the id-only postings scan of :func:`_match_frame` — no tf/dl decode, no
+    idf/tf-norm arithmetic, no top-k merge, and parquet never reads the
+    tf/dl binary columns.  Returns distinct ``doc_id`` rows.
 
     Prohibited clauses (``-term`` / ``-field:value`` / ``NOT term``,
     Solr's MUST_NOT) strip matching docs in-kernel — shard-local, since
@@ -1300,7 +1299,9 @@ def match_ids(
             )
         if eterms:
             live = live.join(
-                _ids_of_terms(spark, index, eterms), "doc_id", "left_anti"
+                _match_frame(spark, index, [frozenset(eterms)]),
+                "doc_id",
+                "left_anti",
             )
         return live
     # wildcard clauses: each is ONE clause matched by any dict expansion
@@ -1314,66 +1315,11 @@ def match_ids(
     dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
     if _zero_hit(plan, dfs):
         return _empty_ids(spark)
-    conjunctive, n_required = plan.conjunctive, plan.n_required
-    sterms = set(dfs)
-    block_size = index.spec.block_size
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = list(pdf.itertuples(index=False))
-        allowed = allowed_ids(rows, fterms, block_size)
-        if allowed is not None and not len(allowed):
-            return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-        parts = [
-            decode_doc_ids(r.doc_ids, int(r.n_docs), block_size)
-            for r in rows
-            if r.term in sterms
-        ]
-        for g in live_groups:
-            # a wildcard clause contributes each matching doc ONCE, so the
-            # per-doc count below still counts matched CLAUSES
-            gparts = [
-                decode_doc_ids(r.doc_ids, int(r.n_docs), block_size)
-                for r in rows
-                if r.term in g
-            ]
-            if gparts:
-                parts.append(np.unique(np.concatenate(gparts)))
-        if not parts:
-            return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-        ids = np.concatenate(parts)
-        if conjunctive:
-            # each (term, doc) posting exists once, so the per-doc posting
-            # count IS the matched distinct-clause count (same invariant as
-            # the ranked AND kernel; wildcard groups uniq'd above)
-            uniq, cnt = np.unique(ids, return_counts=True)
-            uniq = uniq[cnt >= n_required]
-        else:
-            uniq = np.unique(ids)
-        if allowed is not None:
-            uniq = uniq[_member(uniq, allowed)]
-        denied = denied_ids(rows, block_size, eterms)
-        if denied is not None:
-            uniq = uniq[strip_denied(uniq, denied)]
-        return pd.DataFrame({"doc_id": uniq})
-
-    expansion_terms = {t for g in live_groups for t in g}
-    matched = (
-        index.postings(spark)
-        .filter(
-            F.col("term").isin(
-                _scan_terms(
-                    index, sterms | fterms | eterms | expansion_terms
-                )
-            )
-        )
-        # id-side columns only: tfs/dls/boffs_tfs/boffs_dls and the block
-        # pruning stats never leave the parquet footer
-        .select(
-            "shard", "term", "n_docs", "n_blocks",
-            "doc_ids", "boffs_ids", "block_last_id",
-        )
+    clauses = [frozenset([t]) for t in dfs] + live_groups
+    return _match_frame(
+        spark, index, clauses, filters=fterms, excluded=eterms,
+        require_n=plan.n_required if plan.conjunctive else 1,
     )
-    return matched.groupBy("shard").applyInPandas(kernel, "doc_id long")
 
 
 def _min_match_count(min_match: int | str, n_terms: int) -> int:
@@ -2539,6 +2485,12 @@ def facet_counts(
     return out
 
 
+def _kw_split():
+    """``[field, value]`` of a keyword ``field:value`` term column, split
+    at its FIRST ``KW_SEP`` (a value may itself contain the separator)."""
+    return F.split(F.col("term"), re.escape(KW_SEP), 2)
+
+
 def facet_value_pairs(
     spark: SparkSession,
     index: Index,
@@ -2546,7 +2498,8 @@ def facet_value_pairs(
     value_prefix: str | None = None,
 ) -> DataFrame:
     """(value, doc_id) rows of one keyword facet field, decoded from its
-    ``field:value`` posting rows — a prefix-pruned scan of the term-sorted
+    ``field:value`` posting rows by the shared posting-pair decoder
+    (:func:`posting_pairs`) over a prefix-pruned scan of the term-sorted
     postings (StartsWith pushdown), never a docs-table scan.  Shared by
     facet.field and facet.pivot.  ``value_prefix`` (facet.prefix) narrows
     the StartsWith to ``field:prefix`` — fewer row groups at the scan."""
@@ -2556,31 +2509,10 @@ def facet_value_pairs(
             f"{index.spec.keyword_fields!r}"
         )
     prefix = facet_field + KW_SEP + (value_prefix or "")
-    block_size = index.spec.block_size
-
-    def decode_pairs(batches):
-        for pdf in batches:
-            vals: list[np.ndarray] = []
-            ids: list[np.ndarray] = []
-            for row in pdf.itertuples(index=False):
-                n = int(row.n_docs)
-                ids.append(decode_doc_ids(row.doc_ids, n, block_size))
-                vals.append(np.repeat(row.term.split(KW_SEP, 1)[1], n))
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "value": np.concatenate(vals),
-                    "doc_id": np.concatenate(ids),
-                }
-            )
-
-    return (
-        index.postings(spark)
-        .filter(F.col("term").startswith(prefix))
-        .select("term", "n_docs", "doc_ids")
-        .mapInPandas(decode_pairs, "value string, doc_id long")
-    )
+    return posting_pairs(
+        index.postings(spark).filter(F.col("term").startswith(prefix)),
+        index.spec.block_size,
+    ).select(_kw_split()[1].alias("value"), "doc_id")
 
 
 def facet_fields_counts(
@@ -2620,41 +2552,14 @@ def facet_fields_counts(
             f"facet fields {bad} are not keyword fields "
             f"{index.spec.keyword_fields!r}"
         )
-    block_size = index.spec.block_size
     prefixes = [f + KW_SEP for f in fields]
-
-    def decode_field_pairs(batches):
-        for pdf in batches:
-            flds: list[np.ndarray] = []
-            vals: list[np.ndarray] = []
-            ids: list[np.ndarray] = []
-            for row in pdf.itertuples(index=False):
-                n = int(row.n_docs)
-                fld, val = row.term.split(KW_SEP, 1)
-                ids.append(decode_doc_ids(row.doc_ids, n, block_size))
-                flds.append(np.repeat(fld, n))
-                vals.append(np.repeat(val, n))
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "field": np.concatenate(flds),
-                    "value": np.concatenate(vals),
-                    "doc_id": np.concatenate(ids),
-                }
-            )
-
     pred = F.col("term").startswith(prefixes[0])
     for p in prefixes[1:]:
         pred = pred | F.col("term").startswith(p)
-    pairs = (
-        index.postings(spark)
-        .filter(pred)
-        .select("term", "n_docs", "doc_ids")
-        .mapInPandas(
-            decode_field_pairs, "field string, value string, doc_id long"
-        )
-    )
+    kw = _kw_split()
+    pairs = posting_pairs(
+        index.postings(spark).filter(pred), index.spec.block_size
+    ).select(kw[0].alias("field"), kw[1].alias("value"), "doc_id")
     matched = match_ids(
         spark, index, query, filters=filters, synonyms=synonyms, op=op
     )
@@ -4200,13 +4105,13 @@ def batch_kernel(
                 # result shape the single-query path serves via
                 # keyword_filter — first k by doc_id per shard, the global
                 # (score desc, doc_id asc) window then equals doc_id order
-                allowed = allowed_ids(frows, plan.filters, block_size)
-                if allowed is None or not len(allowed):
-                    return None
-                denied = denied_ids(del_rows + erows, block_size, plan.excluded)
-                if denied is not None:
-                    allowed = allowed[strip_denied(allowed, denied)]
-                hits = allowed[:k]
+                mrows = rows_of(
+                    sorted(_flat_terms(plan.filters) | set(plan.excluded))
+                )
+                hits = match_set(
+                    mrows + del_rows, [], block_size, plan.filters,
+                    plan.excluded,
+                )[:k]
                 return pd.DataFrame(
                     {"doc_id": hits, "score": np.zeros(len(hits))}
                 )

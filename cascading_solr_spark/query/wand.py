@@ -308,6 +308,56 @@ def strip_denied(
     return ~_member(ids, denied)
 
 
+def match_set(
+    rows: list,
+    clauses: list,
+    block_size: int,
+    filter_terms: set | None = None,
+    excluded_terms: set[str] | None = None,
+    require_n: int = 1,
+) -> np.ndarray:
+    """Every match-only kernel's shard result: the sorted unique int64 ids
+    of the docs in this shard's posting ``rows`` that match — no scores.
+
+    A clause is a set of terms; a doc matches it when it posts ANY of them
+    (a plain term is a one-term clause, a wildcard expansion a multi-term
+    one).  A doc matches the query when it matches at least ``require_n``
+    clauses (1 = OR, all = AND, between = mm), passes every filter clause
+    (:func:`allowed_ids` — fq semantics) and is neither tombstoned nor
+    posting an excluded term (:func:`denied_ids`).  With no clauses the
+    result is the filter intersection alone (a pure filter query), and
+    empty when there is no filter either."""
+    allowed = allowed_ids(rows, filter_terms or set(), block_size)
+    if allowed is not None and not len(allowed):
+        return allowed
+    if clauses:
+        parts = []
+        for c in clauses:
+            cparts = [
+                decode_doc_ids(r.doc_ids, int(r.n_docs), block_size)
+                for r in rows
+                if r.term in c
+            ]
+            if cparts:
+                # each (term, doc) posting exists once, and a multi-term
+                # clause counts each of its docs once, so the per-doc
+                # count below is the number of matched clauses
+                ids = np.concatenate(cparts)
+                parts.append(np.unique(ids) if len(c) > 1 else ids)
+        if not parts:
+            return np.empty(0, dtype=np.int64)
+        ids, cnt = np.unique(np.concatenate(parts), return_counts=True)
+        if require_n > 1:
+            ids = ids[cnt >= require_n]
+        if allowed is not None:
+            ids = ids[_member(ids, allowed)]
+    elif allowed is None:
+        return np.empty(0, dtype=np.int64)
+    else:
+        ids = allowed
+    return ids[strip_denied(ids, denied_ids(rows, block_size, excluded_terms))]
+
+
 def row_cache_key(r) -> tuple:
     """Content-stable decode-cache key for one posting row: segments cover
     disjoint doc-id ranges, so the trailing block_last_id makes

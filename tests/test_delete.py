@@ -206,6 +206,9 @@ def test_batch_matches_single_on_deleted_index(spark, setup):
         "b": {"q": "import parse", "op": "AND"},
         "c": {"q": Q, "filters": {"lang": "python"}},
         "d": '"read json"',
+        "e": "lang:python",
+        "f": "lang:python -import",
+        "g": "lang:python -column",
     }
     batch = search_many(spark, mut, reqs, k=5).collect()
     by_q = {}
@@ -216,7 +219,19 @@ def test_batch_matches_single_on_deleted_index(spark, setup):
         "b": search(spark, mut, "import parse", k=5, op="AND", with_stored=False),
         "c": search(spark, mut, Q, k=5, filters={"lang": "python"}, with_stored=False),
         "d": search_phrase(spark, mut, "read json", k=5, with_stored=False),
+        # pure filters: the batch serves doc ids at score 0.0
+        "e": keyword_filter(spark, mut, {"lang": "python"}, k=5).select(
+            "doc_id", F.lit(0.0).alias("score")
+        ),
+        "f": keyword_filter(
+            spark, mut, {"lang": "python"}, k=5, excluded={"import"}
+        ).select("doc_id", F.lit(0.0).alias("score")),
+        # every python doc posts "import"; about a sixth lack "column"
+        "g": keyword_filter(
+            spark, mut, {"lang": "python"}, k=5, excluded={"column"}
+        ).select("doc_id", F.lit(0.0).alias("score")),
     }
+    assert by_q["e"] and by_q["g"]
     for qid, df in singles.items():
         assert by_q.get(qid, []) == [
             (r["doc_id"], r["score"]) for r in df.collect()

@@ -176,6 +176,13 @@ def test_match_ids_equals_ranked_match_set(spark, stored_index):
         ("parse buffer", "AND"),
         ("lang:go parse", "OR"),
         ("zzqxv", "OR"),
+        ("buf*", "OR"),
+        ("parse buf*", "AND"),
+        ("parse -buffer", "OR"),
+        ("parse -column", "OR"),
+        ("lang:go", "OR"),
+        ("lang:[go TO python]", "OR"),
+        ("parse lang:[go TO python]", "OR"),
     ):
         ranked = {
             r["doc_id"]
@@ -191,18 +198,22 @@ def test_match_ids_equals_ranked_match_set(spark, stored_index):
 
 
 def test_match_ids_plan_never_reads_tf_dl(spark, stored_index):
-    from cascading_solr_spark.query.search import match_ids
+    from cascading_solr_spark.query.search import keyword_filter, match_ids
 
-    explained = match_ids(
-        spark, stored_index, "parse buffer"
-    )._jdf.queryExecution().executedPlan().toString()
-    scan = [
-        ln for ln in explained.split("\n") if "ReadSchema" in ln or "Scan" in ln
-    ]
-    assert scan, explained
-    assert "tfs" not in explained.split("ReadSchema")[-1].split("\n")[0], (
-        "tf/dl binaries must be projected away before the parquet scan"
-    )
+    for frame in (
+        match_ids(spark, stored_index, "parse buffer"),
+        # a pure filter query decodes doc ids only, too
+        keyword_filter(spark, stored_index, {"lang": "go"}),
+    ):
+        explained = frame._jdf.queryExecution().executedPlan().toString()
+        scan = [
+            ln for ln in explained.split("\n")
+            if "ReadSchema" in ln or "Scan" in ln
+        ]
+        assert scan, explained
+        assert "tfs" not in explained.split("ReadSchema")[-1].split("\n")[0], (
+            "tf/dl binaries must be projected away before the parquet scan"
+        )
 
 
 # ---------------------------------------------------------------- spellcheck

@@ -512,6 +512,29 @@ def test_spark_jobs_per_call(spark, r5_index):
         assert got == want[name], (name, got)
 
 
+def test_spread_partitions_decides_from_the_plan(spark, tmp_path):
+    from cascading_solr_spark.operators.textstats import spread_partitions
+
+    # no Spark job: a bare range knows its partition count, and a frame
+    # whose plan has an exchange comes back as is, its stages not run
+    for df in (
+        spark.range(100),
+        spark.range(100).repartition(3),
+        spark.range(100).limit(10).repartition(3),
+    ):
+        assert _spark_jobs(spark, lambda: spread_partitions(df)) == 0
+    rep = spark.range(100).repartition(3)
+    assert spread_partitions(rep).rdd.getNumPartitions() == 3
+    # a 1-file scan is still spread to the default parallelism
+    spark.range(100).coalesce(1).write.parquet(str(tmp_path / "one"))
+    scan = spark.read.parquet(str(tmp_path / "one"))
+    assert scan.rdd.getNumPartitions() == 1
+    got = []
+    assert _spark_jobs(spark, lambda: got.append(spread_partitions(scan))) == 0
+    dp = spark.sparkContext.defaultParallelism
+    assert got[0].rdd.getNumPartitions() == dp
+
+
 def test_realtime_get_sees_appends_immediately(spark, tmp_path):
     from cascading_solr_spark.indexing.append import append_documents
     from cascading_solr_spark.query.search import realtime_get
