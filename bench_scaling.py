@@ -2,7 +2,9 @@
 levels (sandbox proxy for N vs 4N executors, BASELINE.json north_rule).
 
 Protocol (designed for a noisy shared VM):
-* levels interleaved (8, 2, 8, 2, ...) so host drift cancels across levels;
+* levels interleaved (4N, N, 4N, N, ...) so host drift cancels across
+  levels; 4N is every CPU this process may use (``bench.host_cpus()``,
+  $SPARK_GRAFT_CPUS overrides) and N = max(1, 4N // 4);
 * each sample is a FRESH JVM that first runs a small warm-up build (JIT +
   python-worker spin-up), then ONE measured build of the full corpus;
 * the job is IDENTICAL at both levels (same input parquet, num_shards=32,
@@ -13,10 +15,12 @@ Protocol (designed for a noisy shared VM):
   cluster's input/shuffle/output bandwidth scales with executor count
   (local NVMe + HDFS/S3 aggregate).  RAM-backed I/O is the faithful model
   of per-executor-scaling storage, and makes samples reproducible;
-* N=2 -> 4N=8 sits in this host's linear hardware region (a pure-Python
-  multiprocessing burn test scales 4.04x from 2->8 workers but only 3.0x
-  from 8->32 — SMT/memory-bandwidth ceiling — so local[32] would measure
-  the host, not the engine);
+* the driver heap is ``bench.driver_memory()`` (a share of MemTotal,
+  $BENCH_DRIVER_MEM overrides);
+* the host's own N -> 4N ceiling is probed with the same process counts (on
+  the round-3 32-core host a pure-Python multiprocessing burn scaled 4.04x
+  from 2->8 workers but only 3.0x from 8->32 — SMT/memory-bandwidth
+  ceiling);
 * a calibration burn runs BEFORE (gating: the measured build defers until
   the host is quiet) and AFTER each sample (detection: co-tenant load that
   arrived MID-RUN flags the sample as contaminated; round 2's 153-263 s
@@ -52,7 +56,17 @@ CORPUS = os.environ.get("SCALING_CORPUS", os.path.join(TMPFS, "corpus"))
 N_FILES = int(os.environ.get("SCALING_ROWS", "600000"))
 WARMUP_FILES = 5000
 NUM_SHARDS = 32
-LEVELS = (8, 2)
+
+
+def _levels() -> tuple[int, int]:
+    """(4N, N): every CPU this process may use, and a quarter of them."""
+    from bench import host_cpus
+
+    four_n = int(host_cpus())
+    return four_n, max(1, four_n // 4)
+
+
+LEVELS = _levels()
 SAMPLES = int(os.environ.get("SCALING_SAMPLES", "5"))
 MAX_EXTRA = int(os.environ.get("SCALING_MAX_EXTRA", "4"))
 # post-run calibration above this multiple of the quiet threshold marks the
@@ -84,7 +98,7 @@ def _mem_burn(_: int) -> float:
     return (4 * 2 * a.nbytes / 1e9) / dt  # read+write per pass
 
 
-def burn8(n_procs: int = 8, fn=_burn) -> float:
+def burn(n_procs: int = LEVELS[0], fn=_burn) -> float:
     import multiprocessing as mp
 
     with mp.Pool(n_procs) as p:
@@ -96,16 +110,17 @@ def host_quiet(nominal_s: float | None = None, tries: int = 20) -> float:
     """Wait for a quiet host window before measuring (pre-gating).
 
     This VM is multi-tenant: identical builds measured 166s..440s at
-    local[8] purely from co-tenant load.  An 8-process integer burn takes
-    ~0.78s/proc on a quiet host; the measured build defers until the burn
-    confirms free capacity, and the calibration value is recorded."""
+    local[8] purely from co-tenant load.  A 4N-process integer burn took
+    ~0.78s/proc on the quiet round-3 host (SCALING_QUIET); the measured
+    build defers until the burn confirms free capacity, and the calibration
+    value is recorded."""
     import time as _t
 
     if nominal_s is None:
         nominal_s = float(os.environ.get("SCALING_QUIET", "0.95"))
     per = float("inf")
     for _attempt in range(tries):
-        per = burn8()
+        per = burn()
         if per < nominal_s:
             return per
         _t.sleep(40)
@@ -118,6 +133,7 @@ def inner(cpus: int) -> None:
     sys.path.insert(0, HERE)
     from pyspark.sql import SparkSession
 
+    from bench import driver_memory
     from cascading_solr_spark.corpus import synth_corpus
     from cascading_solr_spark.indexing import build as build_mod
     from cascading_solr_spark.indexing.build import build_index
@@ -131,7 +147,7 @@ def inner(cpus: int) -> None:
         # 128 MB default -> one ragged wave with idle cores)
         .config("spark.sql.files.maxPartitionBytes", "25165824")
         .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", driver_memory())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
@@ -180,7 +196,7 @@ def inner(cpus: int) -> None:
     stop_evt.set()
     pt.join(timeout=5)
     shutil.rmtree(out, ignore_errors=True)
-    calib_after = burn8()
+    calib_after = burn()
     ps = sorted(probes) or [float("nan")]
     print(
         json.dumps(
@@ -219,14 +235,16 @@ def main() -> None:
     dirty_above = nominal * DIRTY_FACTOR
 
     # host memory-bandwidth probe (residual-attribution evidence)
-    mem2 = burn8(2, _mem_burn)
-    mem8 = burn8(8, _mem_burn)
-    cpu2 = burn8(2)
-    cpu8 = burn8(8)
+    four_n, n = LEVELS
+    mem_n = burn(n, _mem_burn)
+    mem_4n = burn(four_n, _mem_burn)
+    cpu_n = burn(n)
+    cpu_4n = burn(four_n)
     print(
-        f"mem-bw/worker 2p={mem2:.2f} GB/s 8p={mem8:.2f} GB/s "
-        f"(aggregate scaling {4 * mem8 / mem2 / 4:.2f}x/4x); "
-        f"int-burn/worker 2p={cpu2:.2f}s 8p={cpu8:.2f}s",
+        f"mem-bw/worker {n}p={mem_n:.2f} GB/s {four_n}p={mem_4n:.2f} GB/s "
+        f"(aggregate scaling {four_n * mem_4n / (n * mem_n):.2f}x/"
+        f"{four_n / n:.0f}x); "
+        f"int-burn/worker {n}p={cpu_n:.2f}s {four_n}p={cpu_4n:.2f}s",
         flush=True,
     )
 

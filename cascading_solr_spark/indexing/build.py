@@ -58,17 +58,21 @@ idempotent task output dirs (hadoop/SolrOutputFormat.java:57).
 
 from __future__ import annotations
 
+import bisect
 import functools
 import json
 import os
 import shutil
 import time
+import warnings
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -453,14 +457,16 @@ def local_frame(
     return spark.createDataFrame(table, st)
 
 
-def _scan_schema(ddl: str, partition: str | None = None) -> T.StructType:
-    """The schema ``spark.read.parquet`` infers for files written as ``ddl``
-    (partitioned by ``partition``): every field nullable, the partition
+def _scan_schema(
+    written: str | T.StructType, partition: str | None = None
+) -> T.StructType:
+    """The schema ``spark.read.parquet`` infers for files written as
+    ``written`` (a DDL string or a StructType, partitioned by
+    ``partition``): every field nullable, no field metadata, the partition
     column last.  Reading with it skips the footer-inference job."""
-    fields = [
-        T.StructField(f.name, f.dataType, True)
-        for f in T.StructType.fromJson(_ddl_json(ddl)).fields
-    ]
+    if isinstance(written, str):
+        written = T.StructType.fromJson(_ddl_json(written))
+    fields = [T.StructField(f.name, f.dataType, True) for f in written.fields]
     fields.sort(key=lambda f: f.name == partition)  # stable: partition last
     return T.StructType(fields)
 
@@ -493,6 +499,63 @@ def posting_pairs(postings: DataFrame, block_size: int) -> DataFrame:
 _UNSET = object()  # dict_cache sentinel: "not computed yet" vs "too big"
 
 
+class Footer(NamedTuple):
+    """One parquet file of a ``shard=N``-partitioned index table: its path,
+    its shard, its parsed footer, and per row group the key column's
+    [min, max] (None when the footer has no statistics for it) and the row
+    group's uncompressed byte size."""
+
+    path: str
+    shard: int
+    meta: pq.FileMetaData
+    lo: list
+    hi: list
+    nbytes: list
+
+
+#: the key column of each footer-indexed table
+_FOOTER_KEYS = {"postings": "term", "docs": "doc_id"}
+
+
+def _read_footers(root: str, key: str) -> list[Footer]:
+    """Footers of every data file under ``root/shard=N/``, skipping
+    ``_``/``.``-prefixed names as Spark's file index does."""
+    out: list[Footer] = []
+    if not os.path.isdir(root):
+        return out
+    for d in sorted(os.listdir(root)):
+        if not d.startswith("shard="):
+            continue
+        shard = int(d.split("=", 1)[1])
+        sub = os.path.join(root, d)
+        for name in sorted(os.listdir(sub)):
+            path = os.path.join(sub, name)
+            if name.startswith(("_", ".")) or not os.path.isfile(path):
+                continue
+            md = pq.read_metadata(path)
+            paths = [md.schema.column(i).path for i in range(md.num_columns)]
+            j = paths.index(key)
+            lo, hi, nbytes = [], [], []
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                st = rg.column(j).statistics
+                known = st is not None and st.has_min_max
+                lo.append(st.min if known else None)
+                hi.append(st.max if known else None)
+                nbytes.append(rg.total_byte_size)
+            out.append(Footer(path, shard, md, lo, hi, nbytes))
+    return out
+
+
+def _may_hold(keys: list, lo, hi) -> bool:
+    """Whether sorted ``keys`` has a member in [lo, hi] (always, when the
+    row group has no statistics)."""
+    if lo is None:
+        return True
+    i = bisect.bisect_left(keys, lo)
+    return i < len(keys) and keys[i] <= hi
+
+
 @dataclass
 class Index:
     """Handle to a built index directory (postings/docs/stats/lineage)."""
@@ -514,6 +577,9 @@ class Index:
     #: postings carry DELETED_TERM rows that every query path must exclude;
     #: reset to 0 when compaction folds the deletes away.
     n_deleted: int = 0
+    #: JSON of the Spark schema the docs rows were written with (meta
+    #: ``docs_schema``); empty for an index written before it was recorded
+    docs_schema: str = field(default="", repr=False)
 
     @classmethod
     def load(cls, path: str) -> "Index":
@@ -544,6 +610,7 @@ class Index:
             ngrams_dirname=meta.get("ngrams_dirname", "dict_ngrams"),
             docs_dirname=meta.get("docs_dirname", "docs"),
             n_deleted=int(meta.get("n_deleted", 0)),
+            docs_schema=meta.get("docs_schema", ""),
         )
 
     @property
@@ -585,28 +652,33 @@ class Index:
         ent = cache.get(key)
         if ent is not None and ent[0] is spark:
             return ent[1]
-        stamp = getattr(self, "_meta_stamp", None)
-        if stamp is not None:
-            try:
-                st = os.stat(os.path.join(self.path, "meta.json"))
-                moved = (st.st_mtime_ns, st.st_size) != stamp
-            except OSError:
-                moved = True
-            if moved:
-                import warnings
-
-                warnings.warn(
-                    "Index handle is stale: the index meta has changed since"
-                    " this handle was loaded (append/delete/compact?).  A"
-                    " first-use cache fill now can mix pre- and post-mutation"
-                    " file listings — use the handle returned by the mutator"
-                    " or Index.load a fresh one.",
-                    RuntimeWarning,
-                    stacklevel=3,
-                )
+        self._warn_if_stale()
         df = builder()
         cache[key] = (spark, df)
         return df
+
+    def _warn_if_stale(self) -> None:
+        """Warn when meta.json has moved on since this handle was loaded:
+        a first-use cache fill now would mix pre- and post-mutation file
+        listings."""
+        stamp = getattr(self, "_meta_stamp", None)
+        if stamp is None:
+            return
+        try:
+            st = os.stat(os.path.join(self.path, "meta.json"))
+            moved = (st.st_mtime_ns, st.st_size) != stamp
+        except OSError:
+            moved = True
+        if moved:
+            warnings.warn(
+                "Index handle is stale: the index meta has changed since"
+                " this handle was loaded (append/delete/compact?).  A"
+                " first-use cache fill now can mix pre- and post-mutation"
+                " file listings — use the handle returned by the mutator"
+                " or Index.load a fresh one.",
+                RuntimeWarning,
+                stacklevel=4,
+            )
 
     def postings(self, spark: SparkSession) -> DataFrame:
         # a 0-doc index (Solr's empty-core analogue) has no postings dir yet
@@ -627,13 +699,24 @@ class Index:
         # compaction publishes the filtered docs as docs.genN + a meta flip
         return os.path.join(self.path, self.docs_dirname)
 
+    def docs_scan_schema(self) -> T.StructType | None:
+        """The schema ``spark.read.parquet`` infers for the docs table, from
+        the recorded ``docs_schema`` (None for an index without it)."""
+        if not self.docs_schema:
+            return None
+        written = T.StructType.fromJson(json.loads(self.docs_schema))
+        return _scan_schema(written, "shard")
+
     def docs(self, spark: SparkSession) -> DataFrame:
+        # read with the recorded schema: no footer-inference job on a fresh
+        # handle (an index without docs_schema falls back to inference)
         p = self.docs_path
         if not os.path.exists(p):
-            meta = read_meta(self.path)
-            schema = T.StructType.fromJson(json.loads(meta["docs_schema"]))
+            schema = T.StructType.fromJson(json.loads(self.docs_schema))
             return local_frame(spark, [], schema)
-        return self._cached_df(spark, "docs", lambda: spark.read.parquet(p))
+        schema = self.docs_scan_schema()
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return self._cached_df(spark, "docs", lambda: reader.parquet(p))
 
     def deleted_ids(self, spark: SparkSession) -> DataFrame:
         """Distinct tombstoned doc_ids, decoded from the DELETED_TERM
@@ -717,6 +800,88 @@ class Index:
                     )
         object.__setattr__(self, "_dict_cache", result)
         return result
+
+    #: largest estimated read (uncompressed row-group bytes) that
+    #: :meth:`read_local` serves on the driver.  The read lands in the
+    #: driver's Python process: Arrow buffers (~1x the estimate), the pandas
+    #: bytes objects the kernels take (~1x) and the decoded id/tf/dl arrays
+    #: (varints widen to int64, up to ~8x) — about 10x the estimate at peak,
+    #: so 32 MiB keeps one request under ~320 MiB, a third of the smallest
+    #: (1 GiB) driver heap the harnesses size from the host.  One Python
+    #: thread decodes the whole read, where the distributed tier spreads
+    #: the shards over the executors, so the cap also bounds the serial
+    #: decode one request may put on the driver.
+    LOCAL_SCAN_MAX_BYTES = 32 << 20
+
+    def footers(self, table: str) -> list[Footer]:
+        """The footer index of ``table`` (``"postings"``, keyed by term, or
+        ``"docs"``, keyed by doc_id): every data file's shard and, per row
+        group, the key's [min, max] and byte size.  Built once per handle
+        from the parquet footers with pyarrow — no Spark job — and cached
+        under the same snapshot rule (and stale-handle warning) as
+        :meth:`_cached_df`."""
+        cache = getattr(self, "_footers", None)
+        if cache is None:
+            cache = {}
+            object.__setattr__(self, "_footers", cache)
+        if table not in cache:
+            self._warn_if_stale()
+            root = {"postings": self.postings_path, "docs": self.docs_path}
+            cache[table] = _read_footers(root[table], _FOOTER_KEYS[table])
+        return cache[table]
+
+    def read_local(
+        self,
+        table: str,
+        keys,
+        columns: list[str],
+        shards: set[int] | None = None,
+    ) -> dict[int, pa.Table] | None:
+        """The rows of ``table`` whose key is in ``keys``, read on the driver
+        with pyarrow as ``{shard: Arrow table of columns}`` — or None when
+        the estimate is not under LOCAL_SCAN_MAX_BYTES (the caller then runs
+        its distributed plan).
+
+        The estimate is the bytes of the row groups (of the ``shards`` dirs;
+        every shard when None) whose key [min, max] can hold a key, from
+        :meth:`footers`; the read is exactly those row groups, then an exact
+        key-membership row filter.  ``columns`` must name the key and may
+        name the ``shard`` partition column, filled in from the file's
+        dir."""
+        key = _FOOTER_KEYS[table]
+        keys = sorted(set(keys))
+        picks: list[tuple[Footer, list[int]]] = []
+        total = 0
+        for f in self.footers(table):
+            if shards is not None and f.shard not in shards:
+                continue
+            rgs = [
+                g for g in range(len(f.nbytes))
+                if _may_hold(keys, f.lo[g], f.hi[g])
+            ]
+            if rgs:
+                picks.append((f, rgs))
+                total += sum(f.nbytes[g] for g in rgs)
+        if total >= self.LOCAL_SCAN_MAX_BYTES:
+            return None
+        data_cols = [c for c in columns if c != "shard"]
+        parts: dict[int, list[pa.Table]] = {}
+        for f, rgs in picks:
+            with pq.ParquetFile(f.path, metadata=f.meta) as pf:
+                t = pf.read_row_groups(rgs, columns=data_cols)
+            wanted = pa.array(keys, t.schema.field(key).type)
+            t = t.filter(pc.is_in(t[key], value_set=wanted))
+            if "shard" in columns:
+                t = t.add_column(
+                    columns.index("shard"), "shard",
+                    pa.array(np.full(len(t), f.shard, dtype=np.int32)),
+                )
+            parts.setdefault(f.shard, []).append(t)
+        # segments may differ in a column's nullability (build vs append)
+        return {
+            s: pa.concat_tables(ts, promote_options="default")
+            for s, ts in parts.items()
+        }
 
     def term_dict(self, spark: SparkSession) -> DataFrame | None:
         """Global term -> df dictionary (None for pre-dict indexes).
@@ -1417,6 +1582,10 @@ def build_index(
         # doc_id_field path: parquet sources answer count() from footers
         n_docs = source.count()
 
+    # the docs rows' schema, recorded in meta so Index.docs and the
+    # driver-local stored fetch know the table's Spark schema without a
+    # footer-inference job
+    docs_schema = json.dumps(_docs_rows(based, spec).schema.jsonValue())
     if not n_docs:
         # 0-doc corpus -> a valid EMPTY index (the Solr empty-core
         # analogue): meta only.  The postings/docs/dict dirs are created by
@@ -1436,9 +1605,7 @@ def build_index(
                 "postings_dirname": "postings",
                 "dict_dirname": "dict",
                 "ngrams_dirname": "dict_ngrams",
-                "docs_schema": json.dumps(
-                    _docs_rows(based, spec).schema.jsonValue()
-                ),
+                "docs_schema": docs_schema,
             },
         )
         if ids_handle is not None:
@@ -1565,7 +1732,11 @@ def build_index(
                 "postings_dirname": "postings",
                 "dict_dirname": "dict",
                 "ngrams_dirname": "dict_ngrams",
+                "docs_schema": docs_schema,
             }
+            write_meta(out_dir, meta)
+        elif "docs_schema" not in meta:  # resuming an older build
+            meta["docs_schema"] = docs_schema
             write_meta(out_dir, meta)
 
         # ---- postings: ONE streaming pass.  SPIMI tokenize -> salted

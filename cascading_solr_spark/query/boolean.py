@@ -46,15 +46,14 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from cascading_solr_spark.analyzer import analyze_query
 from cascading_solr_spark.codec import bm25_idf, bm25_tf_norm, decode_doc_ids, decode_varint
 from cascading_solr_spark.indexing.build import KW_SEP, Index
 from cascading_solr_spark.query.search import (
     _fetch_stored,
+    _frame,
     _merge_topk,
-    _scan_terms,
     term_dfs,
 )
 from cascading_solr_spark.query.wand import (
@@ -398,17 +397,16 @@ def search_boolean(
     kernel = boolean_kernel(
         node, idf, index.avgdl, spec.k1, spec.b, k, spec.block_size
     )
-    matched = (
-        index.postings(spark)
-        .select(
+    top = _merge_topk(
+        spark, index, all_terms,
+        [
             "shard", "term", "salt", "n_docs", "n_blocks",
             "doc_ids", "boffs_ids", "block_last_id", "tfs", "dls",
-        )
-        .filter(F.col("term").isin(_scan_terms(index, all_terms)))
+        ],
+        kernel, k,
     )
-    top = _merge_topk(matched, kernel, k)
     if not with_stored:
-        return top
+        return _frame(spark, top)
     return _fetch_stored(spark, index, top, bounded=k is not None)
 
 

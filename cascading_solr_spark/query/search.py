@@ -41,9 +41,24 @@ One path serves every ranked and matching entry point:
 4. a global order-merge takes the final k.  Ties broken (score desc,
    doc_id asc) for deterministic rank-identity.
 
+Steps 3-4 (:func:`_merge_topk`) and the stored fetch (:func:`_fetch_stored`)
+each run on one of two tiers with the same result, rows and schema alike:
+
+* **driver-local** — a k-bounded request whose candidate row groups, by
+  the handle's parquet footer index (:meth:`Index.footers`: per row group
+  the term or doc_id [min, max] and its bytes), are under
+  ``Index.LOCAL_SCAN_MAX_BYTES``.  pyarrow reads exactly those row groups
+  on the driver, the same kernel scores each shard in-process, a lexsort
+  merges, and the answer is a ``local_frame``: the request runs no Spark
+  job.  On a small index a request is otherwise mostly Spark overhead
+  (scheduling, a shuffle and a Python task wave).
+* **distributed** — every k=None request and everything over the cap: the
+  per-shard kernel runs under ``groupBy("shard").applyInPandas``.
+
 Scale notes: the postings scan is filtered term IN (...) — row-group pruning
-works because postings files are sorted by term; all shards scan in parallel;
-only ``shards × salts × terms`` tiny top-k rows reach the global merge.
+works because postings files are sorted by term, on both tiers; on the
+distributed tier all shards scan in parallel and only ``shards × salts ×
+terms`` tiny top-k rows reach the global merge.
 """
 
 from __future__ import annotations
@@ -56,6 +71,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from cascading_solr_spark.analyzer import analyze_query, tokenize_with_positions
 from cascading_solr_spark.codec import (
@@ -93,6 +109,12 @@ from cascading_solr_spark.query.wand import (
     strip_denied,
 )
 
+
+#: _RESULT_SCHEMA as a StructType (built without a JVM parse)
+_RESULT_STRUCT = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("score", T.DoubleType()),
+])
 
 # Scoring-kernel projection: every postings column EXCEPT the positional
 # payload (pos / boffs_pos, present when spec.positions).  Ranked and
@@ -984,34 +1006,99 @@ def _zero_hit(plan: QueryPlan, dfs: dict, mm: int | None = None) -> bool:
     return not reachable or (need is not None and reachable < need)
 
 
-def _plan_scan(
-    spark: SparkSession, index: Index, plan: QueryPlan, dfs: dict
-) -> DataFrame:
-    """The resolved plan's pruned postings scan: scoring terms with
-    postings, filter and prohibited terms, wildcard expansions (and the
-    tombstones, :func:`_scan_terms`)."""
+def _plan_terms(plan: QueryPlan, dfs: dict) -> list:
+    """The resolved plan's scan terms: scoring terms with postings, filter
+    and prohibited terms, wildcard expansions."""
     expansion = [t for g, _ in plan.groups for t in g]
-    return _score_rows(index, spark).filter(
-        F.col("term").isin(
-            _scan_terms(
-                index,
-                list(dfs) + list(plan.filters) + list(plan.excluded)
-                + expansion,
-            )
-        )
+    return list(dfs) + list(plan.filters) + list(plan.excluded) + expansion
+
+
+def _udf_frame(table) -> pd.DataFrame:
+    """An Arrow table of postings rows as the pandas frame ``applyInPandas``
+    hands a kernel: pyspark converts each column with these ``to_pandas``
+    options, and for the postings column types (ints without nulls,
+    strings, binaries, arrays of ints) its converters change nothing else —
+    binaries stay ``bytes``, arrays stay numpy arrays."""
+    return table.to_pandas(
+        date_as_object=True, coerce_temporal_nanoseconds=True
     )
 
 
-def _merge_topk(matched: DataFrame, kernel, k: int | None) -> DataFrame:
-    """Score each shard's rows with ``kernel`` and order-merge the local
-    top-k: the first ``k`` rows in (score desc, doc_id asc) order, every
-    row for k=None."""
+#: a ranked top-k: a frame, or driver-merged (doc_id, score) rows
+Ranked = DataFrame | list
+
+
+def _frame(spark: SparkSession, top: Ranked) -> DataFrame:
+    """A ranked top-k as a (doc_id, score) frame: driver rows become a
+    ``local_frame``.  Ranked entry points call this only when they return
+    the top-k itself; the stored fetch takes driver rows as they are and
+    skips building a frame it would collect straight back."""
+    if isinstance(top, list):
+        return local_frame(spark, top, _RESULT_SCHEMA)
+    return top
+
+
+def _rows(top: Ranked) -> list[tuple[int, float]]:
+    """A ranked top-k's (doc_id, score) rows: driver rows as they are, a
+    frame collected."""
+    if isinstance(top, list):
+        return top
+    return [(int(r["doc_id"]), float(r["score"])) for r in top.collect()]
+
+
+def _merge_topk(
+    spark: SparkSession,
+    index: Index,
+    terms: list,
+    columns: list[str],
+    kernel,
+    k: int | None,
+    start: int = 0,
+) -> Ranked:
+    """Score each shard's postings rows of ``terms`` (projected to
+    ``columns``; :func:`_scan_terms` adds the tombstones) with ``kernel``
+    and order-merge the local top-k: rows ``[start, k)`` of the (score
+    desc, doc_id asc) order, every row from ``start`` on for k=None.
+
+    One request, two tiers with the same result:
+
+    * **driver-local** — a bounded request (``k`` set) whose candidate row
+      groups, by the handle's footer index, are under
+      ``Index.LOCAL_SCAN_MAX_BYTES`` (:meth:`Index.read_local`).  pyarrow
+      reads exactly those row groups, the SAME kernel runs once per shard
+      in-process on the frame ``applyInPandas`` would hand it
+      (:func:`_udf_frame`), and a lexsort merges; the result is the
+      driver's (doc_id, score) rows (:func:`_frame` makes them a
+      ``local_frame``), so it runs no Spark job;
+    * **distributed** — everything else: the term-pruned postings scan,
+      ``groupBy("shard").applyInPandas(kernel)``, a global sort, limit and
+      offset."""
+    scan = _scan_terms(index, terms)
+    if k is not None:
+        shards = index.read_local("postings", scan, columns)
+        if shards is not None:
+            parts = [kernel(_udf_frame(shards[s])) for s in sorted(shards)]
+            ids = np.concatenate(
+                [np.empty(0, dtype=np.int64)]
+                + [p["doc_id"].to_numpy(dtype=np.int64) for p in parts]
+            )
+            scores = np.concatenate(
+                [np.empty(0, dtype=np.float64)]
+                + [p["score"].to_numpy(dtype=np.float64) for p in parts]
+            )
+            order = np.lexsort((ids, -scores))[start:k]
+            return list(zip(ids[order].tolist(), scores[order].tolist()))
     top = (
-        matched.groupBy("shard")
+        index.postings(spark)
+        .filter(F.col("term").isin(scan))
+        .select(*columns)
+        .groupBy("shard")
         .applyInPandas(kernel, _RESULT_SCHEMA)
         .orderBy(F.desc("score"), F.asc("doc_id"))
     )
-    return top if k is None else top.limit(k)
+    if k is not None:
+        top = top.limit(k)
+    return top.offset(start) if start else top
 
 
 def _ranked_top(
@@ -1023,10 +1110,12 @@ def _ranked_top(
     mm: int | None = None,
     cursor: tuple[float, int] | None = None,
     exhaustive: bool = False,
-) -> DataFrame:
-    """Ranked (doc_id, score) frame of a resolved plan whose terms have
-    global document frequencies ``dfs`` — the shard fan-out shared by
-    :func:`search` and :func:`search_after`.  A per-term boost multiplies
+    start: int = 0,
+) -> Ranked:
+    """Ranked (doc_id, score) top of a resolved plan whose terms have
+    global document frequencies ``dfs`` — rows ``[start, k)`` of the shard
+    fan-out (:func:`_merge_topk`) shared by :func:`search` and
+    :func:`search_after`.  A per-term boost multiplies
     the term's idf, exactly Lucene's boost placement: every bound,
     MaxScore block maxima included, scales with it and pruning stays
     exact."""
@@ -1039,7 +1128,9 @@ def _ranked_top(
         plan, idf, index.avgdl, spec.k1, spec.b, k, spec.block_size, mm=mm,
         cursor=cursor, exhaustive=exhaustive,
     )
-    return _merge_topk(_plan_scan(spark, index, plan, dfs), kernel, k)
+    return _merge_topk(
+        spark, index, _plan_terms(plan, dfs), _SCORE_COLS, kernel, k, start
+    )
 
 
 def term_dfs(
@@ -1088,21 +1179,31 @@ def expand_terms(
 def _fetch_stored(
     spark: SparkSession,
     index: Index,
-    top: DataFrame,
+    top: Ranked,
     bounded: bool = True,
     fl: list[str] | None = None,
 ) -> DataFrame:
-    """Stored-field retrieval for a ranked (doc_id, score) frame.
+    """Stored-field retrieval for a ranked (doc_id, score) top.
 
     ``bounded`` (the k-limited path): the top-k is collected (≤ k rows, and
-    the caller is about to collect it anyway), shard = doc_id % num_shards
-    is derived driver-side, and the docs read is pruned to exactly the
-    touched shard partitions + doc_id row groups — at 100 TB this is a k-row
-    fetch, not a table scan.  The ≤ k rows come back as a ``local_frame``
-    (a LocalRelation: broadcasting it runs no job), and the ≤ k joined rows
-    are ordered inside ONE partition (coalesce(1) + sortWithinPartitions)
-    rather than by a global sort's range exchange — the whole fetch is the
-    pruned scan's stage.
+    the caller is about to collect it anyway; a driver-merged top-k from
+    :func:`_merge_topk` is already rows), shard =
+    doc_id % num_shards is derived driver-side, and the docs read is pruned
+    to exactly the touched shard partitions + doc_id row groups — at 100 TB
+    this is a k-row fetch, not a table scan.  Two tiers, one result (rows
+    and schema, nullability included):
+
+    * **driver-local** — when the index records its docs schema and the
+      candidate docs row groups (the handle's footer index: touched shard
+      dirs, doc_id [min, max]) are under ``Index.LOCAL_SCAN_MAX_BYTES``,
+      pyarrow reads them (:meth:`Index.read_local`), the ≤ k rows are joined
+      to their scores and sorted on the driver, and the result is a
+      ``local_frame`` — no Spark job;
+    * **distributed** — otherwise the ≤ k rows come back as a
+      ``local_frame`` (a LocalRelation: broadcasting it runs no job), and
+      the ≤ k joined rows are ordered inside ONE partition (coalesce(1) +
+      sortWithinPartitions) rather than by a global sort's range exchange —
+      the whole fetch is the pruned scan's stage.
 
     ``bounded=False`` (k=None: an UNBOUNDED match set) must never collect or
     broadcast the matches — driver memory and plan size would grow with the
@@ -1133,26 +1234,25 @@ def _fetch_stored(
             .join(top.hint("shuffle_hash"), "doc_id")
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
-    rows = top.collect()
+    rows = _rows(top)
+    # the join's right side: a zero-hit frame joins ``top`` itself (its
+    # schema, nullability included, survives), every other one the rows
+    right = _RESULT_STRUCT if rows or isinstance(top, list) else top.schema
+    local = _local_stored(spark, index, rows, right, docs_cols)
+    if local is not None:
+        return local
     docs = index.docs(spark)
     if docs_cols is not None:
         docs = docs.select("doc_id", "shard", *docs_cols)
     if not rows:
-        # the zero-hit frame keeps ``top``'s schema (nullability included)
         return (
             docs.drop("shard")
-            .join(F.broadcast(local_frame(spark, [], top.schema)), "doc_id")
+            .join(F.broadcast(local_frame(spark, [], right)), "doc_id")
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
-    ids = [int(r["doc_id"]) for r in rows]
+    ids = [d for d, _ in rows]
     shards = sorted({i % index.spec.num_shards for i in ids})
-    small = F.broadcast(
-        local_frame(
-            spark,
-            [(int(r["doc_id"]), float(r["score"])) for r in rows],
-            _RESULT_SCHEMA,
-        )
-    )
+    small = F.broadcast(local_frame(spark, rows, _RESULT_SCHEMA))
     pruned = docs.filter(F.col("shard").isin(shards) & F.col("doc_id").isin(ids))
     return (
         pruned.drop("shard")
@@ -1160,6 +1260,42 @@ def _fetch_stored(
         .coalesce(1)
         .sortWithinPartitions(F.desc("score"), F.asc("doc_id"))
     )
+
+
+def _local_stored(
+    spark: SparkSession,
+    index: Index,
+    rows: list[tuple[int, float]],
+    right: T.StructType,
+    docs_cols: list[str] | None,
+) -> DataFrame | None:
+    """The driver-local tier of the bounded :func:`_fetch_stored`: the docs
+    rows of the ``rows`` ids joined to their scores, in (score desc, doc_id
+    asc) order, as a ``local_frame`` whose schema is the distributed
+    join's (docs columns, then ``right``'s) — or None when the index has no
+    recorded docs schema or the read is not under the cap."""
+    scan = index.docs_scan_schema()
+    if scan is None:
+        return None
+    fields = {f.name: f for f in scan.fields if f.name != "shard"}
+    names = list(fields) if docs_cols is None else ["doc_id", *docs_cols]
+    score = dict(rows)
+    got = index.read_local(
+        "docs", score, names, {d % index.spec.num_shards for d in score}
+    )
+    if got is None:
+        return None
+    schema = T.StructType(
+        [fields[n] for n in names]
+        + [f for f in right.fields if f.name != "doc_id"]
+    )
+    out = [
+        (*r, score[r[0]])
+        for t in got.values()
+        for r in zip(*(t.column(n).to_pylist() for n in names))
+    ]
+    out.sort(key=lambda r: (-r[-1], r[0]))
+    return local_frame(spark, out, schema)
 
 
 def keyword_filter(
@@ -1285,25 +1421,7 @@ def match_ids(
     )
     fterms, eterms = plan.filters, plan.excluded
     if plan.match_all:
-        # MatchAllDocsQuery (the /browse handler's q.alt=*:* landing page,
-        # solrconfig.xml:879), incl. Solr's pure-negative top-level rewrite:
-        # every doc, optionally fq-restricted, minus the excluded set.  The
-        # unfiltered case reads ONE int column of the docs table (columnar
-        # pruned scan, no postings touched); filtered goes index-side.
-        if fterms:
-            return keyword_filter(spark, index, fterms, excluded=eterms)
-        live = index.docs(spark).select("doc_id")
-        if index.has_deletes:
-            live = live.join(
-                F.broadcast(index.deleted_ids(spark)), "doc_id", "left_anti"
-            )
-        if eterms:
-            live = live.join(
-                _match_frame(spark, index, [frozenset(eterms)]),
-                "doc_id",
-                "left_anti",
-            )
-        return live
+        return _match_all_ids(spark, index, fterms, eterms)
     # wildcard clauses: each is ONE clause matched by any dict expansion
     live_groups = [g for g, _ in plan.groups if g]
     if not plan.terms and not plan.groups:
@@ -1320,6 +1438,32 @@ def match_ids(
         spark, index, clauses, filters=fterms, excluded=eterms,
         require_n=plan.n_required if plan.conjunctive else 1,
     )
+
+
+def _match_all_ids(
+    spark: SparkSession, index: Index, fterms: set, eterms: set[str]
+) -> DataFrame:
+    """MatchAllDocsQuery (the /browse handler's q.alt=*:* landing page,
+    solrconfig.xml:879), incl. Solr's pure-negative top-level rewrite
+    ``*:* AND NOT ...``: every live doc, optionally fq-restricted by
+    ``fterms``, minus the docs posting any ``eterms`` term.  The unfiltered
+    case reads ONE int column of the docs table (columnar pruned scan, no
+    postings touched); filtered goes index-side.  Unordered ``doc_id``
+    rows."""
+    if fterms:
+        return keyword_filter(spark, index, fterms, excluded=eterms)
+    live = index.docs(spark).select("doc_id")
+    if index.has_deletes:
+        live = live.join(
+            F.broadcast(index.deleted_ids(spark)), "doc_id", "left_anti"
+        )
+    if eterms:
+        live = live.join(
+            _match_frame(spark, index, [frozenset(eterms)]),
+            "doc_id",
+            "left_anti",
+        )
+    return live
 
 
 def _min_match_count(min_match: int | str, n_terms: int) -> int:
@@ -1482,14 +1626,15 @@ def search(
             top = local_frame(spark, [], _RESULT_SCHEMA)
     else:
 
-        def _ranked(kk: int | None) -> DataFrame:
+        def _ranked(kk: int | None, skip: int = 0) -> Ranked:
             return _ranked_top(
                 spark, index, plan, dfs, kk, mm=mm,
-                exhaustive=mode == "taat",
+                exhaustive=mode == "taat", start=skip,
             )
 
         if doc_filter is None:
-            top = _ranked(fetch_k)  # k=None returns ALL matches
+            # k=None returns ALL matches; paging applies to them too
+            top = _ranked(fetch_k, start)
         elif k is None:
             # exhaustive + doc filter: one distributed semi-join, no collect
             top = _ranked(None).join(
@@ -1515,12 +1660,11 @@ def search(
             top = None
             survivors: list = []
             while True:
-                cand = _ranked(fetch).collect()
+                cand = _rows(_ranked(fetch))
                 ok = _doc_filter_probe(
-                    spark, index, doc_filter,
-                    [int(r["doc_id"]) for r in cand],
+                    spark, index, doc_filter, [d for d, _ in cand]
                 )
-                survivors = [r for r in cand if int(r["doc_id"]) in ok][:need]
+                survivors = [r for r in cand if r[0] in ok][:need]
                 if len(survivors) >= need or len(cand) < fetch:
                     break
                 fetch *= 4
@@ -1540,15 +1684,11 @@ def search(
             if top is None:
                 # the survivors keep the candidates' rank order, and a
                 # LocalRelation keeps its row order: no global sort needed
-                top = local_frame(
-                    spark,
-                    [(int(r["doc_id"]), float(r["score"])) for r in survivors],
-                    _RESULT_SCHEMA,
-                )
-        if start:  # paging applies to k=None too (ordered exhaustive result)
+                top = local_frame(spark, survivors, _RESULT_SCHEMA)
+        if start and doc_filter is not None:
             top = top.offset(start)
     if not with_stored:
-        return top
+        return _frame(spark, top)
     out = _fetch_stored(spark, index, top, bounded=k is not None, fl=fl)
     return out.drop("score") if fl is not None and "score" not in fl else out
 
@@ -1621,7 +1761,10 @@ def search_dismax(
                 f"entry ({sorted(text_set)})"
             )
     plan = plan_query(query, spec.keyword_fields, filters, synonyms, op)
-    if any(is_multiterm(t) for t in plan.text.split() + plan.prohibited):
+    if any(
+        is_multiterm(t) and t != "*:*"
+        for t in plan.text.split() + plan.prohibited
+    ):
         raise ValueError(
             "wildcard clauses are not supported in dismax (qf) queries — "
             "use search() for wildcard retrieval"
@@ -1641,6 +1784,23 @@ def search_dismax(
             for f in qf:
                 eterms.add(t if f == spec.content_field else f"{f}{KW_SEP}{t}")
     plan = plan._replace(excluded=eterms)
+    fetch_k = None if k is None else k + start
+    if plan.match_all:
+        # q.alt=*:* (solrconfig.xml:879): score 1.0, doc_id order, fq and
+        # paging applied; a pure-negative query is ``*:* -t`` with the
+        # qf-wide exclusion above
+        top = (
+            _match_all_ids(spark, index, plan.filters, eterms)
+            .select("doc_id", F.lit(1.0).alias("score"))
+            .orderBy("doc_id")
+        )
+        if k is not None:
+            top = top.limit(fetch_k)
+        if start:
+            top = top.offset(start)
+        if not with_stored:
+            return top
+        return _fetch_stored(spark, index, top, bounded=k is not None)
     avgdl_f = {
         f: (
             index.avgdl
@@ -1669,7 +1829,6 @@ def search_dismax(
         if (min_match is not None and not plan.conjunctive and clauses)
         else None
     )
-    fetch_k = None if k is None else k + start
     if (
         not dfs
         or (plan.conjunctive and len(present) < n_clauses)
@@ -1694,11 +1853,12 @@ def search_dismax(
             require_n=n_clauses if plan.conjunctive else mm,
             excluded_terms=eterms,
         )
-        top = _merge_topk(_plan_scan(spark, index, plan, dfs), kernel, fetch_k)
-        if start:
-            top = top.offset(start)
+        top = _merge_topk(
+            spark, index, _plan_terms(plan, dfs), _SCORE_COLS, kernel,
+            fetch_k, start,
+        )
     if not with_stored:
-        return top
+        return _frame(spark, top)
     return _fetch_stored(spark, index, top, bounded=k is not None)
 
 
@@ -1754,7 +1914,18 @@ def search_after(
         plan_query(query, index.spec.keyword_fields, filters, synonyms, op),
     )
     dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
-    if not _zero_hit(plan, dfs):
+    if plan.match_all:
+        # MatchAllDocsQuery, as search serves it: score 1.0 in doc_id
+        # order — the cursor degenerates to a doc_id floor
+        out = _match_all_ids(spark, index, plan.filters, plan.excluded)
+        if cursor is not None:
+            out = out.filter(F.col("doc_id") > int(cursor[1]))
+        top = (
+            out.orderBy("doc_id")
+            .limit(k)
+            .select("doc_id", F.lit(1.0).alias("score"))
+        )
+    elif not _zero_hit(plan, dfs):
         top = _ranked_top(
             spark, index, plan, dfs, k, cursor=cursor, exhaustive=True
         )
@@ -1768,7 +1939,7 @@ def search_after(
     else:
         top = local_frame(spark, [], _RESULT_SCHEMA)
     if not with_stored:
-        return top
+        return _frame(spark, top)
     return _fetch_stored(spark, index, top, bounded=True)
 
 
@@ -1784,6 +1955,16 @@ def _phrase_terms(phrase: str) -> list[str]:
     for t, p in tokenize_with_positions(phrase):
         first_at.setdefault(p, t)  # parts are emitted before the whole
     return [first_at[p] for p in sorted(first_at)]
+
+
+# Ranked phrase projection: the phrase kernel never uses the block pruning
+# stats or sum_tf — they stay in the parquet footer.
+_PHRASE_COLS = [
+    "shard", "term", "salt", "n_docs", "n_blocks",
+    "doc_ids", "boffs_ids", "block_last_id",
+    "tfs", "boffs_tfs", "dls", "boffs_dls",
+    "pos", "boffs_pos",
+]
 
 
 def _phrase_kernel(
@@ -2080,37 +2261,23 @@ def search_phrase(
     terms = _phrase_terms(phrase)
     fterms = filter_terms_of(filters)
     fetch_k = None if k is None else k + start
-    if not terms:
+    dfs = term_dfs(spark, index, list(dict.fromkeys(terms))) if terms else {}
+    if not terms or len(dfs) < len(set(terms)):
+        # no phrase, or a phrase term with df=0 empties the conjunction
         top = local_frame(spark, [], _RESULT_SCHEMA)
     else:
-        dfs = term_dfs(spark, index, list(dict.fromkeys(terms)))
-        if len(dfs) < len(set(terms)):
-            # a phrase term with df=0 empties the conjunction
-            top = local_frame(spark, [], _RESULT_SCHEMA)
-        else:
-            spec = index.spec
-            idf_sum = sum(
-                bm25_idf(dfs[t], index.n_docs) for t in terms
-            )
-            kernel = _phrase_kernel(
-                terms, idf_sum, index.avgdl, spec.k1, spec.b, fetch_k,
-                spec.block_size, fterms, slop=slop,
-            )
-            # the phrase kernel never uses the block pruning stats or sum_tf
-            # — keep them in the parquet footer
-            matched = index.postings(spark).filter(
-                F.col("term").isin(_scan_terms(index, list(dfs) + list(fterms)))
-            ).select(
-                "shard", "term", "salt", "n_docs", "n_blocks",
-                "doc_ids", "boffs_ids", "block_last_id",
-                "tfs", "boffs_tfs", "dls", "boffs_dls",
-                "pos", "boffs_pos",
-            )
-            top = _merge_topk(matched, kernel, fetch_k)
-    if start:
-        top = top.offset(start)
+        spec = index.spec
+        idf_sum = sum(bm25_idf(dfs[t], index.n_docs) for t in terms)
+        kernel = _phrase_kernel(
+            terms, idf_sum, index.avgdl, spec.k1, spec.b, fetch_k,
+            spec.block_size, fterms, slop=slop,
+        )
+        top = _merge_topk(
+            spark, index, list(dfs) + list(fterms), _PHRASE_COLS, kernel,
+            fetch_k, start,
+        )
     if not with_stored:
-        return top
+        return _frame(spark, top)
     return _fetch_stored(spark, index, top, bounded=k is not None)
 
 

@@ -1,5 +1,16 @@
+import shutil
+
 import pytest
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
+
+from cascading_solr_spark.spec import IndexSpec
+
+#: positional, with a ``lang`` keyword field and ``path`` as a text field
+TIER_SPEC = IndexSpec(
+    num_shards=3, salt_buckets=2, block_size=16, positions=True,
+    keyword_fields=("lang",), text_fields=("path",),
+)
 
 
 @pytest.fixture(scope="session")
@@ -17,3 +28,38 @@ def spark():
     )
     s.sparkContext.setLogLevel("WARN")
     yield s
+
+
+@pytest.fixture
+def distributed_tier(monkeypatch):
+    """Force every bounded ranked request onto the distributed tier: no
+    driver-local read is under a cap of 0 bytes.  Job pins and plan
+    guards of the Spark path use this."""
+    from cascading_solr_spark.indexing.build import Index
+
+    monkeypatch.setattr(Index, "LOCAL_SCAN_MAX_BYTES", 0)
+
+
+@pytest.fixture(scope="session")
+def tier_indexes(spark, tmp_path_factory):
+    """Dirs of a plain TIER_SPEC index of 240 synthetic files, and of a copy
+    with every 7th id deleted and then a 60-file segment appended."""
+    from cascading_solr_spark.corpus import synth_corpus
+    from cascading_solr_spark.indexing import (
+        append_documents,
+        build_index,
+        delete_documents,
+    )
+
+    root = tmp_path_factory.mktemp("tier")
+    plain = str(root / "plain")
+    corpus = synth_corpus(spark, 240, partitions=3)
+    build_index(spark, corpus, TIER_SPEC, plain)
+    mut = str(root / "mut")
+    shutil.copytree(plain, mut)
+    delete_documents(spark, mut, list(range(0, 240, 7)))
+    batch = synth_corpus(spark, 60, partitions=2).withColumn(
+        "repo", F.concat(F.lit("new/"), "repo")
+    )
+    append_documents(spark, mut, batch)
+    return {"plain": plain, "mut": mut}

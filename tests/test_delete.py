@@ -267,6 +267,7 @@ def test_cursor_sorted_rtget_elevation(spark, setup):
     assert len(elev) == 5
 
 
+@pytest.mark.usefixtures("distributed_tier")
 def test_delete_by_query_and_scan_gating(spark, setup, tmp_path):
     orig, mut, victims = setup
     # plan gating: the tombstone term joins the scan ONLY with deletes

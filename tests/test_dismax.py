@@ -238,6 +238,7 @@ def test_dismax_zero_hit_and_stored(spark, dm_index):
 # -------------------------------------------------------------------- plan
 
 
+@pytest.mark.usefixtures("distributed_tier")
 def test_dismax_plan_is_term_pruned_and_posless(spark, dm_index):
     """The multi-field scan stays an explicit IN-list over (field, token)
     candidates pushed to parquet, and never reads the positional payload."""

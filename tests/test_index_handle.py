@@ -57,6 +57,16 @@ def test_fresh_handle_reads_known_schemas(spark, lifecycle):
         ), stage
 
 
+def test_fresh_handle_opens_docs_without_a_job(spark, lifecycle):
+    # the docs schema recorded in meta at build survives append, compact
+    # and a snapshot, and is exactly what Spark would infer
+    for stage, path in lifecycle.items():
+        ix = Index.load(path)
+        got = []
+        assert _spark_jobs(spark, lambda: got.append(ix.docs(spark))) == 0
+        assert got[0].schema == spark.read.parquet(ix.docs_path).schema, stage
+
+
 def test_dict_cache_runs_no_job_and_matches_the_fold(spark, lifecycle):
     for stage, path in lifecycle.items():
         ix = Index.load(path)
@@ -83,11 +93,12 @@ def test_dict_cache_cap_falls_back_to_distributed_dfs(
         monkeypatch.undo()
 
 
+@pytest.mark.usefixtures("distributed_tier")
 def test_first_query_on_a_fresh_handle(spark, lifecycle):
-    # dict cache (0 jobs) + postings (no schema inference) + the ranked
-    # request's own jobs; the docs read still infers its schema
+    # dict cache (0 jobs) + postings and docs (no schema inference) + the
+    # ranked request's own jobs
     ix = Index.load(lifecycle["append"])
     got = _spark_jobs(
         spark, lambda: search(spark, ix, "parse buffer", k=5).collect()
     )
-    assert got == 5, got
+    assert got == 4, got

@@ -318,6 +318,7 @@ def ranked_index(spark, corpus, tmp_path_factory):
     return build_index(spark, corpus, RANKED_SPEC, out)
 
 
+@pytest.mark.usefixtures("distributed_tier")
 def test_ranked_request_jobs_and_result_schema(spark, ranked_index):
     # a warm handle (dict cache filled): a k-bounded ranked request with the
     # stored fetch is the top-k scan's jobs plus one pruned docs stage, and

@@ -228,6 +228,7 @@ def test_phrase_survives_append_and_compact(spark, corpus, tmp_path):
     assert got3 == _want(_oracle(rows, "turbo writer"))
 
 
+@pytest.mark.usefixtures("distributed_tier")
 def test_ranked_search_identical_and_pos_pruned(spark, corpus, tmp_path):
     """A positional index answers ranked queries IDENTICALLY to a
     positionless one, and the ranked plan never reads the pos payload."""

@@ -53,6 +53,7 @@ def _scan_columns(plan: str) -> list[set]:
     return out
 
 
+@pytest.mark.usefixtures("distributed_tier")
 def test_phrase_scan_prunes_block_stats(spark, index):
     """The ranked phrase scan reads positions but never the block pruning
     stats or sum_tf (they are MaxScore machinery, not phrase machinery)."""
@@ -76,6 +77,7 @@ def test_phrase_match_only_scan_prunes_dls(spark, index):
         assert "dls" not in s and "block_max_tf" not in s
 
 
+@pytest.mark.usefixtures("distributed_tier")
 def test_ranked_search_never_reads_positions(spark, index):
     """Ranked/mm queries on a positional index keep the pos payload in the
     parquet footer."""

@@ -475,6 +475,7 @@ def _spark_jobs(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+@pytest.mark.usefixtures("distributed_tier")
 def test_spark_jobs_per_call(spark, r5_index):
     from cascading_solr_spark.indexing.build import Index
     from cascading_solr_spark.query.search import (
