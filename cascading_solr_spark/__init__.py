@@ -21,9 +21,9 @@ Nothing here is a port: all Java classes in the reference are cited in
 docstrings only to establish behavioral parity.
 """
 
-from cascading_solr_spark.analyzer import tokenize, analyze_col
+from cascading_solr_spark.analyzer import tokenize
 from cascading_solr_spark.spec import IndexSpec, validate_schema
 
-__all__ = ["tokenize", "analyze_col", "IndexSpec", "validate_schema"]
+__all__ = ["tokenize", "IndexSpec", "validate_schema"]
 
 __version__ = "0.1.0"

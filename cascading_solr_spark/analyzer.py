@@ -14,13 +14,17 @@ Mirrors the analyzer semantics of the reference's Solr test schema
   lowercase query ``turbowriter`` match the stored value "TurboWriter 2.3"
   (reference README.md:96-99, AbstractSolrSchemeTest.java:155-159).
 
-Two implementations, kept rank-identical by `tests/test_analyzer.py`:
+One implementation, pure Python, two entry shapes:
 
-* :func:`tokenize` — pure Python, used by the query parser and the pytest
-  oracle (the analogue of Solr's query-time chain, schema.xml:432-437).
-* :func:`analyze_col` — a Catalyst expression tree (split / regexp_extract_all
-  / transform / flatten), fully JVM-side and whole-stage-codegen'd: the hot
-  index-build path never leaves the JVM for tokenization.
+* :func:`tokenize` / :func:`tokenize_with_positions` — the query parser and
+  the pytest oracle (the analogue of Solr's query-time chain,
+  schema.xml:432-437);
+* :func:`make_cached_tokenizer` / :func:`make_cached_position_tokenizer` —
+  the same chain memoized per word, which the index build runs inside its
+  Arrow-batched Python workers (``indexing/build.py`` ``_spimi_tf_kernel``)
+  and :func:`~cascading_solr_spark.query.naive.tokens_long` reuses.  Build
+  and query therefore share one analyzer by construction; the memoized
+  forms are held behavior-identical by ``tests/test_analyzer.py``.
 
 Hot terms (stopword-grade code tokens such as ``import`` / ``return``) are NOT
 dropped — skew is handled by shuffle salting in indexing/build.py, per the
@@ -30,9 +34,6 @@ empty stopwords.txt in the reference config.
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # Primary tokenizer: maximal alphanumeric runs (StandardTokenizer
 # approximation appropriate for source code: `foo.bar(baz_qux)` ->
@@ -47,15 +48,13 @@ SUB_PATTERN = r"[A-Z]+(?![a-z])|[A-Z][a-z]+|[a-z]+|[0-9]+"
 _WORD_RE = re.compile(WORD_PATTERN)
 _SUB_RE = re.compile(SUB_PATTERN)
 
-# Split-on-non-alnum pattern for the Column implementation (Java regex).
-_SPLIT_PATTERN = r"[^A-Za-z0-9]+"
-
 
 def tokenize(text: str | None) -> list[str]:
     """Pure-Python analyzer: ``content -> [term]`` (with duplicates, in order).
 
     Deterministic; the single source of truth for query parsing and the
-    pytest BM25 oracle.  Must stay behavior-identical to :func:`analyze_col`.
+    pytest BM25 oracle.  The memoized build forms must stay
+    behavior-identical to it.
     """
     if text is None:
         return []
@@ -135,42 +134,6 @@ def make_cached_position_tokenizer():
         return out
 
     return tokenize_pos_fast
-
-
-def analyze_col(col: Column | str) -> Column:
-    """Catalyst-expression analyzer: string column -> array<string> of terms.
-
-    Pure JVM-side (split + regexp_extract_all + higher-order functions), so
-    tokenization of the 100 TB corpus never crosses the JVM/Python boundary.
-    Behavior-identical to :func:`tokenize` (enforced by tests).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    # null content -> [] (the reference silently skips nulls, SolrWriter.java:65-66)
-    c = F.coalesce(c, F.lit(""))
-    primaries = F.filter(F.split(c, _SPLIT_PATTERN), lambda x: x != F.lit(""))
-
-    # Stage 1: run the word-delimiter regex ONCE per word, stashing the
-    # lowered word + lowered parts in a struct (Catalyst does not CSE inside
-    # higher-order-function lambdas, so naive re-use would re-run the regex).
-    staged = F.transform(
-        primaries,
-        lambda w: F.struct(
-            F.lower(w).alias("lw"),
-            F.transform(
-                F.regexp_extract_all(w, F.lit(SUB_PATTERN), F.lit(0)), F.lower
-            ).alias("parts"),
-        ),
-    )
-    # Stage 2: emit parts + catenated whole for multi-part identifiers.
-    return F.flatten(
-        F.transform(
-            staged,
-            lambda s: F.when(
-                F.size(s["parts"]) > 1,
-                F.concat(s["parts"], F.array(s["lw"])),
-            ).otherwise(F.array(s["lw"])),
-        )
-    )
 
 
 def make_cached_tokenizer():

@@ -51,9 +51,8 @@ from cascading_solr_spark.analyzer import analyze_query
 from cascading_solr_spark.codec import bm25_idf, bm25_tf_norm, decode_doc_ids, decode_varint
 from cascading_solr_spark.indexing.build import KW_SEP, Index
 from cascading_solr_spark.query.search import (
-    _fetch_stored,
-    _frame,
     _merge_topk,
+    _respond,
     term_dfs,
 )
 from cascading_solr_spark.query.wand import (
@@ -379,6 +378,13 @@ def boolean_kernel(
     return shard_kernel(score_rows)
 
 
+#: the kernel's postings projection: ids, tfs and dls, no positions
+_BOOLEAN_COLS = [
+    "shard", "term", "salt", "n_docs", "n_blocks",
+    "doc_ids", "boffs_ids", "block_last_id", "tfs", "dls",
+]
+
+
 def search_boolean(
     spark: SparkSession,
     index: Index,
@@ -394,20 +400,21 @@ def search_boolean(
     dfs = term_dfs(spark, index, all_terms)
     spec = index.spec
     idf = {t: bm25_idf(d, index.n_docs) for t, d in dfs.items()}
-    kernel = boolean_kernel(
-        node, idf, index.avgdl, spec.k1, spec.b, k, spec.block_size
+
+    def scored(kk: int | None, skip: int):
+        kernel = boolean_kernel(
+            node, idf, index.avgdl, spec.k1, spec.b, kk, spec.block_size
+        )
+        return _merge_topk(
+            spark, index, all_terms, _BOOLEAN_COLS, kernel, kk, skip
+        )
+
+    # the kernel's universe is the union of the positive leaves' postings:
+    # with no term posted anywhere the answer is empty, exactly
+    return _respond(
+        spark, index, None, scored if dfs else None, k,
+        with_stored=with_stored,
     )
-    top = _merge_topk(
-        spark, index, all_terms,
-        [
-            "shard", "term", "salt", "n_docs", "n_blocks",
-            "doc_ids", "boffs_ids", "block_last_id", "tfs", "dls",
-        ],
-        kernel, k,
-    )
-    if not with_stored:
-        return _frame(spark, top)
-    return _fetch_stored(spark, index, top, bounded=k is not None)
 
 
 def boolean_match_ids(

@@ -2,10 +2,10 @@
 
 Documents are tokenized once by the memoized Arrow tokenizer
 (:func:`tokens_long`, one ``mapInPandas`` pass — the SPIMI build's own
-analyzer); everything after it is built-in Catalyst ops (filter, partial +
-final hash aggregation, broadcast joins), with no postings, codec or
-scoring kernel involved.  (:func:`corpus_stats` alone still measures doc
-lengths with the Catalyst ``analyze_col`` twin.)  Used three ways:
+analyzer, so tokenization leaves the JVM exactly as the build's does);
+everything after it is built-in Catalyst ops (filter, partial + final hash
+aggregation, broadcast joins), with no postings, codec or scoring kernel
+involved.  Used three ways:
 
 1. the "minimum slice" end-to-end query path (SURVEY.md §7.4);
 2. the oracle twin for the driver's DuckDB correctness gate — the same
@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cascading_solr_spark.analyzer import analyze_col, analyze_query
+from cascading_solr_spark.analyzer import analyze_query
 from cascading_solr_spark.indexing.build import local_frame
 
 
@@ -31,13 +31,13 @@ def tokens_long(
     """(doc_id, dl, term, tf) — analyzed term frequencies.
 
     Tokenization runs in the SPIMI kernels' memoized Python tokenizer
-    (Arrow-batched, one worker pass, guide §4.2) rather than the
-    ``analyze_col`` Catalyst tree: the two are behavior-identical by the
-    analyzer parity tests (and the DuckDB oracle re-pins the output of this
-    exact function), and the expression tree's interpreted HOF segments
-    made the honest per-call cost ~5x the kernel's (r6b).  The per-doc
-    Counter emits distinct (doc, term) rows directly — no explode +
-    re-aggregation shuffle of the raw token stream.
+    (Arrow-batched, one worker pass, guide §4.2), behavior-identical to
+    :func:`~cascading_solr_spark.analyzer.tokenize` by the analyzer parity
+    test (and the DuckDB oracle re-pins the output of this exact
+    function); a Catalyst expression-tree twin was dropped because its
+    interpreted HOF segments made the per-call cost ~5x the kernel's
+    (r6b).  The per-doc Counter emits distinct (doc, term) rows directly —
+    no explode + re-aggregation shuffle of the raw token stream.
 
     Ids must be integer-valued: a null id, or one that does not convert to
     a long (``"a17"``), raises ValueError from the kernel — the check rides
@@ -93,10 +93,17 @@ def corpus_stats(
     docs: DataFrame, content_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(n, avgdl) over ALL docs (zero-token docs included) — must match the
-    compressed index's stats (docs-table count/avg) for rank-identity."""
-    return docs.select(F.size(analyze_col(content_col)).alias("dl")).agg(
-        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-    )
+    compressed index's stats (docs-table count/avg) for rank-identity.
+
+    Derived from :func:`tokens_long` the way :func:`bm25_topk_df` derives
+    them: n counts the doc rows, and avgdl = Σtf / n — numerically
+    IDENTICAL to avg(dl), because every intermediate is an integer below
+    2^53 (exact in double) and a zero-token or null doc adds 0 to Σtf and
+    1 to n; null when there are no docs."""
+    n = docs.agg(F.count("*").alias("n"))
+    tt = tokens_long(docs, content_col, id_col).agg(F.sum("tf").alias("tt"))
+    avgdl = F.when(F.col("n") > 0, F.coalesce("tt", F.lit(0)) / F.col("n"))
+    return n.crossJoin(tt).select("n", avgdl.alias("avgdl"))
 
 
 def _bm25_contrib(k1: float, b: float) -> Column:
@@ -135,8 +142,8 @@ def bm25_topk_df(
     # still count), and avgdl = Σtf / n — numerically IDENTICAL to avg(dl)
     # because every intermediate is an integer below 2^53 (exact in
     # double), and zero-token/null docs contribute 0 to Σtf and 1 to n
-    # exactly as they contributed dl=0 to the avg (analyze_col coalesces
-    # null to "").
+    # exactly as they contributed dl=0 to the avg (a null text tokenizes
+    # to []).
     from pyspark.sql import Observation
 
     from cascading_solr_spark.operators.dedup import _persist, _swap_persisted

@@ -41,6 +41,13 @@ One path serves every ranked and matching entry point:
 4. a global order-merge takes the final k.  Ties broken (score desc,
    doc_id asc) for deterministic rank-identity.
 
+Every ranked entry point (:func:`search`, :func:`search_dismax`,
+:func:`search_after`, :func:`search_phrase`, ``boolean.search_boolean``)
+builds only its query and kernel, and answers through ONE request shell,
+:func:`_respond` — the one place for paging (``start``/``k``), the
+``doc_filter`` fq post-filter, the match-all and pure-filter legs, the
+zero-hit answer, the stored fetch and ``fl``.
+
 Steps 3-4 (:func:`_merge_topk`) and the stored fetch (:func:`_fetch_stored`)
 each run on one of two tiers with the same result, rows and schema alike:
 
@@ -732,6 +739,11 @@ class QueryPlan(NamedTuple):
         )
 
     @property
+    def filter_only(self) -> bool:
+        """A pure filter query: fq clauses and no clause that scores."""
+        return bool(self.filters) and not self.terms and not self.groups
+
+    @property
     def n_required(self) -> int:
         """Clause count an AND query must match: distinct terms plus
         constant-score groups (an empty expansion still counts)."""
@@ -1231,7 +1243,7 @@ def _fetch_stored(
             docs = docs.select("doc_id", "shard", *docs_cols)
         return (
             docs.drop("shard")
-            .join(top.hint("shuffle_hash"), "doc_id")
+            .join(_frame(spark, top).hint("shuffle_hash"), "doc_id")
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
     rows = _rows(top)
@@ -1244,15 +1256,9 @@ def _fetch_stored(
     docs = index.docs(spark)
     if docs_cols is not None:
         docs = docs.select("doc_id", "shard", *docs_cols)
-    if not rows:
-        return (
-            docs.drop("shard")
-            .join(F.broadcast(local_frame(spark, [], right)), "doc_id")
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-        )
     ids = [d for d, _ in rows]
     shards = sorted({i % index.spec.num_shards for i in ids})
-    small = F.broadcast(local_frame(spark, rows, _RESULT_SCHEMA))
+    small = F.broadcast(local_frame(spark, rows, right))
     pruned = docs.filter(F.col("shard").isin(shards) & F.col("doc_id").isin(ids))
     return (
         pruned.drop("shard")
@@ -1323,14 +1329,16 @@ def keyword_filter(
     return out if k is None else out.limit(k)
 
 
-def _doc_filter_ids(
-    spark: SparkSession, index: Index, doc_filter: str
+def _doc_filter_semi(
+    spark: SparkSession, index: Index, top: DataFrame, doc_filter: str
 ) -> DataFrame:
-    """doc_ids of stored docs satisfying a SQL predicate over stored
-    fields (the Solr frange / PostFilter analogue: ``textlen >= 150``).
-    The predicate pushes down to the docs parquet scan and the projection
+    """The rows of ``top`` whose stored doc satisfies a SQL predicate over
+    stored fields (the Solr frange / PostFilter analogue: ``textlen >=
+    150``) — one distributed shuffle-hash semi-join, never a collect.  The
+    predicate pushes down to the docs parquet scan and the projection
     prunes to doc_id + the referenced columns — never a wide read."""
-    return index.docs(spark).filter(doc_filter).select("doc_id")
+    ids = index.docs(spark).filter(doc_filter).select("doc_id")
+    return top.join(ids.hint("shuffle_hash"), "doc_id", "semi")
 
 
 def _doc_filter_probe(
@@ -1404,11 +1412,7 @@ def match_ids(
         base = match_ids(
             spark, index, query, filters=filters, synonyms=synonyms, op=op
         )
-        return base.join(
-            _doc_filter_ids(spark, index, doc_filter).hint("shuffle_hash"),
-            "doc_id",
-            "semi",
-        )
+        return _doc_filter_semi(spark, index, base, doc_filter)
     qs = query.strip()
     pq = parse_quoted(qs)
     if pq is not None:
@@ -1420,20 +1424,13 @@ def match_ids(
         plan_query(qs, index.spec.keyword_fields, filters, synonyms, op),
     )
     fterms, eterms = plan.filters, plan.excluded
-    if plan.match_all:
+    if plan.match_all or plan.filter_only:
         return _match_all_ids(spark, index, fterms, eterms)
-    # wildcard clauses: each is ONE clause matched by any dict expansion
-    live_groups = [g for g, _ in plan.groups if g]
-    if not plan.terms and not plan.groups:
-        return (
-            keyword_filter(spark, index, fterms, excluded=eterms)
-            if fterms
-            else _empty_ids(spark)
-        )
     dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
     if _zero_hit(plan, dfs):
         return _empty_ids(spark)
-    clauses = [frozenset([t]) for t in dfs] + live_groups
+    # wildcard clauses: each is ONE clause matched by any dict expansion
+    clauses = [frozenset([t]) for t in dfs] + [g for g, _ in plan.groups if g]
     return _match_frame(
         spark, index, clauses, filters=fterms, excluded=eterms,
         require_n=plan.n_required if plan.conjunctive else 1,
@@ -1478,6 +1475,93 @@ def _min_match_count(min_match: int | str, n_terms: int) -> int:
     else:
         mm = int(min_match)
     return max(1, min(mm, n_terms))
+
+
+def _unscored(
+    spark: SparkSession, index: Index, plan: QueryPlan, score: float,
+    k: int | None, start: int, cursor: tuple | None, doc_filter: str | None,
+) -> DataFrame:
+    """The unscored legs of a ranked request at a constant ``score``: the
+    match-all leg (``*:*``, ``*:* -t``, ``-t``: 1.0, Lucene's
+    MatchAllDocsQuery) and the pure-filter leg (0.0).  Matching live docs
+    in doc_id order (a cursor degenerates to a doc_id floor), semi-joined
+    to ``doc_filter`` BEFORE the limit, then rows ``[start, start + k)``."""
+    ids = _match_all_ids(spark, index, plan.filters, plan.excluded)
+    if cursor is not None:
+        ids = ids.filter(F.col("doc_id") > int(cursor[1]))
+    if doc_filter is not None:
+        ids = _doc_filter_semi(spark, index, ids, doc_filter)
+    top = ids.orderBy("doc_id")
+    if k is not None:
+        top = top.limit(k + start)
+    if start:
+        top = top.offset(start)
+    return top.select("doc_id", F.lit(score).alias("score"))
+
+
+def _post_filter(
+    spark: SparkSession, index: Index, scored, doc_filter: str,
+    k: int | None, start: int,
+) -> Ranked:
+    """Rows ``[start, start + k)`` of a scored request that satisfy the
+    stored-field predicate ``doc_filter`` (Lucene's PostFilter; ranking
+    stats unchanged).  Bounded: rank 4·need candidates (need = start + k),
+    point-probe them, and escalate geometrically until ``need`` survive or
+    the candidates run out — exact, O(k) for a permissive filter, and the
+    survivors stay driver rows.  The escalation is CAPPED at 64·need, or an
+    ultra-selective filter would walk the ENTIRE match set across the
+    driver (the 100 TB driver-OOM shape); past the cap, and for k=None, the
+    ranked match set is semi-joined to the predicate — no collect."""
+    if k is not None:
+        need = k + start
+        fetch, cap = max(4 * need, 64), max(64 * need, 1024)
+        while fetch <= cap:
+            cand = _rows(scored(fetch, 0))
+            ok = _doc_filter_probe(spark, index, doc_filter, [d for d, _ in cand])
+            survivors = [r for r in cand if r[0] in ok][:need]
+            if len(survivors) >= need or len(cand) < fetch:
+                return survivors[start:]
+            fetch *= 4
+    top = _doc_filter_semi(spark, index, scored(None, 0), doc_filter).orderBy(
+        F.desc("score"), F.asc("doc_id")
+    )
+    if k is not None:
+        top = top.limit(k + start)
+    return top.offset(start) if start else top
+
+
+def _respond(
+    spark: SparkSession, index: Index, plan: QueryPlan | None, scored,
+    k: int | None, start: int = 0, cursor: tuple | None = None,
+    with_stored: bool = True, fl: list[str] | None = None,
+    doc_filter: str | None = None,
+) -> DataFrame:
+    """The request shell every ranked entry point answers through — Solr's
+    one /select component around whichever parser built the query: paging
+    (solrconfig.xml:484, :772), the match-all and pure-filter legs
+    (q.alt=*:*, solrconfig.xml:879), the ``doc_filter`` post-filter, the
+    stored fetch, and ``fl`` (which drops ``score`` unless listed).
+
+    ``scored(k, start) -> Ranked`` runs the entry point's own kernel
+    through :func:`_merge_topk`, None when the query is zero-hit.  ``plan``
+    is a flat query's resolved :class:`QueryPlan`: a match-all plan, or a
+    zero-hit pure-filter one, is :func:`_unscored`.  Phrase and boolean
+    queries pass no plan: their zero-hit answer is empty, filters or not."""
+    if plan is not None and (
+        plan.match_all or (scored is None and plan.filter_only)
+    ):
+        score = 1.0 if plan.match_all else 0.0
+        top = _unscored(spark, index, plan, score, k, start, cursor, doc_filter)
+    elif scored is None:
+        top = []  # Q7: the zero-hit answer
+    elif doc_filter is not None:
+        top = _post_filter(spark, index, scored, doc_filter, k, start)
+    else:
+        top = scored(None if k is None else k + start, start)
+    if not with_stored:
+        return _frame(spark, top)
+    out = _fetch_stored(spark, index, top, bounded=k is not None, fl=fl)
+    return out.drop("score") if fl is not None and "score" not in fl else out
 
 
 def search(
@@ -1561,136 +1645,23 @@ def search(
         spark, index,
         plan_query(q, index.spec.keyword_fields, filters, synonyms, op),
     )
-    fetch_k = None if k is None else k + start
-    if plan.match_all:
-        # MatchAllDocsQuery (q.alt=*:*, solrconfig.xml:879): constant score
-        # 1.0 (Lucene's match-all), doc_id order, normal paging/fq/stored.
-        # A pure-negative query follows Solr's top-level rewrite to
-        # ``*:* AND NOT ...`` (match_ids serves the exclusion).
-        top = (
-            match_ids(
-                spark, index, q, filters=filters, doc_filter=doc_filter,
-            )
-            .select("doc_id", F.lit(1.0).alias("score"))
-            .orderBy("doc_id")
-        )
-        if k is not None:
-            top = top.limit(fetch_k)
-        if start:
-            top = top.offset(start)
-        if not with_stored:
-            return top
-        out = _fetch_stored(spark, index, top, bounded=k is not None, fl=fl)
-        return out.drop("score") if fl is not None and "score" not in fl \
-            else out
-    fterms, eterms = plan.filters, plan.excluded
     dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
-    mm = (
-        _min_match_count(min_match, plan.n_required)
-        if (
-            min_match is not None
-            and not plan.conjunctive
-            and (plan.terms or plan.groups)
+    mm = None
+    if min_match is not None and not plan.conjunctive and plan.n_required:
+        mm = _min_match_count(min_match, plan.n_required)
+
+    def scored(kk: int | None, skip: int) -> Ranked:
+        return _ranked_top(
+            spark, index, plan, dfs, kk, mm=mm, exhaustive=mode == "taat",
+            start=skip,
         )
-        else None
+
+    # Q7 zero-hit short-circuit: under AND a term with global df=0 (or an
+    # empty wildcard expansion) empties the result outright
+    return _respond(
+        spark, index, plan, None if _zero_hit(plan, dfs, mm) else scored, k,
+        start, with_stored=with_stored, fl=fl, doc_filter=doc_filter,
     )
-    if _zero_hit(plan, dfs, mm):
-        # Q7 zero-hit short-circuit (schema stays stable below); under AND a
-        # term with global df=0 (or an empty wildcard expansion) empties
-        # the result outright
-        if fterms and not plan.terms and not plan.groups:
-            # pure filter query: matching docs ranked by doc_id, score 0
-            if doc_filter is None:
-                top = keyword_filter(
-                    spark, index, fterms, k=fetch_k, excluded=eterms
-                ).withColumn("score", F.lit(0.0))
-            else:
-                # filter BEFORE the limit: exhaustive keyword match set
-                # semi-joined distributed (a filter bitset, Lucene-style)
-                top = (
-                    keyword_filter(spark, index, fterms, excluded=eterms)
-                    .join(
-                        _doc_filter_ids(spark, index, doc_filter)
-                        .hint("shuffle_hash"),
-                        "doc_id",
-                        "semi",
-                    )
-                    .orderBy("doc_id")
-                    .withColumn("score", F.lit(0.0))
-                )
-                if k is not None:
-                    top = top.limit(fetch_k)
-            if start:
-                top = top.offset(start)
-        else:
-            top = local_frame(spark, [], _RESULT_SCHEMA)
-    else:
-
-        def _ranked(kk: int | None, skip: int = 0) -> Ranked:
-            return _ranked_top(
-                spark, index, plan, dfs, kk, mm=mm,
-                exhaustive=mode == "taat", start=skip,
-            )
-
-        if doc_filter is None:
-            # k=None returns ALL matches; paging applies to them too
-            top = _ranked(fetch_k, start)
-        elif k is None:
-            # exhaustive + doc filter: one distributed semi-join, no collect
-            top = _ranked(None).join(
-                _doc_filter_ids(spark, index, doc_filter)
-                .hint("shuffle_hash"),
-                "doc_id",
-                "semi",
-            ).orderBy(F.desc("score"), F.asc("doc_id"))
-        else:
-            # PostFilter overfetch loop: rank 4·need candidates, validate
-            # with a pruned point probe, escalate geometrically until k
-            # survivors or the candidate stream is exhausted — exact.  The
-            # escalation is CAPPED at 64·need collected candidates: an
-            # ultra-selective filter would otherwise walk the loop until the
-            # ENTIRE match set crossed the driver (unbounded collect — the
-
-            # 100 TB driver-OOM shape).  Past the cap we fall through to the
-            # k=None plan: one distributed semi-join against the filter ids
-            # + bounded top-k — same exact result, no driver materialization.
-            need = fetch_k
-            fetch = max(4 * need, 64)
-            cap = max(64 * need, 1024)
-            top = None
-            survivors: list = []
-            while True:
-                cand = _rows(_ranked(fetch))
-                ok = _doc_filter_probe(
-                    spark, index, doc_filter, [d for d, _ in cand]
-                )
-                survivors = [r for r in cand if r[0] in ok][:need]
-                if len(survivors) >= need or len(cand) < fetch:
-                    break
-                fetch *= 4
-                if fetch > cap:
-                    top = (
-                        _ranked(None)
-                        .join(
-                            _doc_filter_ids(spark, index, doc_filter)
-                            .hint("shuffle_hash"),
-                            "doc_id",
-                            "semi",
-                        )
-                        .orderBy(F.desc("score"), F.asc("doc_id"))
-                        .limit(need)
-                    )
-                    break
-            if top is None:
-                # the survivors keep the candidates' rank order, and a
-                # LocalRelation keeps its row order: no global sort needed
-                top = local_frame(spark, survivors, _RESULT_SCHEMA)
-        if start and doc_filter is not None:
-            top = top.offset(start)
-    if not with_stored:
-        return _frame(spark, top)
-    out = _fetch_stored(spark, index, top, bounded=k is not None, fl=fl)
-    return out.drop("score") if fl is not None and "score" not in fl else out
 
 
 def search_dismax(
@@ -1732,26 +1703,13 @@ def search_dismax(
     is the same shard fan-out as :func:`search`: one Arrow kernel per shard
     over only the query's posting rows, local top-k, global order-merge —
     the multi-field scan stays term-pruned because every (field, token)
-    candidate is an explicit IN-list entry."""
-    if doc_filter is not None:
-        # a stored-field post-filter makes the kernel's local top-k unsound
-        # (same rule as search_boosted): score the FULL dismax match set,
-        # ONE semi-join against the predicate's pushed-down docs scan,
-        # bounded global top-k, then the usual stored fetch
-        base = search_dismax(
-            spark, index, query, qf, tie=tie, k=None, with_stored=False,
-            filters=filters, synonyms=synonyms, op=op, min_match=min_match,
-        )
-        out = base.join(
-            _doc_filter_ids(spark, index, doc_filter).hint("shuffle_hash"),
-            "doc_id",
-            "semi",
-        ).orderBy(F.desc("score"), F.asc("doc_id"))
-        if k is not None:
-            out = out.offset(start).limit(k) if start else out.limit(k)
-        if with_stored:
-            return _fetch_stored(spark, index, out, bounded=k is not None)
-        return out
+    candidate is an explicit IN-list entry.
+
+    Everything around the kernel is :func:`search`'s request shell
+    (:func:`_respond`): q.alt=*:* and pure-negative queries (score 1.0,
+    doc_id order), pure filter queries (score 0.0), paging, and
+    ``doc_filter`` — the shared stored-field post-filter (bounded
+    overfetch with a pruned point probe; k=None is one semi-join)."""
     spec = index.spec
     text_set = set(spec.text_fields)
     for f in qf:
@@ -1772,8 +1730,9 @@ def search_dismax(
     plan = _resolve(spark, index, plan)
     # a prohibited CLAUSE excludes a doc matching it in ANY qf field
     # (Lucene: the MUST_NOT sub-query is itself a dismax over qf); keyword
-    # exclusions (incl. prohibited ranges) stay exact terms.  Analyzed
-    # tokens never contain ':' (alphanumeric runs), so the KW_SEP test is
+    # exclusions (incl. prohibited ranges) stay exact terms; a pure-negative
+    # query is ``*:* -t`` with this qf-wide exclusion.  Analyzed tokens
+    # never contain ':' (alphanumeric runs), so the KW_SEP test is
     # unambiguous.
     kwf = set(spec.keyword_fields)
     eterms: set[str] = set()
@@ -1784,23 +1743,6 @@ def search_dismax(
             for f in qf:
                 eterms.add(t if f == spec.content_field else f"{f}{KW_SEP}{t}")
     plan = plan._replace(excluded=eterms)
-    fetch_k = None if k is None else k + start
-    if plan.match_all:
-        # q.alt=*:* (solrconfig.xml:879): score 1.0, doc_id order, fq and
-        # paging applied; a pure-negative query is ``*:* -t`` with the
-        # qf-wide exclusion above
-        top = (
-            _match_all_ids(spark, index, plan.filters, eterms)
-            .select("doc_id", F.lit(1.0).alias("score"))
-            .orderBy("doc_id")
-        )
-        if k is not None:
-            top = top.limit(fetch_k)
-        if start:
-            top = top.offset(start)
-        if not with_stored:
-            return top
-        return _fetch_stored(spark, index, top, bounded=k is not None)
     avgdl_f = {
         f: (
             index.avgdl
@@ -1829,37 +1771,31 @@ def search_dismax(
         if (min_match is not None and not plan.conjunctive and clauses)
         else None
     )
-    if (
-        not dfs
-        or (plan.conjunctive and len(present) < n_clauses)
-        or (mm is not None and len(present) < mm)
-    ):
-        if plan.filters and not clauses:
-            top = keyword_filter(
-                spark, index, plan.filters, k=fetch_k, excluded=eterms
-            ).withColumn("score", F.lit(0.0))
-            if start:
-                top = top.offset(start)
-        else:
-            top = local_frame(spark, [], _RESULT_SCHEMA)
-    else:
-        terms = {}
-        for t, df in dfs.items():
-            bst, avgdl, ci = phys[t]
-            terms[t] = (bst * bm25_idf(df, index.n_docs), avgdl, ci)
+    terms = {  # (clause boost · idf, the field's avgdl, clause position)
+        t: (phys[t][0] * bm25_idf(df, index.n_docs), *phys[t][1:])
+        for t, df in dfs.items()
+    }
+
+    def scored(kk: int | None, skip: int) -> Ranked:
         kernel = _clause_kernel(
-            terms, tie, spec.k1, spec.b, fetch_k, spec.block_size,
-            plan.filters,
+            terms, tie, spec.k1, spec.b, kk, spec.block_size, plan.filters,
             require_n=n_clauses if plan.conjunctive else mm,
             excluded_terms=eterms,
         )
-        top = _merge_topk(
-            spark, index, _plan_terms(plan, dfs), _SCORE_COLS, kernel,
-            fetch_k, start,
+        return _merge_topk(
+            spark, index, _plan_terms(plan, dfs), _SCORE_COLS, kernel, kk,
+            skip,
         )
-    if not with_stored:
-        return _frame(spark, top)
-    return _fetch_stored(spark, index, top, bounded=k is not None)
+
+    zero = (
+        not dfs
+        or (plan.conjunctive and len(present) < n_clauses)
+        or (mm is not None and len(present) < mm)
+    )
+    return _respond(
+        spark, index, plan, None if zero else scored, k, start,
+        with_stored=with_stored, doc_filter=doc_filter,
+    )
 
 
 def search_after(
@@ -1901,46 +1837,24 @@ def search_after(
     separate page jobs even when shuffle row arrival differs; the collected
     cursor therefore compares exactly."""
     if cursor == CURSOR_END:
-        return (
-            local_frame(spark, [], _RESULT_SCHEMA)
-            if not with_stored
-            else _fetch_stored(
-                spark, index, local_frame(spark, [], _RESULT_SCHEMA),
-                bounded=True,
-            )
-        )
+        return _respond(spark, index, None, None, k, with_stored=with_stored)
     plan = _resolve(
         spark, index,
         plan_query(query, index.spec.keyword_fields, filters, synonyms, op),
     )
     dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
-    if plan.match_all:
-        # MatchAllDocsQuery, as search serves it: score 1.0 in doc_id
-        # order — the cursor degenerates to a doc_id floor
-        out = _match_all_ids(spark, index, plan.filters, plan.excluded)
-        if cursor is not None:
-            out = out.filter(F.col("doc_id") > int(cursor[1]))
-        top = (
-            out.orderBy("doc_id")
-            .limit(k)
-            .select("doc_id", F.lit(1.0).alias("score"))
+
+    def scored(kk: int | None, skip: int) -> Ranked:
+        return _ranked_top(
+            spark, index, plan, dfs, kk, cursor=cursor, exhaustive=True,
+            start=skip,
         )
-    elif not _zero_hit(plan, dfs):
-        top = _ranked_top(
-            spark, index, plan, dfs, k, cursor=cursor, exhaustive=True
-        )
-    elif plan.filters and not plan.terms and not plan.groups:
-        # pure filter query: (doc_id asc, score 0) order — the cursor
-        # degenerates to a doc_id floor
-        out = keyword_filter(spark, index, plan.filters, excluded=plan.excluded)
-        if cursor is not None:
-            out = out.filter(F.col("doc_id") > int(cursor[1]))
-        top = out.orderBy("doc_id").limit(k).withColumn("score", F.lit(0.0))
-    else:
-        top = local_frame(spark, [], _RESULT_SCHEMA)
-    if not with_stored:
-        return _frame(spark, top)
-    return _fetch_stored(spark, index, top, bounded=True)
+
+    # match-all and pure filter pages: the cursor is a doc_id floor
+    return _respond(
+        spark, index, plan, None if _zero_hit(plan, dfs) else scored, k,
+        cursor=cursor, with_stored=with_stored,
+    )
 
 
 def _phrase_terms(phrase: str) -> list[str]:
@@ -2184,6 +2098,23 @@ def _phrase_kernel(
     return shard_kernel(score_rows)
 
 
+def _phrase_request(
+    spark: SparkSession, index: Index, phrase: str, filters: dict | None
+) -> tuple[list[str], set[str], dict | None]:
+    """(position terms, filter terms, dfs) of a phrase query on a
+    positional index, dfs None when the phrase is zero-hit: no phrase
+    matches nothing (fq only restricts, as in Solr), and a phrase term with
+    df=0 empties the conjunction."""
+    if not index.spec.positions:
+        raise ValueError(
+            "phrase queries need a positional index (IndexSpec.positions=True)"
+        )
+    terms = _phrase_terms(phrase)
+    dfs = term_dfs(spark, index, list(dict.fromkeys(terms))) if terms else {}
+    zero = not terms or len(dfs) < len(set(terms))
+    return terms, filter_terms_of(filters), None if zero else dfs
+
+
 def phrase_match_ids(
     spark: SparkSession,
     index: Index,
@@ -2197,19 +2128,8 @@ def phrase_match_ids(
     quoted queries (``match_ids`` dispatches fully-quoted query strings
     here).  The kernel stops after positional verification: no dl decode,
     no idf arithmetic, no top-k merge."""
-    if not index.spec.positions:
-        raise ValueError(
-            "phrase queries need a positional index (IndexSpec.positions=True)"
-        )
-    terms = _phrase_terms(phrase)
-    fterms = filter_terms_of(filters)
-    if not terms:
-        return (
-            keyword_filter(spark, index, fterms) if fterms
-            else _empty_ids(spark)
-        )
-    dfs = term_dfs(spark, index, list(dict.fromkeys(terms)))
-    if len(dfs) < len(set(terms)):
+    terms, fterms, dfs = _phrase_request(spark, index, phrase, filters)
+    if dfs is None:
         return _empty_ids(spark)
     spec = index.spec
     kernel = _phrase_kernel(
@@ -2254,31 +2174,24 @@ def search_phrase(
     statistics.  ``filters`` compose exactly like :func:`search` (fq
     semantics).  Requires ``spec.positions=True`` (ValueError otherwise).
     """
-    if not index.spec.positions:
-        raise ValueError(
-            "phrase queries need a positional index (IndexSpec.positions=True)"
-        )
-    terms = _phrase_terms(phrase)
-    fterms = filter_terms_of(filters)
-    fetch_k = None if k is None else k + start
-    dfs = term_dfs(spark, index, list(dict.fromkeys(terms))) if terms else {}
-    if not terms or len(dfs) < len(set(terms)):
-        # no phrase, or a phrase term with df=0 empties the conjunction
-        top = local_frame(spark, [], _RESULT_SCHEMA)
-    else:
-        spec = index.spec
+    terms, fterms, dfs = _phrase_request(spark, index, phrase, filters)
+    spec = index.spec
+
+    def scored(kk: int | None, skip: int) -> Ranked:
         idf_sum = sum(bm25_idf(dfs[t], index.n_docs) for t in terms)
         kernel = _phrase_kernel(
-            terms, idf_sum, index.avgdl, spec.k1, spec.b, fetch_k,
+            terms, idf_sum, index.avgdl, spec.k1, spec.b, kk,
             spec.block_size, fterms, slop=slop,
         )
-        top = _merge_topk(
-            spark, index, list(dfs) + list(fterms), _PHRASE_COLS, kernel,
-            fetch_k, start,
+        return _merge_topk(
+            spark, index, list(dfs) + list(fterms), _PHRASE_COLS, kernel, kk,
+            skip,
         )
-    if not with_stored:
-        return _frame(spark, top)
-    return _fetch_stored(spark, index, top, bounded=k is not None)
+
+    return _respond(
+        spark, index, None, None if dfs is None else scored, k, start,
+        with_stored=with_stored,
+    )
 
 
 def _doc_scores_for_ids(
@@ -4434,8 +4347,6 @@ def search_many(
     )
     have_groups = any(g for p in plans.values() for g, _ in p.groups)
     schema = "query_id string, doc_id long, score double"
-    if not all_terms and not all_fterms and not have_groups:
-        return local_frame(spark, [], schema)
     dfs = term_dfs(spark, index, all_terms) if all_terms else {}
     if not dfs and not all_fterms and not have_groups:
         return local_frame(spark, [], schema)
@@ -4730,15 +4641,9 @@ def search_joined(
     allowed = join_match_ids(
         spark, index, inner_query, from_field, to_field, op=inner_op
     )
-    if query.strip() == "*:*":
-        base = match_ids(
-            spark, index, query, filters=filters, op=op
-        ).withColumn("score", F.lit(1.0))
-    else:
-        base = search(
-            spark, index, query, k=None, with_stored=False,
-            filters=filters, op=op,
-        )
+    base = search(  # ``*:*`` is search's match-all leg: 1.0, doc_id order
+        spark, index, query, k=None, with_stored=False, filters=filters, op=op,
+    )
     out = base.join(allowed.hint("shuffle_hash"), "doc_id", "semi").orderBy(
         F.desc("score"), F.asc("doc_id")
     )

@@ -1,13 +1,12 @@
-"""Analyzer golden cases (FIXTURES.md §4) + pure-Python vs Catalyst parity.
+"""Analyzer golden cases (FIXTURES.md §4) + the memoized build tokenizer's
+parity with :func:`tokenize`.
 
 Mirrors the reference's analyzer semantics: the lowercase query
 ``turbowriter`` must match "TurboWriter 2.3"
 (/root/reference/README.md:96-99, AbstractSolrSchemeTest.java:155-159).
 """
 
-from pyspark.sql import functions as F
-
-from cascading_solr_spark.analyzer import analyze_col, analyze_query, tokenize
+from cascading_solr_spark.analyzer import analyze_query, tokenize
 
 GOLDEN = {
     "TurboWriter 2.3": ["turbo", "writer", "turbowriter", "2", "3"],
@@ -40,26 +39,18 @@ def test_analyze_query_distinct_order():
     assert analyze_query("import Import the import") == ["import", "the"]
 
 
-def test_column_parity(spark):
+def test_cached_tokenizer_parity():
+    from cascading_solr_spark.analyzer import make_cached_tokenizer
+    from cascading_solr_spark.corpus import _gen_rows
+
     texts = list(GOLDEN) + [
         "for i in range(10): print(fooBar_baz)",
         "public static void main(String[] args)",
         "x = y ** 2 + z97abc",
         "UPPER lower MixedCase ALLCAPS99",
         None,
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    got = df.select(analyze_col("text").alias("toks")).collect()
-    for text, row in zip(texts, got):
-        expected = tokenize(text)
-        assert row["toks"] == expected, text
-
-
-def test_column_parity_on_corpus(spark):
-    from cascading_solr_spark.corpus import synth_corpus
-
-    df = synth_corpus(spark, 50, partitions=4)
-    rows = df.select("content", analyze_col("content").alias("toks")).collect()
-    assert len(rows) == 50
-    for r in rows:
-        assert r["toks"] == tokenize(r["content"])
+    ] + list(_gen_rows(0, 50)["content"])
+    cached = make_cached_tokenizer()
+    for _ in range(2):  # the second pass is served from the word cache
+        for text in texts:
+            assert cached(text) == tokenize(text), text

@@ -360,9 +360,7 @@ def test_ranked_request_jobs_and_result_schema(spark, ranked_index):
         ),
     }
     for name, (call, schema) in calls.items():
-        # search_boolean has no zero-hit short-circuit: it scans regardless
-        zero_jobs = 2 if name == "search_boolean" else 0
-        for q, hits, jobs in (("parse buffer", 5, 4), ("zzqx", 0, zero_jobs)):
+        for q, hits, jobs in (("parse buffer", 5, 4), ("zzqx", 0, 0)):
             df = call(q)
             assert df.schema == schema, (name, q)
             assert len(df.collect()) == hits, (name, q)

@@ -8,6 +8,8 @@ forced to 0) with ``==`` on rows and schema, nullability included, on a
 positional index and on a copy with deletes and an appended segment
 (conftest ``tier_indexes``)."""
 
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,6 +27,10 @@ from cascading_solr_spark.query.search import (
 from test_round5 import _spark_jobs
 
 QF = {"content": 1.0, "path": 2.0}
+#: match-all, pure-negative and pure filter shapes
+UNSCORED = ["*:*", "*:* -column", "-column", "lang:go", "lang:go -column"]
+#: a stored-field post-filter that drops some of every result
+DOC_FILTER = "length(path) >= 30"
 
 
 def _run(call):
@@ -100,6 +106,29 @@ def _cases(spark, ix):
         "after": lambda: search_after(
             spark, ix, "parse buffer retry", k=5, with_stored=True
         ),
+        # the request shell's unscored legs and post-filter
+        **{
+            f"{name}_{q}": call
+            for q in UNSCORED
+            for name, call in (
+                ("search", lambda q=q: search(spark, ix, q, k=6, start=2)),
+                ("dismax", lambda q=q: search_dismax(
+                    spark, ix, q, QF, k=6, start=2, with_stored=False
+                )),
+                ("after", lambda q=q: search_after(
+                    spark, ix, q, cursor=(1.0, 30), k=6, with_stored=True
+                )),
+            )
+        },
+        "doc_filter": lambda: search(
+            spark, ix, "parse buffer retry", k=6, doc_filter=DOC_FILTER
+        ),
+        "doc_filter_unscored": lambda: search(
+            spark, ix, "lang:go -column", k=6, start=1, doc_filter=DOC_FILTER
+        ),
+        "dismax_doc_filter": lambda: search_dismax(
+            spark, ix, "parse json", QF, k=6, start=2, doc_filter=DOC_FILTER
+        ),
     }
 
 
@@ -111,7 +140,7 @@ def test_local_tier_equals_distributed(spark, tier_indexes, which):
         local, dist = _tiers(call)
         assert local == dist, (which, name)
         hits += bool(local[0])
-    assert hits >= 20, hits  # the comparisons are mostly non-empty
+    assert hits >= 40, hits  # the comparisons are mostly non-empty
 
 
 @pytest.mark.parametrize("which", ["plain", "mut"])
@@ -155,6 +184,85 @@ def test_warm_tiered_requests_run_no_job(spark, tier_indexes):
         cases[name]().collect()  # warm the handle's dict and footer caches
         got = _spark_jobs(spark, lambda: cases[name]().collect())
         assert got == 0, (name, got)
+
+
+def test_warm_stored_request_builds_one_frame(
+    spark, tier_indexes, monkeypatch
+):
+    # a tiered request's only driver-side frame is the one it returns: the
+    # ranked rows and the stored rows stay Python lists until the fetch
+    search_mod = sys.modules["cascading_solr_spark.query.search"]
+    ix = Index.load(tier_indexes["mut"])
+    calls = {
+        "search": lambda: search(spark, ix, "parse buffer retry", k=10),
+        "search_no_stored": lambda: search(
+            spark, ix, "parse buffer retry", k=10, with_stored=False
+        ),
+        "dismax": lambda: search_dismax(spark, ix, "parse json", QF, k=10),
+        "phrase": lambda: search_phrase(spark, ix, "parse buffer", k=10),
+        "boolean": lambda: search_boolean(
+            spark, ix, "(parse AND buffer) OR retry", k=10, with_stored=True
+        ),
+        "after": lambda: search_after(
+            spark, ix, "parse buffer retry", k=5, with_stored=True
+        ),
+        "zero": lambda: search(spark, ix, "zzqx", k=10),
+        "boolean_zero": lambda: search_boolean(
+            spark, ix, "zzqx OR qqqz", k=10, with_stored=True
+        ),
+    }
+    built = []
+    real = search_mod.local_frame
+
+    def counting(*args, **kwargs):
+        built.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(search_mod, "local_frame", counting)
+    for name, call in calls.items():
+        rows = call().collect()  # warm the handle's caches
+        assert rows or "zero" in name, name
+        built.clear()
+        got = _spark_jobs(spark, lambda: call().collect())
+        assert (got, len(built)) == (0, 1), (name, got, len(built))
+
+
+def _post_filtered(spark, ix, q, k, start=0):
+    """The dismax k=None ranking filtered by DOC_FILTER, rows [start, k)."""
+    ok = {
+        r["doc_id"]
+        for r in ix.docs(spark).filter(DOC_FILTER).select("doc_id").collect()
+    }
+    full = search_dismax(spark, ix, q, QF, k=None, with_stored=False)
+    rows = [r for r in full.collect() if r["doc_id"] in ok]
+    return rows[start:] if k is None else rows[start:start + k]
+
+
+@pytest.mark.parametrize("which", ["plain", "mut"])
+def test_dismax_doc_filter_is_the_shared_post_filter(
+    spark, tier_indexes, which
+):
+    ix = Index.load(tier_indexes[which])
+    q = "parse json retry"
+    unfiltered = search_dismax(spark, ix, q, QF, k=None, with_stored=False)
+    assert 0 < len(_post_filtered(spark, ix, q, None)) < unfiltered.count()
+    for k, start in ((8, 0), (5, 4), (None, 0)):
+        want = _post_filtered(spark, ix, q, k, start)
+        assert want, (which, k, start)
+        ranked, dist = _tiers(lambda: search_dismax(
+            spark, ix, q, QF, k=k, start=start, doc_filter=DOC_FILTER,
+            with_stored=False,
+        ))
+        assert ranked == dist, (which, k, start)
+        assert ranked[0] == want, (which, k, start)
+        stored, dist = _tiers(lambda: search_dismax(
+            spark, ix, q, QF, k=k, start=start, doc_filter=DOC_FILTER,
+        ))
+        assert stored == dist, (which, k, start)
+        assert [(r["doc_id"], r["score"]) for r in stored[0]] == [
+            (r["doc_id"], r["score"]) for r in want
+        ], (which, k, start)
+        assert all(len(r["path"]) >= 30 for r in stored[0])
 
 
 def test_fresh_handle_after_append_runs_no_job(spark, tmp_path):

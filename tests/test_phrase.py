@@ -189,6 +189,24 @@ def test_phrase_matches_oracle(spark, corpus, phrase, filters):
     assert got == _want(_oracle(rows, phrase, filters))
 
 
+@pytest.mark.parametrize("filters", [None, {"lang": "python"}])
+def test_phrase_match_set_equals_ranked_set(spark, tier_indexes, filters):
+    # Solr: an empty q matches nothing and fq only restricts, so an empty
+    # phrase's match set is empty like its ranked set, filters or not
+    from cascading_solr_spark.query.search import match_ids
+
+    ix = Index.load(tier_indexes["mut"])
+    for q in ('""', '"zzqx buffer"', '"parse buffer"'):
+        ids = sorted(r["doc_id"] for r in match_ids(
+            spark, ix, q, filters=filters
+        ).collect())
+        ranked = sorted(r["doc_id"] for r in search(
+            spark, ix, q, k=None, filters=filters, with_stored=False
+        ).collect())
+        assert ids == ranked, (q, filters)
+        assert bool(ids) == (q == '"parse buffer"'), (q, filters)
+
+
 def test_quoted_query_dispatch_and_topk(spark, corpus):
     rows, ix = corpus
     got = _got(search(spark, ix, '"merge sort"', k=5, with_stored=False))
