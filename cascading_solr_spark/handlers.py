@@ -567,11 +567,13 @@ def select(
         ff = params["facet.field"]
         fields = [ff] if isinstance(ff, str) else list(ff)
         limit = params.get("facet.limit")
+        sort = str(params.get("facet.sort", "count")).lower()
         out["facet_fields"] = facet_fields_counts(
             spark, index, q, fields, filters=filters or None, op=op,
-            limit=None if limit is None or int(limit) < 0 else int(limit),
+            limit=None if limit is None else int(limit),
             mincount=int(params.get("facet.mincount", 0)),
-            sort=str(params.get("facet.sort", "count")),
+            # Solr's legacy facet.sort=true/false mean count/index
+            sort={"true": "count", "false": "index"}.get(sort, sort),
             offset=int(params.get("facet.offset", 0)),
         )
     if _flag("facet") and params.get("facet.query"):

@@ -261,6 +261,17 @@ def postings_schema(spec: IndexSpec) -> str:
     return POSTINGS_SCHEMA_POS if spec.positions else POSTINGS_SCHEMA
 
 
+#: the dict table's rows, one per term per segment (summed by
+#: :meth:`Index.term_dict`)
+DICT_SCHEMA = "term string, df long"
+
+#: the lineage table's rows (:func:`_write_lineage`), one per shard segment
+LINEAGE_SCHEMA = (
+    "shard int, terms long, postings long, bytes long, skew_ratio double, "
+    "status string, segment string"
+)
+
+
 #: per-phase wall seconds of the most recent ``build_index`` call in this
 #: process (always populated; printed only under CSS_BUILD_PROFILE=1).
 #: bench_scaling.py publishes these per parallelism level — the phase whose
@@ -547,11 +558,16 @@ def _read_footers(root: str, key: str) -> list[Footer]:
     return out
 
 
-def _may_hold(keys: list, lo, hi) -> bool:
-    """Whether sorted ``keys`` has a member in [lo, hi] (always, when the
-    row group has no statistics)."""
+def _may_hold(keys: list | str, lo, hi) -> bool:
+    """Whether sorted ``keys`` — or, for a ``str``, the keys starting with
+    it — have a member in [lo, hi] (always, when the row group has no
+    statistics)."""
     if lo is None:
         return True
+    if isinstance(keys, str):
+        # the prefixed keys are one range from ``keys`` up; ``lo`` past
+        # ``keys`` is below its end only when it carries the prefix itself
+        return hi >= keys and (lo <= keys or lo.startswith(keys))
     i = bisect.bisect_left(keys, lo)
     return i < len(keys) and keys[i] <= hi
 
@@ -707,15 +723,19 @@ class Index:
         written = T.StructType.fromJson(json.loads(self.docs_schema))
         return _scan_schema(written, "shard")
 
+    def docs_reader(self, spark: SparkSession):
+        """A reader of docs-table parquet with the recorded schema: no
+        footer-inference job (an index without docs_schema falls back to
+        inference)."""
+        schema = self.docs_scan_schema()
+        return spark.read if schema is None else spark.read.schema(schema)
+
     def docs(self, spark: SparkSession) -> DataFrame:
-        # read with the recorded schema: no footer-inference job on a fresh
-        # handle (an index without docs_schema falls back to inference)
         p = self.docs_path
         if not os.path.exists(p):
             schema = T.StructType.fromJson(json.loads(self.docs_schema))
             return local_frame(spark, [], schema)
-        schema = self.docs_scan_schema()
-        reader = spark.read if schema is None else spark.read.schema(schema)
+        reader = self.docs_reader(spark)
         return self._cached_df(spark, "docs", lambda: reader.parquet(p))
 
     def deleted_ids(self, spark: SparkSession) -> DataFrame:
@@ -736,15 +756,11 @@ class Index:
         )
 
     def lineage(self, spark: SparkSession) -> DataFrame:
+        # read with the declared schema: no footer-inference job
         p = os.path.join(self.path, "lineage")
         if not os.path.exists(p):
-            return local_frame(
-                spark,
-                [],
-                "shard int, terms long, postings long, bytes long, "
-                "skew_ratio double, status string, segment string",
-            )
-        return spark.read.parquet(p)
+            return local_frame(spark, [], LINEAGE_SCHEMA)
+        return spark.read.schema(_scan_schema(LINEAGE_SCHEMA)).parquet(p)
 
     #: largest RAW dict row count (pre-fold, summed from the parquet
     #: footers) that term_dfs will cache driver-side: ~10^6 (term, df)
@@ -837,19 +853,21 @@ class Index:
         columns: list[str],
         shards: set[int] | None = None,
     ) -> dict[int, pa.Table] | None:
-        """The rows of ``table`` whose key is in ``keys``, read on the driver
-        with pyarrow as ``{shard: Arrow table of columns}`` — or None when
-        the estimate is not under LOCAL_SCAN_MAX_BYTES (the caller then runs
-        its distributed plan).
+        """The rows of ``table`` whose key is in ``keys`` — or, when
+        ``keys`` is one ``str``, whose key starts with it (a term prefix) —
+        read on the driver with pyarrow as ``{shard: Arrow table of
+        columns}``, or None when the estimate is not under
+        LOCAL_SCAN_MAX_BYTES (the caller then runs its distributed plan).
 
         The estimate is the bytes of the row groups (of the ``shards`` dirs;
-        every shard when None) whose key [min, max] can hold a key, from
-        :meth:`footers`; the read is exactly those row groups, then an exact
-        key-membership row filter.  ``columns`` must name the key and may
-        name the ``shard`` partition column, filled in from the file's
-        dir."""
+        every shard when None) whose key [min, max] can hold a wanted key,
+        from :meth:`footers`; the read is exactly those row groups, then an
+        exact key-membership (or ``starts_with``) row filter.  ``columns``
+        must name the key and may name the ``shard`` partition column,
+        filled in from the file's dir."""
         key = _FOOTER_KEYS[table]
-        keys = sorted(set(keys))
+        if not isinstance(keys, str):
+            keys = sorted(set(keys))
         picks: list[tuple[Footer, list[int]]] = []
         total = 0
         for f in self.footers(table):
@@ -869,8 +887,11 @@ class Index:
         for f, rgs in picks:
             with pq.ParquetFile(f.path, metadata=f.meta) as pf:
                 t = pf.read_row_groups(rgs, columns=data_cols)
-            wanted = pa.array(keys, t.schema.field(key).type)
-            t = t.filter(pc.is_in(t[key], value_set=wanted))
+            if isinstance(keys, str):
+                t = t.filter(pc.starts_with(t[key], pattern=keys))
+            else:
+                wanted = pa.array(keys, t.schema.field(key).type)
+                t = t.filter(pc.is_in(t[key], value_set=wanted))
             if "shard" in columns:
                 t = t.add_column(
                     columns.index("shard"), "shard",
@@ -899,7 +920,7 @@ class Index:
         return self._cached_df(
             spark, "term_dict",
             lambda: (
-                spark.read.schema(_scan_schema("term string, df long"))
+                spark.read.schema(_scan_schema(DICT_SCHEMA))
                 .parquet(p)
                 .groupBy("term")
                 .agg(F.sum("df").alias("df"))

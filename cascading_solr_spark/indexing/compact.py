@@ -45,9 +45,11 @@ from cascading_solr_spark.codec import (
     split_varint_payload,
 )
 from cascading_solr_spark.indexing.build import (
+    DICT_SCHEMA,
     DL_BITS,
     Index,
     _next_generation,
+    _scan_schema,
     _set_token_stats,
     _sort_width,
     _write_docs,
@@ -55,6 +57,7 @@ from cascading_solr_spark.indexing.build import (
     _write_postings,
     _write_sorted,
     pack_id_dl,
+    postings_schema,
     read_meta,
     term_ngram_rows,
     tf_schema,
@@ -116,6 +119,12 @@ def compact_index(spark: SparkSession, index: Index) -> Index:
         return index
     old_dirname = index.postings_dirname
     new_dirname, new_path = _next_generation(index.path, old_dirname)
+    # every table this writes is read back with its declared schema: no
+    # footer-inference job per read
+    read_postings = spark.read.schema(
+        _scan_schema(postings_schema(spec), "shard")
+    )
+    read_dict = spark.read.schema(_scan_schema(DICT_SCHEMA))
 
     tf_long = index.postings(spark).mapInPandas(
         _decode_kernel(spec.block_size, spec.positions), tf_schema(spec)
@@ -168,13 +177,13 @@ def compact_index(spark: SparkSession, index: Index) -> Index:
             # dictionary from the new generation's row metadata (term,
             # n_docs) — compressed-row stats only, no payload decode
             folded = (
-                spark.read.parquet(new_path)
+                read_postings.parquet(new_path)
                 .groupBy("term")
                 .agg(F.sum("n_docs").alias("df"))
             )
         else:
             folded = (
-                spark.read.parquet(index.dict_path)
+                read_dict.parquet(index.dict_path)
                 .groupBy("term")
                 .agg(F.sum("df").alias("df"))
             )
@@ -194,7 +203,7 @@ def compact_index(spark: SparkSession, index: Index) -> Index:
             index.path, old_ngrams_dirname
         )
         _write_sorted(
-            term_ngram_rows(spark.read.parquet(new_dict_path).select("term")),
+            term_ngram_rows(read_dict.parquet(new_dict_path).select("term")),
             "gram", new_ngrams_path, parts,
         )
 
@@ -203,7 +212,9 @@ def compact_index(spark: SparkSession, index: Index) -> Index:
     lineage_path = os.path.join(index.path, "lineage")
     lineage_tmp = lineage_path + ".tmp"
     shutil.rmtree(lineage_tmp, ignore_errors=True)
-    _write_lineage(spark.read.parquet(new_path), lineage_tmp, "compacted")
+    _write_lineage(
+        read_postings.parquet(new_path), lineage_tmp, "compacted"
+    )
 
     # fold deletes out of the stored docs: a NEW meta-pointed generation
     # (docs.genN), same crash-safety rule as postings/dict
@@ -218,7 +229,9 @@ def compact_index(spark: SparkSession, index: Index) -> Index:
             index.docs(spark).join(F.broadcast(del_ids), "doc_id", "left_anti"),
             spec, new_docs_path, "overwrite",
         )
-        n_live = spark.read.parquet(new_docs_path).count()  # footer-served
+        n_live = (  # footer-served
+            index.docs_reader(spark).parquet(new_docs_path).count()
+        )
 
     # atomic publish: ONE meta replace flips every generation pointer
     meta = read_meta(index.path)

@@ -62,6 +62,14 @@ each run on one of two tiers with the same result, rows and schema alike:
 * **distributed** — every k=None request and everything over the cap: the
   per-shard kernel runs under ``groupBy("shard").applyInPandas``.
 
+:func:`facet_counts` takes the same choice at the same cap: a match the
+shared match-set kernel serves (:func:`_resolve_match`) runs in-process
+(:func:`_match_local`) and numpy counts the facet field's posting rows
+against it on the driver; the match-all and phrase matches, and anything
+over the cap, run the distributed join.  :func:`match_ids` itself always
+returns a distributed frame: an unbounded id set never becomes a
+``LocalRelation``.
+
 Scale notes: the postings scan is filtered term IN (...) — row-group pruning
 works because postings files are sorted by term, on both tiers; on the
 distributed tier all shards scan in parallel and only ``shards × salts ×
@@ -163,37 +171,74 @@ _ID_COLS = [
 ]
 
 
+class MatchKernel(NamedTuple):
+    """A resolved match either tier can run: the arguments of one
+    :func:`wand.match_set` call per shard (clauses, filter terms or groups,
+    excluded terms, the matched-clause floor)."""
+
+    clauses: list
+    filters: set = frozenset()
+    excluded: set = frozenset()
+    require_n: int = 1
+
+    def terms(self) -> set:
+        """Every term or filter group the kernel reads."""
+        return (
+            set(self.filters) | set(self.excluded)
+            | {t for c in self.clauses for t in c}
+        )
+
+    def run(self, pdf: pd.DataFrame, block_size: int) -> np.ndarray:
+        """One shard's sorted match ids from its id-only posting rows."""
+        return match_set(
+            list(pdf.itertuples(index=False)), self.clauses, block_size,
+            self.filters, self.excluded, self.require_n,
+        )
+
+
+#: a resolved match set: a kernel either tier runs, None for a zero-hit
+#: query, or the frame of a shape only the distributed tier serves
+#: (match-all over the docs table, a phrase, a ``doc_filter`` semi-join)
+Match = MatchKernel | DataFrame | None
+
+
 def _match_frame(
-    spark: SparkSession,
-    index: Index,
-    clauses: list[frozenset],
-    filters: set = frozenset(),
-    excluded: set[str] = frozenset(),
-    require_n: int = 1,
+    spark: SparkSession, index: Index, m: MatchKernel
 ) -> DataFrame:
-    """(doc_id long) match set of :func:`wand.match_set` — one id-only
-    postings scan pruned to the clause, filter and excluded terms (plus the
-    tombstone term when the index has deletes), then one kernel call per
-    shard.  Sharding is by doc id, so every clause, filter and exclusion is
-    shard-local.  Rows are distinct but unordered."""
+    """(doc_id long) match set of ``m`` — one id-only postings scan pruned
+    to its clause, filter and excluded terms (plus the tombstone term when
+    the index has deletes), then one kernel call per shard.  Sharding is by
+    doc id, so every clause, filter and exclusion is shard-local.  Rows are
+    distinct but unordered."""
     block_size = index.spec.block_size
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = list(pdf.itertuples(index=False))
-        return pd.DataFrame({
-            "doc_id": match_set(
-                rows, clauses, block_size, filters, excluded, require_n
-            )
-        })
+        return pd.DataFrame({"doc_id": m.run(pdf, block_size)})
 
-    terms = set(filters) | set(excluded) | {t for c in clauses for t in c}
     return (
         index.postings(spark)
-        .filter(F.col("term").isin(_scan_terms(index, terms)))
+        .filter(F.col("term").isin(_scan_terms(index, m.terms())))
         .select(*_ID_COLS)
         .groupBy("shard")
         .applyInPandas(kernel, "doc_id long")
     )
+
+
+def _match_local(index: Index, m: MatchKernel) -> np.ndarray | None:
+    """:func:`_match_frame`'s match set on the driver as a sorted int64
+    array, or None when its candidate row groups are not under
+    ``Index.LOCAL_SCAN_MAX_BYTES``.  The same kernel runs once per shard
+    in-process on the frame ``applyInPandas`` would hand it
+    (:func:`_udf_frame`); tombstones arrive through :func:`_scan_terms`,
+    as on the distributed tier."""
+    shards = index.read_local(
+        "postings", _scan_terms(index, m.terms()), _ID_COLS
+    )
+    if shards is None:
+        return None
+    block_size = index.spec.block_size
+    parts = [m.run(_udf_frame(t), block_size) for t in shards.values()]
+    return np.sort(np.concatenate([np.empty(0, dtype=np.int64)] + parts))
 
 
 def _empty_ids(spark: SparkSession) -> DataFrame:
@@ -1323,9 +1368,8 @@ def keyword_filter(
     in doc_id order, the first ``k`` of them when ``k`` is given.
     """
     fterms = filters if isinstance(filters, set) else filter_terms_of(filters)
-    out = _match_frame(
-        spark, index, [], filters=fterms, excluded=excluded or set()
-    ).orderBy("doc_id")
+    m = MatchKernel([], fterms, excluded or set())
+    out = _match_frame(spark, index, m).orderBy("doc_id")
     return out if k is None else out.limit(k)
 
 
@@ -1407,7 +1451,30 @@ def match_ids(
     ``doc_filter`` (SQL predicate over stored fields — the numeric-fq /
     PostFilter analogue, see :func:`search`) composes as one distributed
     semi-join against the predicate's pushed-down docs scan: the
-    match-only path is set-shaped, so no overfetch is ever needed."""
+    match-only path is set-shaped, so no overfetch is ever needed.
+
+    Always a distributed frame — an unbounded id set never becomes a
+    driver-side ``LocalRelation``; a consumer that reduces the set on the
+    driver (:func:`facet_counts`) runs :func:`_resolve_match` itself."""
+    return _run_match(
+        spark, index,
+        _resolve_match(spark, index, query, filters, synonyms, op, doc_filter),
+    )
+
+
+def _resolve_match(
+    spark: SparkSession,
+    index: Index,
+    query: str,
+    filters: dict[str, str] | None = None,
+    synonyms: dict[str, list[str]] | None = None,
+    op: str = "OR",
+    doc_filter: str | None = None,
+) -> Match:
+    """:func:`match_ids`'s branches, resolved but not run: the kernel of a
+    term, AND/mm, wildcard, pure-filter or prohibited-clause query; None
+    when it is zero-hit; the distributed frame of a ``doc_filter``, phrase
+    or match-all query."""
     if doc_filter is not None:
         base = match_ids(
             spark, index, query, filters=filters, synonyms=synonyms, op=op
@@ -1423,18 +1490,32 @@ def match_ids(
         spark, index,
         plan_query(qs, index.spec.keyword_fields, filters, synonyms, op),
     )
-    fterms, eterms = plan.filters, plan.excluded
     if plan.match_all or plan.filter_only:
-        return _match_all_ids(spark, index, fterms, eterms)
+        if plan.filters:  # keyword_filter's kernel: no clauses
+            return MatchKernel([], plan.filters, plan.excluded)
+        return _match_all_ids(spark, index, set(), plan.excluded)
     dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
     if _zero_hit(plan, dfs):
-        return _empty_ids(spark)
+        return None
     # wildcard clauses: each is ONE clause matched by any dict expansion
     clauses = [frozenset([t]) for t in dfs] + [g for g, _ in plan.groups if g]
-    return _match_frame(
-        spark, index, clauses, filters=fterms, excluded=eterms,
-        require_n=plan.n_required if plan.conjunctive else 1,
+    return MatchKernel(
+        clauses, plan.filters, plan.excluded,
+        plan.n_required if plan.conjunctive else 1,
     )
+
+
+def _run_match(spark: SparkSession, index: Index, m: Match) -> DataFrame:
+    """A resolved match set as the distributed frame :func:`match_ids`
+    returns: a pure filter in :func:`keyword_filter`'s doc_id order, the
+    empty frame for zero-hit."""
+    if m is None:
+        return _empty_ids(spark)
+    if not isinstance(m, MatchKernel):
+        return m
+    if not m.clauses:
+        return keyword_filter(spark, index, m.filters, excluded=m.excluded)
+    return _match_frame(spark, index, m)
 
 
 def _match_all_ids(
@@ -1456,7 +1537,7 @@ def _match_all_ids(
         )
     if eterms:
         live = live.join(
-            _match_frame(spark, index, [frozenset(eterms)]),
+            _match_frame(spark, index, MatchKernel([frozenset(eterms)])),
             "doc_id",
             "left_anti",
         )
@@ -2484,6 +2565,34 @@ def next_cursor(rows: list) -> tuple:
     return (float(last["score"]), int(last["doc_id"]))
 
 
+#: facet buckets: (value, n), value NULL for the facet.missing bucket
+_FACET_STRUCT = T.StructType([
+    T.StructField("value", T.StringType()),
+    T.StructField("n", T.LongType(), False),
+])
+
+
+def _facet_limit(limit: int | None, sort: str) -> int | None:
+    """facet.limit and facet.sort as every facet tier takes them: a
+    negative ``limit`` is Solr's ``facet.limit=-1``, no limit (None); a
+    ``sort`` other than "count" or "index" is an error."""
+    if sort not in ("count", "index"):
+        raise ValueError(
+            f"facet sort must be 'count' or 'index', got sort={sort!r}"
+        )
+    return None if limit is None or int(limit) < 0 else int(limit)
+
+
+def _facet_prefix(index: Index, facet_field: str) -> str:
+    """The ``field:`` term prefix of a keyword facet field."""
+    if facet_field not in index.spec.keyword_fields:
+        raise ValueError(
+            f"facet field {facet_field!r} is not a keyword field "
+            f"{index.spec.keyword_fields!r}"
+        )
+    return facet_field + KW_SEP
+
+
 def facet_counts(
     spark: SparkSession,
     index: Index,
@@ -2508,29 +2617,51 @@ def facet_counts(
     kernel (:func:`match_ids` — same matching semantics as the ranked path
     but zero scoring arithmetic and no tf/dl decode), and the value-id
     pairs come from the facet field's ``field:value`` posting rows (a
-    prefix-pruned scan of compressed postings: term-sorted files +
-    StartsWith pushdown), never from a docs-table scan.  The join is a
-    doc_id equi-join — at 100 TB both sides are distributed and the facet
-    side is bounded by the field's posting size.
+    prefix-pruned read of compressed postings over term-sorted files),
+    never from a docs-table scan.  One request, two tiers with the same
+    rows and schema:
+
+    * **driver-local** — a kernel-shaped match (terms, AND/mm, wildcards,
+      filters, excluded terms, a pure filter, zero-hit) whose candidate row
+      groups, and the facet field's, are each under
+      ``Index.LOCAL_SCAN_MAX_BYTES``: pyarrow reads them
+      (:meth:`Index.read_local`), the same :func:`wand.match_set` kernel
+      runs once per shard in-process, each of the field's rows is
+      decoded (:func:`codec.decode_doc_ids`, the decoder of
+      :func:`posting_pairs`) and its matched ids counted in numpy, and
+      the buckets come back as one ``local_frame`` — no Spark job;
+    * **distributed** — everything else (over the cap, and the match-all
+      and phrase matches): the match frame joins the
+      field's decoded pairs on doc_id — at 100 TB both sides are
+      distributed and the facet side is bounded by the field's posting
+      size — then a group-by and a sort.
 
     ``limit`` / ``mincount`` / ``sort`` mirror Solr's facet.limit (top-N
-    buckets; Solr's own default is 100), facet.mincount (drop buckets below
-    the threshold), and facet.sort ("count" = count desc, Solr's default
-    when faceting; "index" = value asc).  A bounded ``limit`` turns the
-    global order-merge into TakeOrderedAndProject — at a 10^6-value facet
-    field only the top-N buckets cross to the driver.
+    buckets; a negative limit is no limit, Solr's own default is 100),
+    facet.mincount (drop buckets below the threshold), and facet.sort
+    ("count" = count desc, Solr's default when faceting; "index" = value
+    asc; anything else raises ValueError).  A bounded ``limit`` turns the
+    distributed order-merge into TakeOrderedAndProject — at a 10^6-value
+    facet field only the top-N buckets cross to the driver.
 
     ``prefix`` is Solr's facet.prefix: only buckets whose value starts with
     it.  Pushed into the postings scan (the StartsWith predicate narrows
     from ``field:`` to ``field:prefix`` over the term-sorted files), so a
     selective prefix reads fewer row groups — it is a SCAN restriction,
     not a post-filter.  ``missing=True`` is facet.missing: one extra
-    (NULL, n) bucket counting matched docs with NO value in the field (an
-    anti-join of the match set against the field's pairs; rides the same
-    action as a union leg).  Default-off knobs leave the plan untouched."""
-    matched = match_ids(
-        spark, index, query, filters=filters, synonyms=synonyms, op=op
-    )
+    (NULL, n) bucket, added after ``mincount``, counting matched docs with
+    NO value in the field (independent of ``prefix``, Solr's rule).
+    Default-off knobs leave the plan untouched."""
+    limit = _facet_limit(limit, sort)
+    field = _facet_prefix(index, facet_field)
+    m = _resolve_match(spark, index, query, filters, synonyms, op)
+    if not isinstance(m, DataFrame):
+        rows = _facet_local(
+            index, m, field, limit, mincount, sort, prefix, missing
+        )
+        if rows is not None:
+            return local_frame(spark, rows, _FACET_STRUCT)
+    matched = _run_match(spark, index, m)
     pairs = facet_value_pairs(spark, index, facet_field, value_prefix=prefix)
     out = (
         pairs.join(matched, "doc_id")
@@ -2561,8 +2692,59 @@ def facet_counts(
     else:
         out = out.orderBy(F.desc("n"), F.asc_nulls_last("value"))
     if limit is not None:
-        out = out.limit(int(limit))
+        out = out.limit(limit)
     return out
+
+
+def _facet_local(
+    index: Index,
+    m: MatchKernel | None,
+    field: str,
+    limit: int | None,
+    mincount: int,
+    sort: str,
+    prefix: str | None,
+    missing: bool,
+) -> list[tuple[str | None, int]] | None:
+    """:func:`facet_counts`'s rows on the driver for the kernel match ``m``
+    (None: zero-hit) over the keyword terms prefixed ``field`` — the rows
+    and order of the distributed plan — or None when the match's or the
+    field's row groups are not under ``Index.LOCAL_SCAN_MAX_BYTES``.
+
+    Counts row by row: each posting row's ids are decoded and looked up in
+    the sorted match set, so the driver holds one row's ids at a time and
+    never a per-posting (value, doc_id) pair."""
+    ids = np.empty(0, dtype=np.int64) if m is None else _match_local(index, m)
+    if ids is None:
+        return None
+    want = field + (prefix or "")
+    counts: Counter = Counter()
+    valued = np.zeros(len(ids), dtype=bool)  # facet.missing's complement
+    if len(ids):
+        # facet.missing needs every value of the field, whatever the prefix
+        got = index.read_local(
+            "postings", field if missing else want,
+            ["term", "n_docs", "doc_ids"],
+        )
+        if got is None:
+            return None
+        block_size = index.spec.block_size
+        for t in got.values():
+            for term, n, buf in zip(*(c.to_pylist() for c in t.columns)):
+                row_ids = decode_doc_ids(buf, n, block_size)
+                pos = np.minimum(np.searchsorted(ids, row_ids), len(ids) - 1)
+                hit = ids[pos] == row_ids
+                valued[pos[hit]] = True
+                if term.startswith(want):
+                    counts[term[len(field):]] += int(np.count_nonzero(hit))
+    out = [(v, n) for v, n in counts.items() if n and n >= mincount]
+    if missing:  # after mincount, as the plan's union leg
+        out.append((None, int(np.count_nonzero(~valued))))
+    if sort == "index":  # value asc, NULL last
+        out.sort(key=lambda r: (r[0] is None, r[0] or ""))
+    else:  # count desc, then value asc, NULL last
+        out.sort(key=lambda r: (-r[1], r[0] is None, r[0] or ""))
+    return out[:limit]
 
 
 def _kw_split():
@@ -2583,12 +2765,7 @@ def facet_value_pairs(
     postings (StartsWith pushdown), never a docs-table scan.  Shared by
     facet.field and facet.pivot.  ``value_prefix`` (facet.prefix) narrows
     the StartsWith to ``field:prefix`` — fewer row groups at the scan."""
-    if facet_field not in index.spec.keyword_fields:
-        raise ValueError(
-            f"facet field {facet_field!r} is not a keyword field "
-            f"{index.spec.keyword_fields!r}"
-        )
-    prefix = facet_field + KW_SEP + (value_prefix or "")
+    prefix = _facet_prefix(index, facet_field) + (value_prefix or "")
     return posting_pairs(
         index.postings(spark).filter(F.col("term").startswith(prefix)),
         index.spec.block_size,
@@ -2624,7 +2801,9 @@ def facet_fields_counts(
     buckets (bounded by bucket cardinality, not doc count); ``offset``
     (Solr facet.offset) pages INTO each field's bucket list — the same
     rank window, kept rows offset < rank <= offset+limit; ordering field
-    asc, then count desc / value asc ("count") or value asc ("index")."""
+    asc, then count desc / value asc ("count") or value asc ("index").  A
+    negative ``limit`` is no limit; another ``sort`` raises ValueError."""
+    limit = _facet_limit(limit, sort)
     fields = list(facet_fields)
     bad = [f for f in fields if f not in index.spec.keyword_fields]
     if bad:

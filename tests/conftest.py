@@ -1,3 +1,4 @@
+import importlib
 import shutil
 
 import pytest
@@ -38,6 +39,15 @@ def distributed_tier(monkeypatch):
     from cascading_solr_spark.indexing.build import Index
 
     monkeypatch.setattr(Index, "LOCAL_SCAN_MAX_BYTES", 0)
+
+
+@pytest.fixture
+def search_module():
+    """The module ``cascading_solr_spark.query.search``.  The package
+    re-exports the function ``search`` under that attribute name, so a
+    dotted lookup through ``cascading_solr_spark.query`` reaches the
+    function; patch the module through this fixture instead."""
+    return importlib.import_module("cascading_solr_spark.query.search")
 
 
 @pytest.fixture(scope="session")

@@ -1,7 +1,9 @@
 """The index handle (indexing/build.py ``Index``): a fresh handle opens
 with no Spark job — its dict cache is folded on the driver from the parquet
-footers and files, and its postings and dict frames read with their known
-schemas instead of inferring them."""
+footers and files, and its postings, dict and lineage frames read with their
+known schemas instead of inferring them."""
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -65,6 +67,18 @@ def test_fresh_handle_opens_docs_without_a_job(spark, lifecycle):
         got = []
         assert _spark_jobs(spark, lambda: got.append(ix.docs(spark))) == 0
         assert got[0].schema == spark.read.parquet(ix.docs_path).schema, stage
+
+
+def test_fresh_handle_opens_lineage_without_a_job(spark, lifecycle):
+    # build appends lineage rows, append adds a segment's, compact rewrites
+    # them: the declared schema reads each as Spark would infer it
+    for stage, path in lifecycle.items():
+        ix = Index.load(path)
+        got = []
+        assert _spark_jobs(spark, lambda: got.append(ix.lineage(spark))) == 0
+        inferred = spark.read.parquet(os.path.join(path, "lineage"))
+        assert got[0].schema == inferred.schema, stage
+        assert sorted(got[0].collect()) == sorted(inferred.collect()), stage
 
 
 def test_dict_cache_runs_no_job_and_matches_the_fold(spark, lifecycle):

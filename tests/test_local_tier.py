@@ -1,24 +1,30 @@
 """The driver-local tier of bounded ranked requests (query/search.py
-``_merge_topk`` and ``_fetch_stored``): a request whose candidate row
-groups are under ``Index.LOCAL_SCAN_MAX_BYTES`` runs the same per-shard
-kernel in-process over a pyarrow read and returns a ``local_frame``.
+``_merge_topk`` and ``_fetch_stored``) and of facet counts
+(``facet_counts``): a request whose candidate row groups are under
+``Index.LOCAL_SCAN_MAX_BYTES`` runs the same per-shard kernel in-process
+over a pyarrow read and returns a ``local_frame``.
 
 Every case compares the local tier with the distributed tier (the cap
 forced to 0) with ``==`` on rows and schema, nullability included, on a
 positional index and on a copy with deletes and an appended segment
 (conftest ``tier_indexes``)."""
 
-import sys
+import tracemalloc
 
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
 from conftest import TIER_SPEC
+from cascading_solr_spark.codec import encode_doc_ids
 from cascading_solr_spark.corpus import synth_corpus
 from cascading_solr_spark.indexing import append_documents, build_index
-from cascading_solr_spark.indexing.build import Index
+from cascading_solr_spark.indexing.build import Index, _may_hold
 from cascading_solr_spark.query.boolean import search_boolean
 from cascading_solr_spark.query.search import (
+    facet_counts,
+    facet_fields_counts,
     search,
     search_after,
     search_dismax,
@@ -186,12 +192,24 @@ def test_warm_tiered_requests_run_no_job(spark, tier_indexes):
         assert got == 0, (name, got)
 
 
+def _count_frames(monkeypatch, search_module) -> list:
+    """Patch ``search.local_frame`` to record each frame it builds."""
+    built: list = []
+    real = search_module.local_frame
+
+    def counting(*args, **kwargs):
+        built.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(search_module, "local_frame", counting)
+    return built
+
+
 def test_warm_stored_request_builds_one_frame(
-    spark, tier_indexes, monkeypatch
+    spark, tier_indexes, monkeypatch, search_module
 ):
     # a tiered request's only driver-side frame is the one it returns: the
     # ranked rows and the stored rows stay Python lists until the fetch
-    search_mod = sys.modules["cascading_solr_spark.query.search"]
     ix = Index.load(tier_indexes["mut"])
     calls = {
         "search": lambda: search(spark, ix, "parse buffer retry", k=10),
@@ -211,20 +229,138 @@ def test_warm_stored_request_builds_one_frame(
             spark, ix, "zzqx OR qqqz", k=10, with_stored=True
         ),
     }
-    built = []
-    real = search_mod.local_frame
-
-    def counting(*args, **kwargs):
-        built.append(1)
-        return real(*args, **kwargs)
-
-    monkeypatch.setattr(search_mod, "local_frame", counting)
+    built = _count_frames(monkeypatch, search_module)
     for name, call in calls.items():
         rows = call().collect()  # warm the handle's caches
         assert rows or "zero" in name, name
         built.clear()
         got = _spark_jobs(spark, lambda: call().collect())
         assert (got, len(built)) == (0, 1), (name, got, len(built))
+
+
+def _facet_cases(spark, ix):
+    def fc(q, **kw):
+        return lambda: facet_counts(spark, ix, q, "lang", **kw)
+
+    return {
+        "or": fc("parse buffer retry"),
+        "and": fc("parse buffer", op="AND"),
+        # facet_counts takes no mm: the kernel's matched-clause floor comes
+        # from AND, +term and AND over a wildcard clause
+        "plus": fc("+parse +buffer json"),
+        "and_wildcard": fc("parse AND buf*"),
+        "filters": fc("parse buffer", filters={"lang": "python"}),
+        "qstring_filter": fc("lang:go retry"),
+        "range": fc("retry lang:[go TO python]"),
+        "excluded": fc("retry json -column"),
+        "wildcard": fc("buf* retry"),
+        "pure_filter": fc("lang:go -column"),
+        "zero": fc("zzqx"),
+        "zero_missing": fc("zzqx", missing=True),
+        "prefix": fc("parse buffer", prefix="j"),
+        "prefix_none": fc("parse buffer", prefix="zz"),
+        "mincount": fc("parse buffer retry", mincount=40),
+        "missing": fc("parse buffer", missing=True),
+        "missing_prefix": fc("parse", prefix="p", missing=True, mincount=3),
+        "index": fc("parse buffer retry", sort="index"),
+        "limit": fc("parse buffer retry", limit=2),
+        "limit_index_missing": fc(
+            "parse buffer", sort="index", limit=3, missing=True
+        ),
+        # the shapes only the distributed tier serves
+        "match_all": fc("*:*"),
+        "pure_negative": fc("-column", prefix="j"),
+        "phrase": fc('"buffer retry"'),
+    }
+
+
+#: facet cases the driver-local tier serves without a Spark job
+LOCAL_FACETS = (
+    "or", "and", "filters", "range", "excluded", "wildcard", "pure_filter",
+    "zero", "zero_missing", "missing_prefix", "limit_index_missing",
+)
+
+
+@pytest.mark.parametrize("which", ["plain", "mut"])
+def test_local_facets_equal_distributed(spark, tier_indexes, which):
+    ix = Index.load(tier_indexes[which])
+    hits = 0
+    for name, call in _facet_cases(spark, ix).items():
+        local, dist = _tiers(call)
+        assert local == dist, (which, name)
+        hits += bool(local[0])
+    assert hits >= 20, hits
+
+
+def test_warm_local_facet_runs_no_job_and_builds_one_frame(
+    spark, tier_indexes, monkeypatch, search_module
+):
+    ix = Index.load(tier_indexes["mut"])
+    cases = _facet_cases(spark, ix)
+    built = _count_frames(monkeypatch, search_module)
+    for name in LOCAL_FACETS:
+        cases[name]().collect()  # warm the handle's dict and footer caches
+        built.clear()
+        got = _spark_jobs(spark, lambda: cases[name]().collect())
+        assert (got, len(built)) == (0, 1), (name, got, len(built))
+
+
+@pytest.mark.parametrize("q", ["parse buffer", "*:*"])
+def test_facet_limit_and_sort_arguments(spark, tier_indexes, q):
+    # a kernel match and the match-all fall-back, each on both tiers: a
+    # negative limit is no limit, an unknown sort names the argument
+    ix = Index.load(tier_indexes["mut"])
+    for kw in ({}, {"sort": "index"}, {"mincount": 2, "missing": True}):
+        full, dist = _tiers(lambda: facet_counts(spark, ix, q, "lang", **kw))
+        assert full[0], (q, kw)
+        assert _tiers(
+            lambda: facet_counts(spark, ix, q, "lang", limit=-1, **kw)
+        ) == (full, dist), (q, kw)
+    for offset in (0, 1):
+        want = facet_fields_counts(spark, ix, q, ["lang"], offset=offset)
+        got = facet_fields_counts(
+            spark, ix, q, ["lang"], limit=-1, offset=offset
+        )
+        assert got.collect() == want.collect() != [], (q, offset)
+    for call in (facet_counts, facet_fields_counts):
+        field = "lang" if call is facet_counts else ["lang"]
+        with pytest.raises(ValueError, match="sort='lex'"):
+            call(spark, ix, q, field, sort="lex")
+
+
+def test_local_facet_counts_dense_rows_without_pairs(
+    tier_indexes, monkeypatch, search_module
+):
+    # a dense facet value: 16 posting rows (4 shards x 4 segments) of 12.5k
+    # ids each, half of them matched.  The local count looks each row's ids
+    # up in the match set and keeps no per-posting (value, doc_id) pair —
+    # a str or fixed-width value per posting alone is over the bound
+    ix = Index.load(tier_indexes["plain"])
+    bs = ix.spec.block_size
+    n = 200_000
+    rows = {
+        s: pa.table({
+            "term": ["lang:x"] * 4,
+            "n_docs": [len(part) for part in parts],
+            "doc_ids": [encode_doc_ids(part, bs) for part in parts],
+        })
+        for s in range(4)
+        for parts in [np.array_split(np.arange(s, n, 4, dtype=np.int64), 4)]
+    }
+    matched = np.arange(0, n, 2, dtype=np.int64)
+    monkeypatch.setattr(search_module, "_match_local", lambda *a: matched)
+    monkeypatch.setattr(ix, "read_local", lambda *a, **kw: rows)
+    kernel = search_module.MatchKernel([frozenset(["parse"])])
+    tracemalloc.start()
+    try:
+        got = search_module._facet_local(
+            ix, kernel, "lang:", None, 0, "count", None, True
+        )
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert got == [("x", n // 2), (None, 0)], got
+    assert peak < 16 * n, peak
 
 
 def _post_filtered(spark, ix, q, k, start=0):
@@ -297,3 +433,23 @@ def test_over_the_cap_takes_the_distributed_tier(
         spark, lambda: search(spark, ix, "parse buffer", k=5).collect()
     )
     assert got > 0, got
+
+
+def test_prefix_row_group_test_never_drops_a_match():
+    # a row group holding sorted keys words[i..j] is kept whenever one of
+    # them carries the prefix, and pruned when its range lies outside
+    words = sorted([
+        "a", "lan", "lang", "lang:", "lang:go", "lang:java", "lang:jz",
+        "lang;", "langz", "lanh", "path:src", "z",
+    ])
+    for prefix in ("lang:", "lang:j", "lang:zz", "lan", "a", "zz", ""):
+        for i in range(len(words)):
+            for j in range(i, len(words)):
+                held = any(w.startswith(prefix) for w in words[i:j + 1])
+                if held:
+                    assert _may_hold(prefix, words[i], words[j]), (
+                        prefix, words[i], words[j]
+                    )
+    assert not _may_hold("lang:", "a", "lang")
+    assert not _may_hold("lang:", "lang;", "z")
+    assert not _may_hold("lang:zz", "lang:go", "lang:jz")

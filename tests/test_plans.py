@@ -111,6 +111,7 @@ def test_embedding_lsh_pairs_no_nested_loop(spark):
     assert "CartesianProduct" not in plan
 
 
+@pytest.mark.usefixtures("distributed_tier")
 def test_facet_scan_prefix_pushed(spark, tmp_path):
     """The facet postings scan must push StringStartsWith(term, 'field:')
     to parquet (term-sorted files -> row-group pruning), and the match-side

@@ -424,6 +424,28 @@ def test_facet_offset_pages_buckets(spark, ix):
     assert [tuple(r) for r in via] == [tuple(r) for r in p2]
 
 
+def test_select_facet_sort_legacy_values(spark, ix):
+    """/select takes Solr's legacy facet.sort=true/false as count/index
+    (and facet.limit=-1 as no limit), and rejects any other sort value
+    naming the argument."""
+    from cascading_solr_spark.handlers import select
+    from cascading_solr_spark.query.search import facet_fields_counts
+
+    q = "parse buffer"
+    for legacy, sort in (("true", "count"), ("false", "index")):
+        want = facet_fields_counts(spark, ix, q, ["lang"], sort=sort).collect()
+        via = select(spark, ix, {
+            "q": q, "facet": "true", "facet.field": "lang",
+            "facet.sort": legacy, "facet.limit": -1,
+        })["facet_fields"].collect()
+        assert [tuple(r) for r in via] == [tuple(r) for r in want] != []
+    with pytest.raises(ValueError, match="sort='lex'"):
+        select(spark, ix, {
+            "q": q, "facet": "true", "facet.field": "lang",
+            "facet.sort": "lex",
+        })
+
+
 def test_terms_bounds_and_group_ngroups(spark, ix):
     """terms.lower/upper bound the vocabulary walk (lower incl, upper
     excl — Solr defaults); group.ngroups reports the total distinct
