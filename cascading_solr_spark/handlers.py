@@ -376,7 +376,8 @@ def select(
     * ``fq`` — string or list: ``field:value`` keyword filters compose
       index-side; ``field:[a TO b]`` over a stored NUMERIC field becomes
       the doc-filter (frange/PostFilter) path, ``*`` ends open; multiple
-      fq AND together (Solr's rule);
+      fq AND together (Solr's rule).  The facet, stats and group
+      components do not take a numeric-range fq: the pair raises;
     * ``defType=edismax`` with ``qf`` (``"text^0.5 title^1.2"``), ``tie``;
       boost params ``bf`` / ``boost`` / ``bq`` (function-query surface);
     * ``sort`` — ``score desc`` (default), ``<field> asc|desc``, or a
@@ -484,6 +485,20 @@ def select(
         else:
             raise ValueError(f"unparseable fq {fq!r}")
     doc_filter = " AND ".join(doc_preds) if doc_preds else None
+    # the facet, stats and group components count over the keyword match
+    # set alone: refuse a numeric fq rather than silently drop it
+    unfiltered = [
+        p for flag, p in (
+            ("facet", "facet.field"), ("facet", "facet.query"),
+            ("facet", "facet.range"), ("facet", "facet.pivot"),
+            ("stats", "stats.field"), ("group", "group.field"),
+        )
+        if _flag(flag) and params.get(p)
+    ]
+    if doc_filter and unfiltered:
+        raise ValueError(
+            f"a numeric-range fq does not compose with {unfiltered!r}"
+        )
 
     # ---- cursorMark (Solr deep-paging protocol: opaque mark, "*" = first
     # page, start must be 0; the caller derives nextCursorMark from the
@@ -569,7 +584,8 @@ def select(
         limit = params.get("facet.limit")
         sort = str(params.get("facet.sort", "count")).lower()
         out["facet_fields"] = facet_fields_counts(
-            spark, index, q, fields, filters=filters or None, op=op,
+            spark, index, q, fields, filters=filters or None,
+            synonyms=synonyms, op=op,
             limit=None if limit is None else int(limit),
             mincount=int(params.get("facet.mincount", 0)),
             # Solr's legacy facet.sort=true/false mean count/index

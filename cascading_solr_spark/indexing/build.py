@@ -558,12 +558,19 @@ def _read_footers(root: str, key: str) -> list[Footer]:
     return out
 
 
-def _may_hold(keys: list | str, lo, hi) -> bool:
+class Prefixes(tuple):
+    """Key prefixes for :meth:`Index.read_local`: the rows whose key starts
+    with any member."""
+
+
+def _may_hold(keys: list | str | Prefixes | None, lo, hi) -> bool:
     """Whether sorted ``keys`` — or, for a ``str``, the keys starting with
-    it — have a member in [lo, hi] (always, when the row group has no
-    statistics)."""
-    if lo is None:
+    it; for :class:`Prefixes`, with any member; for None, any key — have a
+    member in [lo, hi] (always, when the row group has no statistics)."""
+    if lo is None or keys is None:
         return True
+    if isinstance(keys, Prefixes):
+        return any(_may_hold(p, lo, hi) for p in keys)
     if isinstance(keys, str):
         # the prefixed keys are one range from ``keys`` up; ``lo`` past
         # ``keys`` is below its end only when it carries the prefix itself
@@ -854,10 +861,11 @@ class Index:
         shards: set[int] | None = None,
     ) -> dict[int, pa.Table] | None:
         """The rows of ``table`` whose key is in ``keys`` — or, when
-        ``keys`` is one ``str``, whose key starts with it (a term prefix) —
-        read on the driver with pyarrow as ``{shard: Arrow table of
-        columns}``, or None when the estimate is not under
-        LOCAL_SCAN_MAX_BYTES (the caller then runs its distributed plan).
+        ``keys`` is one ``str`` or :class:`Prefixes`, whose key starts with
+        one of them (term prefixes); every row when ``keys`` is None — read
+        on the driver with pyarrow as ``{shard: Arrow table of columns}``,
+        or None when the estimate is not under LOCAL_SCAN_MAX_BYTES (the
+        caller then runs its distributed plan).
 
         The estimate is the bytes of the row groups (of the ``shards`` dirs;
         every shard when None) whose key [min, max] can hold a wanted key,
@@ -866,7 +874,9 @@ class Index:
         must name the key and may name the ``shard`` partition column,
         filled in from the file's dir."""
         key = _FOOTER_KEYS[table]
-        if not isinstance(keys, str):
+        if isinstance(keys, str):
+            keys = Prefixes([keys])
+        elif keys is not None and not isinstance(keys, Prefixes):
             keys = sorted(set(keys))
         picks: list[tuple[Footer, list[int]]] = []
         total = 0
@@ -887,9 +897,10 @@ class Index:
         for f, rgs in picks:
             with pq.ParquetFile(f.path, metadata=f.meta) as pf:
                 t = pf.read_row_groups(rgs, columns=data_cols)
-            if isinstance(keys, str):
-                t = t.filter(pc.starts_with(t[key], pattern=keys))
-            else:
+            if isinstance(keys, Prefixes):
+                hit = [pc.starts_with(t[key], pattern=p) for p in keys]
+                t = t.filter(functools.reduce(pc.or_, hit))
+            elif keys is not None:
                 wanted = pa.array(keys, t.schema.field(key).type)
                 t = t.filter(pc.is_in(t[key], value_set=wanted))
             if "shard" in columns:

@@ -62,13 +62,12 @@ each run on one of two tiers with the same result, rows and schema alike:
 * **distributed** — every k=None request and everything over the cap: the
   per-shard kernel runs under ``groupBy("shard").applyInPandas``.
 
-:func:`facet_counts` takes the same choice at the same cap: a match the
-shared match-set kernel serves (:func:`_resolve_match`) runs in-process
-(:func:`_match_local`) and numpy counts the facet field's posting rows
-against it on the driver; the match-all and phrase matches, and anything
-over the cap, run the distributed join.  :func:`match_ids` itself always
-returns a distributed frame: an unbounded id set never becomes a
-``LocalRelation``.
+:func:`_match_set` takes the same choice for every bounded match consumer
+(the facet counts, the unscored pages): a kernel-shaped match, match-all
+included, runs in-process (:func:`_match_local`); a phrase or
+``doc_filter`` match, and anything over the cap, runs distributed.
+:func:`match_ids` itself always returns a distributed frame: an unbounded
+id set never becomes a ``LocalRelation``.
 
 Scale notes: the postings scan is filtered term IN (...) — row-group pruning
 works because postings files are sorted by term, on both tiers; on the
@@ -78,6 +77,8 @@ terms`` tiny top-k rows reach the global merge.
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 from collections import Counter
 from typing import NamedTuple
@@ -104,6 +105,7 @@ from cascading_solr_spark.indexing.build import (
     KW_SEP,
     POSTINGS_SCHEMA,
     Index,
+    Prefixes,
     local_frame,
     posting_pairs,
 )
@@ -174,7 +176,8 @@ _ID_COLS = [
 class MatchKernel(NamedTuple):
     """A resolved match either tier can run: the arguments of one
     :func:`wand.match_set` call per shard (clauses, filter terms or groups,
-    excluded terms, the matched-clause floor)."""
+    excluded terms, the matched-clause floor).  With no clause and no
+    filter it is the match-all shape (:attr:`all_docs`)."""
 
     clauses: list
     filters: set = frozenset()
@@ -188,17 +191,31 @@ class MatchKernel(NamedTuple):
             | {t for c in self.clauses for t in c}
         )
 
-    def run(self, pdf: pd.DataFrame, block_size: int) -> np.ndarray:
-        """One shard's sorted match ids from its id-only posting rows."""
+    @property
+    def all_docs(self) -> bool:
+        """MatchAllDocsQuery (``*:*``, and the pure-negative rewrite
+        ``*:* AND NOT ...``): every live doc minus the excluded ones."""
+        return not self.clauses and not self.filters
+
+    def run(
+        self, pdf: pd.DataFrame, block_size: int, live: np.ndarray | None = None
+    ) -> np.ndarray:
+        """One shard's sorted match ids from its id-only posting rows; for
+        the all-docs shape, the sorted ``live`` ids minus the ones this
+        shard's rows deny."""
+        rows = list(pdf.itertuples(index=False))
+        if self.all_docs:
+            denied = denied_ids(rows, block_size, self.excluded)
+            return live[strip_denied(live, denied)]
         return match_set(
-            list(pdf.itertuples(index=False)), self.clauses, block_size,
-            self.filters, self.excluded, self.require_n,
+            rows, self.clauses, block_size, self.filters, self.excluded,
+            self.require_n,
         )
 
 
-#: a resolved match set: a kernel either tier runs, None for a zero-hit
-#: query, or the frame of a shape only the distributed tier serves
-#: (match-all over the docs table, a phrase, a ``doc_filter`` semi-join)
+#: a resolved match set: a kernel either tier runs (match-all included),
+#: None for a zero-hit query, or the frame of a shape only the distributed
+#: tier serves (a phrase, a ``doc_filter`` semi-join)
 Match = MatchKernel | DataFrame | None
 
 
@@ -225,20 +242,46 @@ def _match_frame(
 
 
 def _match_local(index: Index, m: MatchKernel) -> np.ndarray | None:
-    """:func:`_match_frame`'s match set on the driver as a sorted int64
+    """:func:`_run_match`'s match set on the driver as a sorted int64
     array, or None when its candidate row groups are not under
     ``Index.LOCAL_SCAN_MAX_BYTES``.  The same kernel runs once per shard
     in-process on the frame ``applyInPandas`` would hand it
     (:func:`_udf_frame`); tombstones arrive through :func:`_scan_terms`,
-    as on the distributed tier."""
+    as on the distributed tier.  All-docs starts from the docs table's
+    ``doc_id`` column."""
     shards = index.read_local(
         "postings", _scan_terms(index, m.terms()), _ID_COLS
     )
-    if shards is None:
+    live = index.read_local("docs", None, ["doc_id"]) if m.all_docs else {}
+    if shards is None or live is None:
         return None
     block_size = index.spec.block_size
+    if m.all_docs:
+        ids = np.unique(np.concatenate(
+            [np.empty(0, dtype=np.int64)]
+            + [t.column("doc_id").to_numpy() for t in live.values()]
+        ))
+        for t in shards.values():
+            ids = m.run(_udf_frame(t), block_size, ids)
+        return ids
     parts = [m.run(_udf_frame(t), block_size) for t in shards.values()]
     return np.sort(np.concatenate([np.empty(0, dtype=np.int64)] + parts))
+
+
+def _match_set(
+    spark: SparkSession, index: Index, m: Match
+) -> np.ndarray | DataFrame:
+    """The tier choice of every bounded match consumer: ``m``'s match set
+    as a sorted int64 array on the driver (:func:`_match_local`), else —
+    a phrase or ``doc_filter`` match, or over the cap — as the distributed
+    frame of :func:`_run_match`."""
+    if m is None:
+        return np.empty(0, dtype=np.int64)
+    if isinstance(m, MatchKernel):
+        ids = _match_local(index, m)
+        if ids is not None:
+            return ids
+    return _run_match(spark, index, m)
 
 
 def _empty_ids(spark: SparkSession) -> DataFrame:
@@ -1454,8 +1497,8 @@ def match_ids(
     match-only path is set-shaped, so no overfetch is ever needed.
 
     Always a distributed frame — an unbounded id set never becomes a
-    driver-side ``LocalRelation``; a consumer that reduces the set on the
-    driver (:func:`facet_counts`) runs :func:`_resolve_match` itself."""
+    driver-side ``LocalRelation``; a bounded consumer (facet counts, an
+    unscored page) takes the driver tier through :func:`_match_set`."""
     return _run_match(
         spark, index,
         _resolve_match(spark, index, query, filters, synonyms, op, doc_filter),
@@ -1472,9 +1515,9 @@ def _resolve_match(
     doc_filter: str | None = None,
 ) -> Match:
     """:func:`match_ids`'s branches, resolved but not run: the kernel of a
-    term, AND/mm, wildcard, pure-filter or prohibited-clause query; None
-    when it is zero-hit; the distributed frame of a ``doc_filter``, phrase
-    or match-all query."""
+    term, AND/mm, wildcard, pure-filter, match-all or prohibited-clause
+    query; None when it is zero-hit; the distributed frame of a
+    ``doc_filter`` or phrase query."""
     if doc_filter is not None:
         base = match_ids(
             spark, index, query, filters=filters, synonyms=synonyms, op=op
@@ -1491,9 +1534,8 @@ def _resolve_match(
         plan_query(qs, index.spec.keyword_fields, filters, synonyms, op),
     )
     if plan.match_all or plan.filter_only:
-        if plan.filters:  # keyword_filter's kernel: no clauses
-            return MatchKernel([], plan.filters, plan.excluded)
-        return _match_all_ids(spark, index, set(), plan.excluded)
+        # no clauses: keyword_filter's kernel, or all docs with no filter
+        return MatchKernel([], plan.filters, plan.excluded)
     dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
     if _zero_hit(plan, dfs):
         return None
@@ -1508,39 +1550,25 @@ def _resolve_match(
 def _run_match(spark: SparkSession, index: Index, m: Match) -> DataFrame:
     """A resolved match set as the distributed frame :func:`match_ids`
     returns: a pure filter in :func:`keyword_filter`'s doc_id order, the
-    empty frame for zero-hit."""
+    empty frame for zero-hit, and for the all-docs shape (the /browse
+    handler's q.alt=*:* landing page, solrconfig.xml:879) ONE int column
+    of the docs table minus the tombstones and the excluded match set."""
     if m is None:
         return _empty_ids(spark)
     if not isinstance(m, MatchKernel):
         return m
-    if not m.clauses:
+    if m.clauses:
+        return _match_frame(spark, index, m)
+    if m.filters:
         return keyword_filter(spark, index, m.filters, excluded=m.excluded)
-    return _match_frame(spark, index, m)
-
-
-def _match_all_ids(
-    spark: SparkSession, index: Index, fterms: set, eterms: set[str]
-) -> DataFrame:
-    """MatchAllDocsQuery (the /browse handler's q.alt=*:* landing page,
-    solrconfig.xml:879), incl. Solr's pure-negative top-level rewrite
-    ``*:* AND NOT ...``: every live doc, optionally fq-restricted by
-    ``fterms``, minus the docs posting any ``eterms`` term.  The unfiltered
-    case reads ONE int column of the docs table (columnar pruned scan, no
-    postings touched); filtered goes index-side.  Unordered ``doc_id``
-    rows."""
-    if fterms:
-        return keyword_filter(spark, index, fterms, excluded=eterms)
     live = index.docs(spark).select("doc_id")
     if index.has_deletes:
         live = live.join(
             F.broadcast(index.deleted_ids(spark)), "doc_id", "left_anti"
         )
-    if eterms:
-        live = live.join(
-            _match_frame(spark, index, MatchKernel([frozenset(eterms)])),
-            "doc_id",
-            "left_anti",
-        )
+    if m.excluded:
+        ex = _match_frame(spark, index, MatchKernel([frozenset(m.excluded)]))
+        live = live.join(ex, "doc_id", "left_anti")
     return live
 
 
@@ -1561,23 +1589,34 @@ def _min_match_count(min_match: int | str, n_terms: int) -> int:
 def _unscored(
     spark: SparkSession, index: Index, plan: QueryPlan, score: float,
     k: int | None, start: int, cursor: tuple | None, doc_filter: str | None,
-) -> DataFrame:
+) -> Ranked:
     """The unscored legs of a ranked request at a constant ``score``: the
     match-all leg (``*:*``, ``*:* -t``, ``-t``: 1.0, Lucene's
     MatchAllDocsQuery) and the pure-filter leg (0.0).  Matching live docs
     in doc_id order (a cursor degenerates to a doc_id floor), semi-joined
-    to ``doc_filter`` BEFORE the limit, then rows ``[start, start + k)``."""
-    ids = _match_all_ids(spark, index, plan.filters, plan.excluded)
+    to ``doc_filter`` BEFORE the limit, then rows ``[start, start + k)``.
+
+    A bounded page is driver rows — without ``doc_filter``, a slice of
+    :func:`_match_set`'s driver array (no Spark job under the cap), else
+    the collected page of the distributed frame; k=None stays a frame."""
+    m = MatchKernel([], plan.filters, plan.excluded)
+    floor = -1 if cursor is None else int(cursor[1])
+    bounded = k is not None and doc_filter is None
+    ids = (_match_set if bounded else _run_match)(spark, index, m)
+    if isinstance(ids, np.ndarray):
+        page = ids[ids > floor][start:start + k]
+        return [(d, score) for d in page.tolist()]
     if cursor is not None:
-        ids = ids.filter(F.col("doc_id") > int(cursor[1]))
+        ids = ids.filter(F.col("doc_id") > floor)
     if doc_filter is not None:
         ids = _doc_filter_semi(spark, index, ids, doc_filter)
     top = ids.orderBy("doc_id")
-    if k is not None:
-        top = top.limit(k + start)
+    if k is None:
+        return top.select("doc_id", F.lit(score).alias("score"))
+    top = top.limit(k + start)
     if start:
         top = top.offset(start)
-    return top.select("doc_id", F.lit(score).alias("score"))
+    return [(int(r["doc_id"]), score) for r in top.collect()]
 
 
 def _post_filter(
@@ -2565,22 +2604,12 @@ def next_cursor(rows: list) -> tuple:
     return (float(last["score"]), int(last["doc_id"]))
 
 
-#: facet buckets: (value, n), value NULL for the facet.missing bucket
+#: facet buckets: (field, value, n), value NULL for the facet.missing one
 _FACET_STRUCT = T.StructType([
+    T.StructField("field", T.StringType()),
     T.StructField("value", T.StringType()),
     T.StructField("n", T.LongType(), False),
 ])
-
-
-def _facet_limit(limit: int | None, sort: str) -> int | None:
-    """facet.limit and facet.sort as every facet tier takes them: a
-    negative ``limit`` is Solr's ``facet.limit=-1``, no limit (None); a
-    ``sort`` other than "count" or "index" is an error."""
-    if sort not in ("count", "index"):
-        raise ValueError(
-            f"facet sort must be 'count' or 'index', got sort={sort!r}"
-        )
-    return None if limit is None or int(limit) < 0 else int(limit)
 
 
 def _facet_prefix(index: Index, facet_field: str) -> str:
@@ -2613,163 +2642,18 @@ def facet_counts(
     solrconfig.xml:891-893 and 810-814; facets count ALL matching docs per
     distinct field value, independent of rows/top-k).
 
-    Served INDEX-SIDE at both ends: the match set comes from the match-only
-    kernel (:func:`match_ids` — same matching semantics as the ranked path
-    but zero scoring arithmetic and no tf/dl decode), and the value-id
-    pairs come from the facet field's ``field:value`` posting rows (a
-    prefix-pruned read of compressed postings over term-sorted files),
-    never from a docs-table scan.  One request, two tiers with the same
-    rows and schema:
-
-    * **driver-local** — a kernel-shaped match (terms, AND/mm, wildcards,
-      filters, excluded terms, a pure filter, zero-hit) whose candidate row
-      groups, and the facet field's, are each under
-      ``Index.LOCAL_SCAN_MAX_BYTES``: pyarrow reads them
-      (:meth:`Index.read_local`), the same :func:`wand.match_set` kernel
-      runs once per shard in-process, each of the field's rows is
-      decoded (:func:`codec.decode_doc_ids`, the decoder of
-      :func:`posting_pairs`) and its matched ids counted in numpy, and
-      the buckets come back as one ``local_frame`` — no Spark job;
-    * **distributed** — everything else (over the cap, and the match-all
-      and phrase matches): the match frame joins the
-      field's decoded pairs on doc_id — at 100 TB both sides are
-      distributed and the facet side is bounded by the field's posting
-      size — then a group-by and a sort.
-
-    ``limit`` / ``mincount`` / ``sort`` mirror Solr's facet.limit (top-N
-    buckets; a negative limit is no limit, Solr's own default is 100),
-    facet.mincount (drop buckets below the threshold), and facet.sort
-    ("count" = count desc, Solr's default when faceting; "index" = value
-    asc; anything else raises ValueError).  A bounded ``limit`` turns the
-    distributed order-merge into TakeOrderedAndProject — at a 10^6-value
-    facet field only the top-N buckets cross to the driver.
-
-    ``prefix`` is Solr's facet.prefix: only buckets whose value starts with
-    it.  Pushed into the postings scan (the StartsWith predicate narrows
-    from ``field:`` to ``field:prefix`` over the term-sorted files), so a
-    selective prefix reads fewer row groups — it is a SCAN restriction,
-    not a post-filter.  ``missing=True`` is facet.missing: one extra
-    (NULL, n) bucket, added after ``mincount``, counting matched docs with
-    NO value in the field (independent of ``prefix``, Solr's rule).
-    Default-off knobs leave the plan untouched."""
-    limit = _facet_limit(limit, sort)
-    field = _facet_prefix(index, facet_field)
-    m = _resolve_match(spark, index, query, filters, synonyms, op)
-    if not isinstance(m, DataFrame):
-        rows = _facet_local(
-            index, m, field, limit, mincount, sort, prefix, missing
-        )
-        if rows is not None:
-            return local_frame(spark, rows, _FACET_STRUCT)
-    matched = _run_match(spark, index, m)
-    pairs = facet_value_pairs(spark, index, facet_field, value_prefix=prefix)
-    out = (
-        pairs.join(matched, "doc_id")
-        .groupBy("value")
-        .agg(F.count("*").alias("n"))
+    The one-field case of :func:`facet_fields_counts` (its match set, its
+    two tiers, its ``limit``/``mincount``/``sort`` bucket window) projected
+    to (value, n).  ``prefix`` is Solr's facet.prefix: only buckets whose
+    value starts with it, a SCAN restriction (``field:prefix`` narrows the
+    prefix-pruned postings read), not a post-filter.  ``missing=True`` is
+    facet.missing: one extra (NULL, n) bucket, added after ``mincount`` and
+    ranked with the others, counting matched docs with NO value in the
+    field (independent of ``prefix``, Solr's rule)."""
+    return _facet_fields(
+        spark, index, query, [facet_field], filters, synonyms, op, limit,
+        mincount, sort, 0, prefix, missing, with_field=False,
     )
-    if mincount > 0:
-        out = out.filter(F.col("n") >= int(mincount))
-    if missing:
-        # facet.missing counts docs without ANY value for the field —
-        # independent of prefix (Solr's rule), so the anti-join runs
-        # against the field's full pairs
-        all_pairs = (
-            facet_value_pairs(spark, index, facet_field)
-            if prefix
-            else pairs
-        )
-        miss = (
-            matched.join(
-                all_pairs.select("doc_id").distinct(), "doc_id", "left_anti"
-            )
-            .agg(F.count("*").alias("n"))
-            .select(F.lit(None).cast("string").alias("value"), "n")
-        )
-        out = out.unionByName(miss)
-    if sort == "index":
-        out = out.orderBy(F.asc_nulls_last("value"))
-    else:
-        out = out.orderBy(F.desc("n"), F.asc_nulls_last("value"))
-    if limit is not None:
-        out = out.limit(limit)
-    return out
-
-
-def _facet_local(
-    index: Index,
-    m: MatchKernel | None,
-    field: str,
-    limit: int | None,
-    mincount: int,
-    sort: str,
-    prefix: str | None,
-    missing: bool,
-) -> list[tuple[str | None, int]] | None:
-    """:func:`facet_counts`'s rows on the driver for the kernel match ``m``
-    (None: zero-hit) over the keyword terms prefixed ``field`` — the rows
-    and order of the distributed plan — or None when the match's or the
-    field's row groups are not under ``Index.LOCAL_SCAN_MAX_BYTES``.
-
-    Counts row by row: each posting row's ids are decoded and looked up in
-    the sorted match set, so the driver holds one row's ids at a time and
-    never a per-posting (value, doc_id) pair."""
-    ids = np.empty(0, dtype=np.int64) if m is None else _match_local(index, m)
-    if ids is None:
-        return None
-    want = field + (prefix or "")
-    counts: Counter = Counter()
-    valued = np.zeros(len(ids), dtype=bool)  # facet.missing's complement
-    if len(ids):
-        # facet.missing needs every value of the field, whatever the prefix
-        got = index.read_local(
-            "postings", field if missing else want,
-            ["term", "n_docs", "doc_ids"],
-        )
-        if got is None:
-            return None
-        block_size = index.spec.block_size
-        for t in got.values():
-            for term, n, buf in zip(*(c.to_pylist() for c in t.columns)):
-                row_ids = decode_doc_ids(buf, n, block_size)
-                pos = np.minimum(np.searchsorted(ids, row_ids), len(ids) - 1)
-                hit = ids[pos] == row_ids
-                valued[pos[hit]] = True
-                if term.startswith(want):
-                    counts[term[len(field):]] += int(np.count_nonzero(hit))
-    out = [(v, n) for v, n in counts.items() if n and n >= mincount]
-    if missing:  # after mincount, as the plan's union leg
-        out.append((None, int(np.count_nonzero(~valued))))
-    if sort == "index":  # value asc, NULL last
-        out.sort(key=lambda r: (r[0] is None, r[0] or ""))
-    else:  # count desc, then value asc, NULL last
-        out.sort(key=lambda r: (-r[1], r[0] is None, r[0] or ""))
-    return out[:limit]
-
-
-def _kw_split():
-    """``[field, value]`` of a keyword ``field:value`` term column, split
-    at its FIRST ``KW_SEP`` (a value may itself contain the separator)."""
-    return F.split(F.col("term"), re.escape(KW_SEP), 2)
-
-
-def facet_value_pairs(
-    spark: SparkSession,
-    index: Index,
-    facet_field: str,
-    value_prefix: str | None = None,
-) -> DataFrame:
-    """(value, doc_id) rows of one keyword facet field, decoded from its
-    ``field:value`` posting rows by the shared posting-pair decoder
-    (:func:`posting_pairs`) over a prefix-pruned scan of the term-sorted
-    postings (StartsWith pushdown), never a docs-table scan.  Shared by
-    facet.field and facet.pivot.  ``value_prefix`` (facet.prefix) narrows
-    the StartsWith to ``field:prefix`` — fewer row groups at the scan."""
-    prefix = _facet_prefix(index, facet_field) + (value_prefix or "")
-    return posting_pairs(
-        index.postings(spark).filter(F.col("term").startswith(prefix)),
-        index.spec.block_size,
-    ).select(_kw_split()[1].alias("value"), "doc_id")
 
 
 def facet_fields_counts(
@@ -2785,43 +2669,76 @@ def facet_fields_counts(
     sort: str = "count",
     offset: int = 0,
 ) -> DataFrame:
-    """All of a request's ``facet.field``s in one pass — the /browse
-    defaults declare FOUR (``cat``, ``manu_exact``, ``content_type``,
-    ``author_s``, solrconfig.xml:891-894), and Solr computes every one of
-    them over the SAME DocSet per request.  Calling :func:`facet_counts`
-    per field re-runs the match kernel and re-scans postings N times; this
-    runs ONE match-only job and ONE postings scan pruned to the OR of the
-    field prefixes (Or(StartsWith...) reaches the parquet scan over the
-    term-sorted files), decodes (field, value, doc_id) rows, and serves
-    every field's buckets from a single doc_id equi-join + groupBy.
+    """All of a request's ``facet.field``s over ONE match set — the
+    /browse defaults declare FOUR (``cat``, ``manu_exact``,
+    ``content_type``, ``author_s``, solrconfig.xml:891-894), and Solr
+    computes every one of them over the SAME DocSet per request.
 
-    Returns (field, value, n) long rows.  ``limit``/``mincount``/``sort``
-    apply PER FIELD (Solr's f.<field>.facet.* scoping with one shared
-    default): limit via a per-field rank window over the already-aggregated
-    buckets (bounded by bucket cardinality, not doc count); ``offset``
-    (Solr facet.offset) pages INTO each field's bucket list — the same
-    rank window, kept rows offset < rank <= offset+limit; ordering field
-    asc, then count desc / value asc ("count") or value asc ("index").  A
-    negative ``limit`` is no limit; another ``sort`` raises ValueError."""
-    limit = _facet_limit(limit, sort)
-    fields = list(facet_fields)
-    bad = [f for f in fields if f not in index.spec.keyword_fields]
-    if bad:
-        raise ValueError(
-            f"facet fields {bad} are not keyword fields "
-            f"{index.spec.keyword_fields!r}"
-        )
-    prefixes = [f + KW_SEP for f in fields]
-    pred = F.col("term").startswith(prefixes[0])
-    for p in prefixes[1:]:
-        pred = pred | F.col("term").startswith(p)
-    kw = _kw_split()
-    pairs = posting_pairs(
-        index.postings(spark).filter(pred), index.spec.block_size
-    ).select(kw[0].alias("field"), kw[1].alias("value"), "doc_id")
-    matched = match_ids(
-        spark, index, query, filters=filters, synonyms=synonyms, op=op
+    Served INDEX-SIDE: the match set comes from the match-only kernel
+    (:func:`search`'s matching, no scoring), the buckets from the fields'
+    ``field:value`` posting rows (prefix-pruned over term-sorted files),
+    never from a docs-table scan.  One request, two tiers with the same
+    rows and schema:
+
+    * **driver-local** — :func:`_match_set` serves the match on the
+      driver (every shape but a phrase) and the fields' row groups are
+      under ``Index.LOCAL_SCAN_MAX_BYTES``: one pyarrow read over the
+      field prefixes, each posting row's ids decoded
+      (:func:`codec.decode_doc_ids`) and counted against the sorted match
+      set in numpy, one ``local_frame`` — no Spark job;
+    * **distributed** — everything else (a request over the cap falls back
+      as a whole, never one field at a time): the match frame joins the
+      fields' (field, value, doc_id) pairs (:func:`facet_value_pairs`) on
+      doc_id, then one groupBy and a per-field rank window.
+
+    Returns (field, value, n) rows; a field named twice is counted once and
+    an empty field list raises ValueError.  Per field (Solr's
+    f.<field>.facet.* scoping with one shared default): ``mincount`` drops
+    buckets below it, ``sort`` orders by count desc, value asc ("count") or
+    value asc ("index"; anything else raises ValueError), and ``offset``
+    (facet.offset) and ``limit`` (facet.limit, negative = none) keep the
+    buckets ranked offset < rank <= offset + limit.  Rows are field asc,
+    then in that order."""
+    return _facet_fields(
+        spark, index, query, facet_fields, filters, synonyms, op, limit,
+        mincount, sort, offset,
     )
+
+
+def _facet_fields(
+    spark: SparkSession, index: Index, query: str, facet_fields, filters,
+    synonyms, op: str, limit: int | None, mincount: int, sort: str,
+    offset: int, prefix: str | None = None, missing: bool = False,
+    with_field: bool = True,
+) -> DataFrame:
+    """The one facet-field count behind :func:`facet_counts` and
+    :func:`facet_fields_counts`: per field, the buckets over the match
+    set, then ``mincount``, the facet.missing (NULL, n) bucket, the sort
+    and the ``[offset, offset + limit)`` window; (value, n) rows when not
+    ``with_field``."""
+    if sort not in ("count", "index"):
+        raise ValueError(
+            f"facet sort must be 'count' or 'index', got sort={sort!r}"
+        )
+    limit = None if limit is None or int(limit) < 0 else int(limit)
+    fields = list(dict.fromkeys(facet_fields))
+    if not fields:
+        raise ValueError("facet_fields_counts needs at least one facet field")
+    for f in fields:
+        _facet_prefix(index, f)
+    m = _resolve_match(spark, index, query, filters, synonyms, op)
+    matched = _match_set(spark, index, m)
+    if isinstance(matched, np.ndarray):
+        rows = _facet_local(
+            index, matched, fields, limit, mincount, sort, offset, prefix,
+            missing,
+        )
+        if rows is not None:
+            skip = 0 if with_field else 1  # the projection, as rows
+            schema = T.StructType(_FACET_STRUCT.fields[skip:])
+            return local_frame(spark, [r[skip:] for r in rows], schema)
+        matched = _run_match(spark, index, m)
+    pairs = facet_value_pairs(spark, index, fields, value_prefix=prefix)
     out = (
         pairs.join(matched, "doc_id")
         .groupBy("field", "value")
@@ -2829,23 +2746,104 @@ def facet_fields_counts(
     )
     if mincount > 0:
         out = out.filter(F.col("n") >= int(mincount))
-    if sort == "index":
-        order = [F.asc("value")]
-    else:
-        order = [F.desc("n"), F.asc("value")]
-    if limit is not None or offset:
-        w = Window.partitionBy("field").orderBy(*order)
-        hi = (int(offset) + int(limit)) if limit is not None else None
-        rk = F.col("_rk")
-        keep = rk > int(offset)
-        if hi is not None:
-            keep = keep & (rk <= hi)
-        out = (
-            out.withColumn("_rk", F.row_number().over(w))
-            .filter(keep)
-            .drop("_rk")
+    # facet.missing counts docs without ANY value for the field —
+    # independent of prefix (Solr's rule): the field's full pairs
+    for f in fields if missing else []:
+        valued = (
+            pairs if len(fields) == 1 and not prefix
+            else facet_value_pairs(spark, index, [f])
         )
-    return out.orderBy(F.asc("field"), *order)
+        miss = matched.join(
+            valued.select("doc_id").distinct(), "doc_id", "left_anti"
+        ).agg(F.count("*").alias("n"))
+        out = out.unionByName(miss.select(
+            F.lit(f).alias("field"), F.lit(None).cast("string").alias("value"),
+            "n",
+        ))
+    order = [F.desc("n")] if sort == "count" else []
+    order.append(F.asc_nulls_last("value"))
+    if limit is not None or offset:
+        rk = F.row_number().over(Window.partitionBy("field").orderBy(*order))
+        keep = F.col("_rk") > int(offset)
+        if limit is not None:
+            keep = keep & (F.col("_rk") <= int(offset) + limit)
+        out = out.withColumn("_rk", rk).filter(keep).drop("_rk")
+    out = out.orderBy(F.asc("field"), *order)
+    return out if with_field else out.drop("field")
+
+
+def _facet_local(
+    index: Index, ids: np.ndarray, fields: list[str], limit: int | None,
+    mincount: int, sort: str, offset: int, prefix: str | None,
+    missing: bool,
+) -> list[tuple[str, str | None, int]] | None:
+    """:func:`_facet_fields`'s rows on the driver for the sorted match set
+    ``ids`` — the rows and order of the distributed plan — or None when
+    the fields' row groups are not under ``Index.LOCAL_SCAN_MAX_BYTES``.
+
+    Counts row by row: each posting row's ids are decoded and looked up in
+    the sorted match set, so the driver holds one row's ids at a time and
+    never a per-posting (value, doc_id) pair."""
+    counts: dict[str, Counter] = {f: Counter() for f in fields}
+    # facet.missing's complement: the matched docs holding a field value
+    valued = {f: np.zeros(len(ids), dtype=bool) for f in fields}
+    if len(ids):
+        # facet.missing needs every value of the field, whatever the prefix
+        want = "" if missing else prefix or ""
+        got = index.read_local(
+            "postings", Prefixes(f + KW_SEP + want for f in fields),
+            ["term", "n_docs", "doc_ids"],
+        )
+        if got is None:
+            return None
+        block_size = index.spec.block_size
+        for t in got.values():
+            for term, n, buf in zip(*(c.to_pylist() for c in t.columns)):
+                f, _, value = term.partition(KW_SEP)
+                row_ids = decode_doc_ids(buf, n, block_size)
+                pos = np.minimum(np.searchsorted(ids, row_ids), len(ids) - 1)
+                hit = ids[pos] == row_ids
+                valued[f][pos[hit]] = True
+                if value.startswith(prefix or ""):
+                    counts[f][value] += int(np.count_nonzero(hit))
+    hi = None if limit is None else offset + limit
+    out = []
+    for f in sorted(fields):
+        rows = [(v, n) for v, n in counts[f].items() if n and n >= mincount]
+        if missing:  # after mincount, as the plan's union leg
+            rows.append((None, int(np.count_nonzero(~valued[f]))))
+        # (count desc,) then value asc, NULL last
+        by_n = sort == "count"
+        rows.sort(key=lambda r: (-r[1] * by_n, r[0] is None, r[0] or ""))
+        out += [(f, v, n) for v, n in rows[offset:hi]]
+    return out
+
+
+def facet_value_pairs(
+    spark: SparkSession,
+    index: Index,
+    facet_fields: list[str] | tuple[str, ...],
+    value_prefix: str | None = None,
+) -> DataFrame:
+    """(field, value, doc_id) rows of keyword facet fields, decoded from
+    their ``field:value`` posting rows by the shared posting-pair decoder
+    (:func:`posting_pairs`) over one scan of the term-sorted postings
+    pruned to the OR of the field prefixes (the StartsWith pushdown),
+    never a docs-table scan.  Shared by facet.field and facet.pivot.
+    ``value_prefix`` (facet.prefix) narrows each StartsWith to
+    ``field:prefix``.  A term splits at its FIRST ``KW_SEP`` (a value may
+    itself contain the separator)."""
+    heads = [
+        _facet_prefix(index, f) + (value_prefix or "") for f in facet_fields
+    ]
+    term = F.col("term")
+    kw = F.split(term, re.escape(KW_SEP), 2)
+    return posting_pairs(
+        index.postings(spark).filter(
+            functools.reduce(operator.or_, map(term.startswith, heads))
+        ),
+        index.spec.block_size,
+    ).select(kw[0].alias("field"), kw[1].alias("value"), "doc_id")
 
 
 def facet_pivot_counts(
@@ -2875,11 +2873,11 @@ def facet_pivot_counts(
     value_inner, n=0) row when it has no inner pairs at all."""
     outer_f, inner_f = fields
     matched = match_ids(spark, index, query, filters=filters, op=op)
-    outer = facet_value_pairs(spark, index, outer_f).withColumnRenamed(
-        "value", "value_outer"
+    outer = facet_value_pairs(spark, index, [outer_f]).select(
+        F.col("value").alias("value_outer"), "doc_id"
     )
-    inner = facet_value_pairs(spark, index, inner_f).withColumnRenamed(
-        "value", "value_inner"
+    inner = facet_value_pairs(spark, index, [inner_f]).select(
+        F.col("value").alias("value_inner"), "doc_id"
     )
     om = outer.join(matched, "doc_id")
     n_outer = om.groupBy("value_outer").agg(F.count("*").alias("n_outer"))

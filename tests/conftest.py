@@ -7,10 +7,11 @@ from pyspark.sql import functions as F
 
 from cascading_solr_spark.spec import IndexSpec
 
-#: positional, with a ``lang`` keyword field and ``path`` as a text field
+#: positional, with ``lang`` and ``repo`` keyword fields and ``path`` as a
+#: text field
 TIER_SPEC = IndexSpec(
     num_shards=3, salt_buckets=2, block_size=16, positions=True,
-    keyword_fields=("lang",), text_fields=("path",),
+    keyword_fields=("lang", "repo"), text_fields=("path",),
 )
 
 
@@ -33,9 +34,10 @@ def spark():
 
 @pytest.fixture
 def distributed_tier(monkeypatch):
-    """Force every bounded ranked request onto the distributed tier: no
-    driver-local read is under a cap of 0 bytes.  Job pins and plan
-    guards of the Spark path use this."""
+    """Force every bounded request onto the distributed tier — ranked
+    requests, their unscored match-all and pure-filter pages, and the
+    facet counts: no driver-local read is under a cap of 0 bytes.  Job
+    pins and plan guards of the Spark path use this."""
     from cascading_solr_spark.indexing.build import Index
 
     monkeypatch.setattr(Index, "LOCAL_SCAN_MAX_BYTES", 0)

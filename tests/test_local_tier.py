@@ -1,6 +1,6 @@
 """The driver-local tier of bounded ranked requests (query/search.py
-``_merge_topk`` and ``_fetch_stored``) and of facet counts
-(``facet_counts``): a request whose candidate row groups are under
+``_merge_topk`` and ``_fetch_stored``), of their unscored pages and of
+facet counts (``_match_set``): a request whose candidate row groups are under
 ``Index.LOCAL_SCAN_MAX_BYTES`` runs the same per-shard kernel in-process
 over a pyarrow read and returns a ``local_frame``.
 
@@ -185,8 +185,11 @@ def test_search_after_chain_equals_distributed(spark, tier_indexes, which):
 def test_warm_tiered_requests_run_no_job(spark, tier_indexes):
     ix = Index.load(tier_indexes["mut"])
     cases = _cases(spark, ix)
-    for name in ("or", "and", "mm", "dismax", "phrase", "boolean", "after",
-                 "start", "fl"):
+    unscored = [
+        f"{name}_{q}" for q in UNSCORED for name in ("search", "dismax", "after")
+    ]
+    for name in ["or", "and", "mm", "dismax", "phrase", "boolean", "after",
+                 "start", "fl", *unscored]:
         cases[name]().collect()  # warm the handle's dict and footer caches
         got = _spark_jobs(spark, lambda: cases[name]().collect())
         assert got == 0, (name, got)
@@ -242,6 +245,9 @@ def _facet_cases(spark, ix):
     def fc(q, **kw):
         return lambda: facet_counts(spark, ix, q, "lang", **kw)
 
+    def ffc(q, fields, **kw):
+        return lambda: facet_fields_counts(spark, ix, q, fields, **kw)
+
     return {
         "or": fc("parse buffer retry"),
         "and": fc("parse buffer", op="AND"),
@@ -267,18 +273,27 @@ def _facet_cases(spark, ix):
         "limit_index_missing": fc(
             "parse buffer", sort="index", limit=3, missing=True
         ),
-        # the shapes only the distributed tier serves
         "match_all": fc("*:*"),
+        "match_all_missing": fc("*:*", limit=2, missing=True),
         "pure_negative": fc("-column", prefix="j"),
+        "fields": ffc("parse buffer retry", ["lang"], mincount=1),
+        "fields_offset": ffc("parse buffer retry", ["lang"], limit=2, offset=1),
+        "fields_offset_only": ffc("parse buffer", ["lang"], offset=2),
+        "fields_two": ffc("parse buffer", ["lang", "repo"], limit=3),
+        "fields_two_index": ffc(
+            "retry -column", ["repo", "lang"], sort="index", offset=1, limit=4
+        ),
+        "fields_repeated": ffc("*:*", ["repo", "lang", "repo"], limit=3),
+        "fields_zero": ffc("zzqx", ["lang", "repo"]),
+        # the shapes only the distributed tier serves
         "phrase": fc('"buffer retry"'),
+        "fields_phrase": ffc('"buffer retry"', ["lang", "repo"], limit=2),
     }
 
 
-#: facet cases the driver-local tier serves without a Spark job
-LOCAL_FACETS = (
-    "or", "and", "filters", "range", "excluded", "wildcard", "pure_filter",
-    "zero", "zero_missing", "missing_prefix", "limit_index_missing",
-)
+#: facet cases the driver-local tier serves without a Spark job: every
+#: match but a phrase
+LOCAL_FACETS = tuple(n for n in _facet_cases(None, None) if "phrase" not in n)
 
 
 @pytest.mark.parametrize("which", ["plain", "mut"])
@@ -289,7 +304,29 @@ def test_local_facets_equal_distributed(spark, tier_indexes, which):
         local, dist = _tiers(call)
         assert local == dist, (which, name)
         hits += bool(local[0])
-    assert hits >= 20, hits
+    assert hits >= 28, hits
+
+
+@pytest.mark.parametrize("which", ["plain", "mut"])
+def test_facet_fields_input_contract(spark, tier_indexes, which):
+    # a field named twice is counted once on both tiers; no field at all
+    # is an error naming the call, not an IndexError
+    ix = Index.load(tier_indexes[which])
+    for q in ("parse buffer", "*:*", '"buffer retry"'):
+        once, dist = _tiers(
+            lambda: facet_fields_counts(spark, ix, q, ["lang", "repo"])
+        )
+        assert once == dist and once[0], (which, q)
+        twice = _tiers(lambda: facet_fields_counts(
+            spark, ix, q, ["lang", "repo", "lang", "repo"]
+        ))
+        assert twice == (once, dist), (which, q)
+        assert [r["n"] for r in once[0] if r["field"] == "lang"] == [
+            r["n"] for r in facet_counts(spark, ix, q, "lang").collect()
+        ], (which, q)
+    for fields in ([], ()):
+        with pytest.raises(ValueError, match="at least one facet field"):
+            facet_fields_counts(spark, ix, "parse", fields)
 
 
 def test_warm_local_facet_runs_no_job_and_builds_one_frame(
@@ -332,9 +369,10 @@ def test_local_facet_counts_dense_rows_without_pairs(
     tier_indexes, monkeypatch, search_module
 ):
     # a dense facet value: 16 posting rows (4 shards x 4 segments) of 12.5k
-    # ids each, half of them matched.  The local count looks each row's ids
-    # up in the match set and keeps no per-posting (value, doc_id) pair —
-    # a str or fixed-width value per posting alone is over the bound
+    # ids each, half of them matched.  The shared local facet kernel looks
+    # each row's ids up in the match set and keeps no per-posting (value,
+    # doc_id) pair — a str or fixed-width value per posting alone is over
+    # the bound
     ix = Index.load(tier_indexes["plain"])
     bs = ix.spec.block_size
     n = 200_000
@@ -348,18 +386,16 @@ def test_local_facet_counts_dense_rows_without_pairs(
         for parts in [np.array_split(np.arange(s, n, 4, dtype=np.int64), 4)]
     }
     matched = np.arange(0, n, 2, dtype=np.int64)
-    monkeypatch.setattr(search_module, "_match_local", lambda *a: matched)
     monkeypatch.setattr(ix, "read_local", lambda *a, **kw: rows)
-    kernel = search_module.MatchKernel([frozenset(["parse"])])
     tracemalloc.start()
     try:
         got = search_module._facet_local(
-            ix, kernel, "lang:", None, 0, "count", None, True
+            ix, matched, ["lang"], None, 0, "count", 0, None, True
         )
         peak = tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()
-    assert got == [("x", n // 2), (None, 0)], got
+    assert got == [("lang", "x", n // 2), ("lang", None, 0)], got
     assert peak < 16 * n, peak
 
 

@@ -446,6 +446,48 @@ def test_select_facet_sort_legacy_values(spark, ix):
         })
 
 
+def test_select_facets_count_over_the_results_docset(spark, ix):
+    """/select facet.field counts the DocSet its results come from: the
+    request's synonyms expand the facet match as they expand the query."""
+    from cascading_solr_spark.handlers import select
+    from cascading_solr_spark.query.search import facet_fields_counts
+
+    syn = {"json": ["retry"]}
+    via = select(spark, ix, {
+        "q": "json", "synonyms": syn, "rows": 1000, "facet": "true",
+        "facet.field": "lang",
+    })
+    got = [tuple(r) for r in via["facet_fields"].collect()]
+    want = facet_fields_counts(spark, ix, "json", ["lang"], synonyms=syn)
+    plain = facet_fields_counts(spark, ix, "json", ["lang"])
+    assert got == [tuple(r) for r in want.collect()]
+    assert got != [tuple(r) for r in plain.collect()]  # non-vacuous
+    results = via["results"].select("lang").collect()
+    assert sum(n for _, _, n in got) == len(results)
+
+
+@pytest.mark.parametrize("component", [
+    {"facet": "true", "facet.field": "lang"},
+    {"facet": "true", "facet.query": "lang:go"},
+    {"facet": "true", "facet.range": "textlen", "facet.range.start": 0,
+     "facet.range.end": 4000, "facet.range.gap": 1000},
+    {"facet": "true", "facet.pivot": "lang,repo"},
+    {"stats": "true", "stats.field": "textlen"},
+    {"group": "true", "group.field": "lang"},
+])
+def test_select_numeric_fq_refused_where_it_would_drop(spark, ix, component):
+    """A numeric-range fq is never silently dropped: the components that
+    count over the keyword match set alone refuse it by name."""
+    from cascading_solr_spark.handlers import select
+
+    params = {"q": "parse", "fq": "textlen:[900 TO *]", **component}
+    with pytest.raises(ValueError, match="numeric-range fq"):
+        select(spark, ix, params)
+    if "facet.pivot" not in component:  # this fixture has one keyword field
+        params.pop("fq")
+        select(spark, ix, params)  # the same request without it is served
+
+
 def test_terms_bounds_and_group_ngroups(spark, ix):
     """terms.lower/upper bound the vocabulary walk (lower incl, upper
     excl — Solr defaults); group.ngroups reports the total distinct
