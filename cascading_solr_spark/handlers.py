@@ -372,7 +372,10 @@ def select(
     function; this facade only parses and wires):
 
     * ``q`` (default ``*:*``), ``q.op``, ``mm``, ``rows``, ``start``,
-      ``fl`` (comma list), ``synonyms`` (engine extension: dict);
+      ``fl`` (comma list), ``synonyms`` (engine extension: dict).  The
+      facet, stats and group components count under ``q.op``, not an mm
+      floor: ``mm=100%`` runs them with op=AND (the /browse rule); any
+      other mm together with one of them raises;
     * ``fq`` — string or list: ``field:value`` keyword filters compose
       index-side; ``field:[a TO b]`` over a stored NUMERIC field becomes
       the doc-filter (frange/PostFilter) path, ``*`` ends open; multiple
@@ -499,6 +502,17 @@ def select(
         raise ValueError(
             f"a numeric-range fq does not compose with {unfiltered!r}"
         )
+    # mm floors the results' match; the components take an op, not a
+    # floor: an all-terms mm is op=AND (the /browse rule), any other mm
+    # is refused rather than counted over the OR match set
+    comp_op = op
+    if mm is not None and op != "AND" and q != "*:*":
+        if str(mm).strip() == "100%":
+            comp_op = "AND"
+        elif unfiltered:
+            raise ValueError(
+                f"mm={mm!r} does not compose with {unfiltered!r}"
+            )
 
     # ---- cursorMark (Solr deep-paging protocol: opaque mark, "*" = first
     # page, start must be 0; the caller derives nextCursorMark from the
@@ -585,7 +599,7 @@ def select(
         sort = str(params.get("facet.sort", "count")).lower()
         out["facet_fields"] = facet_fields_counts(
             spark, index, q, fields, filters=filters or None,
-            synonyms=synonyms, op=op,
+            synonyms=synonyms, op=comp_op,
             limit=None if limit is None else int(limit),
             mincount=int(params.get("facet.mincount", 0)),
             # Solr's legacy facet.sort=true/false mean count/index
@@ -598,7 +612,7 @@ def select(
         # Solr's default response key for a facet.query IS the query string
         out["facet_queries"] = facet_query_counts(
             spark, index, q, {s: s for s in fqq},
-            filters=filters or None, op=op,
+            filters=filters or None, op=comp_op,
         )
     if _flag("facet") and params.get("facet.range"):
         fr = params["facet.range"]
@@ -629,12 +643,12 @@ def select(
                 )
                 out[f"range_{fld}"] = facet_range_counts_date(
                     spark, index, q, fld, str(rstart), str(rend), months,
-                    filters=filters or None, op=op, other=rother,
+                    filters=filters or None, op=comp_op, other=rother,
                 )
             else:
                 out[f"range_{fld}"] = facet_range_counts(
                     spark, index, q, fld, int(rstart), int(rend),
-                    int(rgap), filters=filters or None, op=op,
+                    int(rgap), filters=filters or None, op=comp_op,
                     other=rother,
                 )
     if _flag("facet") and params.get("facet.pivot"):
@@ -644,19 +658,20 @@ def select(
                 f"facet.pivot supports exactly two fields, got {pf!r}"
             )
         out["facet_pivot"] = facet_pivot_counts(
-            spark, index, q, (pf[0], pf[1]), filters=filters or None, op=op
+            spark, index, q, (pf[0], pf[1]), filters=filters or None,
+            op=comp_op,
         )
     if _flag("spellcheck"):
         out["spellcheck"] = spellcheck_collations(
             spark, index, q,
             max_collations=int(params.get("spellcheck.maxCollations", 3)),
             max_tries=int(params.get("spellcheck.maxCollationTries", 5)),
-            filters=filters or None, op=op,
+            filters=filters or None, op=comp_op,
         )
     if _flag("stats") and params.get("stats.field"):
         out["stats"] = stats_field(
             spark, index, q, str(params["stats.field"]),
-            filters=filters or None, op=op,
+            filters=filters or None, op=comp_op,
             facet=params.get("stats.facet"),
         )
     if _flag("terms"):
@@ -677,7 +692,7 @@ def select(
         out["highlighting"] = highlight_fields(
             spark, index, q,
             [c.strip() for c in str(params["hl.fl"]).split(",")],
-            k=rows, filters=filters or None, synonyms=synonyms, op=op,
+            k=rows, filters=filters or None, synonyms=synonyms, op=comp_op,
             pre=str(params.get("hl.simple.pre", "<em>")),
             post=str(params.get("hl.simple.post", "</em>")),
         )
@@ -685,6 +700,6 @@ def select(
         out["grouped"] = search_grouped(
             spark, index, q, str(params["group.field"]),
             group_limit=int(params.get("group.limit", 1)),
-            filters=filters or None, op=op,
+            filters=filters or None, op=comp_op,
         )
     return out

@@ -513,8 +513,9 @@ _UNSET = object()  # dict_cache sentinel: "not computed yet" vs "too big"
 class Footer(NamedTuple):
     """One parquet file of a ``shard=N``-partitioned index table: its path,
     its shard, its parsed footer, and per row group the key column's
-    [min, max] (None when the footer has no statistics for it) and the row
-    group's uncompressed byte size."""
+    [min, max] (None when the footer has no statistics for it) and the
+    uncompressed byte size of each top-level column (a list column sums
+    its leaves)."""
 
     path: str
     shard: int
@@ -553,7 +554,12 @@ def _read_footers(root: str, key: str) -> list[Footer]:
                 known = st is not None and st.has_min_max
                 lo.append(st.min if known else None)
                 hi.append(st.max if known else None)
-                nbytes.append(rg.total_byte_size)
+                sizes: dict[str, int] = {}
+                for i, p in enumerate(paths):
+                    top = p.split(".", 1)[0]
+                    size = rg.column(i).total_uncompressed_size
+                    sizes[top] = sizes.get(top, 0) + size
+                nbytes.append(sizes)
             out.append(Footer(path, shard, md, lo, hi, nbytes))
     return out
 
@@ -824,16 +830,19 @@ class Index:
         object.__setattr__(self, "_dict_cache", result)
         return result
 
-    #: largest estimated read (uncompressed row-group bytes) that
-    #: :meth:`read_local` serves on the driver.  The read lands in the
-    #: driver's Python process: Arrow buffers (~1x the estimate), the pandas
-    #: bytes objects the kernels take (~1x) and the decoded id/tf/dl arrays
-    #: (varints widen to int64, up to ~8x) — about 10x the estimate at peak,
-    #: so 32 MiB keeps one request under ~320 MiB, a third of the smallest
-    #: (1 GiB) driver heap the harnesses size from the host.  One Python
-    #: thread decodes the whole read, where the distributed tier spreads
-    #: the shards over the executors, so the cap also bounds the serial
-    #: decode one request may put on the driver.
+    #: largest estimated read that :meth:`read_local` serves on the driver:
+    #: the uncompressed bytes of the projected columns in the candidate row
+    #: groups (a column it does not read is not charged, so a one-column
+    #: ``doc_id`` read of the docs table costs its ids, not the stored
+    #: fields).  The read lands in the driver's Python process: Arrow
+    #: buffers (~1x the estimate), the pandas bytes objects the kernels take
+    #: (~1x) and the decoded id/tf/dl arrays (varints widen to int64, up to
+    #: ~8x) — about 10x the estimate at peak, so 32 MiB keeps one request
+    #: under ~320 MiB, a third of the smallest (1 GiB) driver heap the
+    #: harnesses size from the host.  One Python thread decodes the whole
+    #: read, where the distributed tier spreads the shards over the
+    #: executors, so the cap also bounds the serial decode one request may
+    #: put on the driver.
     LOCAL_SCAN_MAX_BYTES = 32 << 20
 
     def footers(self, table: str) -> list[Footer]:
@@ -867,17 +876,20 @@ class Index:
         or None when the estimate is not under LOCAL_SCAN_MAX_BYTES (the
         caller then runs its distributed plan).
 
-        The estimate is the bytes of the row groups (of the ``shards`` dirs;
-        every shard when None) whose key [min, max] can hold a wanted key,
-        from :meth:`footers`; the read is exactly those row groups, then an
-        exact key-membership (or ``starts_with``) row filter.  ``columns``
-        must name the key and may name the ``shard`` partition column,
-        filled in from the file's dir."""
+        The estimate is the uncompressed bytes of ``columns`` in the row
+        groups (of the ``shards`` dirs; every shard when None) whose key
+        [min, max] can hold a wanted key, from :meth:`footers` — the other
+        columns are never read, so they are never charged; the read is
+        exactly those row groups, then an exact key-membership (or
+        ``starts_with``) row filter.  ``columns`` must name the key and may
+        name the ``shard`` partition column, filled in from the file's
+        dir."""
         key = _FOOTER_KEYS[table]
         if isinstance(keys, str):
             keys = Prefixes([keys])
         elif keys is not None and not isinstance(keys, Prefixes):
             keys = sorted(set(keys))
+        data_cols = [c for c in columns if c != "shard"]
         picks: list[tuple[Footer, list[int]]] = []
         total = 0
         for f in self.footers(table):
@@ -889,10 +901,11 @@ class Index:
             ]
             if rgs:
                 picks.append((f, rgs))
-                total += sum(f.nbytes[g] for g in rgs)
+                total += sum(
+                    f.nbytes[g].get(c, 0) for g in rgs for c in data_cols
+                )
         if total >= self.LOCAL_SCAN_MAX_BYTES:
             return None
-        data_cols = [c for c in columns if c != "shard"]
         parts: dict[int, list[pa.Table]] = {}
         for f, rgs in picks:
             with pq.ParquetFile(f.path, metadata=f.meta) as pf:

@@ -48,26 +48,34 @@ builds only its query and kernel, and answers through ONE request shell,
 ``doc_filter`` fq post-filter, the match-all and pure-filter legs, the
 zero-hit answer, the stored fetch and ``fl``.
 
-Steps 3-4 (:func:`_merge_topk`) and the stored fetch (:func:`_fetch_stored`)
-each run on one of two tiers with the same result, rows and schema alike:
+Step 3 and every other per-shard kernel — the match sets, the phrase
+match, the batch scorer of :func:`search_many`, the (tf, dl) probe of
+:func:`_doc_scores_for_ids` — run through ONE shard executor,
+:func:`_run_shards`, the analogue of Solr's distributed search (each
+shard runs the same collector, one coordinator merges).  It is the one
+place that picks a tier, with the same result on both, rows and schema
+alike:
 
-* **driver-local** — a k-bounded request whose candidate row groups, by
-  the handle's parquet footer index (:meth:`Index.footers`: per row group
-  the term or doc_id [min, max] and its bytes), are under
+* **driver-local** — a bounded caller (a k-bounded request, a facet
+  count, a tiny id probe) whose candidate row groups, by the handle's
+  parquet footer index (:meth:`Index.footers`: per row group the term or
+  doc_id [min, max] and its projected bytes), are under
   ``Index.LOCAL_SCAN_MAX_BYTES``.  pyarrow reads exactly those row groups
-  on the driver, the same kernel scores each shard in-process, a lexsort
-  merges, and the answer is a ``local_frame``: the request runs no Spark
-  job.  On a small index a request is otherwise mostly Spark overhead
-  (scheduling, a shuffle and a Python task wave).
-* **distributed** — every k=None request and everything over the cap: the
-  per-shard kernel runs under ``groupBy("shard").applyInPandas``.
+  on the driver and the kernel runs once per shard in-process on the frame
+  ``applyInPandas`` would hand it; no Spark job runs.  On a small index a
+  request is otherwise mostly Spark overhead (scheduling, a shuffle and a
+  Python task wave).
+* **distributed** — every unbounded caller (``k=None``, :func:`match_ids`,
+  :func:`phrase_match_ids`, :func:`keyword_filter`) and everything over the
+  cap: one term-pruned postings scan and ``groupBy("shard").applyInPandas``.
 
-:func:`_match_set` takes the same choice for every bounded match consumer
-(the facet counts, the unscored pages): a kernel-shaped match, match-all
-included, runs in-process (:func:`_match_local`); a phrase or
-``doc_filter`` match, and anything over the cap, runs distributed.
-:func:`match_ids` itself always returns a distributed frame: an unbounded
-id set never becomes a ``LocalRelation``.
+Step 4 (:func:`_merge_topk`) merges either tier's output: a lexsort over
+the driver frames, or a global sort and limit over the distributed one.
+:func:`_match_set` is the match consumers' entry (the facet counts, the
+unscored pages): every :class:`MatchKernel` shape — a phrase and match-all
+included — goes through the executor; only a ``doc_filter`` match is a
+distributed frame from the start.  The stored fetch (:func:`_fetch_stored`)
+takes the same driver/distributed choice over the docs table.
 
 Scale notes: the postings scan is filtered term IN (...) — row-group pruning
 works because postings files are sorted by term, on both tiers; on the
@@ -141,11 +149,6 @@ _RESULT_STRUCT = T.StructType([
 _SCORE_COLS = [c.split()[0] for c in POSTINGS_SCHEMA.split(", ")]
 
 
-def _score_rows(index: Index, spark: SparkSession) -> DataFrame:
-    """Postings projected to the scoring columns (drops positional payload)."""
-    return index.postings(spark).select(*_SCORE_COLS)
-
-
 def _scan_terms(index: Index, terms) -> list[str]:
     """Term IN-list for a pruned postings scan: the query/filter terms plus
     the delete-tombstone term IFF the index has deletes.  A delete-free
@@ -154,12 +157,7 @@ def _scan_terms(index: Index, terms) -> list[str]:
     rows in the same scan and excludes them in-process — no extra job, no
     broadcast.  Filter GROUPS (frozensets — range filters) flatten into
     their member terms."""
-    out: list[str] = []
-    for t in terms:
-        if isinstance(t, str):
-            out.append(t)
-        else:
-            out.extend(t)
+    out = sorted(_flat_terms(terms))
     if index.has_deletes:
         out.append(DELETED_TERM)
     return out
@@ -173,114 +171,144 @@ _ID_COLS = [
 ]
 
 
+def _run_shards(
+    spark: SparkSession,
+    index: Index,
+    terms,
+    columns: list[str],
+    kernel,
+    schema: str,
+    bounded: bool,
+    shards: set[int] | None = None,
+) -> list[pd.DataFrame] | DataFrame:
+    """The shard executor: ``kernel`` over each shard's postings rows of
+    ``terms`` (:func:`_scan_terms` adds the tombstones) projected to
+    ``columns``, in the ``shards`` dirs only when given.  Sharding is by doc
+    id, so every kernel is shard-local.  The one place a postings kernel's
+    tier is chosen:
+
+    * **driver-local** — a ``bounded`` caller whose candidate row groups are
+      under ``Index.LOCAL_SCAN_MAX_BYTES`` (:meth:`Index.read_local`):
+      pyarrow reads exactly those row groups and the kernel runs once per
+      shard in-process on the frame ``applyInPandas`` would hand it
+      (:func:`_udf_frame`).  Returns the kernel frames in shard order; no
+      Spark job runs.
+    * **distributed** — everything else: one term-pruned postings scan,
+      ``groupBy("shard").applyInPandas(kernel, schema)``."""
+    scan = _scan_terms(index, terms)
+    if bounded:
+        got = index.read_local("postings", scan, columns, shards)
+        if got is not None:
+            return [kernel(_udf_frame(got[s])) for s in sorted(got)]
+    rows = index.postings(spark).filter(F.col("term").isin(scan))
+    if shards is not None:
+        rows = rows.filter(F.col("shard").isin(sorted(shards)))
+    return rows.select(*columns).groupBy("shard").applyInPandas(kernel, schema)
+
+
+def _column(parts: list[pd.DataFrame], name: str, dtype) -> np.ndarray:
+    """Column ``name`` of the driver-side kernel frames, concatenated."""
+    return np.concatenate(
+        [np.empty(0, dtype=dtype)]
+        + [p[name].to_numpy(dtype=dtype) for p in parts]
+    )
+
+
 class MatchKernel(NamedTuple):
-    """A resolved match either tier can run: the arguments of one
-    :func:`wand.match_set` call per shard (clauses, filter terms or groups,
-    excluded terms, the matched-clause floor).  With no clause and no
-    filter it is the match-all shape (:attr:`all_docs`)."""
+    """A resolved match the shard executor runs on either tier: the
+    arguments of one :func:`wand.match_set` call per shard (clauses, filter
+    terms or groups, excluded terms, the matched-clause floor), or, with
+    ``phrase`` set to (position terms, slop), the match-only phrase kernel
+    (:func:`_phrase_kernel`) under the filter terms.  With no clause, no
+    filter and no phrase it is the match-all shape (:attr:`all_docs`)."""
 
     clauses: list
     filters: set = frozenset()
     excluded: set = frozenset()
     require_n: int = 1
+    phrase: tuple | None = None
 
     def terms(self) -> set:
         """Every term or filter group the kernel reads."""
         return (
             set(self.filters) | set(self.excluded)
             | {t for c in self.clauses for t in c}
+            | set(self.phrase[0] if self.phrase else ())
         )
 
     @property
     def all_docs(self) -> bool:
         """MatchAllDocsQuery (``*:*``, and the pure-negative rewrite
         ``*:* AND NOT ...``): every live doc minus the excluded ones."""
-        return not self.clauses and not self.filters
+        return not self.clauses and not self.filters and not self.phrase
 
-    def run(
-        self, pdf: pd.DataFrame, block_size: int, live: np.ndarray | None = None
-    ) -> np.ndarray:
-        """One shard's sorted match ids from its id-only posting rows; for
-        the all-docs shape, the sorted ``live`` ids minus the ones this
-        shard's rows deny."""
-        rows = list(pdf.itertuples(index=False))
-        if self.all_docs:
-            denied = denied_ids(rows, block_size, self.excluded)
-            return live[strip_denied(live, denied)]
-        return match_set(
-            rows, self.clauses, block_size, self.filters, self.excluded,
-            self.require_n,
-        )
+    def kernel(self, block_size: int):
+        """(column projection, per-shard kernel): the kernel maps one
+        shard's posting rows to a (doc_id) frame of its sorted match ids —
+        for the all-docs shape, of the ids its rows deny (tombstones and
+        excluded terms)."""
+        if self.phrase:
+            terms, slop = self.phrase
+            # match-only: the scoring arguments (idf, avgdl, k1, b) are unused
+            return _PHRASE_MATCH_COLS, _phrase_kernel(
+                terms, 0.0, 1.0, 0.0, 0.0, None, block_size, self.filters,
+                match_only=True, slop=slop,
+            )
+
+        def run(pdf: pd.DataFrame) -> pd.DataFrame:
+            rows = list(pdf.itertuples(index=False))
+            if self.all_docs:
+                ids = denied_ids(rows, block_size, self.excluded)
+            else:
+                ids = match_set(
+                    rows, self.clauses, block_size, self.filters,
+                    self.excluded, self.require_n,
+                )
+            if ids is None:  # nothing denied
+                ids = np.empty(0, dtype=np.int64)
+            return pd.DataFrame({"doc_id": ids})
+
+        return _ID_COLS, run
 
 
-#: a resolved match set: a kernel either tier runs (match-all included),
-#: None for a zero-hit query, or the frame of a shape only the distributed
-#: tier serves (a phrase, a ``doc_filter`` semi-join)
+#: a resolved match set: a kernel either tier runs (match-all and phrase
+#: included), None for a zero-hit query, or the distributed frame of a
+#: ``doc_filter`` semi-join
 Match = MatchKernel | DataFrame | None
 
 
-def _match_frame(
-    spark: SparkSession, index: Index, m: MatchKernel
-) -> DataFrame:
-    """(doc_id long) match set of ``m`` — one id-only postings scan pruned
-    to its clause, filter and excluded terms (plus the tombstone term when
-    the index has deletes), then one kernel call per shard.  Sharding is by
-    doc id, so every clause, filter and exclusion is shard-local.  Rows are
-    distinct but unordered."""
-    block_size = index.spec.block_size
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"doc_id": m.run(pdf, block_size)})
-
-    return (
-        index.postings(spark)
-        .filter(F.col("term").isin(_scan_terms(index, m.terms())))
-        .select(*_ID_COLS)
-        .groupBy("shard")
-        .applyInPandas(kernel, "doc_id long")
+def _match_shards(
+    spark: SparkSession, index: Index, m: MatchKernel, bounded: bool
+) -> list[pd.DataFrame] | DataFrame:
+    """``m``'s per-shard (doc_id) frames through the shard executor."""
+    columns, kernel = m.kernel(index.spec.block_size)
+    return _run_shards(
+        spark, index, m.terms(), columns, kernel, "doc_id long", bounded
     )
-
-
-def _match_local(index: Index, m: MatchKernel) -> np.ndarray | None:
-    """:func:`_run_match`'s match set on the driver as a sorted int64
-    array, or None when its candidate row groups are not under
-    ``Index.LOCAL_SCAN_MAX_BYTES``.  The same kernel runs once per shard
-    in-process on the frame ``applyInPandas`` would hand it
-    (:func:`_udf_frame`); tombstones arrive through :func:`_scan_terms`,
-    as on the distributed tier.  All-docs starts from the docs table's
-    ``doc_id`` column."""
-    shards = index.read_local(
-        "postings", _scan_terms(index, m.terms()), _ID_COLS
-    )
-    live = index.read_local("docs", None, ["doc_id"]) if m.all_docs else {}
-    if shards is None or live is None:
-        return None
-    block_size = index.spec.block_size
-    if m.all_docs:
-        ids = np.unique(np.concatenate(
-            [np.empty(0, dtype=np.int64)]
-            + [t.column("doc_id").to_numpy() for t in live.values()]
-        ))
-        for t in shards.values():
-            ids = m.run(_udf_frame(t), block_size, ids)
-        return ids
-    parts = [m.run(_udf_frame(t), block_size) for t in shards.values()]
-    return np.sort(np.concatenate([np.empty(0, dtype=np.int64)] + parts))
 
 
 def _match_set(
     spark: SparkSession, index: Index, m: Match
 ) -> np.ndarray | DataFrame:
-    """The tier choice of every bounded match consumer: ``m``'s match set
-    as a sorted int64 array on the driver (:func:`_match_local`), else —
-    a phrase or ``doc_filter`` match, or over the cap — as the distributed
+    """The match set of every bounded match consumer: a sorted int64 array
+    when the shard executor serves ``m`` on the driver — the all-docs shape
+    starts from the docs table's ``doc_id`` column and strips the denied
+    ids — else (a ``doc_filter`` match, or over the cap) the distributed
     frame of :func:`_run_match`."""
     if m is None:
         return np.empty(0, dtype=np.int64)
     if isinstance(m, MatchKernel):
-        ids = _match_local(index, m)
-        if ids is not None:
-            return ids
+        live = index.read_local("docs", None, ["doc_id"]) if m.all_docs else {}
+        parts = None if live is None else _match_shards(spark, index, m, True)
+        if isinstance(parts, list):
+            ids = np.unique(_column(parts, "doc_id", np.int64))
+            if not m.all_docs:
+                return ids
+            every = np.unique(np.concatenate(
+                [np.empty(0, dtype=np.int64)]
+                + [t.column("doc_id").to_numpy() for t in live.values()]
+            ))
+            return every[strip_denied(every, ids)]
     return _run_match(spark, index, m)
 
 
@@ -1154,48 +1182,46 @@ def _merge_topk(
     kernel,
     k: int | None,
     start: int = 0,
+    schema: str = _RESULT_SCHEMA,
+    by: str | None = None,
 ) -> Ranked:
-    """Score each shard's postings rows of ``terms`` (projected to
-    ``columns``; :func:`_scan_terms` adds the tombstones) with ``kernel``
-    and order-merge the local top-k: rows ``[start, k)`` of the (score
-    desc, doc_id asc) order, every row from ``start`` on for k=None.
+    """Rows ``[start, k)`` of the (score desc, doc_id asc) order of
+    ``kernel``'s local top-k over each shard's postings rows of ``terms``
+    (projected to ``columns``), every row from ``start`` on for k=None;
+    with ``by``, the first ``k`` rows per value of the ``by`` column (the
+    batch scorer's ``query_id``; ``k`` set, ``start`` 0).
 
-    One request, two tiers with the same result:
-
-    * **driver-local** — a bounded request (``k`` set) whose candidate row
-      groups, by the handle's footer index, are under
-      ``Index.LOCAL_SCAN_MAX_BYTES`` (:meth:`Index.read_local`).  pyarrow
-      reads exactly those row groups, the SAME kernel runs once per shard
-      in-process on the frame ``applyInPandas`` would hand it
-      (:func:`_udf_frame`), and a lexsort merges; the result is the
-      driver's (doc_id, score) rows (:func:`_frame` makes them a
-      ``local_frame``), so it runs no Spark job;
-    * **distributed** — everything else: the term-pruned postings scan,
-      ``groupBy("shard").applyInPandas(kernel)``, a global sort, limit and
-      offset."""
-    scan = _scan_terms(index, terms)
-    if k is not None:
-        shards = index.read_local("postings", scan, columns)
-        if shards is not None:
-            parts = [kernel(_udf_frame(shards[s])) for s in sorted(shards)]
-            ids = np.concatenate(
-                [np.empty(0, dtype=np.int64)]
-                + [p["doc_id"].to_numpy(dtype=np.int64) for p in parts]
-            )
-            scores = np.concatenate(
-                [np.empty(0, dtype=np.float64)]
-                + [p["score"].to_numpy(dtype=np.float64) for p in parts]
-            )
+    The shard executor (:func:`_run_shards`) picks the tier — the driver
+    for a bounded request (``k`` set) under the cap — and this is only the
+    merge: a lexsort over the driver frames, whose rows come back as
+    driver rows (:func:`_frame` makes them a ``local_frame``); else a
+    global sort, limit and offset over the distributed frame (a per-``by``
+    row_number window)."""
+    top = _run_shards(
+        spark, index, terms, columns, kernel, schema, bounded=k is not None
+    )
+    if isinstance(top, list):
+        ids = _column(top, "doc_id", np.int64)
+        scores = _column(top, "score", np.float64)
+        if by is None:
             order = np.lexsort((ids, -scores))[start:k]
             return list(zip(ids[order].tolist(), scores[order].tolist()))
-    top = (
-        index.postings(spark)
-        .filter(F.col("term").isin(scan))
-        .select(*columns)
-        .groupBy("shard")
-        .applyInPandas(kernel, _RESULT_SCHEMA)
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-    )
+        keys = _column(top, by, str)
+        order = np.lexsort((ids, -scores, keys))
+        ids, scores, keys = ids[order], scores[order], keys[order]
+        # rank within a key: the distance from the key's first row
+        heads = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+        n = len(keys)
+        rank = np.arange(n) - np.repeat(heads, np.diff(np.r_[heads, n]))
+        keep = rank < k
+        return list(zip(
+            keys[keep].tolist(), ids[keep].tolist(), scores[keep].tolist()
+        ))
+    order = [F.desc("score"), F.asc("doc_id")]
+    if by is not None:
+        rn = F.row_number().over(Window.partitionBy(by).orderBy(*order))
+        return top.withColumn("_rn", rn).filter(F.col("_rn") <= k).drop("_rn")
+    top = top.orderBy(*order)
     if k is not None:
         top = top.limit(k)
     return top.offset(start) if start else top
@@ -1407,12 +1433,13 @@ def keyword_filter(
     posting any of them, in-kernel (prohibited clauses over a filter query).
 
     The shared match-set kernel (:func:`wand.match_set` with no clauses)
-    over the id-only postings scan of :func:`_match_frame`; rows come back
-    in doc_id order, the first ``k`` of them when ``k`` is given.
+    on the shard executor's distributed tier over the id-only postings
+    scan (an unbounded set); rows come back in doc_id order, the first
+    ``k`` of them when ``k`` is given.
     """
     fterms = filters if isinstance(filters, set) else filter_terms_of(filters)
     m = MatchKernel([], fterms, excluded or set())
-    out = _match_frame(spark, index, m).orderBy("doc_id")
+    out = _match_shards(spark, index, m, bounded=False).orderBy("doc_id")
     return out if k is None else out.limit(k)
 
 
@@ -1480,10 +1507,11 @@ def match_ids(
     terms under OR/AND, query-string ``field:value`` parsing, keyword
     filters, synonym expansion), but it runs the shared match-set kernel
     (:func:`wand.match_set`: each term a one-term clause, each wildcard
-    expansion one multi-term clause, AND/mm as a matched-clause floor) over
-    the id-only postings scan of :func:`_match_frame` — no tf/dl decode, no
-    idf/tf-norm arithmetic, no top-k merge, and parquet never reads the
-    tf/dl binary columns.  Returns distinct ``doc_id`` rows.
+    expansion one multi-term clause, AND/mm as a matched-clause floor) —
+    a fully-quoted query the match-only phrase kernel — over the id-only
+    postings scan of the shard executor (:func:`_run_shards`) — no tf/dl
+    decode, no idf/tf-norm arithmetic, no top-k merge, and parquet never
+    reads the tf/dl binary columns.  Returns distinct ``doc_id`` rows.
 
     Prohibited clauses (``-term`` / ``-field:value`` / ``NOT term``,
     Solr's MUST_NOT) strip matching docs in-kernel — shard-local, since
@@ -1496,9 +1524,10 @@ def match_ids(
     semi-join against the predicate's pushed-down docs scan: the
     match-only path is set-shaped, so no overfetch is ever needed.
 
-    Always a distributed frame — an unbounded id set never becomes a
-    driver-side ``LocalRelation``; a bounded consumer (facet counts, an
-    unscored page) takes the driver tier through :func:`_match_set`."""
+    Always the executor's distributed tier — an unbounded id set never
+    becomes a driver-side ``LocalRelation``; a bounded consumer (facet
+    counts, an unscored page) takes the driver tier through
+    :func:`_match_set`."""
     return _run_match(
         spark, index,
         _resolve_match(spark, index, query, filters, synonyms, op, doc_filter),
@@ -1515,9 +1544,9 @@ def _resolve_match(
     doc_filter: str | None = None,
 ) -> Match:
     """:func:`match_ids`'s branches, resolved but not run: the kernel of a
-    term, AND/mm, wildcard, pure-filter, match-all or prohibited-clause
-    query; None when it is zero-hit; the distributed frame of a
-    ``doc_filter`` or phrase query."""
+    term, AND/mm, wildcard, pure-filter, match-all, prohibited-clause or
+    phrase query; None when it is zero-hit; a distributed frame only for a
+    ``doc_filter`` query."""
     if doc_filter is not None:
         base = match_ids(
             spark, index, query, filters=filters, synonyms=synonyms, op=op
@@ -1526,9 +1555,7 @@ def _resolve_match(
     qs = query.strip()
     pq = parse_quoted(qs)
     if pq is not None:
-        return phrase_match_ids(
-            spark, index, pq[0], filters=filters, slop=pq[1]
-        )
+        return _phrase_match(spark, index, pq[0], filters, pq[1])
     plan = _resolve(
         spark, index,
         plan_query(qs, index.spec.keyword_fields, filters, synonyms, op),
@@ -1557,8 +1584,8 @@ def _run_match(spark: SparkSession, index: Index, m: Match) -> DataFrame:
         return _empty_ids(spark)
     if not isinstance(m, MatchKernel):
         return m
-    if m.clauses:
-        return _match_frame(spark, index, m)
+    if m.clauses or m.phrase:
+        return _match_shards(spark, index, m, bounded=False)
     if m.filters:
         return keyword_filter(spark, index, m.filters, excluded=m.excluded)
     live = index.docs(spark).select("doc_id")
@@ -1567,8 +1594,11 @@ def _run_match(spark: SparkSession, index: Index, m: Match) -> DataFrame:
             F.broadcast(index.deleted_ids(spark)), "doc_id", "left_anti"
         )
     if m.excluded:
-        ex = _match_frame(spark, index, MatchKernel([frozenset(m.excluded)]))
-        live = live.join(ex, "doc_id", "left_anti")
+        ex = MatchKernel([frozenset(m.excluded)])
+        live = live.join(
+            _match_shards(spark, index, ex, bounded=False), "doc_id",
+            "left_anti",
+        )
     return live
 
 
@@ -1999,6 +2029,9 @@ _PHRASE_COLS = [
     "tfs", "boffs_tfs", "dls", "boffs_dls",
     "pos", "boffs_pos",
 ]
+# Match-only phrase projection: tf (to split position lists) and pos, but
+# never dl — the dls binaries stay in the parquet footer
+_PHRASE_MATCH_COLS = [c for c in _PHRASE_COLS if c not in ("dls", "boffs_dls")]
 
 
 def _phrase_kernel(
@@ -2235,6 +2268,18 @@ def _phrase_request(
     return terms, filter_terms_of(filters), None if zero else dfs
 
 
+def _phrase_match(
+    spark: SparkSession, index: Index, phrase: str, filters: dict | None,
+    slop: int,
+) -> MatchKernel | None:
+    """The match-only phrase kernel of a phrase query as a
+    :class:`MatchKernel` shape, None when it is zero-hit."""
+    terms, fterms, dfs = _phrase_request(spark, index, phrase, filters)
+    if dfs is None:
+        return None
+    return MatchKernel([], fterms, phrase=(terms, slop))
+
+
 def phrase_match_ids(
     spark: SparkSession,
     index: Index,
@@ -2247,25 +2292,12 @@ def phrase_match_ids(
     :func:`match_ids`, so faceting / field-sorting / stats compose with
     quoted queries (``match_ids`` dispatches fully-quoted query strings
     here).  The kernel stops after positional verification: no dl decode,
-    no idf arithmetic, no top-k merge."""
-    terms, fterms, dfs = _phrase_request(spark, index, phrase, filters)
-    if dfs is None:
-        return _empty_ids(spark)
-    spec = index.spec
-    kernel = _phrase_kernel(
-        terms, 0.0, max(index.avgdl, 1.0), spec.k1, spec.b, None,
-        spec.block_size, fterms, match_only=True, slop=slop,
+    no idf arithmetic, no top-k merge.  Unbounded, so always the shard
+    executor's distributed tier; a bounded consumer (a facet count over a
+    quoted query) takes the driver tier through :func:`_match_set`."""
+    return _run_match(
+        spark, index, _phrase_match(spark, index, phrase, filters, slop)
     )
-    # match-only: tf (to split position lists) and pos, but never dl — the
-    # dls binaries stay in the parquet footer
-    matched = index.postings(spark).filter(
-        F.col("term").isin(_scan_terms(index, list(dfs) + list(fterms)))
-    ).select(
-        "shard", "term", "salt", "n_docs", "n_blocks",
-        "doc_ids", "boffs_ids", "block_last_id",
-        "tfs", "boffs_tfs", "pos", "boffs_pos",
-    )
-    return matched.groupBy("shard").applyInPandas(kernel, "doc_id long")
 
 
 def search_phrase(
@@ -2323,15 +2355,17 @@ def _doc_scores_for_ids(
     """(tf, dl) per (doc_id, term) read from the INDEX postings for a tiny
     id set — the primitive behind score explanation and elevation scoring.
 
-    The postings scan is pruned to the query terms AND the ids' shards
-    (partition pruning: shard = doc_id % num_shards), the kernel intersects
-    each term's doc ids against the sorted target ids (searchsorted — no
-    full materialization beyond the term rows themselves), and only
-    |ids| × |terms| tiny rows reach the driver."""
+    A bounded caller of the shard executor (:func:`_run_shards`): the
+    postings read is pruned to the query terms AND the ids' shards
+    (partition pruning: shard = doc_id % num_shards) on either tier, the
+    kernel intersects each term's doc ids against the sorted target ids
+    (searchsorted — no full materialization beyond the term rows
+    themselves), and only |ids| × |terms| tiny rows reach the driver.
+    Under the cap it runs no Spark job."""
     if not terms or not ids:
         return {}
     want = np.array(sorted(set(int(i) for i in ids)), dtype=np.int64)
-    shards = sorted({int(i) % index.spec.num_shards for i in ids})
+    shards = {int(i) % index.spec.num_shards for i in ids}
     block_size = index.spec.block_size
     sterms = set(terms)
 
@@ -2355,34 +2389,26 @@ def _doc_scores_for_ids(
             out_i.append(rids[keep])
             out_tf.append(tfs[keep])
             out_dl.append(dls[keep])
-        if not out_t:
-            return pd.DataFrame(
-                {"term": [], "doc_id": [], "tf": [], "dl": []}
-            ).astype(
-                {"term": "object", "doc_id": "int64", "tf": "int64",
-                 "dl": "int64"}
-            )
-        return pd.DataFrame(
-            {
-                "term": out_t,
-                "doc_id": np.concatenate(out_i),
-                "tf": np.concatenate(out_tf).astype(np.int64),
-                "dl": np.concatenate(out_dl).astype(np.int64),
-            }
-        )
+        none = [np.empty(0, dtype=np.int64)]
+        return pd.DataFrame({
+            "term": pd.Series(out_t, dtype=object),
+            "doc_id": np.concatenate(none + out_i),
+            "tf": np.concatenate(none + out_tf).astype(np.int64),
+            "dl": np.concatenate(none + out_dl).astype(np.int64),
+        })
 
-    rows = (
-        _score_rows(index, spark)
-        .filter(F.col("shard").isin(shards) & F.col("term").isin(list(sterms)))
-        .groupBy("shard")
-        .applyInPandas(kernel, "term string, doc_id long, tf long, dl long")
-        .collect()
+    got = _run_shards(
+        spark, index, sorted(sterms), _SCORE_COLS, kernel,
+        "term string, doc_id long, tf long, dl long", bounded=True,
+        shards=shards,
     )
+    if isinstance(got, list):
+        rows = [r for p in got for r in p.itertuples(index=False)]
+    else:
+        rows = got.collect()
     out: dict[int, dict[str, tuple[int, int]]] = {}
-    for r in rows:
-        out.setdefault(int(r["doc_id"]), {})[r["term"]] = (
-            int(r["tf"]), int(r["dl"])
-        )
+    for term, doc_id, tf, dl in rows:
+        out.setdefault(int(doc_id), {})[term] = (int(tf), int(dl))
     return out
 
 
@@ -2411,43 +2437,56 @@ def explain_score(
     explanation is the ground truth of what scored."""
     # ranked docs never match a prohibited term; filters never score
     plan = plan_query(query, index.spec.keyword_fields, synonyms=synonyms)
+    rows = _explain_rows(spark, index, plan, [int(doc_id)])
+    return local_frame(
+        spark, rows.get(int(doc_id), []),
+        "term string, df long, tf long, dl long, idf double, "
+        "tf_norm double, contribution double",
+    )
+
+
+def _explain_rows(
+    spark: SparkSession, index: Index, plan: QueryPlan, ids: list[int]
+) -> dict[int, list[tuple]]:
+    """Per doc of ``ids``, its (term, df, tf, dl, idf, tf_norm,
+    contribution) rows under ``plan``: each scoring term it posts (term
+    order), then each constant-score clause it matches — the BM25 pieces
+    as the kernels compute them, so summing the contributions in this
+    order gives the doc's ranked score to the bit."""
     groups = _const_groups(spark, index, plan)
     dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
-    schema = (
-        "term string, df long, tf long, dl long, idf double, "
-        "tf_norm double, contribution double"
-    )
     exp_terms = sorted({t for g, _ in groups for t in g})
     if not dfs and not exp_terms:
-        return local_frame(spark, [], schema)
+        return {}
     exp_dfs = term_dfs(spark, index, exp_terms) if exp_terms else {}
     stats = _doc_scores_for_ids(
-        spark, index, sorted(set(dfs) | set(exp_dfs)), [int(doc_id)]
-    ).get(int(doc_id), {})
+        spark, index, sorted(set(dfs) | set(exp_dfs)), ids
+    )
     spec = index.spec
-    data = []
-    for t in sorted(t for t in stats if t in dfs):
-        tf, dl = stats[t]
-        # the ranked kernels premultiply boosts into idf — same placement
-        # here keeps sum(contribution) bit-equal to the ranked score
-        idf = bm25_idf(dfs[t], index.n_docs) * plan.weights.get(t, 1.0)
-        tf_norm = float(
-            bm25_tf_norm(
+    out: dict[int, list[tuple]] = {}
+    for i, got in stats.items():
+        rows = out[i] = []
+        for t in sorted(t for t in got if t in dfs):
+            tf, dl = got[t]
+            # the ranked kernels premultiply boosts into idf — same
+            # placement here keeps the sum bit-equal to the ranked score
+            idf = bm25_idf(dfs[t], index.n_docs) * plan.weights.get(t, 1.0)
+            tf_norm = float(bm25_tf_norm(
                 np.array([tf]), np.array([dl]), index.avgdl, spec.k1, spec.b
-            )[0]
-        )
-        data.append(
-            (t, int(dfs[t]), tf, dl, float(idf), tf_norm, float(idf * tf_norm))
-        )
-    for (tok, _), (g, w) in zip(plan.multiterm, groups):
-        # constant-score clause: weight once per matched doc (tf/dl carry
-        # no meaning — reported 0; df = the expansion's summed df)
-        if any(t in stats for t in g):
-            data.append(
-                (tok, int(sum(exp_dfs.get(t, 0) for t in g)), 0, 0,
-                 float(w), 1.0, float(w))
-            )
-    return local_frame(spark, data, schema)
+            )[0])
+            rows.append((
+                t, int(dfs[t]), tf, dl, float(idf), tf_norm,
+                float(idf * tf_norm),
+            ))
+        for (tok, _), (g, w) in zip(plan.multiterm, groups):
+            # constant-score clause: weight once per matched doc (tf/dl
+            # carry no meaning — reported 0; df = the summed df)
+            if any(t in got for t in g):
+                rows.append((
+                    tok, int(sum(exp_dfs.get(t, 0) for t in g)), 0, 0,
+                    float(w), 1.0, float(w),
+                ))
+    return out
 
 
 def realtime_get(
@@ -2514,7 +2553,9 @@ def search_elevated(
     :func:`_doc_scores_for_ids` — or 0.0 when pinned despite not
     matching), then the normal ranked tail with elevated and excluded ids
     removed, k rows total.  Without a config entry for the query this is
-    exactly :func:`search`  (plus the elevated=false flag)."""
+    exactly :func:`search`  (plus the elevated=false flag).  Both rankings
+    are bounded callers of the shard executor: under the cap, on an index
+    without deletes, the answer is one ``local_frame`` and no Spark job."""
     entry = elevations.get(query, [])
     pinned: list[int] = []
     excluded: set[int] = set()
@@ -2536,55 +2577,27 @@ def search_elevated(
         }
         pinned = [i for i in pinned if i not in gone]
     drop = set(pinned) | excluded
-    fetch = k + len(drop)
     ranked = search(
-        spark, index, query, k=fetch, with_stored=False, filters=filters,
-        op=op,
+        spark, index, query, k=k + len(drop), with_stored=False,
+        filters=filters, op=op,
     )
-    tail = (
-        ranked.filter(~F.col("doc_id").isin(sorted(drop)))
-        if drop
-        else ranked
-    )
-    tail = (
-        tail.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(max(0, k - len(pinned)))
-        .withColumn("elevated", F.lit(False))
+    tail = [
+        (d, s, False) for d, s in _rows(ranked) if d not in drop
+    ][:max(0, k - len(pinned))]
+    # the plain-search frame's flag is a literal, so never null
+    schema = T.StructType(
+        _RESULT_STRUCT.fields
+        + [T.StructField("elevated", T.BooleanType(), bool(pinned))]
     )
     if not pinned:
-        return tail
+        return local_frame(spark, tail, schema)
     plan = plan_query(query, index.spec.keyword_fields, op=op)
-    groups = _const_groups(spark, index, plan)
-    dfs = term_dfs(spark, index, plan.terms) if plan.terms else {}
-    idf = {
-        t: bm25_idf(d, index.n_docs) * plan.weights.get(t, 1.0)
-        for t, d in dfs.items()
-    }
-    exp_terms = sorted({t for g, _ in groups for t in g} - set(dfs))
-    stats = _doc_scores_for_ids(
-        spark, index, list(dfs) + exp_terms, pinned
-    )
-    spec = index.spec
-    rows = []
-    for i in pinned[:k]:
-        score = 0.0
-        for t, (tf, dl) in sorted(stats.get(i, {}).items()):
-            if t not in idf:
-                continue  # expansion-only terms score via their group
-            score += idf[t] * float(
-                bm25_tf_norm(
-                    np.array([tf]), np.array([dl]), index.avgdl,
-                    spec.k1, spec.b,
-                )[0]
-            )
-        for g, w in groups:  # constant-score clause: weight once per doc
-            if any(t in stats.get(i, {}) for t in g):
-                score += w
-        rows.append((i, float(score), True))
-    head = local_frame(
-        spark, rows, "doc_id long, score double, elevated boolean"
-    )
-    return head.unionByName(tail)
+    expl = _explain_rows(spark, index, plan, pinned[:k])
+    rows = [
+        (i, float(sum(r[-1] for r in expl.get(i, []))), True)
+        for i in pinned[:k]
+    ]
+    return local_frame(spark, rows + tail, schema)
 
 
 #: terminal cursor: returned by next_cursor when a page comes back empty.
@@ -2681,9 +2694,9 @@ def facet_fields_counts(
     rows and schema:
 
     * **driver-local** — :func:`_match_set` serves the match on the
-      driver (every shape but a phrase) and the fields' row groups are
-      under ``Index.LOCAL_SCAN_MAX_BYTES``: one pyarrow read over the
-      field prefixes, each posting row's ids decoded
+      driver (every query shape, a phrase included) and the fields' row
+      groups are under ``Index.LOCAL_SCAN_MAX_BYTES``: one pyarrow read
+      over the field prefixes, each posting row's ids decoded
       (:func:`codec.decode_doc_ids`) and counted against the sorted match
       set in numpy, one ``local_frame`` — no Spark job;
     * **distributed** — everything else (a request over the cap falls back
@@ -4340,13 +4353,8 @@ def batch_kernel(
 
         def score(plan: QueryPlan) -> pd.DataFrame | None:
             frows = rows_of(sorted(_flat_terms(plan.filters)))
-            if plan.slop is not None:
-                uniq = list(dict.fromkeys(plan.terms))
-                if not uniq or any(t not in idf for t in uniq):
-                    return None  # a df=0 phrase term empties the conjunction
-                qrows = rows_of(uniq) + frows
-                if not qrows:
-                    return None
+            if plan.slop is not None:  # never zero-hit: _phrase_request
+                qrows = rows_of(dict.fromkeys(plan.terms)) + frows
                 scorer = _phrase_kernel(
                     plan.terms, sum(idf[t] for t in plan.terms), avgdl, k1,
                     b, k, block_size, plan.filters, slop=plan.slop,
@@ -4467,28 +4475,28 @@ def search_many(
     queries: dict[str, str | dict],
     k: int = 10,
 ) -> DataFrame:
-    """Answer MANY queries in ONE distributed pass (the batch-query path:
-    one postings scan filtered to the union of all query terms, one kernel
-    run per shard scoring every query with per-query MaxScore pruning and a
-    shared decode cache — see :func:`batch_kernel` — then one global
-    per-query top-k window).
+    """Answer MANY queries in one shard fan-out (the batch-query path: one
+    postings read of the union of all query terms, one kernel run per
+    shard scoring every query with per-query MaxScore pruning and a shared
+    decode cache — see :func:`batch_kernel` — then the per-query top-k
+    merge of :func:`_merge_topk`, keyed by ``query_id``).  A bounded
+    caller of the shard executor: under ``Index.LOCAL_SCAN_MAX_BYTES`` the
+    batch runs on the driver with no Spark job, else distributed.
 
     Each queries value is a query STRING or a request dict with the full
     single-query surface — ``{"q": ..., "filters": {...}, "op": "AND",
     "synonyms": {...}}`` — parsed exactly like :func:`search` (query-string
     ``field:value`` tokens, ``AND``/``+term`` operators, synonym
-    expansion, fully-quoted phrase queries on a positional index), so a
-    batch entry is rank-identical to its single-query twin
-    (pytest-asserted).  Filter terms join the one postings scan; the
-    per-query intersection happens inside the shard kernel.  The positional
-    payload joins the scan only when the batch actually contains a phrase
-    query.
+    expansion, fully-quoted phrase queries on a positional index through
+    :func:`_phrase_request`), so a batch entry is rank-identical to its
+    single-query twin (pytest-asserted).  Filter terms join the one
+    postings read; the per-query intersection happens inside the shard
+    kernel.  The positional payload joins the read only when the batch
+    actually contains a phrase query.
 
     Returns (query_id, doc_id, score) with per-query rank order
     (score desc, doc_id asc), at most k rows per query.
     """
-    from pyspark.sql import Window
-
     plans: dict[str, QueryPlan] = {}
     for qid, req in queries.items():
         if isinstance(req, str):
@@ -4503,48 +4511,29 @@ def search_many(
                     req.get("synonyms"), req.get("op", "OR"),
                 ),
             )
-        elif not index.spec.positions:
-            raise ValueError(
-                "phrase queries need a positional index "
-                "(IndexSpec.positions=True)"
-            )
-        else:
-            plans[qid] = QueryPlan(
-                _phrase_terms(pq[0]), filter_terms_of(req.get("filters")),
-                slop=pq[1],
-            )
-    have_phrase = any(p.slop is not None for p in plans.values())
+            continue
+        terms, fterms, dfs = _phrase_request(
+            spark, index, pq[0], req.get("filters")
+        )
+        if dfs is not None:  # a zero-hit phrase answers no rows
+            plans[qid] = QueryPlan(terms, fterms, slop=pq[1])
     all_terms = sorted({t for p in plans.values() for t in p.terms})
-    all_fterms = sorted(
-        _flat_terms({t for p in plans.values() for t in p.filters})
-    )
-    all_eterms = sorted(
-        {t for p in plans.values() for t in p.excluded}
-        | {t for p in plans.values() for g, _ in p.groups for t in g}
-    )
-    have_groups = any(g for p in plans.values() for g, _ in p.groups)
-    schema = "query_id string, doc_id long, score double"
     dfs = term_dfs(spark, index, all_terms) if all_terms else {}
-    if not dfs and not all_fterms and not have_groups:
+    scan = [t for p in plans.values() for t in _plan_terms(p, dfs)]
+    schema = "query_id string, doc_id long, score double"
+    if not scan:
         return local_frame(spark, [], schema)
     spec = index.spec
     idf = {t: bm25_idf(df, index.n_docs) for t, df in dfs.items()}
     kernel = batch_kernel(
         plans, idf, index.avgdl, spec.k1, spec.b, k, spec.block_size
     )
-    scan_cols = _SCORE_COLS + (["pos", "boffs_pos"] if have_phrase else [])
-    matched = index.postings(spark).select(*scan_cols).filter(
-        F.col("term").isin(
-            _scan_terms(index, list(idf) + all_fterms + all_eterms)
-        )
+    phrase = any(p.slop is not None for p in plans.values())
+    columns = _SCORE_COLS + (["pos", "boffs_pos"] if phrase else [])
+    top = _merge_topk(
+        spark, index, scan, columns, kernel, k, schema=schema, by="query_id"
     )
-    local = matched.groupBy("shard").applyInPandas(kernel, schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        local.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    return local_frame(spark, top, schema) if isinstance(top, list) else top
 
 
 # ---------------------------------------------------------------------------

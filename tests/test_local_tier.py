@@ -1,8 +1,10 @@
-"""The driver-local tier of bounded ranked requests (query/search.py
-``_merge_topk`` and ``_fetch_stored``), of their unscored pages and of
-facet counts (``_match_set``): a request whose candidate row groups are under
-``Index.LOCAL_SCAN_MAX_BYTES`` runs the same per-shard kernel in-process
-over a pyarrow read and returns a ``local_frame``.
+"""The driver-local tier of the shard executor (query/search.py
+``_run_shards``) and of the stored fetch (``_fetch_stored``): a bounded
+ranked request, its unscored pages, a facet count (``_match_set``), a
+``search_many`` batch, a score explanation and an elevated ranking whose
+candidate row groups are under ``Index.LOCAL_SCAN_MAX_BYTES`` run the same
+per-shard kernel in-process over a pyarrow read and return a
+``local_frame``.
 
 Every case compares the local tier with the distributed tier (the cap
 forced to 0) with ``==`` on rows and schema, nullability included, on a
@@ -23,11 +25,14 @@ from cascading_solr_spark.indexing import append_documents, build_index
 from cascading_solr_spark.indexing.build import Index, _may_hold
 from cascading_solr_spark.query.boolean import search_boolean
 from cascading_solr_spark.query.search import (
+    explain_score,
     facet_counts,
     facet_fields_counts,
     search,
     search_after,
     search_dismax,
+    search_elevated,
+    search_many,
     search_phrase,
 )
 from test_round5 import _spark_jobs
@@ -182,6 +187,87 @@ def test_search_after_chain_equals_distributed(spark, tier_indexes, which):
         assert flat == ranked, (which, q)
 
 
+#: one batch entry of each request shape
+BATCH = {
+    "or": "parse buffer retry",
+    "and": {"q": "parse buffer", "op": "AND"},
+    "wildcard": "buf* retry",
+    "boost": "parse^3 buffer retry^0.5",
+    "filter": {"q": "parse json", "filters": {"lang": "python"}},
+    "pure_filter": "lang:go -column",
+    "zero": "zzqx",
+    "phrase": '"buffer retry"',
+    "phrase_filter": {"q": '"parse buffer"', "filters": {"lang": "go"}},
+    "phrase_zero": '"zzqx retry"',
+}
+
+
+def _batch_cases(spark, ix):
+    """search_many, explain_score and search_elevated — the shard
+    executor's bounded callers beside the ranked entry points."""
+    pins = {"parse buffer": [5, 17, (1, True)], "retry": [(2, True)]}
+    top = [
+        r["doc_id"] for q in ("parse buffer retry", "buf* retry^2")
+        for r in search(spark, ix, q, k=1, with_stored=False).collect()
+    ]
+    return {
+        "many": lambda: search_many(spark, ix, BATCH, k=6),
+        "many_one": lambda: search_many(spark, ix, {"a": "retry"}, k=3),
+        "explain": lambda: explain_score(
+            spark, ix, "parse buffer retry", top[0]
+        ),
+        "explain_wildcard": lambda: explain_score(
+            spark, ix, "buf* retry^2", top[1]
+        ),
+        "elevated": lambda: search_elevated(
+            spark, ix, "parse buffer", pins, k=6
+        ),
+        "elevated_exclude_only": lambda: search_elevated(
+            spark, ix, "retry", pins, k=5
+        ),
+        "elevated_none": lambda: search_elevated(spark, ix, "json", pins, k=4),
+    }
+
+
+def _rank_order(rows):
+    """search_many's rows in (query_id, rank) order: the batch's order
+    across queries is not part of its contract on the distributed tier."""
+    return sorted(rows, key=lambda r: (r[0], -r[2], r[1]))
+
+
+@pytest.mark.parametrize("which", ["plain", "mut"])
+def test_batch_explain_elevated_equal_distributed(spark, tier_indexes, which):
+    ix = Index.load(tier_indexes[which])
+    for name, call in _batch_cases(spark, ix).items():
+        local, dist = _tiers(call)
+        if name.startswith("many"):
+            local = (_rank_order(local[0]), local[1])
+            dist = (_rank_order(dist[0]), dist[1])
+        assert local == dist, (which, name)
+        assert local[0], (which, name)
+    many = _run(_batch_cases(spark, ix)["many"])[0]
+    got = {r["query_id"] for r in many}
+    assert got == set(BATCH) - {"zero", "phrase_zero"}, got
+    for qid, q in BATCH.items():  # each entry is its single-query twin
+        req = {"q": q} if isinstance(q, str) else q
+        single = search(
+            spark, ix, req["q"], k=6, with_stored=False,
+            filters=req.get("filters"), op=req.get("op", "OR"),
+        ).collect()
+        assert [(r["doc_id"], r["score"]) for r in _rank_order(many)
+                if r["query_id"] == qid] == [tuple(r) for r in single], qid
+
+
+def test_warm_batch_explain_elevated_run_no_job(spark, tier_indexes):
+    # on an index without deletes: a pinned id on an index with deletes is
+    # probed against the tombstones by a Spark job
+    ix = Index.load(tier_indexes["plain"])
+    for name, call in _batch_cases(spark, ix).items():
+        call().collect()  # warm the handle's dict and footer caches
+        got = _spark_jobs(spark, lambda: call().collect())
+        assert got == 0, (name, got)
+
+
 def test_warm_tiered_requests_run_no_job(spark, tier_indexes):
     ix = Index.load(tier_indexes["mut"])
     cases = _cases(spark, ix)
@@ -285,15 +371,14 @@ def _facet_cases(spark, ix):
         ),
         "fields_repeated": ffc("*:*", ["repo", "lang", "repo"], limit=3),
         "fields_zero": ffc("zzqx", ["lang", "repo"]),
-        # the shapes only the distributed tier serves
+        # a phrase is a match kernel shape like the others
         "phrase": fc('"buffer retry"'),
         "fields_phrase": ffc('"buffer retry"', ["lang", "repo"], limit=2),
     }
 
 
-#: facet cases the driver-local tier serves without a Spark job: every
-#: match but a phrase
-LOCAL_FACETS = tuple(n for n in _facet_cases(None, None) if "phrase" not in n)
+#: facet cases the driver-local tier serves without a Spark job: every match
+LOCAL_FACETS = tuple(_facet_cases(None, None))
 
 
 @pytest.mark.parametrize("which", ["plain", "mut"])
@@ -469,6 +554,51 @@ def test_over_the_cap_takes_the_distributed_tier(
         spark, lambda: search(spark, ix, "parse buffer", k=5).collect()
     )
     assert got > 0, got
+
+
+def _row_group_bytes(ix, table, prefix=None, columns=None) -> int:
+    """Uncompressed bytes of the row groups of ``table`` that may hold a key
+    starting with ``prefix`` (every row group when None): whole, or of the
+    top-level ``columns`` only — from the parquet footers."""
+    total = 0
+    for f in ix.footers(table):
+        for g in range(f.meta.num_row_groups):
+            if prefix is not None and not _may_hold(prefix, f.lo[g], f.hi[g]):
+                continue
+            rg = f.meta.row_group(g)
+            total += sum(
+                rg.column(i).total_uncompressed_size
+                for i in range(rg.num_columns)
+                if columns is None
+                or rg.column(i).path_in_schema.split(".")[0] in columns
+            )
+    return total
+
+
+def test_local_read_charges_only_the_projected_columns(
+    spark, tier_indexes, monkeypatch
+):
+    # a cap between the bytes a read projects and its whole row groups:
+    # the read is served, the columns it never reads are not charged
+    ix = Index.load(tier_indexes["plain"])
+    ids = _row_group_bytes(ix, "docs", columns={"doc_id"})
+    whole_docs = _row_group_bytes(ix, "docs")
+    assert ids * 4 < whole_docs
+    monkeypatch.setattr(Index, "LOCAL_SCAN_MAX_BYTES", whole_docs)
+    assert ix.read_local("docs", None, ["doc_id"]) is not None
+    assert ix.read_local("docs", None, ["doc_id", "path"]) is not None
+    # a match-all facet count: the docs' ids and the field's posting ids
+    read = _row_group_bytes(ix, "postings", "lang:", {"term", "n_docs",
+                                                      "doc_ids"})
+    whole = _row_group_bytes(ix, "postings", "lang:")
+    assert max(ids, read) * 2 < whole
+    monkeypatch.setattr(Index, "LOCAL_SCAN_MAX_BYTES", (read + whole) // 2)
+
+    def call():
+        return facet_counts(spark, ix, "*:*", "lang").collect()
+
+    assert call()
+    assert _spark_jobs(spark, call) == 0
 
 
 def test_prefix_row_group_test_never_drops_a_match():

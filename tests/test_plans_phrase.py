@@ -90,6 +90,7 @@ def test_ranked_search_never_reads_positions(spark, index):
             assert "pos" not in s and "boffs_pos" not in s
 
 
+@pytest.mark.usefixtures("distributed_tier")
 def test_batch_scan_reads_positions_only_with_phrase(spark, index):
     """The batch scan includes the positional payload ONLY when the batch
     contains a quoted entry."""

@@ -466,6 +466,46 @@ def test_select_facets_count_over_the_results_docset(spark, ix):
     assert sum(n for _, _, n in got) == len(results)
 
 
+def test_select_all_terms_mm_counts_the_results_docset(spark, ix):
+    """mm=100% runs the components with op=AND (the /browse rule), so the
+    facet buckets count the results' DocSet, not the OR one."""
+    from cascading_solr_spark.handlers import select
+    from cascading_solr_spark.query.search import facet_fields_counts
+
+    q = "json retry merge"
+    via = select(spark, ix, {
+        "q": q, "mm": "100%", "rows": 1000, "facet": "true",
+        "facet.field": "lang",
+    })
+    got = [tuple(r) for r in via["facet_fields"].collect()]
+    results = via["results"].select("doc_id").collect()
+    assert sum(n for _, _, n in got) == len(results) > 0
+    want = facet_fields_counts(spark, ix, q, ["lang"], op="AND")
+    assert got == [tuple(r) for r in want.collect()]
+    loose = facet_fields_counts(spark, ix, q, ["lang"])
+    assert sum(r["n"] for r in loose.collect()) > len(results)  # non-vacuous
+
+
+@pytest.mark.parametrize("component", [
+    {"facet": "true", "facet.field": "lang"},
+    {"facet": "true", "facet.query": "lang:go"},
+    {"stats": "true", "stats.field": "textlen"},
+    {"group": "true", "group.field": "lang"},
+])
+def test_select_partial_mm_refused_where_it_would_drop(spark, ix, component):
+    """Any other mm is never silently dropped from the components that
+    count over a match set: the pair raises by name, and the same request
+    without mm, or with mm alone, is served."""
+    from cascading_solr_spark.handlers import select
+
+    params = {"q": "json retry merge", "mm": "2", **component}
+    with pytest.raises(ValueError, match="mm='2' does not compose"):
+        select(spark, ix, params)
+    select(spark, ix, {"q": "json retry merge", "mm": "2"})
+    params.pop("mm")
+    select(spark, ix, params)
+
+
 @pytest.mark.parametrize("component", [
     {"facet": "true", "facet.field": "lang"},
     {"facet": "true", "facet.query": "lang:go"},
