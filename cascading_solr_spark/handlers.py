@@ -373,9 +373,10 @@ def select(
 
     * ``q`` (default ``*:*``), ``q.op``, ``mm``, ``rows``, ``start``,
       ``fl`` (comma list), ``synonyms`` (engine extension: dict).  The
-      facet, stats and group components count under ``q.op``, not an mm
-      floor: ``mm=100%`` runs them with op=AND (the /browse rule); any
-      other mm together with one of them raises;
+      facet, stats and group components, the boosted query (``bf`` /
+      ``boost`` / ``bq``) and a field or function ``sort`` match under
+      ``q.op``, not an mm floor: ``mm=100%`` runs them with op=AND (the
+      /browse rule); any other mm together with one of them raises;
     * ``fq`` — string or list: ``field:value`` keyword filters compose
       index-side; ``field:[a TO b]`` over a stored NUMERIC field becomes
       the doc-filter (frange/PostFilter) path, ``*`` ends open; multiple
@@ -502,16 +503,22 @@ def select(
         raise ValueError(
             f"a numeric-range fq does not compose with {unfiltered!r}"
         )
-    # mm floors the results' match; the components take an op, not a
-    # floor: an all-terms mm is op=AND (the /browse rule), any other mm
-    # is refused rather than counted over the OR match set
+    # the result routes that take an op but no mm floor: a field or
+    # function sort, and the boosted query
+    sort = str(params.get("sort", "score desc")).strip()
+    sorted_by = sort not in ("score desc", "score asc", "")
+    boosted = [p for p in ("bf", "boost", "bq") if p in params]
+    op_only = ["sort"] if sorted_by else boosted
+    # mm floors the results' match; the components and those routes take
+    # an op, not a floor: an all-terms mm is op=AND (the /browse rule), any
+    # other mm is refused rather than counted over the OR match set
     comp_op = op
     if mm is not None and op != "AND" and q != "*:*":
         if str(mm).strip() == "100%":
             comp_op = "AND"
-        elif unfiltered:
+        elif unfiltered or op_only:
             raise ValueError(
-                f"mm={mm!r} does not compose with {unfiltered!r}"
+                f"mm={mm!r} does not compose with {unfiltered + op_only!r}"
             )
 
     # ---- cursorMark (Solr deep-paging protocol: opaque mark, "*" = first
@@ -528,9 +535,8 @@ def select(
             cursor = decode_cursor_mark(str(mark))
 
     # ---- main query routing ----
-    sort = str(params.get("sort", "score desc")).strip()
     out: dict[str, DataFrame] = {}
-    if sort not in ("score desc", "score asc", ""):
+    if sorted_by:
         field_expr, _, direction = sort.rpartition(" ")
         asc = direction.lower() == "asc"
         if "(" in field_expr:
@@ -540,13 +546,13 @@ def select(
                 )
             results = sort_by_function(
                 spark, index, q, field_expr, ascending=asc, k=rows,
-                start=start, filters=filters or None, op=op,
+                start=start, filters=filters or None, op=comp_op,
                 doc_filter=doc_filter,
             )
         else:
             results = search_sorted(
                 spark, index, q, field_expr, ascending=asc, k=rows,
-                start=start, filters=filters or None, op=op,
+                start=start, filters=filters or None, op=comp_op,
                 doc_filter=doc_filter, cursor=cursor,
             )
     elif mark is not None:
@@ -569,12 +575,12 @@ def select(
             filters=filters or None, synonyms=synonyms, op=op,
             with_stored=True,
         )
-    elif any(k in params for k in ("bf", "boost", "bq")):
+    elif boosted:
         results = search_boosted(
             spark, index, q,
             bf=params.get("bf"), boost=params.get("boost"),
             bq=params.get("bq"), k=rows, start=start,
-            filters=filters or None, synonyms=synonyms, op=op,
+            filters=filters or None, synonyms=synonyms, op=comp_op,
             doc_filter=doc_filter,
         )
     elif str(params.get("defType", "")).lower() == "edismax" and "qf" in params:

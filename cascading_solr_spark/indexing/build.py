@@ -314,6 +314,32 @@ def _check_null_keys(n_null: int, keys: list[str]) -> None:
         )
 
 
+def _check_batch_keys(n: int, n_distinct: int, n_null: int, keys) -> None:
+    """An append batch's key gate: no NULL key field, no duplicate key."""
+    _check_null_keys(n_null, keys)
+    if n != n_distinct:
+        raise IndexSpecError(
+            f"{n - n_distinct} duplicate rows for key {tuple(keys)!r} in "
+            "append batch (uniqueKey analogue)"
+        )
+
+
+def _check_batch_ids(n_null: int, lo, hi, field: str) -> None:
+    """An append batch's caller-assigned id gate: no NULL id (a column that
+    does not cast to long), every id in the packed layout's range."""
+    if n_null:
+        raise IndexSpecError(
+            f"{n_null} NULL doc ids in append batch (column {field!r} does "
+            "not cast to long)"
+        )
+    if int(lo) < 0 or int(hi) > MAX_DOC_ID:
+        raise IndexSpecError(
+            f"doc ids must be in [0, {MAX_DOC_ID}] to fit the packed "
+            f"posting layout (got min={lo}, max={hi}); remap hash-derived "
+            "ids first"
+        )
+
+
 def _rank_ids(
     df: DataFrame,
     keys: tuple[str, ...],
@@ -845,6 +871,25 @@ class Index:
     #: put on the driver.
     LOCAL_SCAN_MAX_BYTES = 32 << 20
 
+    #: largest batch ``append_documents`` writes on the driver
+    #: (indexing/local_write.py), in UTF-8 bytes of content and text
+    #: fields; 0 turns the driver write tier off, for deletes too.  The
+    #: driver tokenizes on one core, so the cap bounds driver CPU, not
+    #: memory: it sits just under the measured break-even against the
+    #: Spark writer.
+    #: Appends of perfbench-shaped files (4 shards, positions, a keyword and
+    #: a text field) on a 4-core host, ``local[4]``, medians of 3 warm
+    #: calls: 200 files (0.55 MB) driver 0.70 s / Spark 2.13 s, 800 files
+    #: (2.2 MB) 1.69 s / 2.49 s, 3200 files (8.7 MB) 5.95 s / 4.37 s — the
+    #: driver ~0.66 s/MB, the Spark writer ~2 s + 0.29 s/MB, even at
+    #: ~4.4 MB.  More cores lower the Spark writer's per-MB cost, and so the
+    #: break-even.  A delete of driver-held ids has no break-even and no
+    #: cap: the ids are on the driver already, and the Spark writer must
+    #: first ship them into a frame.  Tombstone writes on the same host and
+    #: index, medians of 3 warm calls, driver / Spark: 1k ids 0.014 s /
+    #: 0.65 s, 100k ids 0.12 s / 1.11 s, 1M ids 1.25 s / 5.82 s.
+    LOCAL_WRITE_MAX_BYTES = 4 << 20
+
     def footers(self, table: str) -> list[Footer]:
         """The footer index of ``table`` (``"postings"``, keyed by term, or
         ``"docs"``, keyed by doc_id): every data file's shard and, per row
@@ -1167,7 +1212,8 @@ def _keyword_tf_rows(
     """(packed(doc_id, dl=1), term='field:value', tf=1) rows for every
     keyword field value.  Multi-valued fields explode (SolrWriter.java:67-71
     tuple-explode analogue); nulls are skipped (SolrWriter.java:65-66
-    null-skip).  Pure Catalyst — no Python in this path."""
+    null-skip).  Pure Catalyst — no Python in this path.  Twin: the keyword
+    loop of ``local_write.append_segment`` (a format change edits both)."""
     if not spec.keyword_fields:
         return None
     schema = {f.name: f.dataType for f in based.schema.fields}
@@ -1350,7 +1396,9 @@ def _write_postings(
     ``persist`` caches the assembled rows (append derives its lineage delta
     and dict segment from them); ``observe`` names an Observation of the
     written rows' token stats (:func:`_observe_tokens`).  Returns the
-    assembled rows and that Observation (None without ``observe``)."""
+    assembled rows and that Observation (None without ``observe``).  Twin:
+    ``local_write._assemble`` sorts and assembles in-process (a change to
+    the layout edits both)."""
     shard_e, salt_e = _shard_salt_exprs(hot_terms, spec)
     salt_keys = [salt_e] if salt_e is not None else []
     single = width <= spec.num_shards
@@ -1394,7 +1442,8 @@ def _observe_tokens(df: DataFrame, spec: IndexSpec, name: str, col: str):
     names are disjoint from keyword fields by spec validation, so the prefix
     match is unambiguous).  The metrics ride the action that consumes the
     returned frame — zero extra jobs.  Returns (observed frame, Observation);
-    :func:`_set_token_stats` folds ``obs.get`` into meta."""
+    :func:`_set_token_stats` folds ``obs.get`` into meta.  Twin:
+    ``local_write._token_stats`` (a change to these metrics edits both)."""
     from pyspark.sql import Observation
 
     obs = Observation(name)
@@ -1434,15 +1483,20 @@ def _set_token_stats(
     meta["field_tokens"] = ftok
 
 
-def _docs_rows(based: DataFrame, spec: IndexSpec) -> DataFrame:
-    """The stored-docs projection: doc_id, stored fields, the content's
-    sha256 (round-trip check) and the shard."""
-    return based.select(
-        "doc_id",
-        *spec.stored_fields,
+def _docs_cols(spec: IndexSpec) -> list[F.Column]:
+    """The stored-docs columns over doc_id-carrying rows: doc_id, stored
+    fields, the content's sha256 (round-trip check) and the shard."""
+    return [
+        F.col("doc_id"),
+        *[F.col(f) for f in spec.stored_fields],
         F.sha2(F.col(spec.content_field), 256).alias("sha256"),
         F.pmod(F.col("doc_id"), F.lit(spec.num_shards)).cast("int").alias("shard"),
-    )
+    ]
+
+
+def _docs_rows(based: DataFrame, spec: IndexSpec) -> DataFrame:
+    """The stored-docs projection (:func:`_docs_cols`)."""
+    return based.select(*_docs_cols(spec))
 
 
 def _write_docs(docs: DataFrame, spec: IndexSpec, path: str, mode: str) -> None:
@@ -1479,7 +1533,8 @@ def term_ngram_rows(terms: DataFrame) -> DataFrame:
     destroys at most 2 bigrams of the padded string; dup(q) = q's duplicate
     gram count), so filtering candidates by shared-gram count with that
     threshold NEVER drops a true suggestion — suggest_terms falls back to
-    the full scan when the threshold would be < 1 (very short queries)."""
+    the full scan when the threshold would be < 1 (very short queries).
+    Twin: ``local_write._ngram_rows`` (a format change edits both)."""
     padded = F.concat(F.lit("^"), F.col("term"), F.lit("$"))
     grams = F.array_distinct(
         F.expr(
@@ -1501,7 +1556,8 @@ def _write_lineage(postings: DataFrame, lineage_path: str, segment: str) -> None
     shard has MULTIPLE lineage rows whose stats (skew_ratio especially) are
     per-segment, not per-shard — consumers aggregate explicitly by
     filtering/grouping on this tag instead of misreading mixed build+append
-    rows as per-shard truth."""
+    rows as per-shard truth.  Twin: ``local_write._lineage_rows`` (a format
+    change edits both)."""
     lineage = postings.groupBy("shard").agg(
         F.count("*").alias("terms"),
         F.sum("n_docs").alias("postings"),

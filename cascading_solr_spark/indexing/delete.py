@@ -16,14 +16,27 @@ side of that same update contract, with Lucene's exact visibility model:
   the N/avgdl stats are recomputed, and ``n_deleted`` resets to 0.
 
 Representation: tombstones are ordinary posting rows under the reserved
-``codec.DELETED_TERM`` (never a legal analyzed or keyword term), written
-by the SAME segment writer as real postings (``build._write_postings``:
-salt/shard exchange, assembler, one file per shard).  That buys:
-one extra term in each query's pruned IN-list scan (only when deletes
-exist — a zero-delete index plans byte-identically), in-shard exclusion
-inside every kernel with no extra job or broadcast, replication snapshots
-that carry deletes for free, and an O(delete-batch) write cost independent
-of index size.
+``codec.DELETED_TERM`` (never a legal analyzed or keyword term), in the
+same segment layout as real postings (salt/shard layout, assembler, one
+file per shard).  That buys: one extra term in each query's pruned IN-list
+scan (only when deletes exist — a zero-delete index plans
+byte-identically), in-shard exclusion inside every kernel with no extra
+job or broadcast, replication snapshots that carry deletes for free, and an
+O(delete-batch) write cost independent of index size.
+
+Two tiers write the tombstones, with ``==`` rows
+(tests/test_write_tier.py):
+
+* **driver** — ids already on the driver (an id list, or an id frame whose
+  optimized plan is a ``LocalRelation``, read by a 0-job collect), however
+  many: the Spark writer's assembler runs in-process and pyarrow writes
+  one file per shard (``local_write.write_tombstones``) — no Spark job,
+  and faster than the Spark writer at every measured size (the numbers
+  are in ``Index.LOCAL_WRITE_MAX_BYTES``' comment);
+* **Spark** — every other id frame (a ``delete_by_query`` match set, an
+  overwrite's key lookup), and every delete under
+  ``Index.LOCAL_WRITE_MAX_BYTES = 0``: the build's segment writer
+  ``build._write_postings``.
 """
 
 from __future__ import annotations
@@ -43,6 +56,7 @@ from cascading_solr_spark.indexing.build import (
     read_meta,
     write_meta,
 )
+from cascading_solr_spark.indexing.local_write import is_local, write_tombstones
 from cascading_solr_spark.spec import IndexSpecError
 
 
@@ -62,23 +76,33 @@ def delete_documents(
     writer at a time, same contract as append."""
     index = Index.load(index_dir)
     spec = index.spec
+    vals: list | None = None
     if isinstance(ids, DataFrame):
         (col,) = ids.columns[:1] or ("doc_id",)
-        ids_df = ids.select(F.col(col).cast("long").alias("doc_id")).distinct()
+        ids_df = ids.select(F.col(col).cast("long").alias("doc_id"))
+        if is_local(ids):
+            # driver rows: the projection folds into the relation (0 jobs)
+            vals = [r[0] for r in ids_df.collect()]
+    else:
+        vals = [None if i is None else int(i) for i in ids]
+    if vals is None:
         # cut lineage: deleteByQuery's ids READ the postings dir this write
         # APPENDS to — materialize executor-side before planning the write
-        ids_df = ids_df.localCheckpoint(eager=True)
+        ids_df = ids_df.distinct().localCheckpoint(eager=True)
         bounds = ids_df.agg(
-            F.count("*").alias("n"), F.min("doc_id").alias("lo"),
+            F.count("doc_id").alias("n"), F.min("doc_id").alias("lo"),
             F.max("doc_id").alias("hi"),
+            F.count(F.when(F.col("doc_id").isNull(), 1)).alias("nulls"),
         ).collect()[0]
-        n_del, lo, hi = int(bounds["n"]), bounds["lo"], bounds["hi"]
+        n_null, n_del = int(bounds["nulls"]), int(bounds["n"])
+        lo, hi = bounds["lo"], bounds["hi"]
     else:
-        # an id list is already on the driver: bounds without a job
-        vals = sorted({int(i) for i in ids})
-        ids_df = local_frame(spark, [(v,) for v in vals], "doc_id long")
+        n_null = vals.count(None)
+        vals = sorted({v for v in vals if v is not None})
         n_del = len(vals)
         lo, hi = (vals[0], vals[-1]) if vals else (None, None)
+    if n_null:
+        raise IndexSpecError(f"{n_null} NULL doc ids in delete batch")
     if not n_del:
         return index
     if lo < 0 or hi > MAX_DOC_ID:
@@ -86,21 +110,27 @@ def delete_documents(
             f"doc ids must be in [0, {MAX_DOC_ID}] (got min={lo}, max={hi})"
         )
 
-    pos_cols = (
-        [F.lit(b"").cast("binary").alias("pos")] if spec.positions else []
-    )
-    tf_long = ids_df.select(
-        (F.shiftleft(F.col("doc_id"), DL_BITS) + F.lit(1)).alias("packed"),
-        F.lit(DELETED_TERM).alias("term"),
-        F.lit(1).cast("int").alias("tf"),
-        *pos_cols,
-    )
-    # single-exchange write at sort width num_shards (the append path's
-    # shape, r6b): one file per shard per delete batch
-    _write_postings(
-        tf_long, spec, list(index.hot_terms), index.postings_path,
-        spec.num_shards,
-    )
+    if vals is not None and Index.LOCAL_WRITE_MAX_BYTES > 0:
+        write_tombstones(vals, spec, index.hot_terms, index.postings_path)
+    else:
+        if vals is not None:
+            ids_df = local_frame(spark, [(v,) for v in vals], "doc_id long")
+        pos_cols = (
+            [F.lit(b"").cast("binary").alias("pos")] if spec.positions else []
+        )
+        tf_long = ids_df.select(
+            (F.shiftleft(F.col("doc_id"), DL_BITS) + F.lit(1)).alias("packed"),
+            F.lit(DELETED_TERM).alias("term"),
+            F.lit(1).cast("int").alias("tf"),
+            *pos_cols,
+        )
+        # single-exchange write at sort width num_shards (the append path's
+        # shape, r6b): one file per shard per delete batch.  Twin:
+        # local_write.write_tombstones
+        _write_postings(
+            tf_long, spec, list(index.hot_terms), index.postings_path,
+            spec.num_shards,
+        )
 
     # no dict segment (DELETED_TERM must never surface in spellcheck /
     # terms / luke), no doc rows, no token stats: stats stay stale by design

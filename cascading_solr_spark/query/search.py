@@ -2526,6 +2526,28 @@ def realtime_get(
     return out.orderBy("doc_id")
 
 
+def _tombstoned(spark: SparkSession, index: Index, ids: list[int]) -> set:
+    """The deleted members of ``ids``: their shards' tombstone rows, read
+    and decoded by the shard executor (a bounded caller, so on the driver
+    under the cap)."""
+    want = np.unique(np.asarray(ids, dtype=np.int64))
+    block_size = index.spec.block_size
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        dead = denied_ids(list(pdf.itertuples(index=False)), block_size)
+        hit = want[:0] if dead is None else want[_member(want, dead)]
+        return pd.DataFrame({"doc_id": hit})
+
+    got = _run_shards(
+        spark, index, [], ["shard", "term", "n_docs", "doc_ids"], kernel,
+        "doc_id long", bounded=True,
+        shards={int(i) % index.spec.num_shards for i in want},
+    )
+    if isinstance(got, list):
+        return set(_column(got, "doc_id", np.int64).tolist())
+    return {int(r["doc_id"]) for r in got.collect()}
+
+
 def search_elevated(
     spark: SparkSession,
     index: Index,
@@ -2554,8 +2576,9 @@ def search_elevated(
     matching), then the normal ranked tail with elevated and excluded ids
     removed, k rows total.  Without a config entry for the query this is
     exactly :func:`search`  (plus the elevated=false flag).  Both rankings
-    are bounded callers of the shard executor: under the cap, on an index
-    without deletes, the answer is one ``local_frame`` and no Spark job."""
+    are bounded callers of the shard executor, and so is the probe of the
+    pinned ids against the tombstones: under the cap the answer is one
+    ``local_frame`` and no Spark job."""
     entry = elevations.get(query, [])
     pinned: list[int] = []
     excluded: set[int] = set()
@@ -2568,13 +2591,8 @@ def search_elevated(
             pinned.append(int(e))
     if pinned and index.has_deletes:
         # a pinned id that has been deleted is simply gone (Solr elevates
-        # only docs that exist); one tiny pruned probe, only with deletes
-        gone = {
-            int(r["doc_id"])
-            for r in index.deleted_ids(spark)
-            .filter(F.col("doc_id").isin(pinned))
-            .collect()
-        }
+        # only docs that exist)
+        gone = _tombstoned(spark, index, pinned)
         pinned = [i for i in pinned if i not in gone]
     drop = set(pinned) | excluded
     ranked = search(

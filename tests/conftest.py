@@ -36,11 +36,13 @@ def spark():
 def distributed_tier(monkeypatch):
     """Force every bounded request onto the distributed tier — ranked
     requests, their unscored match-all and pure-filter pages, and the
-    facet counts: no driver-local read is under a cap of 0 bytes.  Job
+    facet counts: no driver-local read is under a cap of 0 bytes — and
+    every append and delete onto the Spark writer (a write cap of 0).  Job
     pins and plan guards of the Spark path use this."""
     from cascading_solr_spark.indexing.build import Index
 
     monkeypatch.setattr(Index, "LOCAL_SCAN_MAX_BYTES", 0)
+    monkeypatch.setattr(Index, "LOCAL_WRITE_MAX_BYTES", 0)
 
 
 @pytest.fixture

@@ -1,6 +1,6 @@
 """Crash atomicity of append_documents: a failure in ANY of the append's
-jobs must leave the index byte-identical (staged writes + rename publish,
-round 5h).  Previously the threaded docs write could commit while the
+jobs (Spark tier) or in-process steps (driver tier) must leave the index
+byte-identical (staged writes + rename publish, round 5h).  Previously the threaded docs write could commit while the
 postings job failed, leaving orphan docs rows that match-all counted."""
 
 import os
@@ -69,3 +69,37 @@ def test_failed_append_leaves_index_untouched(spark, tmp_path, monkeypatch):
     ix2 = Index.load(out)
     assert match_ids(spark, ix2, "*:*").count() == n0 + 40
     assert search(spark, ix2, "parse", k=5).count() > 0
+
+
+@pytest.mark.parametrize("where", ["kernel", "lineage"])
+def test_failed_local_append_leaves_index_untouched(
+    spark, tmp_path, monkeypatch, where
+):
+    # the driver tier stages its files like the Spark tier: a fault in its
+    # in-process tokenize kernel, or in its last write (the lineage rows,
+    # after the postings, docs, dict and ngram files are staged), leaves the
+    # index byte-identical, and a retry succeeds
+    import cascading_solr_spark.indexing.build as ap
+    import cascading_solr_spark.indexing.local_write as lw
+
+    out = str(tmp_path / "ix")
+    build_index(spark, synth_corpus(spark, 80, partitions=2), SPEC, out)
+    before = _snapshot(out)
+    pdf = synth_corpus(spark, 30, partitions=2).toPandas()
+    pdf["repo"] = "new/" + pdf["repo"]
+    batch = spark.createDataFrame(pdf)
+    assert lw.append_is_local(batch, SPEC)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected driver-tier fault")
+
+    if where == "kernel":
+        monkeypatch.setattr(ap, "_spimi_tf_kernel", lambda *a: boom)
+    else:
+        monkeypatch.setattr(lw, "_lineage_rows", boom)
+    with pytest.raises(RuntimeError, match="injected driver-tier fault"):
+        append_documents(spark, out, batch)
+    monkeypatch.undo()
+    assert _snapshot(out) == before
+    ix = append_documents(spark, out, batch)
+    assert match_ids(spark, ix, "*:*").count() == 110

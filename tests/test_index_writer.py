@@ -1,8 +1,8 @@
 """The index mutators' shared segment writer (indexing/build.py): both
 postings-pipeline branches write the same index, each mutator call runs a
-pinned number of Spark jobs, the tf rows come from one Python tokenize
-leg, the hot-term salt test is one literal INSET, and a NULL key field is
-named as such."""
+pinned number of Spark jobs on the Spark writer, the tf rows come from one
+Python tokenize leg, the hot-term salt test is one literal INSET, and a
+NULL key field is named as such."""
 
 import os
 
@@ -64,6 +64,7 @@ def test_single_exchange_build_matches_wide_build(spark, tmp_path):
         assert got[0] and got[0] == got[1], q
 
 
+@pytest.mark.usefixtures("distributed_tier")
 def test_spark_jobs_per_mutator_call(spark, tmp_path):
     out = str(tmp_path / "ix")
     corpus = synth_corpus(spark, 120, partitions=2)

@@ -205,7 +205,8 @@ BATCH = {
 def _batch_cases(spark, ix):
     """search_many, explain_score and search_elevated — the shard
     executor's bounded callers beside the ranked entry points."""
-    pins = {"parse buffer": [5, 17, (1, True)], "retry": [(2, True)]}
+    # 14 is deleted in the "mut" index: a deleted pin is dropped
+    pins = {"parse buffer": [5, 14, 17, (1, True)], "retry": [(2, True)]}
     top = [
         r["doc_id"] for q in ("parse buffer retry", "buf* retry^2")
         for r in search(spark, ix, q, k=1, with_stored=False).collect()
@@ -258,14 +259,26 @@ def test_batch_explain_elevated_equal_distributed(spark, tier_indexes, which):
                 if r["query_id"] == qid] == [tuple(r) for r in single], qid
 
 
-def test_warm_batch_explain_elevated_run_no_job(spark, tier_indexes):
-    # on an index without deletes: a pinned id on an index with deletes is
-    # probed against the tombstones by a Spark job
-    ix = Index.load(tier_indexes["plain"])
-    for name, call in _batch_cases(spark, ix).items():
+def _assert_batch_run_no_job(spark, ix, pinned):
+    cases = _batch_cases(spark, ix)
+    for name, call in cases.items():
         call().collect()  # warm the handle's dict and footer caches
         got = _spark_jobs(spark, lambda: call().collect())
         assert got == 0, (name, got)
+    got = [r["doc_id"] for r in cases["elevated"]().collect() if r["elevated"]]
+    assert got == pinned
+
+
+def test_warm_batch_explain_elevated_run_no_job(spark, tier_indexes):
+    _assert_batch_run_no_job(
+        spark, Index.load(tier_indexes["plain"]), [5, 14, 17])
+
+
+def test_warm_batch_explain_elevated_with_deletes_run_no_job(
+        spark, tier_indexes):
+    # the pinned ids' tombstone probe is a bounded call of the shard executor
+    _assert_batch_run_no_job(
+        spark, Index.load(tier_indexes["mut"]), [5, 17])
 
 
 def test_warm_tiered_requests_run_no_job(spark, tier_indexes):

@@ -506,6 +506,30 @@ def test_select_partial_mm_refused_where_it_would_drop(spark, ix, component):
     select(spark, ix, params)
 
 
+@pytest.mark.parametrize("route", [
+    {"bf": "div(textlen,100)"},
+    {"bq": "lang:go^2.5"},
+    {"sort": "textlen asc"},
+    {"sort": "recip(textlen,1,1000,100) desc"},
+])
+def test_select_mm_on_op_only_routes(spark, ix, route):
+    """The boosted and sorted routes take an op, not an mm floor: mm=100%
+    is op=AND, any other mm raises by name rather than being dropped."""
+    from cascading_solr_spark.handlers import select
+
+    q = "json retry merge"
+    with pytest.raises(ValueError, match="mm='2' does not compose"):
+        select(spark, ix, {"q": q, "mm": "2", "rows": 1000, **route})
+
+    def ids(params):
+        got = select(spark, ix, {"q": q, "rows": 1000, **route, **params})
+        return [r["doc_id"] for r in got["results"].collect()]
+
+    all_terms = ids({"mm": "100%"})
+    assert all_terms and all_terms == ids({"q.op": "AND"})
+    assert len(ids({})) > len(all_terms)  # non-vacuous: OR matches more
+
+
 @pytest.mark.parametrize("component", [
     {"facet": "true", "facet.field": "lang"},
     {"facet": "true", "facet.query": "lang:go"},
